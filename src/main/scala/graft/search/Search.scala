@@ -599,6 +599,47 @@ object Search {
       ivfAssign(slice(vec, j * dsub + 1, dsub), codebooks(j))): _*)
   }
 
+  /** Per-query ADC lookup table T[j][c] = ⟨q_j, codebook_j[c]⟩, flattened
+    * subspace-major (T[j][c] at j·ksub + c, the layout the codegen
+    * AdcPacked loop reads). ONE function for [[knnPq]], [[knnIvfPq]] and
+    * the IVF serving PQ tier: the left-to-right accumulation order is
+    * pinned by the sim4/sim5/sim8 oracle hashes. */
+  def adcTable(q: Array[Double], books: Array[Array[Array[Double]]]): Array[Double] = {
+    val ksub = books(0).length
+    val dsub = books(0)(0).length
+    val t = new Array[Double](books.length * ksub)
+    var j = 0
+    while (j < books.length) {
+      var c = 0
+      while (c < ksub) {
+        val cent = books(j)(c)
+        var s = 0.0; var i = 0
+        while (i < dsub) { s += q(j * dsub + i) * cent(i); i += 1 }
+        t(j * ksub + c) = s
+        c += 1
+      }
+      j += 1
+    }
+    t
+  }
+
+  /** Per-query SQ8 lookup table T[i][c] = (mn_i + c·Δ_i/255)·q_i — the
+    * dequantization grid folded into the byte-lookup table (T[i][c] at
+    * i·256 + c). ONE function for [[knnSq]] and the IVF serving SQ8 tier;
+    * the op order ((c·Δ)/255, +mn, ·q_i) is the oracle's dequant, pinned by
+    * the sim6 hash. */
+  def sqTable(q: Array[Double], mins: Array[Double], maxs: Array[Double]): Array[Double] = {
+    val t = new Array[Double](mins.length * 256)
+    var i = 0
+    while (i < mins.length) {
+      val mn = mins(i); val d = maxs(i) - mn
+      var c = 0
+      while (c < 256) { t(i * 256 + c) = (mn + c * d / 255.0) * q(i); c += 1 }
+      i += 1
+    }
+    t
+  }
+
   /** PQ ANN top-k by ASYMMETRIC DISTANCE COMPUTATION for a small query-id
     * set: fit codebooks, encode every vector to `m` codes, and score a row
     * WITHOUT touching its original vector — per query, the inner-product
@@ -635,26 +676,15 @@ object Search {
     val encoded = base.select(col("id"),
       org.apache.spark.sql.graft.PqCodes.pack(
         pqCodes(col("v"), books, dim)).as("codes"))
-    val dsub = dim / m
     val qRows = base.filter(col("id").isin(queryIds: _*)).collect()
-    val qT = qRows.map { r =>
-      val qid = r.getLong(0)
-      val qv = r.getSeq[Double](1).toArray
-      val t = Array.tabulate(m, ksub) { (j, c) =>
-        var s = 0.0; var i = 0
-        val cent = books(j)(c)
-        while (i < dsub) { s += qv(j * dsub + i) * cent(i); i += 1 }
-        s
-      }
-      (qid, t.flatten.toSeq) // subspace-major: T[j][c] at j·ksub + c
-    }
+    val qT = qRows.map(r => (r.getLong(0), adcTable(r.getSeq[Double](1).toArray, books).toSeq))
     val qDf = spark.createDataFrame(qT.toIndexedSeq).toDF("q_id", "t")
     val w = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("id"))
     encoded.crossJoin(broadcast(qDf))
       .filter(col("q_id") =!= col("id"))
       .withColumn("score", round(
         org.apache.spark.sql.graft.PqCodes.adcPacked(
-          col("codes"), col("t"), ksub), 5) + 0.0)
+          col("codes"), col("t"), books(0).length), 5) + 0.0)
       .withColumn("rk", row_number().over(w).cast("long"))
       .filter(col("rk") <= k)
       .select(col("q_id"), col("id").as("vec_id"), col("score"), col("rk"))
@@ -708,7 +738,6 @@ object Search {
         // packed codes + native ADC, as in knnPq — bit-identical scores
         org.apache.spark.sql.graft.PqCodes.pack(
           pqCodes(col("pqv"), books, dim)).as("codes"))
-    val dsub = dim / m
     val qRows = base.filter(col("id").isin(queryIds: _*)).collect()
     // per-query probe list (with the ⟨q, c_cid⟩ offset) + lookup table,
     // both tiny driver math
@@ -726,18 +755,7 @@ object Search {
     }
     val probesDf = spark.createDataFrame(probes.toIndexedSeq)
       .toDF("q_id", "cid", "off")
-    val qT = qRows.map { r =>
-      val qid = r.getLong(0)
-      val qv = r.getSeq[Double](1).toArray
-      val t: Seq[Double] = (0 until m).flatMap { j =>
-        (0 until ksub).map { c =>
-          var s = 0.0; var i = 0
-          while (i < dsub) { s += qv(j * dsub + i) * books(j)(c)(i); i += 1 }
-          s
-        }
-      } // subspace-major: T[j][c] at j·ksub + c
-      (qid, t)
-    }
+    val qT = qRows.map(r => (r.getLong(0), adcTable(r.getSeq[Double](1).toArray, books).toSeq))
     val qtDf = spark.createDataFrame(qT.toIndexedSeq).toDF("q_id", "t")
     val w = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("id"))
     encoded.join(broadcast(probesDf), "cid")
@@ -745,7 +763,7 @@ object Search {
       .join(broadcast(qtDf), "q_id")
       .withColumn("score", round(
         col("off") + org.apache.spark.sql.graft.PqCodes.adcPacked(
-          col("codes"), col("t"), ksub), 5) + 0.0)
+          col("codes"), col("t"), books(0).length), 5) + 0.0)
       .withColumn("rk", row_number().over(w).cast("long"))
       .filter(col("rk") <= k)
       .select(col("q_id"), col("id").as("vec_id"), col("score"), col("rk"))
@@ -816,20 +834,8 @@ object Search {
     val encoded = base.select(col("id"),
       PqCodes.pack(sqCodes(col("v"), mins, maxs)).as("sq"))
     val qRows = base.filter(col("id").isin(queryIds: _*)).collect()
-    val qT = qRows.map { r =>
-      val qid = r.getLong(0)
-      val qv = r.getSeq[Double](1).toArray
-      val t = new Array[Double](dim * 256)
-      var i = 0
-      while (i < dim) {
-        val mn = mins(i); val d = maxs(i) - mn
-        var c = 0
-        // same op order as the oracle's dequant: (c·Δ)/255, +mn, ·q_i
-        while (c < 256) { t(i * 256 + c) = (mn + c * d / 255.0) * qv(i); c += 1 }
-        i += 1
-      }
-      (qid, t.toSeq)
-    }
+    val qT = qRows.map(r =>
+      (r.getLong(0), sqTable(r.getSeq[Double](1).toArray, mins, maxs).toSeq))
     val qDf = spark.createDataFrame(qT.toIndexedSeq).toDF("q_id", "t")
     val w = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("id"))
     encoded.crossJoin(broadcast(qDf))

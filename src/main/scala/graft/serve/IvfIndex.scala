@@ -1,8 +1,11 @@
 package graft.serve
 
 import graft.search.Search
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PqCodes
+import org.apache.spark.sql.types.StructType
+import org.json4s._
 
 /** IVF-partitioned serving index (VERDICT r8 ask #8): the 100-TB serving
   * story for ANN retrieval. [[Search.knnIvf]] proves the IVF math but
@@ -16,35 +19,174 @@ import org.apache.spark.sql.functions._
   * norms precomputed at build time so serving never recomputes them),
   * with the fitted centroids in a `_centroids.json` sidecar (underscore
   * prefix: invisible to Spark's file listing) so a serving session opens
-  * the index without refitting or rescanning.
+  * the index without refitting or rescanning. A compressed [[Tier]] adds
+  * its code columns beside (id, v, vn) and its fit in one more sidecar;
+  * the exact vectors stay, so every tier can refine a shortlist.
+  *
+  * Serving is ONE spine for every tier: [[probedTopK]] (one query, a lazy
+  * DataFrame) and [[probedTopKBatch]] (P queries, one pruned scan per
+  * stage). Both read the probed cells only, score with the tier's
+  * [[Tier.score]], keep (score desc, id asc), and optionally re-score a
+  * `shortlist` of survivors with the exact cosine — so single and batched
+  * answers are bit-identical by construction.
   */
 object IvfIndex {
 
-  final case class Handle(path: String, centroids: Array[Array[Double]])
+  /** What a compressed serving tier adds to the (id, v, vn, cid) layout,
+    * stated once: the columns it writes, the columns its shortlist scan
+    * reads (directory pruning via `cid IN (probes)` composes with column
+    * pruning of everything else), its sidecar, and its per-query score
+    * before the shared 5-dp rounding. */
+  sealed trait Tier {
+    private[serve] def columns: Seq[(String, Column)]
+    /** The first is the column a null disqualifies a row on. */
+    private[serve] def scanCols: Seq[String]
+    private[serve] def sidecar: Option[(String, String)]
+    private[serve] def score(q: Array[Double]): Column
+  }
 
-  /** Fit nCentroids on the vectors, assign every row, write partitioned by
-    * cell. The write shuffles nothing: assignment is a narrow projection
-    * and the parquet writer splits files by partition value. Sidecars ride
-    * the SAME filesystem as the parquet dataset (Hadoop FileSystem resolved
-    * from the path + session Hadoop conf) — java.nio would silently write a
-    * driver-local file when `path` is hdfs://, s3a:// etc., separating
-    * index and centroids on the very deployments the layout exists for. */
+  /** The exact tier: rounded cosine over the stored vectors and norms —
+    * also the refine score of every other tier. */
+  case object Flat extends Tier {
+    private[serve] def columns: Seq[(String, Column)] = Nil
+    private[serve] def scanCols: Seq[String] = Seq("v", "vn")
+    private[serve] def sidecar: Option[(String, String)] = None
+    private[serve] def score(q: Array[Double]): Column = cosine(q, "v", "vn")
+  }
+
+  /** IVF + PQ (the FAISS IVFPQ layout on parquet): `codes` holds m packed
+    * bytes per row (org.apache.spark.sql.graft.PqCodes — one binary value,
+    * not a repeated int group), the codebooks ride `_pq.json`, and the
+    * score is [[Search.knnPq]]'s asymmetric lookup-sum over the query's
+    * [[Search.adcTable]]. Codes quantize the RAW vectors; the exact
+    * refine recovers the tail accuracy the residual variant would. */
+  final case class Pq(books: Array[Array[Array[Double]]]) extends Tier {
+    private def dim = books.length * books(0)(0).length
+    private[serve] def columns: Seq[(String, Column)] =
+      Seq("codes" -> PqCodes.pack(Search.pqCodes(col("v"), books, dim)))
+    private[serve] def scanCols: Seq[String] = Seq("codes")
+    private[serve] def sidecar: Option[(String, String)] = Some("_pq.json" ->
+      s"""{"dim": $dim, "books": ${books.map(matrixJson).mkString("[", ",", "]")}}""")
+    private[serve] def score(q: Array[Double]): Column = PqCodes.adcPacked(
+      col("codes"), typedLit(Search.adcTable(q, books).toSeq), books(0).length)
+  }
+
+  /** IVF + SQ8, the near-exact tier: `sq` holds dim packed bytes per row
+    * ([[Search.sqCodes]]), the per-dimension (min, max) grid rides
+    * `_sq.json`, and the score is [[Search.knnSq]]'s byte lookup-sum over
+    * the query's [[Search.sqTable]] — 8× less IO at ≤ Δ/510 per-dimension
+    * error, trustworthy without a refine pass. */
+  final case class Sq(mins: Array[Double], maxs: Array[Double]) extends Tier {
+    private[serve] def columns: Seq[(String, Column)] =
+      Seq("sq" -> PqCodes.pack(Search.sqCodes(col("v"), mins, maxs)))
+    private[serve] def scanCols: Seq[String] = Seq("sq")
+    private[serve] def sidecar: Option[(String, String)] = Some("_sq.json" ->
+      s"""{"dim": ${mins.length}, "mins": ${mins.mkString("[", ",", "]")}, "maxs": ${
+        maxs.mkString("[", ",", "]")}}""")
+    private[serve] def score(q: Array[Double]): Column = PqCodes.adcPacked(
+      col("sq"), typedLit(Search.sqTable(q, mins, maxs).toSeq), 256)
+  }
+
+  /** IVF + binary, the 64× tier: `sig` holds ⌈dim/64⌉ BIGINT words per row
+    * ([[Search.bqSignatures]]), the per-dimension mean thresholds ride
+    * `_bq.json`, and the score is the NEGATED Hamming distance to the
+    * query's signature — (score desc, id asc) is (Hamming asc, id asc).
+    * Its ranking is coarse: serve it with a `shortlist` refine. */
+  final case class Bq(thresholds: Array[Double]) extends Tier {
+    private[serve] def columns: Seq[(String, Column)] =
+      Seq("sig" -> Search.bqSignatures(col("v"), thresholds))
+    private[serve] def scanCols: Seq[String] = Seq("sig")
+    private[serve] def sidecar: Option[(String, String)] = Some("_bq.json" ->
+      s"""{"dim": ${thresholds.length}, "thresholds": ${
+        thresholds.mkString("[", ",", "]")}}""")
+    // the driver twin of Search.bqSignatures: same strict >, same
+    // 64-per-word layout, same sign-bit placement
+    private[serve] def score(q: Array[Double]): Column = {
+      val words = q.indices.grouped(64).map { idxs =>
+        idxs.foldLeft(0L) { (w, i) =>
+          if (q(i) > thresholds(i)) w | (1L << (i % 64)) else w
+        }
+      }.toSeq
+      -Search.hammingDistance(col("sig"), typedLit(words))
+    }
+  }
+
+  /** IVF + MRL prefix, the fit-free tier (sim9's two-stage on disk):
+    * `pre` is the vector's own first prefixDim coordinates and `pn` its
+    * norm; `_mrl.json` records just the width. The score is the SAME
+    * rounded cosine as the refine, over the prefix — truncation is the
+    * tier's only error source. Serve it with a `shortlist` refine. */
+  final case class Mrl(prefixDim: Int) extends Tier {
+    require(prefixDim > 0, s"prefixDim must be positive: $prefixDim")
+    private[serve] def columns: Seq[(String, Column)] =
+      Seq("pre" -> slice(col("v"), 1, prefixDim), "pn" -> Search.l2Norm(col("pre")))
+    private[serve] def scanCols: Seq[String] = Seq("pre", "pn")
+    private[serve] def sidecar: Option[(String, String)] =
+      Some("_mrl.json" -> s"""{"prefixDim": $prefixDim}""")
+    private[serve] def score(q: Array[Double]): Column =
+      cosine(q.take(prefixDim), "pre", "pn")
+  }
+
+  /** How [[write]] fits a tier: from the index's (id, v) rows and the
+    * vector dimension. */
+  type Fit = (DataFrame, Int) => Tier
+  val flat: Fit = (_, _) => Flat
+  def pq(m: Int, ksub: Int, pqIters: Int): Fit = {
+    require(ksub <= 256, s"ksub $ksub exceeds the one-byte code width")
+    (base, dim) => Pq(Search.pqCodebooks(base, "v", "id", dim, m, ksub, pqIters))
+  }
+  val sq8: Fit = (base, dim) => {
+    val (mins, maxs) = Search.sqParams(base, "v", dim)
+    Sq(mins, maxs)
+  }
+  val binary: Fit = (base, dim) => Bq(Search.bqThresholds(base, "v", dim))
+  def mrl(prefixDim: Int): Fit = { val t = Mrl(prefixDim); (_, _) => t }
+
+  /** An open index. `schema` is the dataset's read schema, recorded at
+    * [[write]]/[[open]] so a probe lists files but never re-infers it. */
+  final case class Handle(path: String, centroids: Array[Array[Double]],
+                          tier: Tier, schema: StructType) {
+    def dim: Int = centroids.head.length
+  }
+
+  /** Cosine of `q` against a (vector, norm) column pair, before rounding —
+    * the one exact score every tier refines with. */
+  private def cosine(q: Array[Double], v: String, vn: String): Column = {
+    var qn = 0.0; var j = 0
+    while (j < q.length) { qn += q(j) * q(j); j += 1 }
+    Search.dot(typedLit(q.toSeq), col(v)) / (lit(math.sqrt(qn)) * col(vn))
+  }
+
+  /** Fit nCentroids (and the tier) on the vectors, assign every row, write
+    * partitioned by cell. The write shuffles nothing: assignment and the
+    * tier's codes are narrow projections and the parquet writer splits
+    * files by partition value. Sidecars ride the SAME filesystem as the
+    * parquet dataset (Hadoop FileSystem resolved from the path + session
+    * Hadoop conf) — java.nio would silently write a driver-local file when
+    * `path` is hdfs://, s3a:// etc., separating index and centroids on the
+    * very deployments the layout exists for. */
   def write(vectors: DataFrame, vecCol: String, idCol: String, path: String,
-            nCentroids: Int, iters: Int, metaCols: Seq[String] = Nil): Handle = {
-    val reserved = metaCols.toSet.intersect(Set("id", "v", "vn", "cid"))
+            nCentroids: Int, iters: Int, metaCols: Seq[String] = Nil,
+            tier: Fit = flat): Handle = {
+    val spark = vectors.sparkSession
+    def rows(extra: Seq[String]) = vectors.filter(col(vecCol).isNotNull)
+      .select(Seq(col(idCol).cast("long").as("id"),
+        Search.asDouble(col(vecCol)).as("v")) ++ extra.map(col): _*)
+    val base = rows(Nil)
+    val cents = Search.ivfCentroids(base, "v", "id", nCentroids, iters)
+    val t = tier(base, cents.head.length)
+    val reserved = metaCols.toSet.intersect(
+      Set("id", "v", "vn", "cid") ++ t.columns.map(_._1))
     require(reserved.isEmpty,
       s"metaCols ${reserved.mkString(", ")} collide with the index layout's " +
-        "reserved columns (id, v, vn, cid) — rename them before indexing")
-    val cents = Search.ivfCentroids(vectors, vecCol, idCol, nCentroids, iters)
-    vectors.filter(col(vecCol).isNotNull)
-      .select(Seq(col(idCol).cast("long").as("id"),
-        Search.asDouble(col(vecCol)).as("v")) ++ metaCols.map(col): _*)
-      .withColumn("vn", Search.l2Norm(col("v")))
-      .withColumn("cid", Search.ivfAssign(col("v"), cents))
+        "reserved columns — rename them before indexing")
+    t.columns.foldLeft(rows(metaCols).withColumn("vn", Search.l2Norm(col("v")))) {
+      case (df, (name, c)) => df.withColumn(name, c)
+    }.withColumn("cid", Search.ivfAssign(col("v"), cents))
       .write.mode("overwrite").partitionBy("cid").parquet(path)
-    writeSidecar(vectors.sparkSession, path, "_centroids.json",
-      cents.map(_.mkString("[", ",", "]")).mkString("[", ",", "]"))
-    Handle(path, cents)
+    writeSidecar(spark, path, "_centroids.json", matrixJson(cents))
+    t.sidecar.foreach { case (name, json) => writeSidecar(spark, path, name, json) }
+    Handle(path, cents, t, spark.read.parquet(path).schema)
   }
 
   /** Crash-safe cell swap used by [[delete]] and [[compact]]: the freshly
@@ -104,16 +246,49 @@ object IvfIndex {
     swept.toSeq
   }
 
-  /** Reopen a written index from its sidecar — no scan, no refit. Sweeps
-    * any maintenance-crash leftovers first ([[recover]]). */
+  /** Each tier sidecar and its strict parser; `dim` is the centroids'. */
+  private val tierSidecars: Seq[(String, (JValue, Int) => Tier)] = Seq(
+    "_pq.json" -> { (j, dim) =>
+      val books = items(j \ "books").map(b => items(b).map(doubles).toArray).toArray
+      requireDim(j, dim, books.length * books(0)(0).length)
+      Pq(books)
+    },
+    "_sq.json" -> { (j, dim) =>
+      val t = Sq(doubles(j \ "mins"), doubles(j \ "maxs"))
+      requireDim(j, dim, t.mins.length, t.maxs.length)
+      t
+    },
+    "_bq.json" -> { (j, dim) =>
+      val t = Bq(doubles(j \ "thresholds"))
+      requireDim(j, dim, t.thresholds.length)
+      t
+    },
+    "_mrl.json" -> { (j, _) =>
+      j \ "prefixDim" match {
+        case JInt(p) => Mrl(p.toInt)
+        case x => throw new IllegalArgumentException(s"bad prefixDim $x")
+      }
+    })
+
+  /** Reopen a written index from its sidecars — no refit, no data scan
+    * (one footer read records the schema). The tier is the one whose
+    * sidecar is present (none → [[Flat]]; several → an error). Sweeps any
+    * maintenance-crash leftovers first ([[recover]]). */
   def open(spark: SparkSession, path: String): Handle = {
     recover(spark, path)
-    val raw = readSidecar(spark, path, "_centroids.json")
-    // strict parse of the [[...],[...]] doubles written above
-    val cents = raw.trim.stripPrefix("[").stripSuffix("]")
-      .split("\\],\\s*\\[").map(_.stripPrefix("[").stripSuffix("]")
-        .split(",").map(_.trim.toDouble))
-    Handle(path, cents)
+    val cents = items(parseSidecar(spark, path, "_centroids.json"))
+      .map(doubles).toArray
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val tier = tierSidecars.filter { case (name, _) =>
+      fs.exists(new org.apache.hadoop.fs.Path(root, name))
+    } match {
+      case Seq() => Flat
+      case Seq((name, parse)) => parse(parseSidecar(spark, path, name), cents.head.length)
+      case several => throw new IllegalStateException(
+        s"$path holds several tier sidecars: ${several.map(_._1).mkString(", ")}")
+    }
+    Handle(path, cents, tier, spark.read.parquet(path).schema)
   }
 
   /** The nProbe nearest cells to `q` — the same L2 ordering (ties on cell
@@ -126,505 +301,113 @@ object IvfIndex {
     }.sortBy { case (cid, d) => (d, cid) }
       .take(nProbe).map(_._1).toSeq
 
-  /** Probed cosine top-k: the `cid IN (probes)` predicate is a PARTITION
-    * filter — Spark prunes the non-probed directories before reading a
-    * byte, so the scan touches nProbe/nCentroids of the data (assert via
-    * the scan's numFiles metric — IvfServeSpec). Scoring mirrors
-    * [[Search.knnIvf]] (rounded cosine, ascending-id ties); top-k is
-    * TakeOrderedAndProject over the pruned scan. */
   /** The pruned dataset a probe set reads: `cid IN (cells)` is a partition
-    * filter, so non-probed directories are skipped before any IO. Shared by
-    * the single and batched paths; exposed so specs can pin the scan's
-    * numFiles metric on the exact DataFrame the serving paths score. */
+    * filter, so non-probed directories are skipped before any IO. Read
+    * with the handle's recorded schema — the file listing still runs on
+    * every call (appends stay visible), schema inference never does.
+    * Shared by the single and batched paths; exposed so specs can pin the
+    * scan's numFiles metric on the exact DataFrame the serving paths
+    * score. */
   def prunedScan(spark: SparkSession, h: Handle, cells: Seq[Int]): DataFrame =
-    spark.read.parquet(h.path)
+    spark.read.schema(h.schema).parquet(h.path)
       .filter(col("cid").isin(cells.map(Integer.valueOf): _*))
 
-  /** Rounded-cosine top-k over any (id, v, vn) scan — the one scoring
-    * body every exact-refine path shares, so their rounding/tie-breaks
-    * cannot drift apart. */
-  private def cosineTopK(scan: DataFrame, q: Array[Double], k: Int): DataFrame = {
-    var qn = 0.0; var j = 0
-    while (j < q.length) { qn += q(j) * q(j); j += 1 }
-    scan
-      .withColumn("score",
-        round(Search.dot(typedLit(q.toSeq), col("v")) /
-          (lit(math.sqrt(qn)) * col("vn")), 5) + 0.0)
-      .orderBy(col("score").desc, col("id"))
-      .limit(k)
-      .select(col("id").as("vec_id"), col("score"))
+  /** The argument contract of both probe paths, checked before any work:
+    * a silent empty answer (k or nProbe below 1) or a query of the wrong
+    * dimension (cells picked from a prefix, a truncated dot) is a named
+    * IllegalArgumentException instead. */
+  private def validate(h: Handle, queries: Seq[Array[Double]], nProbe: Int,
+                       k: Int, shortlist: Int): Unit = {
+    require(k >= 1, s"k must be positive: $k")
+    require(nProbe >= 1, s"nProbe must be positive: $nProbe")
+    require(shortlist == 0 || shortlist >= k, s"shortlist $shortlist smaller than k=$k")
+    queries.foreach(q => require(q.length == h.dim,
+      s"query dimension ${q.length} != index dimension ${h.dim}"))
   }
 
+  /** Rounded-score top-n over a scan: (score desc, id asc), planned as
+    * TakeOrderedAndProject. */
+  private def topK(scan: DataFrame, score: Column, n: Int): DataFrame =
+    scan.withColumn("score", round(score, 5) + 0.0)
+      .orderBy(col("score").desc, col("id"))
+      .limit(n)
+      .select(col("id").as("vec_id"), col("score"))
+
+  /** Probed top-k of one query, as a lazy (vec_id, score) DataFrame: the
+    * `cid IN (probes)` partition filter prunes the non-probed directories
+    * before a byte is read (IvfServeSpec pins numFiles), the scan projects
+    * only the tier's [[Tier.scanCols]] (the compressed tiers never read
+    * `v`/`vn`), and the tier's rounded score ranks with ascending-id ties.
+    *
+    * `pred` is the "metadata filter + ANN" query vector databases
+    * special-case: metadata columns ride the index ([[write]]'s
+    * `metaCols`), the predicate lands in the probed scan's PushedFilters
+    * (row-group skipping inside the already-pruned directories) and is
+    * evaluated BEFORE scoring, so a selective predicate can never starve k
+    * the way a post-filter over an unfiltered shortlist does.
+    *
+    * `shortlist > 0` is the FAISS "refine" recipe: the tier's scan picks
+    * `shortlist` candidates (one collect), then ONE id-pruned read of the
+    * exact vectors over the same probed directories re-scores just those
+    * rows with the true cosine — bounded by the shortlist, not the data. */
   def probedTopK(spark: SparkSession, h: Handle, q: Array[Double],
-                 nProbe: Int, k: Int): DataFrame =
-    cosineTopK(prunedScan(spark, h, probeCells(h, q, nProbe)), q, k)
-
-  /** FILTERED vector search on the serving index — the "metadata filter
-    * + ANN" query vector databases special-case, here expressed as free
-    * Catalyst machinery: metadata columns ride the index
-    * ([[write]]'s `metaCols`), the predicate lands in the probed scan's
-    * PushedFilters (parquet row-group/page skipping INSIDE the
-    * already-pruned directories — spec-asserted), and scoring/top-k
-    * proceed identically. The filter is evaluated BEFORE scoring, so a
-    * selective predicate can never starve k the way a post-filter over
-    * an unfiltered shortlist does. */
-  def probedTopKWhere(spark: SparkSession, h: Handle, q: Array[Double],
-                      nProbe: Int, k: Int,
-                      pred: org.apache.spark.sql.Column): DataFrame =
-    cosineTopK(prunedScan(spark, h, probeCells(h, q, nProbe)).filter(pred), q, k)
-
-  // ---- IVF + PQ: the compressed serving index (round 10) ---------------
-
-  final case class PqHandle(path: String, centroids: Array[Array[Double]],
-                            books: Array[Array[Array[Double]]], dim: Int)
-
-  /** Write the index WITH product-quantization codes (the FAISS IVFPQ
-    * layout re-expressed on parquet): same cid-partitioned dataset plus a
-    * `codes` column (m small ints per row — the PQ compression of `v`)
-    * and the codebooks in a `_pq.json` sidecar next to the centroids.
-    * The two pruning axes compose at read time: `cid IN (probes)` skips
-    * DIRECTORIES (IVF), and an ADC query projecting only (id, codes)
-    * skips the wide `v`/`vn` COLUMNS inside the probed files (parquet
-    * column pruning) — IO per query shrinks by both the probe share and
-    * the PQ compression factor. Codes quantize the RAW vectors (the
-    * residual-quantizing FAISS variant needs a per-cell lookup table at
-    * query time; [[probedTopKRefined]]'s exact re-rank recovers the
-    * same tail accuracy with simpler serving math). */
-  def writePq(vectors: DataFrame, vecCol: String, idCol: String, path: String,
-              nCentroids: Int, iters: Int, dim: Int, m: Int, ksub: Int,
-              pqIters: Int): PqHandle = {
-    val base = vectors.filter(col(vecCol).isNotNull)
-      .select(col(idCol).cast("long").as("id"),
-        Search.asDouble(col(vecCol)).as("v"))
-    require(ksub <= 256, s"ksub $ksub exceeds the one-byte code width")
-    val cents = Search.ivfCentroids(base, "v", "id", nCentroids, iters)
-    val books = Search.pqCodebooks(base, "v", "id", dim, m, ksub, pqIters)
-    base
-      .withColumn("vn", Search.l2Norm(col("v")))
-      // BYTE-packed codes (m bytes per row, org.apache.spark.sql.graft
-      // .PqCodes): the on-disk form matches the compression claim —
-      // parquet stores one binary value, not a repeated int group
-      .withColumn("codes",
-        org.apache.spark.sql.graft.PqCodes.pack(
-          Search.pqCodes(col("v"), books, dim)))
-      .withColumn("cid", Search.ivfAssign(col("v"), cents))
-      .write.mode("overwrite").partitionBy("cid").parquet(path)
-    writeSidecar(vectors.sparkSession, path, "_centroids.json",
-      cents.map(_.mkString("[", ",", "]")).mkString("[", ",", "]"))
-    writeSidecar(vectors.sparkSession, path, "_pq.json",
-      s"""{"dim": $dim, "books": ${
-        books.map(_.map(_.mkString("[", ",", "]")).mkString("[", ",", "]"))
-          .mkString("[", ",", "]")}}""")
-    PqHandle(path, cents, books, dim)
-  }
-
-  /** Reopen a PQ index from its sidecars — no scan, no refit. */
-  def openPq(spark: SparkSession, path: String): PqHandle = {
-    val base = open(spark, path)
-    val raw = readSidecar(spark, path, "_pq.json")
-    val dim = raw.replaceAll("(?s).*\"dim\":\\s*(\\d+).*", "$1").toInt
-    val booksStr = raw.replaceAll("(?s).*\"books\":\\s*(\\[.*\\])\\s*}\\s*$", "$1")
-    // strict parse of the [[[..],[..]],...] doubles written above
-    val books = booksStr.stripPrefix("[").stripSuffix("]")
-      .split("\\]\\],\\s*\\[\\[").map { sub =>
-        sub.stripPrefix("[[").stripSuffix("]]")
-          .split("\\],\\s*\\[").map(_.stripPrefix("[").stripSuffix("]")
-            .split(",").map(_.trim.toDouble))
-      }
-    PqHandle(path, base.centroids, books, dim)
-  }
-
-  /** Probed ADC top-k: directory pruning (cid partition filter) AND column
-    * pruning — the scan projects only (id, codes), never the dim-wide `v`
-    * or `vn` (spec-asserted via ReadSchema). Scoring is the lookup-sum
-    * over the broadcast query-vs-codebook IP table ([[Search.knnPq]]'s
-    * asymmetric distance), rounded like every serving score. */
-  /** Flattened ADC lookup table for one query, subspace-major: T[j][c] at
-    * j·ksub + c — the codegen AdcPacked loop reads it without nested-array
-    * hops. ONE builder shared by the single and batched paths so their
-    * scores are bit-identical by construction. */
-  private def adcTable(h: PqHandle, q: Array[Double]): Seq[Double] = {
-    val m = h.books.length
-    val ksub = h.books(0).length
-    val dsub = h.dim / m
-    (for (j <- 0 until m; c <- 0 until ksub) yield {
-      var s = 0.0; var i = 0
-      while (i < dsub) { s += q(j * dsub + i) * h.books(j)(c)(i); i += 1 }
-      s
-    }).toSeq
-  }
-
-  def probedTopKAdc(spark: SparkSession, h: PqHandle, q: Array[Double],
-                    nProbe: Int, k: Int): DataFrame = {
-    val cells = probeCells(Handle(h.path, h.centroids), q, nProbe)
-    val ksub = h.books(0).length
-    val tFlat = adcTable(h, q)
-    prunedScan(spark, Handle(h.path, h.centroids), cells)
-      .select(col("id"), col("codes"))
-      .withColumn("score", round(
-        org.apache.spark.sql.graft.PqCodes.adcPacked(
-          col("codes"), typedLit(tFlat), ksub), 5) + 0.0)
-      .orderBy(col("score").desc, col("id"))
-      .limit(k)
-      .select(col("id").as("vec_id"), col("score"))
-  }
-
-  /** ADC shortlist → EXACT re-rank (the FAISS "refine" recipe): the cheap
-    * codes-only scan picks `kAdc` candidates, then ONE id-pruned read of
-    * the exact vectors re-scores just those rows with the true cosine.
-    * At 100 TB the exact read is kAdc rows against an id predicate over
-    * already-probed directories — bounded by the shortlist, not the data. */
-  def probedTopKRefined(spark: SparkSession, h: PqHandle, q: Array[Double],
-                        nProbe: Int, k: Int, kAdc: Int): DataFrame = {
-    require(kAdc >= k, s"shortlist $kAdc smaller than k=$k")
-    val shortlist = probedTopKAdc(spark, h, q, nProbe, kAdc)
-      .collect().map(_.getLong(0))
-    val cells = probeCells(Handle(h.path, h.centroids), q, nProbe)
-    var qn = 0.0; var j = 0
-    while (j < q.length) { qn += q(j) * q(j); j += 1 }
-    prunedScan(spark, Handle(h.path, h.centroids), cells)
-      .filter(col("id").isin(shortlist.map(java.lang.Long.valueOf): _*))
-      .withColumn("score",
-        round(Search.dot(typedLit(q.toSeq), col("v")) /
-          (lit(math.sqrt(qn)) * col("vn")), 5) + 0.0)
-      .orderBy(col("score").desc, col("id"))
-      .limit(k)
-      .select(col("id").as("vec_id"), col("score"))
-  }
-
-  // ---- IVF + SQ8: the near-exact compressed serving index --------------
-
-  final case class SqHandle(path: String, centroids: Array[Array[Double]],
-                            mins: Array[Double], maxs: Array[Double], dim: Int)
-
-  /** Write the index WITH SQ8 codes — the FAISS IVF+SQ8 layout: same
-    * cid-partitioned dataset plus an `sq` column of dim packed BYTES per
-    * row ([[Search.sqCodes]] through PqCodes.pack) and the per-dimension
-    * (min, max) grid in a `_sq.json` sidecar. The same two pruning axes
-    * as [[writePq]] compose at read time (directories via `cid IN
-    * (probes)`, columns via an (id, sq) projection), but the compression
-    * point differs: 8× instead of 128×, at NEAR-EXACT recall (≤ Δ/510
-    * per-dimension dequantization error) — the serving tier you pick when
-    * the shortlist must be trustworthy WITHOUT an exact-refine pass. */
-  def writeSq(vectors: DataFrame, vecCol: String, idCol: String, path: String,
-              nCentroids: Int, iters: Int, dim: Int): SqHandle = {
-    val base = vectors.filter(col(vecCol).isNotNull)
-      .select(col(idCol).cast("long").as("id"),
-        Search.asDouble(col(vecCol)).as("v"))
-    val cents = Search.ivfCentroids(base, "v", "id", nCentroids, iters)
-    val (mins, maxs) = Search.sqParams(base, "v", dim)
-    base
-      .withColumn("vn", Search.l2Norm(col("v")))
-      .withColumn("sq",
-        org.apache.spark.sql.graft.PqCodes.pack(
-          Search.sqCodes(col("v"), mins, maxs)))
-      .withColumn("cid", Search.ivfAssign(col("v"), cents))
-      .write.mode("overwrite").partitionBy("cid").parquet(path)
-    writeSidecar(vectors.sparkSession, path, "_centroids.json",
-      cents.map(_.mkString("[", ",", "]")).mkString("[", ",", "]"))
-    writeSidecar(vectors.sparkSession, path, "_sq.json",
-      s"""{"dim": $dim, "mins": ${mins.mkString("[", ",", "]")}, "maxs": ${
-        maxs.mkString("[", ",", "]")}}""")
-    SqHandle(path, cents, mins, maxs, dim)
-  }
-
-  /** Reopen an SQ8 index from its sidecars — no scan, no refit. */
-  def openSq(spark: SparkSession, path: String): SqHandle = {
-    val base = open(spark, path)
-    val raw = readSidecar(spark, path, "_sq.json")
-    val dim = raw.replaceAll("(?s).*\"dim\":\\s*(\\d+).*", "$1").toInt
-    def arr(key: String): Array[Double] =
-      raw.replaceAll(s"""(?s).*"$key":\\s*\\[([^\\]]*)\\].*""", "$1")
-        .split(",").map(_.trim.toDouble)
-    SqHandle(path, base.centroids, arr("mins"), arr("maxs"), dim)
-  }
-
-  /** Probed SQ8 top-k: directory pruning AND column pruning — the scan
-    * projects only (id, sq), never the dim-wide `v`/`vn`. Scoring folds
-    * the dequantization grid into the per-query lookup table
-    * T[i][c] = (mn_i + c·Δ_i/255)·q_i and runs [[Search.knnSq]]'s byte
-    * lookup-sum (AdcPacked with ksub = 256) over the pruned scan. The
-    * approximate IP score ranks like the exact one to within the SQ8
-    * error bound, so no refine pass is wired — [[probedTopKRefined]]'s
-    * recipe applies unchanged if one is ever wanted. */
-  /** Per-query SQ8 lookup table T[i][c] = (mn_i + c·Δ_i/255)·q_i — the
-    * dequantization grid folded into the byte-lookup table. ONE builder
-    * shared by the single and batched paths (bit-identity by construction). */
-  private def sqTable(h: SqHandle, q: Array[Double]): Seq[Double] = {
-    val tFlat = new Array[Double](h.dim * 256)
-    var i = 0
-    while (i < h.dim) {
-      val mn = h.mins(i); val d = h.maxs(i) - mn
-      var c = 0
-      while (c < 256) { tFlat(i * 256 + c) = (mn + c * d / 255.0) * q(i); c += 1 }
-      i += 1
+                 nProbe: Int, k: Int, shortlist: Int = 0,
+                 pred: Option[Column] = None): DataFrame = {
+    validate(h, Seq(q), nProbe, k, shortlist)
+    val cells = probeCells(h, q, nProbe)
+    val scan = pred.foldLeft(prunedScan(spark, h, cells))(_.filter(_))
+      .select(("id" +: h.tier.scanCols).map(col): _*)
+    if (shortlist == 0) topK(scan, h.tier.score(q), k)
+    else {
+      val ids = topK(scan, h.tier.score(q), shortlist).collect()
+        .map(r => java.lang.Long.valueOf(r.getLong(0)))
+      topK(prunedScan(spark, h, cells).filter(col("id").isin(ids: _*)),
+        Flat.score(q), k)
     }
-    tFlat.toSeq
   }
 
-  def probedTopKSq(spark: SparkSession, h: SqHandle, q: Array[Double],
-                   nProbe: Int, k: Int): DataFrame = {
-    val cells = probeCells(Handle(h.path, h.centroids), q, nProbe)
-    prunedScan(spark, Handle(h.path, h.centroids), cells)
-      .select(col("id"), col("sq"))
-      .withColumn("score", round(
-        org.apache.spark.sql.graft.PqCodes.adcPacked(
-          col("sq"), typedLit(sqTable(h, q)), 256), 5) + 0.0)
-      .orderBy(col("score").desc, col("id"))
-      .limit(k)
-      .select(col("id").as("vec_id"), col("score"))
-  }
-
-  // ---- IVF + binary: the maximal-compression serving index -------------
-
-  final case class BqHandle(path: String, centroids: Array[Array[Double]],
-                            thresholds: Array[Double], dim: Int)
-
-  /** Write the index WITH binary signatures — the 1-bit tier next to PQ's
-    * bytes and SQ8's grid: same cid-partitioned dataset plus a `sig`
-    * column of ⌈dim/64⌉ BIGINT words per row ([[Search.bqSignatures]])
-    * and the per-dimension mean thresholds in a `_bq.json` sidecar. The
-    * same two pruning axes compose (directories via `cid IN (probes)`,
-    * columns via an (id, sig) projection), at the extreme compression
-    * point: 64× — a billion 64-dim vectors is 8 GB of signatures — with
-    * Hamming (xor + popcount) as the cheapest possible shortlist scorer;
-    * serving always refines the shortlist against the exact vectors
-    * (the binary tier's ranking is too coarse to serve unrefined). */
-  def writeBq(vectors: DataFrame, vecCol: String, idCol: String, path: String,
-              nCentroids: Int, iters: Int, dim: Int): BqHandle = {
-    val base = vectors.filter(col(vecCol).isNotNull)
-      .select(col(idCol).cast("long").as("id"),
-        Search.asDouble(col(vecCol)).as("v"))
-    val cents = Search.ivfCentroids(base, "v", "id", nCentroids, iters)
-    val th = Search.bqThresholds(base, "v", dim)
-    base
-      .withColumn("vn", Search.l2Norm(col("v")))
-      .withColumn("sig", Search.bqSignatures(col("v"), th))
-      .withColumn("cid", Search.ivfAssign(col("v"), cents))
-      .write.mode("overwrite").partitionBy("cid").parquet(path)
-    writeSidecar(vectors.sparkSession, path, "_centroids.json",
-      cents.map(_.mkString("[", ",", "]")).mkString("[", ",", "]"))
-    writeSidecar(vectors.sparkSession, path, "_bq.json",
-      s"""{"dim": $dim, "thresholds": ${th.mkString("[", ",", "]")}}""")
-    BqHandle(path, cents, th, dim)
-  }
-
-  /** Reopen a binary index from its sidecars — no scan, no refit. */
-  def openBq(spark: SparkSession, path: String): BqHandle = {
-    val base = open(spark, path)
-    val raw = readSidecar(spark, path, "_bq.json")
-    val dim = raw.replaceAll("(?s).*\"dim\":\\s*(\\d+).*", "$1").toInt
-    val th = raw.replaceAll("""(?s).*"thresholds":\s*\[([^\]]*)\].*""", "$1")
-      .split(",").map(_.trim.toDouble)
-    BqHandle(path, base.centroids, th, dim)
-  }
-
-  /** The query's packed signature words — the driver twin of
-    * [[Search.bqSignatures]] (same strict >, same 64-per-word layout,
-    * same sign-bit placement), so serving never runs a fit. */
-  private def bqSigWords(h: BqHandle, q: Array[Double]): Seq[Long] =
-    q.indices.grouped(64).map { idxs =>
-      idxs.foldLeft(0L) { (w, i) =>
-        if (q(i) > h.thresholds(i)) w | (1L << (i % 64)) else w
-      }
-    }.toSeq
-
-  /** Probed binary top-k: directory pruning AND column pruning — the
-    * Hamming shortlist phase projects only (id, sig), ⌈dim/64⌉ longs per
-    * row instead of the dim-wide `v`/`vn` (64× less IO); the exact-cosine
-    * refine then reads vectors for the `shortlist` survivors alone via an
-    * id predicate over the already-probed directories
-    * ([[probedTopKRefined]]'s recipe — bounded by the shortlist, not the
-    * data). Ascending-Hamming/ascending-id and score-desc/id-asc
-    * tie-breaks make the whole path deterministic. */
-  def probedTopKBq(spark: SparkSession, h: BqHandle, q: Array[Double],
-                   nProbe: Int, k: Int, shortlist: Int): DataFrame = {
-    require(shortlist >= k, s"shortlist $shortlist smaller than k=$k")
-    val cells = probeCells(Handle(h.path, h.centroids), q, nProbe)
-    val qSig = bqSigWords(h, q)
-    val ids = prunedScan(spark, Handle(h.path, h.centroids), cells)
-      .select(col("id"), col("sig"))
-      .withColumn("hamming", Search.hammingDistance(col("sig"), typedLit(qSig)))
-      .orderBy(col("hamming"), col("id"))
-      .limit(shortlist)
-      .collect().map(_.getLong(0))
-    var qn = 0.0; var j = 0
-    while (j < q.length) { qn += q(j) * q(j); j += 1 }
-    prunedScan(spark, Handle(h.path, h.centroids), cells)
-      .filter(col("id").isin(ids.map(java.lang.Long.valueOf): _*))
-      .withColumn("score",
-        round(Search.dot(typedLit(q.toSeq), col("v")) /
-          (lit(math.sqrt(qn)) * col("vn")), 5) + 0.0)
-      .orderBy(col("score").desc, col("id"))
-      .limit(k)
-      .select(col("id").as("vec_id"), col("score"))
-  }
-
-  /** Batched binary serving: P queries in TWO pruned scans total — one
-    * (id, sig) Hamming-shortlist pass (negated Hamming through
-    * [[Search.multiTopK]]'s score-desc heaps ≡ the sequential
-    * ascending-Hamming/ascending-id order), one exact-refine pass over the
-    * UNION of shortlists with per-query id masks. Bit-identical to P
-    * sequential [[probedTopKBq]] calls (spec-asserted): same probe cells,
-    * same shortlist order, same rounded cosine and tie-breaks. */
-  def probedTopKBqBatch(spark: SparkSession, h: BqHandle,
-                        queries: Seq[Array[Double]], nProbe: Int, k: Int,
-                        shortlist: Int): IndexedSeq[Seq[(Long, Double)]] = {
-    require(shortlist >= k, s"shortlist $shortlist smaller than k=$k")
+  /** Batched probed top-k (VERDICT r9 ask #3): P queries answered by one
+    * pruned scan per stage instead of P jobs (the per-job floor dominates
+    * at serving latencies). The probed cells are UNIONED across the batch,
+    * the non-probed directories pruned once, and all P queries scored in
+    * that scan via [[Search.multiTopK]]'s per-partition k-heaps.
+    *
+    * Bit-identical to P sequential [[probedTopK]] calls with the same
+    * arguments (spec-asserted for every tier): the same [[Tier.score]],
+    * the same 5-dp round / −0.0 collapse and (score desc, id asc)
+    * tie-break, and each query's `eligible` mask restricts it to ITS OWN
+    * probed cells and `preds(i)` — a row read only because some other
+    * query probed its cell can never leak into this query's top-k. The
+    * refine stage reads the UNION of shortlists once, masked per query to
+    * its own shortlist.
+    *
+    * Scale shape: IO = union of probed directories (≤ min(P·nProbe,
+    * nCentroids) cells — hot cells dedupe), compute = one pass with P
+    * bounded heaps, driver merge of ≤ partitions·P·k rows. */
+  def probedTopKBatch(spark: SparkSession, h: Handle,
+                      queries: Seq[Array[Double]], nProbe: Int, k: Int,
+                      shortlist: Int = 0, preds: Seq[Column] = Nil)
+      : IndexedSeq[Seq[(Long, Double)]] = {
+    require(preds.isEmpty || preds.size == queries.size,
+      s"preds size ${preds.size} != queries size ${queries.size}")
+    validate(h, queries, nProbe, k, shortlist)
     if (queries.isEmpty) return IndexedSeq.empty
-    val base = Handle(h.path, h.centroids)
-    val cellsPer = queries.map(q => probeCells(base, q, nProbe))
+    val cellsPer = queries.map(q => probeCells(h, q, nProbe))
+    val inCells = cellsPer.map(cs => col("cid").isin(cs.map(Integer.valueOf): _*))
     val union = cellsPer.flatten.distinct.sorted
-    val sigScan = prunedScan(spark, base, union)
-      .select(col("id"), col("sig"), col("cid"))
-    val eligibleCells = cellsPer.map(cs =>
-      col("cid").isin(cs.map(Integer.valueOf): _*))
-    val shortlists = Search.multiTopK(sigScan, "sig", "id", queries, shortlist,
-      eligible = eligibleCells,
-      // negated Hamming: multiTopK keeps top by (score desc, id asc) ≡
-      // (hamming asc, id asc), the sequential shortlist's orderBy; the
-      // sig words ride raw (the scored column arg is ignored)
-      scoreExpr = (_, q) =>
-        -Search.hammingDistance(col("sig"), typedLit(bqSigWords(h, q))))
-    val idsPer = shortlists.map(_.map(_._1))
-    val allIds = idsPer.flatten.distinct
-    val refScan = prunedScan(spark, base, union)
-      .filter(col("id").isin(allIds.map(java.lang.Long.valueOf): _*))
-    val eligibleIds = idsPer.map(ids =>
-      col("id").isin(ids.map(java.lang.Long.valueOf): _*))
-    Search.multiTopK(refScan, "v", "id", queries, k, eligible = eligibleIds,
-      scoreExpr = (vd, q) => {
-        var qn = 0.0; var j = 0
-        while (j < q.length) { qn += q(j) * q(j); j += 1 }
-        Search.dot(typedLit(q.toSeq), vd) / (lit(math.sqrt(qn)) * col("vn"))
-      })
-  }
-
-  // ---- IVF + MRL prefix: the fit-free narrow-column serving tier -------
-
-  final case class MrlHandle(path: String, centroids: Array[Array[Double]],
-                             prefixDim: Int)
-
-  /** Write the index WITH a materialized prefix column — the Matryoshka
-    * serving layout (sim9's two-stage on disk): same cid-partitioned
-    * dataset plus `pre` (the vector's own first prefixDim coordinates)
-    * and its norm `pn`. The only compressed tier with NO fit artifact:
-    * no codebook, no grid, no thresholds — `_mrl.json` records just the
-    * prefix width. The same two pruning axes compose (directories via
-    * `cid IN (probes)`, columns via an (id, pre, pn) projection reading
-    * prefixDim/dim of the vector bytes), and unlike PQ/SQ/BQ the
-    * shortlist scorer is the SAME rounded cosine as the refine — the
-    * tier's only error source is truncation, not dequantization. */
-  def writeMrl(vectors: DataFrame, vecCol: String, idCol: String, path: String,
-               nCentroids: Int, iters: Int, prefixDim: Int): MrlHandle = {
-    require(prefixDim > 0, s"prefixDim must be positive: $prefixDim")
-    val base = vectors.filter(col(vecCol).isNotNull)
-      .select(col(idCol).cast("long").as("id"),
-        Search.asDouble(col(vecCol)).as("v"))
-    val cents = Search.ivfCentroids(base, "v", "id", nCentroids, iters)
-    base
-      .withColumn("vn", Search.l2Norm(col("v")))
-      .withColumn("pre", slice(col("v"), 1, prefixDim))
-      .withColumn("pn", Search.l2Norm(col("pre")))
-      .withColumn("cid", Search.ivfAssign(col("v"), cents))
-      .write.mode("overwrite").partitionBy("cid").parquet(path)
-    writeSidecar(vectors.sparkSession, path, "_centroids.json",
-      cents.map(_.mkString("[", ",", "]")).mkString("[", ",", "]"))
-    writeSidecar(vectors.sparkSession, path, "_mrl.json",
-      s"""{"prefixDim": $prefixDim}""")
-    MrlHandle(path, cents, prefixDim)
-  }
-
-  /** Reopen an MRL index from its sidecars — no scan, no refit. */
-  def openMrl(spark: SparkSession, path: String): MrlHandle = {
-    val base = open(spark, path)
-    val raw = readSidecar(spark, path, "_mrl.json")
-    val p = raw.replaceAll("(?s).*\"prefixDim\":\\s*(\\d+).*", "$1").toInt
-    MrlHandle(path, base.centroids, p)
-  }
-
-  /** The prefix-shortlist stage as a visible DataFrame — (id, pscore)
-    * over the probed cells, scored by the truncated cosine. Exposed so
-    * specs can pin BOTH pruning axes on the exact plan serving runs:
-    * the scan's requiredSchema must carry (id, pre, pn) and never the
-    * dim-wide `v`/`vn`. */
-  def mrlShortlist(spark: SparkSession, h: MrlHandle, q: Array[Double],
-                   nProbe: Int, shortlist: Int): DataFrame = {
-    val cells = probeCells(Handle(h.path, h.centroids), q, nProbe)
-    val qp = q.take(h.prefixDim)
-    var qpn = 0.0; var j = 0
-    while (j < qp.length) { qpn += qp(j) * qp(j); j += 1 }
-    prunedScan(spark, Handle(h.path, h.centroids), cells)
-      .select(col("id"), col("pre"), col("pn"))
-      .withColumn("pscore",
-        round(Search.dot(typedLit(qp.toSeq), col("pre")) /
-          (lit(math.sqrt(qpn)) * col("pn")), 5) + 0.0)
-      .orderBy(col("pscore").desc, col("id"))
-      .limit(shortlist)
-      .select(col("id"), col("pscore"))
-  }
-
-  /** Probed MRL top-k: truncated-cosine shortlist over the narrow
-    * (id, pre, pn) projection, exact-cosine refine of the `shortlist`
-    * survivors alone via an id predicate over the already-probed
-    * directories ([[probedTopKRefined]]'s recipe). Deterministic:
-    * pscore-desc/id-asc shortlist, score-desc/id-asc refine. */
-  def probedTopKMrl(spark: SparkSession, h: MrlHandle, q: Array[Double],
-                    nProbe: Int, k: Int, shortlist: Int): DataFrame = {
-    require(shortlist >= k, s"shortlist $shortlist smaller than k=$k")
-    val ids = mrlShortlist(spark, h, q, nProbe, shortlist)
-      .collect().map(_.getLong(0))
-    val cells = probeCells(Handle(h.path, h.centroids), q, nProbe)
-    var qn = 0.0; var j = 0
-    while (j < q.length) { qn += q(j) * q(j); j += 1 }
-    prunedScan(spark, Handle(h.path, h.centroids), cells)
-      .filter(col("id").isin(ids.map(java.lang.Long.valueOf): _*))
-      .withColumn("score",
-        round(Search.dot(typedLit(q.toSeq), col("v")) /
-          (lit(math.sqrt(qn)) * col("vn")), 5) + 0.0)
-      .orderBy(col("score").desc, col("id"))
-      .limit(k)
-      .select(col("id").as("vec_id"), col("score"))
-  }
-
-  /** Batched MRL serving: P queries in TWO pruned scans total — one
-    * narrow (id, pre, pn) truncated-cosine shortlist pass, one
-    * exact-refine pass over the UNION of shortlists with per-query id
-    * masks. Bit-identical to P sequential [[probedTopKMrl]] calls
-    * (spec-asserted): same probe cells, same rounded scores, same
-    * tie-breaks — [[Search.multiTopK]] applies the identical 5-dp
-    * round / −0.0 collapse as the per-query orderBy path. */
-  def probedTopKMrlBatch(spark: SparkSession, h: MrlHandle,
-                         queries: Seq[Array[Double]], nProbe: Int, k: Int,
-                         shortlist: Int): IndexedSeq[Seq[(Long, Double)]] = {
-    require(shortlist >= k, s"shortlist $shortlist smaller than k=$k")
-    if (queries.isEmpty) return IndexedSeq.empty
-    val base = Handle(h.path, h.centroids)
-    val cellsPer = queries.map(q => probeCells(base, q, nProbe))
-    val union = cellsPer.flatten.distinct.sorted
-    val preScan = prunedScan(spark, base, union)
-      .select(col("id"), col("pre"), col("pn"), col("cid"))
-    val eligibleCells = cellsPer.map(cs =>
-      col("cid").isin(cs.map(Integer.valueOf): _*))
-    val shortlists = Search.multiTopK(preScan, "pre", "id",
-      queries.map(_.take(h.prefixDim)), shortlist, eligible = eligibleCells,
-      scoreExpr = (vd, qp) => {
-        var qpn = 0.0; var j = 0
-        while (j < qp.length) { qpn += qp(j) * qp(j); j += 1 }
-        Search.dot(typedLit(qp.toSeq), vd) / (lit(math.sqrt(qpn)) * col("pn"))
-      })
-    val idsPer = shortlists.map(_.map(_._1))
-    val allIds = idsPer.flatten.distinct
-    val refScan = prunedScan(spark, base, union)
-      .filter(col("id").isin(allIds.map(java.lang.Long.valueOf): _*))
-    val eligibleIds = idsPer.map(ids =>
-      col("id").isin(ids.map(java.lang.Long.valueOf): _*))
-    Search.multiTopK(refScan, "v", "id", queries, k, eligible = eligibleIds,
-      scoreExpr = (vd, q) => {
-        var qn = 0.0; var j = 0
-        while (j < q.length) { qn += q(j) * q(j); j += 1 }
-        Search.dot(typedLit(q.toSeq), vd) / (lit(math.sqrt(qn)) * col("vn"))
-      })
+    def scored(scan: DataFrame, tier: Tier, n: Int, eligible: Seq[Column]) =
+      Search.multiTopK(scan, tier.scanCols.head, "id", queries, n,
+        eligible = eligible, scoreExpr = (_, q) => tier.score(q))
+    val first = scored(prunedScan(spark, h, union), h.tier,
+      if (shortlist == 0) k else shortlist,
+      if (preds.isEmpty) inCells else inCells.zip(preds).map { case (c, p) => c && p })
+    if (shortlist == 0) first
+    else {
+      val idsPer = first.map(_.map(t => java.lang.Long.valueOf(t._1)))
+      scored(
+        prunedScan(spark, h, union).filter(col("id").isin(idsPer.flatten.distinct: _*)),
+        Flat, k, inCells.zip(idsPer).map { case (c, ids) => c && col("id").isin(ids: _*) })
+    }
   }
 
   /** STREAMING index maintenance: append an arriving vector stream into
@@ -738,241 +521,95 @@ object IvfIndex {
     finally out.close()
   }
 
-  private def readSidecar(spark: SparkSession, path: String, name: String): String = {
+  private def parseSidecar(spark: SparkSession, path: String, name: String): JValue = {
     val p = new org.apache.hadoop.fs.Path(path, name)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val in = fs.open(p)
-    try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](8192)
-      var n = in.read(chunk)
-      while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      new String(buf.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-    } finally in.close()
+    try org.json4s.jackson.JsonMethods.parse(in)
+    finally in.close()
   }
 
-  /** Batched probed top-k (VERDICT r9 ask #3): real serving answers P
-    * queries per batch. One query per [[probedTopK]] call costs P pruned
-    * scans (and P Spark jobs — the per-job floor dominates at serving
-    * latencies); here the probed cells are UNIONED across the batch, the
-    * non-probed directories pruned ONCE, and all P queries scored in the
-    * single pruned scan via [[Search.multiTopK]]'s per-partition k-heaps.
-    *
-    * Bit-identical to P sequential [[probedTopK]] calls (spec-asserted):
-    * the score expression is the same cosine over the same precomputed
-    * per-row norm with the same 5-dp round / −0.0 collapse, the tie-break
-    * is the same (score desc, id asc), and each query's `eligible` mask
-    * restricts it to ITS OWN probed cells — a row read only because some
-    * other query probed its cell can never leak into this query's top-k.
-    *
-    * Scale shape: IO = union of probed directories (≤ min(P·nProbe,
-    * nCentroids) cells, not P·nProbe — hot cells dedupe), compute = one
-    * pass with P bounded heaps, driver merge of ≤ partitions·P·k rows. */
-  def probedTopKBatch(spark: SparkSession, h: Handle,
-                      queries: Seq[Array[Double]], nProbe: Int,
-                      k: Int): IndexedSeq[Seq[(Long, Double)]] =
-    probedTopKBatchWhere(spark, h, queries, nProbe, k, preds = Nil)
-
-  /** FILTERED batched serving: each query carries its OWN metadata
-    * predicate ([[probedTopKWhere]]'s semantics at batch grain). The
-    * predicate folds into that query's eligibility mask — evaluated
-    * per row inside the single pruned scan, alongside the probed-cell
-    * membership — so P differently-filtered searches still cost ONE
-    * scan, and a row failing query i's filter can never enter query
-    * i's heap while remaining fully visible to query j. Bit-identical
-    * to P sequential [[probedTopKWhere]] calls (spec-asserted). Pass
-    * `preds = Nil` for unfiltered (≡ [[probedTopKBatch]]). */
-  def probedTopKBatchWhere(spark: SparkSession, h: Handle,
-                           queries: Seq[Array[Double]], nProbe: Int, k: Int,
-                           preds: Seq[org.apache.spark.sql.Column])
-      : IndexedSeq[Seq[(Long, Double)]] = {
-    require(preds.isEmpty || preds.size == queries.size,
-      s"preds size ${preds.size} != queries size ${queries.size}")
-    if (queries.isEmpty) return IndexedSeq.empty
-    val cellsPer = queries.map(q => probeCells(h, q, nProbe))
-    val union = cellsPer.flatten.distinct.sorted
-    val scan = prunedScan(spark, h, union)
-    val eligible = cellsPer.zipWithIndex.map { case (cs, i) =>
-      val inCells = col("cid").isin(cs.map(Integer.valueOf): _*)
-      if (preds.isEmpty) inCells else inCells && preds(i)
-    }
-    Search.multiTopK(scan, "v", "id", queries, k, eligible = eligible,
-      scoreExpr = (vd, q) => {
-        var qn = 0.0; var j = 0
-        while (j < q.length) { qn += q(j) * q(j); j += 1 }
-        Search.dot(typedLit(q.toSeq), vd) / (lit(math.sqrt(qn)) * col("vn"))
-      })
+  // strict readers for the sidecars' number arrays: anything else throws
+  private def items(j: JValue): List[JValue] = j match {
+    case JArray(xs) if xs.nonEmpty => xs
+    case x => throw new IllegalArgumentException(s"expected a non-empty array, got $x")
   }
+  private def doubles(j: JValue): Array[Double] = items(j).map {
+    case JDouble(d) => d
+    case JInt(i) => i.toDouble
+    case x => throw new IllegalArgumentException(s"expected a number, got $x")
+  }.toArray
+  private def requireDim(j: JValue, dim: Int, lengths: Int*): Unit =
+    require(j \ "dim" == JInt(dim) && lengths.forall(_ == dim),
+      s"sidecar dimension ${j \ "dim"} / ${lengths.mkString(",")} != centroid dimension $dim")
+  private def matrixJson(m: Array[Array[Double]]): String =
+    m.map(_.mkString("[", ",", "]")).mkString("[", ",", "]")
 
-  /** Shared spine of the batched COMPRESSED tiers: union the probed cells
-    * across the batch, prune directories once, project only (id, codeCol)
-    * — the column-pruning axis survives batching — and score all P
-    * queries in the one scan via [[Search.multiTopK]]'s per-partition
-    * k-heaps over each query's own ADC lookup table. Per-query `eligible`
-    * masks keep results bit-identical to P sequential calls: a row read
-    * only because SOME OTHER query probed its cell never leaks in. */
-  private def batchedAdc(spark: SparkSession, base: Handle, codeCol: String,
-                         queries: Seq[Array[Double]], nProbe: Int, k: Int,
-                         table: Array[Double] => Seq[Double], ksub: Int)
-      : IndexedSeq[Seq[(Long, Double)]] = {
-    if (queries.isEmpty) return IndexedSeq.empty
-    val cellsPer = queries.map(q => probeCells(base, q, nProbe))
-    val union = cellsPer.flatten.distinct.sorted
-    val scan = prunedScan(spark, base, union)
-      .select(col("id"), col(codeCol), col("cid"))
-    val eligible = cellsPer.map(cs => col("cid").isin(cs.map(Integer.valueOf): _*))
-    Search.multiTopK(scan, codeCol, "id", queries, k, eligible = eligible,
-      scoreExpr = (codes, q) =>
-        org.apache.spark.sql.graft.PqCodes.adcPacked(
-          codes, typedLit(table(q)), ksub))
-  }
+  /** Recall@k of `got` against the `truth` id sets, averaged over the
+    * queries (an empty truth set counts as recalled). */
+  private[serve] def recall(got: IndexedSeq[Seq[(Long, Double)]],
+                            truth: IndexedSeq[Set[Long]]): Double =
+    got.zip(truth).map { case (g, e) =>
+      if (e.isEmpty) 1.0 else g.count(t => e(t._1)).toDouble / e.size
+    }.sum / truth.size
 
-  /** Batched PQ serving: P ADC queries in ONE pruned (id, codes) scan —
-    * [[probedTopKBatch]]'s contract on the compressed tier. Bit-identical
-    * to P sequential [[probedTopKAdc]] calls (same [[adcTable]], same
-    * 5-dp round / −0.0 collapse, same score-desc/id-asc tie-break). */
-  def probedTopKBatchAdc(spark: SparkSession, h: PqHandle,
-                         queries: Seq[Array[Double]], nProbe: Int,
-                         k: Int): IndexedSeq[Seq[(Long, Double)]] =
-    batchedAdc(spark, Handle(h.path, h.centroids), "codes", queries, nProbe,
-      k, q => adcTable(h, q), h.books(0).length)
-
-  /** Batched SQ8 serving: P near-exact byte-lookup queries in ONE pruned
-    * (id, sq) scan. Bit-identical to P sequential [[probedTopKSq]] calls
-    * (same [[sqTable]], rounding and tie-break). */
-  def probedTopKBatchSq(spark: SparkSession, h: SqHandle,
-                        queries: Seq[Array[Double]], nProbe: Int,
-                        k: Int): IndexedSeq[Seq[(Long, Double)]] =
-    batchedAdc(spark, Handle(h.path, h.centroids), "sq", queries, nProbe,
-      k, q => sqTable(h, q), 256)
-
-  /** Recall-calibrated probe selection — the FAISS-autotune knob for this
-    * index: measure recall@k of probed serving against the exhaustive
-    * probe on a SAMPLE of queries and return the SMALLEST nProbe whose
-    * mean recall meets `target`, plus every (nProbe, recall) point
-    * measured on the way. Probed recall is monotone in nProbe (the probed
-    * set only grows), so a doubling sweep brackets the answer and a
-    * binary search pins it — O(log nCentroids) levels, each ONE batched
-    * pruned scan ([[probedTopKBatch]]), never a per-query job storm.
-    * Calibration cost is sample-bounded and independent of corpus size:
-    * exactly the shape that lets an operator re-tune a 100-TB index from
-    * a few hundred held-out queries. */
-  def calibrateNProbe(spark: SparkSession, h: Handle,
-                      sample: Seq[Array[Double]], k: Int, target: Double)
-      : (Int, Seq[(Int, Double)]) =
-    calibrate(h.centroids.length, sample.size, target,
-      p => probedTopKBatch(spark, h, sample, p, k))
-
-  /** [[calibrateNProbe]] on the PQ tier: recall measured against the
-    * tier's OWN exhaustive probe (ADC everywhere) — the knob tunes the
-    * probe share; the quantization error is the separate, fixed axis
-    * the recall-vs-compression artifact quantifies. */
-  def calibrateNProbeAdc(spark: SparkSession, h: PqHandle,
-                         sample: Seq[Array[Double]], k: Int, target: Double)
-      : (Int, Seq[(Int, Double)]) =
-    calibrate(h.centroids.length, sample.size, target,
-      p => probedTopKBatchAdc(spark, h, sample, p, k))
-
-  /** [[calibrateNProbe]] on the SQ8 tier. */
-  def calibrateNProbeSq(spark: SparkSession, h: SqHandle,
-                        sample: Seq[Array[Double]], k: Int, target: Double)
-      : (Int, Seq[(Int, Double)]) =
-    calibrate(h.centroids.length, sample.size, target,
-      p => probedTopKBatchSq(spark, h, sample, p, k))
-
-  /** The binary tier's OWN autotune knob is the SHORTLIST size, not the
-    * probe count (its shortlist is what bounds the refine and the recall):
-    * minimal shortlist whose refined top-k meets `target` recall against
-    * the exact ranking at the same probe count. Recall is monotone in
-    * shortlist (the refined candidate set only grows), so the same
-    * doubling + binary search applies — O(log maxShortlist) batched
-    * two-scan rounds, sample-bounded. */
-  def calibrateShortlistBq(spark: SparkSession, h: BqHandle,
-                           sample: Seq[Array[Double]], nProbe: Int, k: Int,
-                           target: Double, maxShortlist: Int)
-      : (Int, Seq[(Int, Double)]) =
-    calibrateShortlist(spark, Handle(h.path, h.centroids), sample, nProbe,
-      k, target, maxShortlist,
-      s => probedTopKBqBatch(spark, h, sample, nProbe, k, shortlist = s))
-
-  /** [[calibrateShortlistBq]]'s knob on the MRL tier: minimal prefix
-    * shortlist whose refined top-k meets `target` recall against the
-    * exact probed ranking at the same probe count. The prefix width is
-    * fixed at build time (it is the index layout); the shortlist is the
-    * query-time lever trading refine IO for truncation recall. */
-  def calibrateShortlistMrl(spark: SparkSession, h: MrlHandle,
-                            sample: Seq[Array[Double]], nProbe: Int, k: Int,
-                            target: Double, maxShortlist: Int)
-      : (Int, Seq[(Int, Double)]) =
-    calibrateShortlist(spark, Handle(h.path, h.centroids), sample, nProbe,
-      k, target, maxShortlist,
-      s => probedTopKMrlBatch(spark, h, sample, nProbe, k, shortlist = s))
-
-  private def calibrateShortlist(spark: SparkSession, base: Handle,
-                                 sample: Seq[Array[Double]], nProbe: Int,
-                                 k: Int, target: Double, maxShortlist: Int,
-                                 probe: Int => IndexedSeq[Seq[(Long, Double)]])
-      : (Int, Seq[(Int, Double)]) = {
-    require(maxShortlist >= k, s"maxShortlist $maxShortlist below k=$k")
-    require(sample.nonEmpty, "calibration needs at least one sample query")
-    require(target > 0.0 && target <= 1.0, s"recall target $target outside (0,1]")
-    // exact reference: the uncompressed tier on the same index + probes
-    val exact = probedTopKBatch(spark, base, sample, nProbe, k)
-      .map(_.map(_._1).toSet)
-    val measured = scala.collection.mutable.LinkedHashMap.empty[Int, Double]
-    def recallAt(s: Int): Double = measured.getOrElseUpdate(s, {
-      val got = probe(s)
-      (got, exact).zipped.map { (g, e) =>
-        if (e.isEmpty) 1.0 else g.count(t => e(t._1)).toDouble / e.size
-      }.sum / sample.size
-    })
-    var lo = k - 1
-    var hi = k
-    while (hi < maxShortlist && recallAt(hi) < target) {
-      lo = hi; hi = math.min(hi * 2, maxShortlist)
-    }
+  /** The smallest level in [start, max] whose recall meets `target`, for a
+    * recall monotone in the level: a doubling sweep brackets it (tracking
+    * the largest KNOWN-failing level as the floor) and a binary search
+    * pins it — O(log max) measurements. An infeasible target is VISIBLE:
+    * reaching `max` without meeting it throws instead of returning a
+    * level a caller would deploy believing the target met. */
+  private[serve] def minimalLevel(start: Int, max: Int, target: Double)
+                                 (recallAt: Int => Double): Int = {
+    var lo = start - 1
+    var hi = start
+    while (hi < max && recallAt(hi) < target) { lo = hi; hi = math.min(hi * 2, max) }
     while (lo + 1 < hi) {
       val mid = (lo + hi) / 2
       if (recallAt(mid) >= target) hi = mid else lo = mid
     }
-    // An infeasible target must be VISIBLE: without this check, hitting
-    // the maxShortlist ceiling returned (maxShortlist, curve) exactly like
-    // a successful calibration, and a caller could deploy believing the
-    // recall target is met.
-    val achieved = recallAt(hi)
+    val achieved = recallAt(hi) // the chosen level is always measured
     if (achieved < target)
       throw new IllegalStateException(
-        f"recall target $target%.3f infeasible on this tier: recall at " +
-          f"maxShortlist=$maxShortlist is $achieved%.3f — raise maxShortlist, " +
-          "nProbe, or the tier's fidelity")
-    (hi, measured.toSeq.sortBy(_._1))
+        f"recall target $target%.3f infeasible: recall at $max is $achieved%.3f " +
+          "— raise the ceiling, nProbe, or the tier's fidelity")
+    hi
   }
 
-  private def calibrate(n: Int, sampleSize: Int, target: Double,
-                        probe: Int => IndexedSeq[Seq[(Long, Double)]])
+  /** Recall-calibrated knob selection — the FAISS-autotune step for this
+    * index: measure recall@k of batched serving on a SAMPLE of queries and
+    * return the SMALLEST level whose mean recall meets `target`, plus
+    * every (level, recall) point measured on the way. Each level is ONE
+    * batched call ([[probedTopKBatch]]), so the cost is sample-bounded and
+    * independent of corpus size — a few hundred held-out queries re-tune a
+    * 100-TB index.
+    *
+    * The knob is nProbe by default, graded against the tier's OWN
+    * exhaustive probe (the quantization error is the separate, fixed
+    * axis). With `maxShortlist > 0` it is the refine shortlist in
+    * [k, maxShortlist] at the fixed `nProbe`, graded against the exact
+    * ranking at that probe count — the binary and MRL tiers' lever. Both
+    * recalls are monotone in their knob ([[minimalLevel]]). */
+  def calibrate(spark: SparkSession, h: Handle, sample: Seq[Array[Double]],
+                k: Int, target: Double, nProbe: Int = 0, maxShortlist: Int = 0)
       : (Int, Seq[(Int, Double)]) = {
-    require(sampleSize > 0, "calibration needs at least one sample query")
+    require(sample.nonEmpty, "calibration needs at least one sample query")
     require(target > 0.0 && target <= 1.0, s"recall target $target outside (0,1]")
-    val exact = probe(n).map(_.map(_._1).toSet)
+    require(maxShortlist >= k || (maxShortlist == 0 && nProbe == 0),
+      s"maxShortlist $maxShortlist below k=$k (nProbe is fixed only for a shortlist knob)")
+    val n = h.centroids.length
+    val (truth, probe, start, max) =
+      if (maxShortlist == 0)
+        (probedTopKBatch(spark, h, sample, n, k),
+          (p: Int) => probedTopKBatch(spark, h, sample, p, k), 1, n)
+      else
+        (probedTopKBatch(spark, h.copy(tier = Flat), sample, nProbe, k),
+          (s: Int) => probedTopKBatch(spark, h, sample, nProbe, k, shortlist = s),
+          k, maxShortlist)
+    val truthIds = truth.map(_.map(_._1).toSet)
     val measured = scala.collection.mutable.LinkedHashMap.empty[Int, Double]
-    def recallAt(p: Int): Double = measured.getOrElseUpdate(p, {
-      val got = probe(p)
-      (got, exact).zipped.map { (g, e) =>
-        if (e.isEmpty) 1.0 else g.count(t => e(t._1)).toDouble / e.size
-      }.sum / sampleSize
-    })
-    // doubling sweep to the first passing level, tracking the largest
-    // KNOWN-failing level as the bracket floor (the exhaustive probe
-    // passes any target by construction: recall vs itself is 1.0)
-    var lo = 0
-    var hi = 1
-    while (hi < n && recallAt(hi) < target) { lo = hi; hi = math.min(hi * 2, n) }
-    // binary search the minimal passing nProbe inside (lo, hi]
-    while (lo + 1 < hi) {
-      val mid = (lo + hi) / 2
-      if (recallAt(mid) >= target) hi = mid else lo = mid
-    }
-    recallAt(hi) // the chosen level is always on the returned curve
-    (hi, measured.toSeq.sortBy(_._1))
+    val chosen = minimalLevel(start, max, target)(l =>
+      measured.getOrElseUpdate(l, recall(probe(l), truthIds)))
+    (chosen, measured.toSeq.sortBy(_._1))
   }
 }

@@ -2,15 +2,24 @@ package graft.serve
 
 import graft.Tables
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
 
-/** Measured pruned-vs-unpruned serving comparison for BASELINE.md (VERDICT
-  * r8 ask #8's bench row): build the cid-partitioned IVF index over
-  * SPARK_GRAFT_SF_DIR's embeddings, then time probed top-k at nProbe=2 vs
-  * an exhaustive probe (= full scan), median of 5 after warmup. The pruned
-  * query's win is IO-proportional: it reads nProbe/nCentroids of the files
-  * (the spec asserts the file counts; this main measures the wall-clock).
+/** Serving latency per tier for BASELINE.md: build the cid-partitioned
+  * IVF index over SPARK_GRAFT_SF_DIR's embeddings once per tier (flat,
+  * PQ, SQ8, binary, MRL), then time, after a warm-up, single-query
+  * probes at nProbe=2 and at the exhaustive probe (= full scan), and the
+  * batched path over 16 queries. Prints p50 and p99 per tier and probe
+  * shape. The pruned probe's win is IO-proportional: it reads
+  * nProbe/nCentroids of the files (IvfServeSpec asserts the file counts;
+  * this main measures the wall-clock).
+  *
+  * Run: `SPARK_GRAFT_SF_DIR=<dir> sbt "runMain graft.serve.IvfServeBench"`.
   */
 object IvfServeBench {
+  private val NCents = 32
+  private val NProbe = 2
+  private val K = 10
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -20,143 +29,41 @@ object IvfServeBench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val nCents = 32
-    val path = java.nio.file.Files.createTempDirectory("graft-ivf-bench").toString
     val emb = Tables.embeddings(spark, sfDir)
-    val t0 = System.nanoTime()
-    val h = IvfIndex.write(emb, "embedding", "vec_id", path, nCents, iters = 3)
-    println(f"[ivf] build ${(System.nanoTime() - t0) / 1e9}%.1f s ($path)")
-    val q = emb.filter(org.apache.spark.sql.functions.col("vec_id") === 7L)
-      .select("embedding").head().getSeq[Float](0).map(_.toDouble).toArray
-    def time(nProbe: Int): Double = {
-      val samples = (1 to 6).map { _ =>
-        val s0 = System.nanoTime()
-        IvfIndex.probedTopK(spark, h, q, nProbe, 10).collect()
-        (System.nanoTime() - s0) / 1e9
-      }
-      samples.tail.sorted.apply(2) // drop warmup, median of 5
-    }
-    val full = time(nCents)
-    val pruned = time(2)
-    println(f"[ivf] sf=$sfDir n=${emb.count()} cells=$nCents " +
-      f"pruned(nProbe=2) $pruned%.3f s vs full $full%.3f s = ${pruned / full}%.2fx")
-    // batched serving (r9 ask #3): P queries in ONE pruned scan vs P
-    // sequential probedTopK jobs — the win is the per-job floor × (P−1)
-    // plus hot-cell IO dedup across the batch
-    val batchQ = emb.filter(org.apache.spark.sql.functions.col("vec_id") < 16L)
+    val queries = emb.filter(col("vec_id") < 16L)
       .select("vec_id", "embedding").collect()
       .sortBy(_.getLong(0))
       .map(_.getSeq[Float](1).map(_.toDouble).toArray).toSeq
-    def med5(f: => Unit): Double = {
-      val samples = (1 to 6).map { _ =>
-        val s0 = System.nanoTime(); f; (System.nanoTime() - s0) / 1e9
+    // (tier, its fit, the refine shortlist it is served with)
+    val tiers = Seq(
+      ("flat", IvfIndex.flat, 0),
+      ("pq", IvfIndex.pq(m = 8, ksub = 16, pqIters = 3), 0),
+      ("sq8", IvfIndex.sq8, 0),
+      ("binary", IvfIndex.binary, 40),
+      ("mrl", IvfIndex.mrl(prefixDim = 16), 40))
+    println(f"[ivf] sf=$sfDir n=${emb.count()} cells=$NCents k=$K")
+    tiers.foreach { case (name, fit, shortlist) =>
+      val path = java.nio.file.Files.createTempDirectory(s"graft-ivf-$name").toString
+      val t0 = System.nanoTime()
+      val h = IvfIndex.write(emb, "embedding", "vec_id", path, NCents, iters = 3,
+        tier = fit)
+      println(f"[ivf] $name build ${(System.nanoTime() - t0) / 1e9}%.1f s ($path)")
+      def report(shape: String, rounds: Int)(op: Int => Unit): Unit = {
+        (0 until 3).foreach(op) // warm-up
+        val ms = (0 until rounds).map { i =>
+          val s0 = System.nanoTime(); op(i); (System.nanoTime() - s0) / 1e6
+        }.sorted
+        def pct(p: Double) = ms(math.max(0, math.ceil(p * ms.size).toInt - 1))
+        println(f"[ivf] $name $shape: p50 ${pct(0.5)}%.1f ms, p99 ${pct(0.99)}%.1f ms " +
+          s"(${ms.size} samples)")
       }
-      samples.tail.sorted.apply(2)
-    }
-    val tSeq = med5(batchQ.foreach(q =>
-      IvfIndex.probedTopK(spark, h, q, 2, 10).collect()))
-    val tBatch = med5(IvfIndex.probedTopKBatch(spark, h, batchQ, 2, 10))
-    println(f"[ivf] batch P=${batchQ.size} nProbe=2: batched $tBatch%.3f s vs " +
-      f"sequential $tSeq%.3f s = ${tBatch / tSeq}%.2fx " +
-      f"(one-query pruned scan was $pruned%.3f s)")
-    // IVF+PQ: the compressed index — ADC reads only (id, codes); measure
-    // the codes-vs-vectors byte share and the ADC + refined query times
-    val pqPath = java.nio.file.Files.createTempDirectory("graft-ivfpq-bench").toString
-    val p0 = System.nanoTime()
-    val hp = IvfIndex.writePq(emb, "embedding", "vec_id", pqPath,
-      nCents, iters = 3, dim = q.length, m = 8, ksub = 16, pqIters = 3)
-    println(f"[ivf] pq build ${(System.nanoTime() - p0) / 1e9}%.1f s ($pqPath)")
-    val tAdc = med5(IvfIndex.probedTopKAdc(spark, hp, q, 2, 10).collect())
-    val tRef = med5(IvfIndex.probedTopKRefined(spark, hp, q, 2, 10, kAdc = 40).collect())
-    println(f"[ivf] pq ADC(nProbe=2) $tAdc%.3f s, refined(kAdc=40) $tRef%.3f s " +
-      f"vs exact pruned $pruned%.3f s")
-    // batched COMPRESSED serving: the probedTopKBatch contract on the PQ
-    // and SQ8 tiers — P queries' own ADC tables in one (id, codes|sq) scan
-    val tSeqAdc = med5(batchQ.foreach(q =>
-      IvfIndex.probedTopKAdc(spark, hp, q, 2, 10).collect()))
-    val tBatchAdc = med5(IvfIndex.probedTopKBatchAdc(spark, hp, batchQ, 2, 10))
-    println(f"[ivf] pq batch P=${batchQ.size} nProbe=2: batched $tBatchAdc%.3f s vs " +
-      f"sequential $tSeqAdc%.3f s = ${tBatchAdc / tSeqAdc}%.2fx " +
-      f"(one-query ADC scan was $tAdc%.3f s)")
-    val sqPath = java.nio.file.Files.createTempDirectory("graft-ivfsq-bench").toString
-    val s0 = System.nanoTime()
-    val hs = IvfIndex.writeSq(emb, "embedding", "vec_id", sqPath,
-      nCents, iters = 3, dim = q.length)
-    println(f"[ivf] sq build ${(System.nanoTime() - s0) / 1e9}%.1f s ($sqPath)")
-    val tSq = med5(IvfIndex.probedTopKSq(spark, hs, q, 2, 10).collect())
-    val tSeqSq = med5(batchQ.foreach(q =>
-      IvfIndex.probedTopKSq(spark, hs, q, 2, 10).collect()))
-    val tBatchSq = med5(IvfIndex.probedTopKBatchSq(spark, hs, batchQ, 2, 10))
-    println(f"[ivf] sq8(nProbe=2) $tSq%.3f s; batch P=${batchQ.size}: " +
-      f"batched $tBatchSq%.3f s vs sequential $tSeqSq%.3f s = ${tBatchSq / tSeqSq}%.2fx")
-    // IVF+binary: the 64x tier — Hamming shortlist over (id, sig) + exact
-    // refine; the batched path is TWO pruned scans for the whole batch
-    val bqPath = java.nio.file.Files.createTempDirectory("graft-ivfbq-bench").toString
-    val b0 = System.nanoTime()
-    val hb = IvfIndex.writeBq(emb, "embedding", "vec_id", bqPath,
-      nCents, iters = 3, dim = q.length)
-    println(f"[ivf] bq build ${(System.nanoTime() - b0) / 1e9}%.1f s ($bqPath)")
-    val tBq = med5(IvfIndex.probedTopKBq(spark, hb, q, 2, 10, shortlist = 40).collect())
-    val tSeqBq = med5(batchQ.foreach(q =>
-      IvfIndex.probedTopKBq(spark, hb, q, 2, 10, shortlist = 40).collect()))
-    val tBatchBq = med5(IvfIndex.probedTopKBqBatch(spark, hb, batchQ, 2, 10, shortlist = 40))
-    println(f"[ivf] bq(nProbe=2, shortlist=40) $tBq%.3f s; batch P=${batchQ.size}: " +
-      f"batched $tBatchBq%.3f s vs sequential $tSeqBq%.3f s = ${tBatchBq / tSeqBq}%.2fx")
-    // IVF+MRL: the fit-free prefix tier — truncated-cosine shortlist over
-    // (id, pre, pn) + exact refine; batched = two pruned scans total
-    val mrlPath = java.nio.file.Files.createTempDirectory("graft-ivfmrl-bench").toString
-    val m0 = System.nanoTime()
-    val hm = IvfIndex.writeMrl(emb, "embedding", "vec_id", mrlPath,
-      nCents, iters = 3, prefixDim = 16)
-    println(f"[ivf] mrl build ${(System.nanoTime() - m0) / 1e9}%.1f s ($mrlPath)")
-    val tMrl = med5(IvfIndex.probedTopKMrl(spark, hm, q, 2, 10, shortlist = 40).collect())
-    val tSeqMrl = med5(batchQ.foreach(q =>
-      IvfIndex.probedTopKMrl(spark, hm, q, 2, 10, shortlist = 40).collect()))
-    val tBatchMrl = med5(IvfIndex.probedTopKMrlBatch(spark, hm, batchQ, 2, 10, shortlist = 40))
-    println(f"[ivf] mrl(prefix=16, nProbe=2, shortlist=40) $tMrl%.3f s; batch P=${batchQ.size}: " +
-      f"batched $tBatchMrl%.3f s vs sequential $tSeqMrl%.3f s = ${tBatchMrl / tSeqMrl}%.2fx")
-    // r10 ask #5: serving under MAINTENANCE CHURN — batched probes racing
-    // append + compact cycles on the same index. A probe that loses the
-    // listing race to a compaction swap fails LOUDLY (never a silent
-    // partial cell — ConcurrentServeSpec machine-checks that) and is
-    // retried, the serving contract; this row measures what the churn
-    // and retries cost wall-clock next to the quiet batch latency above.
-    locally {
-      import org.apache.spark.sql.functions._
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration._
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.global
-      @volatile var stop = false
-      val churn = Future {
-        var i = 0
-        while (!stop) {
-          // the appendStream landing shape in batch form: assign against
-          // the fixed centroids, append small files into cid= dirs
-          emb.filter(col("vec_id") < 8)
-            .select((col("vec_id") + 900000L + i * 100L).cast("long").as("id"),
-              graft.search.Search.asDouble(col("embedding")).as("v"))
-            .withColumn("vn", graft.search.Search.l2Norm(col("v")))
-            .withColumn("cid", graft.search.Search.ivfAssign(col("v"), h.centroids))
-            .write.mode("append").partitionBy("cid").parquet(h.path)
-          IvfIndex.compact(spark, h, maxFilesPerCell = 4)
-          i += 1
-        }
-        i
+      def single(nProbe: Int)(i: Int): Unit = IvfIndex.probedTopK(spark, h,
+        queries(i % queries.size), nProbe, K, shortlist).collect()
+      report(s"single nProbe=$NProbe", 32)(single(NProbe))
+      report(s"single nProbe=$NCents", 16)(single(NCents))
+      report(s"batch P=${queries.size} nProbe=$NProbe", 8) { _ =>
+        IvfIndex.probedTopKBatch(spark, h, queries, NProbe, K, shortlist)
       }
-      var ok = 0
-      var retried = 0
-      val c0 = System.nanoTime()
-      while (ok < 10) {
-        try { IvfIndex.probedTopKBatch(spark, h, batchQ, 2, 10); ok += 1 }
-        catch { case _: Throwable => retried += 1 }
-      }
-      val perBatch = (System.nanoTime() - c0) / 1e9 / ok
-      stop = true
-      val cycles = Await.result(churn, 600.seconds)
-      println(f"[ivf] churn: batch P=${batchQ.size} nProbe=2 under $cycles " +
-        f"append+compact cycles: $perBatch%.3f s/batch (quiet $tBatch%.3f s), " +
-        f"$retried loud retries")
     }
     spark.stop()
   }

@@ -3,27 +3,28 @@ package graft.serve
 import org.apache.spark.sql.SparkSession
 
 /** ONE serving entry point over the compression ladder (VERDICT r10 ask
-  * #7): the per-tier knobs exist — `calibrateNProbe{,Adc,Sq}`,
-  * `calibrateShortlist{Bq,Mrl}` — but a user shipping an index wants one
-  * question answered: "which tier, at which nProbe and shortlist, meets
-  * my recall target inside my scan-bytes budget?" [[choose]] answers it by
-  * MEASUREMENT, the CompressionCurve way: every candidate configuration
-  * is run through the tier's own batched serving path on a held-out
-  * query sample and graded against the uncompressed index's exhaustive
-  * ranking — never a model of recall, always the measured value.
+  * #7): the per-tier knob exists — `IvfIndex.calibrate` — but a user
+  * shipping an index wants one question answered: "which tier, at which
+  * nProbe and shortlist, meets my recall target inside my scan-bytes
+  * budget?" [[choose]] answers it by MEASUREMENT, the CompressionCurve
+  * way: every candidate configuration is run through the tier's own
+  * batched serving path on a held-out query sample and graded against
+  * the uncompressed index's exhaustive ranking — never a model of
+  * recall, always the measured value.
   *
   * Selection order: tiers ascending by serving bytes/row (binary 1
   * bit/dim → PQ m bytes → MRL prefix → SQ8 → flat), configurations
-  * within a tier ascending lexicographically by (nProbe, shortlist) —
+  * within a tier lexicographically minimal in (nProbe, shortlist) —
   * probe count dominates serving IO (a probe reads ~nProbe/nCentroids
-  * of the index), the shortlist only the refine gather. The first
-  * configuration meeting the target wins, so the result is the most
-  * compressed tier that can do the job, at its cheapest passing knobs.
-  * Recall is monotone in both knobs (the probed set and the refine
-  * candidate set only grow), so a tier whose MAXIMAL configuration
-  * misses the target is skipped after one measurement.
+  * of the index), the shortlist only the refine gather. The first tier
+  * meeting the target wins, so the result is the most compressed tier
+  * that can do the job, at its cheapest passing knobs. Recall is
+  * monotone in both knobs (the probed set and the refine candidate set
+  * only grow), so a tier whose MAXIMAL configuration misses the target
+  * is skipped after one measurement, and each knob is pinned by
+  * `IvfIndex.calibrate`'s doubling + binary search.
   *
-  * Infeasibility is VISIBLE (the calibrateShortlist contract): if no
+  * Infeasibility is VISIBLE (the calibrate contract): if no
   * in-budget tier reaches the target, choose throws with the best
   * measured (tier, recall) instead of returning a plan that silently
   * under-delivers. With the flat tier in budget any target ≤ 1.0 is
@@ -31,20 +32,21 @@ import org.apache.spark.sql.SparkSession
   * means the BUDGET excluded every tier that could pass.
   *
   * Calibration cost is sample-bounded and corpus-size-independent: each
-  * measurement is one batched pruned scan (the probedTopK*Batch job
-  * shape), ≤ ~log(nCentroids)·log(maxShortlist/k) of them per tier —
-  * the same few-hundred-queries-retune-a-100-TB-index shape as
-  * calibrateNProbe.
+  * measurement is one batched `IvfIndex.probedTopKBatch` call,
+  * ≤ ~2·(log(nCentroids) + log(maxShortlist/k)) of them per tier — the
+  * same few-hundred-queries-retune-a-100-TB-index shape as calibrate.
   */
 object ServingPlanner {
 
   /** The written tiers of ONE corpus (same vectors, same centroid
     * geometry). Absent tiers are simply not candidates. */
   final case class Tiers(flat: IvfIndex.Handle,
-                         sq: Option[IvfIndex.SqHandle] = None,
-                         pq: Option[IvfIndex.PqHandle] = None,
-                         bq: Option[IvfIndex.BqHandle] = None,
-                         mrl: Option[IvfIndex.MrlHandle] = None)
+                         sq: Option[IvfIndex.Handle] = None,
+                         pq: Option[IvfIndex.Handle] = None,
+                         bq: Option[IvfIndex.Handle] = None,
+                         mrl: Option[IvfIndex.Handle] = None) {
+    require(flat.tier == IvfIndex.Flat, s"the flat slot holds a ${flat.tier} index")
+  }
 
   /** A measured, deployable configuration. `curve` holds every
     * (config-label, recall) point measured on the way — the planner's
@@ -62,6 +64,16 @@ object ServingPlanner {
                         bytesPerRow: Int, refineBytesPerRow: Int,
                         measuredRecall: Double,
                         curve: Seq[(String, Double)])
+
+  /** A tier's planner label, scan bytes/row at `dim`, and whether it is
+    * served through a refine shortlist. */
+  private def profile(t: IvfIndex.Tier, dim: Int): (String, Int, Boolean) = t match {
+    case IvfIndex.Bq(_) => ("binary", ((dim + 63) / 64) * 8, true)
+    case IvfIndex.Pq(books) => ("pq", books.length, false)
+    case IvfIndex.Mrl(prefixDim) => ("mrl", prefixDim * 8, true)
+    case IvfIndex.Sq(_, _) => ("sq8", dim, false)
+    case IvfIndex.Flat => ("flat", dim * 8, false)
+  }
 
   /** `scanBudgetBytesPerRow` bounds the bytes/row the serving SCAN reads
     * — the per-query IO story, which is what distinguishes the tiers at
@@ -90,61 +102,35 @@ object ServingPlanner {
     val truth: IndexedSeq[Set[Long]] =
       IvfIndex.probedTopKBatch(spark, tiers.flat, sample, nCells, k)
         .map(_.map(_._1).toSet)
-    def recallOf(got: IndexedSeq[Seq[(Long, Double)]]): Double =
-      (got, truth).zipped.map { (g, e) =>
-        if (e.isEmpty) 1.0 else g.count(t => e(t._1)).toDouble / e.size
-      }.sum / sample.size
 
-    def doubling(max: Int, from: Int): Seq[Int] =
-      (Iterator.iterate(from)(_ * 2).takeWhile(_ < max) ++ Iterator(max)).toSeq
-
-    final case class Cand(name: String, bytes: Int, shortlisted: Boolean,
-                          probe: (Int, Int) => IndexedSeq[Seq[(Long, Double)]])
-    val cands: Seq[Cand] = (
-      tiers.bq.map(h => Cand("binary", ((dim + 63) / 64) * 8, shortlisted = true,
-        (np, sl) => IvfIndex.probedTopKBqBatch(spark, h, sample, np, k, sl))).toSeq ++
-      tiers.pq.map(h => Cand("pq", h.books.length, shortlisted = false,
-        (np, _) => IvfIndex.probedTopKBatchAdc(spark, h, sample, np, k))).toSeq ++
-      tiers.mrl.map(h => Cand("mrl", h.prefixDim * 8, shortlisted = true,
-        (np, sl) => IvfIndex.probedTopKMrlBatch(spark, h, sample, np, k, sl))).toSeq ++
-      tiers.sq.map(h => Cand("sq8", dim, shortlisted = false,
-        (np, _) => IvfIndex.probedTopKBatchSq(spark, h, sample, np, k))).toSeq ++
-      Seq(Cand("flat", dim * 8, shortlisted = false,
-        (np, _) => IvfIndex.probedTopKBatch(spark, tiers.flat, sample, np, k)))
-    ).sortBy(_.bytes)
-
-    val inBudget = cands.filter(_.bytes <= scanBudgetBytesPerRow)
+    val cands = (tiers.bq ++ tiers.pq ++ tiers.mrl ++ tiers.sq ++ Seq(tiers.flat))
+      .toSeq.map(h => (h, profile(h.tier, dim))).sortBy(_._2._2)
+    val inBudget = cands.filter(_._2._2 <= scanBudgetBytesPerRow)
     if (inBudget.isEmpty)
       throw new IllegalStateException(
         s"no serving tier fits $scanBudgetBytesPerRow scan bytes/row — cheapest " +
-          s"available is ${cands.map(c => s"${c.name}=${c.bytes}").mkString(", ")}")
+          s"available is ${cands.map { case (_, (n, b, _)) => s"$n=$b" }.mkString(", ")}")
 
     val curve = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
     var best: Option[(String, Double)] = None
-    inBudget.foreach { c =>
-      val probes = doubling(nCells, 1)
-      val shorts = if (c.shortlisted) doubling(maxSl, k) else Seq(0)
+    inBudget.foreach { case (h, (name, bytes, shortlisted)) =>
+      val measured = scala.collection.mutable.Map.empty[(Int, Int), Double]
+      def recallAt(np: Int, sl: Int): Double = measured.getOrElseUpdate((np, sl), {
+        val r = IvfIndex.recall(
+          IvfIndex.probedTopKBatch(spark, h, sample, np, k, shortlist = sl), truth)
+        curve += (s"$name nProbe=$np" + (if (shortlisted) s" shortlist=$sl" else "")) -> r
+        r
+      })
+      val slMax = if (shortlisted) maxSl else 0
       // one measurement at the tier's maximal knobs: recall is monotone
       // in both, so a failing ceiling rules the whole tier out
-      val ceiling = recallOf(c.probe(nCells, if (c.shortlisted) maxSl else 0))
-      curve += s"${c.name} nProbe=$nCells" +
-        (if (c.shortlisted) s" shortlist=$maxSl" else "") -> ceiling
-      if (best.forall(_._2 < ceiling)) best = Some((c.name, ceiling))
+      val ceiling = recallAt(nCells, slMax)
+      if (best.forall(_._2 < ceiling)) best = Some((name, ceiling))
       if (ceiling >= recallTarget) {
-        for (np <- probes; sl <- shorts) {
-          val label = s"${c.name} nProbe=$np" +
-            (if (c.shortlisted) s" shortlist=$sl" else "")
-          val r =
-            if (np == nCells && (!c.shortlisted || sl == maxSl)) ceiling
-            else {
-              val m = recallOf(c.probe(np, sl))
-              curve += label -> m
-              m
-            }
-          if (r >= recallTarget)
-            return Plan(c.name, np, if (c.shortlisted) Some(sl) else None,
-              c.bytes, if (c.shortlisted) dim * 8 else 0, r, curve.toSeq)
-        }
+        val np = IvfIndex.minimalLevel(1, nCells, recallTarget)(recallAt(_, slMax))
+        val sl = if (shortlisted) IvfIndex.minimalLevel(k, maxSl, recallTarget)(recallAt(np, _)) else 0
+        return Plan(name, np, if (shortlisted) Some(sl) else None,
+          bytes, if (shortlisted) dim * 8 else 0, recallAt(np, sl), curve.toSeq)
       }
     }
     val (bn, br) = best.getOrElse(("none", 0.0))

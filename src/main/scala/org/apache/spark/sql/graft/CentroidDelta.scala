@@ -24,8 +24,11 @@ import org.apache.spark.sql.types._
   * oracle hash is the witness; CentroidDeltaSpec pins it differentially
   * against the HOF form).
   *
-  * Null contract (= zip_with over a null array): null v → null. `cid` is
-  * never null for a non-null v (IvfAssign's contract).
+  * Null contract (= the zip_with/element_at form): null v → null, and a
+  * null `cid` → null (element_at of a null index is null, and zip_with
+  * over a null array is null) — never centroid 0. Equality is by value
+  * over the centroid matrix, so canonicalization and subexpression
+  * elimination match two equal deltas.
   */
 case class CentroidDelta(vec: Expression, cid: Expression,
                          cents: Array[Array[Double]])
@@ -35,14 +38,25 @@ case class CentroidDelta(vec: Expression, cid: Expression,
   override def inputTypes: Seq[AbstractDataType] =
     Seq(ArrayType(DoubleType), IntegerType)
   override def dataType: DataType = ArrayType(DoubleType)
-  override def nullable: Boolean = vec.nullable
+  override def nullable: Boolean = vec.nullable || cid.nullable
   override def prettyName: String = "graft_centroid_delta"
+
+  override def equals(other: Any): Boolean = other match {
+    case d: CentroidDelta =>
+      vec == d.vec && cid == d.cid && java.util.Arrays.deepEquals(
+        cents.asInstanceOf[Array[AnyRef]], d.cents.asInstanceOf[Array[AnyRef]])
+    case _ => false
+  }
+  override def hashCode(): Int =
+    31 * (31 * vec.hashCode() + cid.hashCode()) +
+      java.util.Arrays.deepHashCode(cents.asInstanceOf[Array[AnyRef]])
 
   override def eval(input: InternalRow): Any = {
     val v = vec.eval(input)
-    if (v == null) null
-    else CentroidDelta.compute(v.asInstanceOf[ArrayData],
-      cid.eval(input).asInstanceOf[Int], cents)
+    if (v == null) return null
+    val c = cid.eval(input)
+    if (c == null) null
+    else CentroidDelta.compute(v.asInstanceOf[ArrayData], c.asInstanceOf[Int], cents)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -52,7 +66,7 @@ case class CentroidDelta(vec: Expression, cid: Expression,
     val code = code"""
       ${vGen.code}
       ${cGen.code}
-      boolean ${ev.isNull} = ${vGen.isNull};
+      boolean ${ev.isNull} = ${vGen.isNull} || ${cGen.isNull};
       org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
       if (!${ev.isNull}) {
         ${ev.value} = org.apache.spark.sql.graft.CentroidDelta.compute(

@@ -1,6 +1,5 @@
 package graft
 
-import graft.search.Search
 import graft.serve.IvfIndex
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.FileSourceScanExec
@@ -17,12 +16,14 @@ class BqServeSpec extends SparkSpec {
   private val nCents = 8
   private val dim = 64
 
-  private lazy val built: IvfIndex.BqHandle = {
+  private lazy val built: IvfIndex.Handle = {
     val emb = Tables.embeddings(spark, sf("sf0.001"))
     val path = java.nio.file.Files.createTempDirectory("graft-ivfbq").toString
-    IvfIndex.writeBq(emb, "embedding", "vec_id", path,
-      nCentroids = nCents, iters = 3, dim = dim)
+    IvfIndex.write(emb, "embedding", "vec_id", path,
+      nCentroids = nCents, iters = 3, tier = IvfIndex.binary)
   }
+
+  private def thresholds(h: IvfIndex.Handle) = h.tier.asInstanceOf[IvfIndex.Bq].thresholds
 
   private lazy val q0: Array[Double] = Tables.embeddings(spark, sf("sf0.001"))
     .filter(col("vec_id") === 7L).select("embedding")
@@ -30,28 +31,20 @@ class BqServeSpec extends SparkSpec {
 
   test("sidecars round-trip: centroids AND thresholds, no scan") {
     val h = built
-    val reopened = IvfIndex.openBq(spark, h.path)
+    val reopened = IvfIndex.open(spark, h.path)
     assert(reopened.dim == dim)
-    assert(reopened.thresholds.toSeq == h.thresholds.toSeq)
+    assert(thresholds(reopened).toSeq == thresholds(h).toSeq)
     (reopened.centroids, h.centroids).zipped.foreach { (a, b) =>
       assert(a.toSeq == b.toSeq) }
   }
 
   test("shortlist scan prunes directories AND columns: sig words read, vectors not") {
     val h = built
-    // drive the shortlist phase alone (the first job inside probedTopKBq):
-    // project (id, sig), Hamming, limit — and inspect its executed scan
-    val cells = IvfIndex.probeCells(
-      IvfIndex.Handle(h.path, h.centroids), q0, 2)
-    val qSig = q0.indices.grouped(64).map { idxs =>
-      idxs.foldLeft(0L) { (w, i) =>
-        if (q0(i) > h.thresholds(i)) w | (1L << (i % 64)) else w
-      }
-    }.toSeq
-    val df = IvfIndex.prunedScan(spark, IvfIndex.Handle(h.path, h.centroids), cells)
-      .select(col("id"), col("sig"))
-      .withColumn("hamming", Search.hammingDistance(col("sig"), typedLit(qSig)))
-      .orderBy(col("hamming"), col("id")).limit(40)
+    // drive the shortlist phase alone (the first job inside a refined
+    // probe): the unrefined binary probe projects (id, sig), ranks by
+    // Hamming, limits — and inspect its executed scan
+    val cells = IvfIndex.probeCells(h, q0, 2)
+    val df = IvfIndex.probedTopK(spark, h, q0, nProbe = 2, k = 40)
     df.collect()
     val plan = df.queryExecution.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.executedPlan
@@ -75,12 +68,12 @@ class BqServeSpec extends SparkSpec {
   test("full probe + corpus-wide shortlist == the exact index's top-k") {
     val h = built
     val n = Tables.embeddings(spark, sf("sf0.001")).count().toInt
-    val refined = IvfIndex.probedTopKBq(spark, h, q0, nProbe = nCents,
+    val refined = IvfIndex.probedTopK(spark, h, q0, nProbe = nCents,
         k = 10, shortlist = n)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    // exact tier on the same layout (writeBq keeps v/vn like write does)
+    // exact tier on the same layout (the binary tier keeps v/vn)
     val exact = IvfIndex.probedTopK(spark,
-        IvfIndex.Handle(h.path, h.centroids), q0, nProbe = nCents, k = 10)
+        h.copy(tier = IvfIndex.Flat), q0, nProbe = nCents, k = 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(refined == exact,
       "corpus-wide-shortlist binary serving must equal exact serving")
@@ -93,10 +86,10 @@ class BqServeSpec extends SparkSpec {
       emb.filter(col("vec_id") === id).select("embedding")
         .head().getSeq[Float](0).map(_.toDouble).toArray
     }
-    val batch = IvfIndex.probedTopKBqBatch(spark, h, queries, nProbe = 3,
+    val batch = IvfIndex.probedTopKBatch(spark, h, queries, nProbe = 3,
       k = 5, shortlist = 30)
     val seq = queries.map { q =>
-      IvfIndex.probedTopKBq(spark, h, q, nProbe = 3, k = 5, shortlist = 30)
+      IvfIndex.probedTopK(spark, h, q, nProbe = 3, k = 5, shortlist = 30)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     }
     (batch, seq).zipped.foreach { (b, s) =>
@@ -113,8 +106,8 @@ class BqServeSpec extends SparkSpec {
         .head().getSeq[Float](0).map(_.toDouble).toArray
     }
     val target = 0.6
-    val (chosen, curve) = IvfIndex.calibrateShortlistBq(spark, h, sample,
-      nProbe = nCents, k = 5, target = target, maxShortlist = n)
+    val (chosen, curve) = IvfIndex.calibrate(spark, h, sample,
+      k = 5, target = target, nProbe = nCents, maxShortlist = n)
     info(s"chosen shortlist=$chosen; curve=${curve.map { case (s, r) => f"$s:$r%.2f" }.mkString(", ")}")
     val m = curve.toMap
     assert(m(chosen) >= target)
@@ -141,20 +134,20 @@ class BqServeSpec extends SparkSpec {
     // unreachable, and the old code returned (maxShortlist, curve) exactly
     // like a success — a caller would deploy believing target met
     val e = intercept[IllegalStateException] {
-      IvfIndex.calibrateShortlistBq(spark, h, sample,
-        nProbe = nCents, k = 5, target = 1.0, maxShortlist = 5)
+      IvfIndex.calibrate(spark, h, sample,
+        k = 5, target = 1.0, nProbe = nCents, maxShortlist = 5)
     }
     assert(e.getMessage.contains("infeasible"))
   }
 
   test("probed binary serving: sane recall at a 40-candidate shortlist") {
     val h = built
-    val got = IvfIndex.probedTopKBq(spark, h, q0, nProbe = nCents,
+    val got = IvfIndex.probedTopK(spark, h, q0, nProbe = nCents,
         k = 10, shortlist = 40)
       .collect().map(_.getLong(0)).toSet
     assert(got.size == 10)
     val exact = IvfIndex.probedTopK(spark,
-        IvfIndex.Handle(h.path, h.centroids), q0, nProbe = nCents, k = 10)
+        h.copy(tier = IvfIndex.Flat), q0, nProbe = nCents, k = 10)
       .collect().map(_.getLong(0)).toSet
     val recall = exact.count(got.contains).toDouble / exact.size
     info(s"binary(shortlist=40) recall@10 vs exact: $recall")

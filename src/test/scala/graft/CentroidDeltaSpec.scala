@@ -33,4 +33,37 @@ class CentroidDeltaSpec extends SparkSpec {
       }
     }
   }
+
+  test("CentroidDelta: null cid → null in interpreted and codegen modes; value equality") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+    import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType}
+    val cents = Array(Array(0.25, -1.5), Array(1.0, 2.0))
+    val e = CentroidDelta(BoundReference(0, ArrayType(DoubleType), nullable = true),
+      BoundReference(1, IntegerType, nullable = true), cents)
+    assert(e.nullable)
+    val v = new GenericArrayData(Array[Any](1.0, 1.0))
+    // (row, the zip_with/element_at form's answer)
+    val cases = Seq(
+      InternalRow(v, null) -> None, // null cid: null, never centroid 0
+      InternalRow(null, 1) -> None,
+      InternalRow(null, null) -> None,
+      InternalRow(v, 0) -> Some(Seq(0.75, 2.5)),
+      InternalRow(v, 1) -> Some(Seq(0.0, -1.0)))
+    val codegen = GenerateUnsafeProjection.generate(Seq(e))
+    cases.foreach { case (row, want) =>
+      val interpreted = Option(e.eval(row)).map(_.asInstanceOf[ArrayData].toDoubleArray().toSeq)
+      val out = codegen(row)
+      val generated = if (out.isNullAt(0)) None else Some(out.getArray(0).toDoubleArray().toSeq)
+      assert(interpreted == want, s"interpreted $interpreted != $want for $row")
+      assert(generated == want, s"codegen $generated != $want for $row")
+    }
+    // value equality over the centroid matrix (canonicalization / CSE)
+    val twin = e.copy(cents = cents.map(_.clone()))
+    assert(twin == e && twin.hashCode == e.hashCode)
+    assert(e.copy(cents = Array(Array(0.25, -1.5), Array(1.0, 2.5))) != e)
+    assert(e.copy(cid = BoundReference(0, IntegerType, nullable = true)) != e)
+  }
 }

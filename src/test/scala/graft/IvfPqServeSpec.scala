@@ -16,12 +16,14 @@ class IvfPqServeSpec extends SparkSpec {
   private val nCents = 8
   private val dim = 64
 
-  private lazy val built: IvfIndex.PqHandle = {
+  private lazy val built: IvfIndex.Handle = {
     val emb = Tables.embeddings(spark, sf("sf0.001"))
     val path = java.nio.file.Files.createTempDirectory("graft-ivfpq").toString
-    IvfIndex.writePq(emb, "embedding", "vec_id", path,
-      nCentroids = nCents, iters = 3, dim = dim, m = 8, ksub = 16, pqIters = 3)
+    IvfIndex.write(emb, "embedding", "vec_id", path,
+      nCentroids = nCents, iters = 3, tier = IvfIndex.pq(m = 8, ksub = 16, pqIters = 3))
   }
+
+  private def books(h: IvfIndex.Handle) = h.tier.asInstanceOf[IvfIndex.Pq].books
 
   private lazy val q0: Array[Double] = Tables.embeddings(spark, sf("sf0.001"))
     .filter(col("vec_id") === 7L).select("embedding")
@@ -29,22 +31,22 @@ class IvfPqServeSpec extends SparkSpec {
 
   test("sidecars round-trip: centroids AND codebooks reopen without a scan") {
     val h = built
-    val reopened = IvfIndex.openPq(spark, h.path)
+    val reopened = IvfIndex.open(spark, h.path)
     assert(reopened.dim == dim)
     assert(reopened.centroids.length == h.centroids.length)
     (reopened.centroids, h.centroids).zipped.foreach { (a, b) =>
       assert(a.toSeq == b.toSeq) }
-    assert(reopened.books.length == h.books.length)
-    for (j <- h.books.indices) {
-      assert(reopened.books(j).length == h.books(j).length)
-      (reopened.books(j), h.books(j)).zipped.foreach { (a, b) =>
+    assert(books(reopened).length == books(h).length)
+    for (j <- books(h).indices) {
+      assert(books(reopened)(j).length == books(h)(j).length)
+      (books(reopened)(j), books(h)(j)).zipped.foreach { (a, b) =>
         assert(a.toSeq == b.toSeq, s"codebook $j must round-trip exactly") }
     }
   }
 
   test("ADC scan prunes directories AND columns: codes read, vectors not") {
     val h = built
-    val df = IvfIndex.probedTopKAdc(spark, h, q0, nProbe = 2, k = 10)
+    val df = IvfIndex.probedTopK(spark, h, q0, nProbe = 2, k = 10)
     df.collect()
     val plan = df.queryExecution.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.executedPlan
@@ -77,8 +79,8 @@ class IvfPqServeSpec extends SparkSpec {
       .orderBy(col("score").desc, col("vec_id"))
       .limit(10).select("vec_id", "score")
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val refined = IvfIndex.probedTopKRefined(spark, h, q0,
-        nProbe = nCents, k = 10, kAdc = n)
+    val refined = IvfIndex.probedTopK(spark, h, q0,
+        nProbe = nCents, k = 10, shortlist = n)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(refined == exact,
       "all-probe all-shortlist refine must equal brute force exactly")
@@ -92,9 +94,9 @@ class IvfPqServeSpec extends SparkSpec {
         .head().getSeq[Float](0).map(_.toDouble).toArray
     }
     for (nProbe <- Seq(2, nCents)) {
-      val batch = IvfIndex.probedTopKBatchAdc(spark, h, qs, nProbe, 10)
+      val batch = IvfIndex.probedTopKBatch(spark, h, qs, nProbe, 10)
       val sequential = qs.map { q =>
-        IvfIndex.probedTopKAdc(spark, h, q, nProbe, 10)
+        IvfIndex.probedTopK(spark, h, q, nProbe, 10)
           .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       }
       assert(batch.size == qs.size)
@@ -102,7 +104,7 @@ class IvfPqServeSpec extends SparkSpec {
         assert(b == s, s"nProbe=$nProbe batch $b != sequential $s")
       }
     }
-    assert(IvfIndex.probedTopKBatchAdc(spark, h, Nil, 2, 10).isEmpty)
+    assert(IvfIndex.probedTopKBatch(spark, h, Nil, 2, 10).isEmpty)
   }
 
   test("calibrateNProbeAdc: minimal probe count vs the tier's own exhaustive probe") {
@@ -113,15 +115,15 @@ class IvfPqServeSpec extends SparkSpec {
         .head().getSeq[Float](0).map(_.toDouble).toArray
     }
     val k = 10
-    val exact = IvfIndex.probedTopKBatchAdc(spark, h, sample, nCents, k)
+    val exact = IvfIndex.probedTopKBatch(spark, h, sample, nCents, k)
       .map(_.map(_._1).toSet)
     def recallAt(p: Int): Double = {
-      val got = IvfIndex.probedTopKBatchAdc(spark, h, sample, p, k)
+      val got = IvfIndex.probedTopKBatch(spark, h, sample, p, k)
       (got, exact).zipped.map((g, e) =>
         g.count(t => e(t._1)).toDouble / e.size).sum / sample.size
     }
     val target = 0.9
-    val (chosen, curve) = IvfIndex.calibrateNProbeAdc(spark, h, sample, k, target)
+    val (chosen, curve) = IvfIndex.calibrate(spark, h, sample, k, target)
     assert(chosen >= 1 && chosen <= nCents)
     assert(recallAt(chosen) >= target)
     if (chosen > 1) assert(recallAt(chosen - 1) < target,
@@ -140,14 +142,14 @@ class IvfPqServeSpec extends SparkSpec {
     java.nio.file.Files.write(
       java.nio.file.Paths.get(tmp, "_pq.json"),
       """{"dim": abc, "books": [[""".getBytes("UTF-8"))
-    intercept[Exception](IvfIndex.openPq(spark, tmp))
-    // and a MISSING pq sidecar on a plain (non-PQ) index is loud too
+    intercept[Exception](IvfIndex.open(spark, tmp))
+    // and a MISSING pq sidecar on a plain (non-PQ) index never opens as PQ
     val plain = java.nio.file.Files.createTempDirectory("graft-ivf-plain").toString
     IvfIndex.write(Tables.embeddings(spark, sf("sf0.001")),
       "embedding", "vec_id", plain, nCentroids = 4, iters = 1)
-    intercept[Exception](IvfIndex.openPq(spark, plain))
+    assert(IvfIndex.open(spark, plain).tier == IvfIndex.Flat)
     // the happy path is unaffected
-    assert(IvfIndex.openPq(spark, h.path).books.nonEmpty)
+    assert(books(IvfIndex.open(spark, h.path)).nonEmpty)
   }
 
   test("moderate shortlist: refined recall beats raw ADC (the refine story)") {
@@ -161,9 +163,9 @@ class IvfPqServeSpec extends SparkSpec {
       .orderBy(col("score").desc, col("vec_id"))
       .limit(10).collect().map(_.getLong(0)).toSet
     def recallOf(ids: Seq[Long]) = ids.count(exactIds.contains) / 10.0
-    val adc = IvfIndex.probedTopKAdc(spark, h, q0, nCents, 10)
+    val adc = IvfIndex.probedTopK(spark, h, q0, nCents, 10)
       .collect().map(_.getLong(0)).toSeq
-    val refined = IvfIndex.probedTopKRefined(spark, h, q0, nCents, 10, kAdc = 40)
+    val refined = IvfIndex.probedTopK(spark, h, q0, nCents, 10, shortlist = 40)
       .collect().map(_.getLong(0)).toSeq
     info(s"recall@10: raw ADC ${recallOf(adc)}, refined(kAdc=40) ${recallOf(refined)}")
     assert(recallOf(refined) >= recallOf(adc),

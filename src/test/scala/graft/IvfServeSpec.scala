@@ -171,8 +171,8 @@ class IvfServeSpec extends SparkSpec {
     val q = emb.filter(col("vec_id") === 7L).select("embedding")
       .head().getSeq[Float](0).map(_.toDouble).toArray
     val nProbe = 2; val k = 5; val wantLabel = 1
-    def freshDf = IvfIndex.probedTopKWhere(spark, h, q, nProbe, k,
-      col("label") === wantLabel)
+    def freshDf = IvfIndex.probedTopK(spark, h, q, nProbe, k,
+      pred = Some(col("label") === wantLabel))
     val got = freshDf.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(got.nonEmpty, "fixture holds no matching rows — filter untested")
     // driver twin: rounded cosine over the probed cells' matching rows
@@ -230,9 +230,9 @@ class IvfServeSpec extends SparkSpec {
     val preds = Seq(col("label") === 1, col("label") =!= 2,
       col("label") < 5, lit(true))
     val nProbe = 2; val k = 5
-    val batch = IvfIndex.probedTopKBatchWhere(spark, h, qs, nProbe, k, preds)
+    val batch = IvfIndex.probedTopKBatch(spark, h, qs, nProbe, k, preds = preds)
     val seq = (qs, preds).zipped.map { (q, p) =>
-      IvfIndex.probedTopKWhere(spark, h, q, nProbe, k, p)
+      IvfIndex.probedTopK(spark, h, q, nProbe, k, pred = Some(p))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     }
     (batch, seq).zipped.zipWithIndex.foreach { case ((b, s), i) =>
@@ -415,7 +415,7 @@ class IvfServeSpec extends SparkSpec {
         g.count(t => e(t._1)).toDouble / e.size).sum / sample.size
     }
     for (target <- Seq(0.5, 0.9, 1.0)) {
-      val (chosen, curve) = IvfIndex.calibrateNProbe(spark, h, sample, k, target)
+      val (chosen, curve) = IvfIndex.calibrate(spark, h, sample, k, target)
       assert(chosen >= 1 && chosen <= nCents)
       assert(recallAt(chosen) >= target,
         s"chosen nProbe=$chosen misses target $target")
@@ -434,7 +434,41 @@ class IvfServeSpec extends SparkSpec {
     }
     // an exhaustive-probe sample calibrates to nProbe=1 iff 1 already
     // recalls perfectly — degenerate single-query sample sanity
-    val one = IvfIndex.calibrateNProbe(spark, h, sample.take(1), k, 0.01)._1
+    val one = IvfIndex.calibrate(spark, h, sample.take(1), k, 0.01)._1
     assert(one == 1, s"any positive target passes at nProbe=1 recall>0: $one")
+  }
+
+  // the argument contract both probe forms share: each bad input is a
+  // named IllegalArgumentException before any work, never an empty or
+  // silently truncated answer
+  private def bothFormsReject(h: IvfIndex.Handle, q: Array[Double], nProbe: Int,
+                              k: Int, what: String): Unit = {
+    val single = intercept[IllegalArgumentException](
+      IvfIndex.probedTopK(spark, h, q, nProbe, k))
+    val good = Array.fill(h.dim)(0.5)
+    val batched = intercept[IllegalArgumentException](
+      IvfIndex.probedTopKBatch(spark, h, Seq(good, q), nProbe, k))
+    Seq(single, batched).foreach(e => assert(e.getMessage.contains(what), e.getMessage))
+  }
+
+  test("k < 1 throws IllegalArgumentException in the single and batched forms") {
+    val (h, _) = built
+    val q = Array.fill(h.dim)(0.5)
+    Seq(0, -3).foreach(k => bothFormsReject(h, q, nProbe = 2, k = k, "k must be positive"))
+  }
+
+  test("nProbe < 1 throws IllegalArgumentException in the single and batched forms") {
+    val (h, _) = built
+    val q = Array.fill(h.dim)(0.5)
+    Seq(0, -1).foreach(p => bothFormsReject(h, q, nProbe = p, k = 10, "nProbe must be positive"))
+  }
+
+  test("a query of the wrong dimension throws IllegalArgumentException in both forms") {
+    val (h, _) = built
+    // longer: cells would be picked from its prefix and the dot truncated;
+    // shorter: probeCells would die with an unnamed index error
+    Seq(h.dim + 1, h.dim - 1).foreach { d =>
+      bothFormsReject(h, Array.fill(d)(0.5), nProbe = 2, k = 10, "dimension")
+    }
   }
 }

@@ -17,12 +17,14 @@ class IvfSqServeSpec extends SparkSpec {
   private val nCents = 8
   private val dim = 64
 
-  private lazy val built: IvfIndex.SqHandle = {
+  private lazy val built: IvfIndex.Handle = {
     val emb = Tables.embeddings(spark, sf("sf0.001"))
     val path = java.nio.file.Files.createTempDirectory("graft-ivfsq").toString
-    IvfIndex.writeSq(emb, "embedding", "vec_id", path,
-      nCentroids = nCents, iters = 3, dim = dim)
+    IvfIndex.write(emb, "embedding", "vec_id", path,
+      nCentroids = nCents, iters = 3, tier = IvfIndex.sq8)
   }
+
+  private def grid(h: IvfIndex.Handle) = h.tier.asInstanceOf[IvfIndex.Sq]
 
   // MUST be a lazy val, not a def: test 3's driver recompute indexes
   // q0(i) inside a per-row/per-dim loop — as a def that ran the whole
@@ -33,17 +35,17 @@ class IvfSqServeSpec extends SparkSpec {
 
   test("sidecars round-trip: centroids AND the (min, max) grid, no scan") {
     val h = built
-    val reopened = IvfIndex.openSq(spark, h.path)
+    val reopened = IvfIndex.open(spark, h.path)
     assert(reopened.dim == dim)
-    assert(reopened.mins.toSeq == h.mins.toSeq)
-    assert(reopened.maxs.toSeq == h.maxs.toSeq)
+    assert(grid(reopened).mins.toSeq == grid(h).mins.toSeq)
+    assert(grid(reopened).maxs.toSeq == grid(h).maxs.toSeq)
     (reopened.centroids, h.centroids).zipped.foreach { (a, b) =>
       assert(a.toSeq == b.toSeq) }
   }
 
   test("SQ scan prunes directories AND columns: sq bytes read, vectors not") {
     val h = built
-    val df = IvfIndex.probedTopKSq(spark, h, q0, nProbe = 2, k = 10)
+    val df = IvfIndex.probedTopK(spark, h, q0, nProbe = 2, k = 10)
     df.collect()
     val plan = df.queryExecution.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.executedPlan
@@ -65,7 +67,8 @@ class IvfSqServeSpec extends SparkSpec {
 
   test("scores match a driver dequant recompute; on-disk sq is dim bytes") {
     val h = built
-    val got = IvfIndex.probedTopKSq(spark, h, q0, nProbe = nCents, k = 10)
+    val g = grid(h)
+    val got = IvfIndex.probedTopK(spark, h, q0, nProbe = nCents, k = 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
     // independent driver recompute over ALL vectors (exhaustive probe)
     val rows = Tables.embeddings(spark, sf("sf0.001"))
@@ -74,9 +77,9 @@ class IvfSqServeSpec extends SparkSpec {
     val expected = rows.map { case (id, v) =>
       var s = 0.0; var i = 0
       while (i < dim) {
-        val d = h.maxs(i) - h.mins(i)
-        val dq = if (d == 0.0) h.mins(i)
-          else h.mins(i) + math.round((v(i) - h.mins(i)) / d * 255).toDouble * d / 255.0
+        val d = g.maxs(i) - g.mins(i)
+        val dq = if (d == 0.0) g.mins(i)
+          else g.mins(i) + math.round((v(i) - g.mins(i)) / d * 255).toDouble * d / 255.0
         s += dq * q0(i); i += 1
       }
       (id, BigDecimal(s).setScale(5, BigDecimal.RoundingMode.HALF_UP).toDouble + 0.0)
@@ -97,9 +100,9 @@ class IvfSqServeSpec extends SparkSpec {
         .head().getSeq[Float](0).map(_.toDouble).toArray
     }
     for (nProbe <- Seq(2, nCents)) {
-      val batch = IvfIndex.probedTopKBatchSq(spark, h, qs, nProbe, 10)
+      val batch = IvfIndex.probedTopKBatch(spark, h, qs, nProbe, 10)
       val sequential = qs.map { q =>
-        IvfIndex.probedTopKSq(spark, h, q, nProbe, 10)
+        IvfIndex.probedTopK(spark, h, q, nProbe, 10)
           .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       }
       assert(batch.size == qs.size)
@@ -107,7 +110,7 @@ class IvfSqServeSpec extends SparkSpec {
         assert(b == s, s"nProbe=$nProbe batch $b != sequential $s")
       }
     }
-    assert(IvfIndex.probedTopKBatchSq(spark, h, Nil, 2, 10).isEmpty)
+    assert(IvfIndex.probedTopKBatch(spark, h, Nil, 2, 10).isEmpty)
   }
 
   test("calibrateNProbeSq: minimal probe count vs the tier's own exhaustive probe") {
@@ -118,15 +121,15 @@ class IvfSqServeSpec extends SparkSpec {
         .head().getSeq[Float](0).map(_.toDouble).toArray
     }
     val k = 10
-    val exact = IvfIndex.probedTopKBatchSq(spark, h, sample, nCents, k)
+    val exact = IvfIndex.probedTopKBatch(spark, h, sample, nCents, k)
       .map(_.map(_._1).toSet)
     def recallAt(p: Int): Double = {
-      val got = IvfIndex.probedTopKBatchSq(spark, h, sample, p, k)
+      val got = IvfIndex.probedTopKBatch(spark, h, sample, p, k)
       (got, exact).zipped.map((g, e) =>
         g.count(t => e(t._1)).toDouble / e.size).sum / sample.size
     }
     val target = 0.9
-    val (chosen, curve) = IvfIndex.calibrateNProbeSq(spark, h, sample, k, target)
+    val (chosen, curve) = IvfIndex.calibrate(spark, h, sample, k, target)
     assert(chosen >= 1 && chosen <= nCents)
     assert(recallAt(chosen) >= target)
     if (chosen > 1) assert(recallAt(chosen - 1) < target,
@@ -137,7 +140,7 @@ class IvfSqServeSpec extends SparkSpec {
 
   test("exhaustive-probe SQ8 top-k == exact IP top-k on the fixture (no-refine claim)") {
     val h = built
-    val got = IvfIndex.probedTopKSq(spark, h, q0, nProbe = nCents, k = 10)
+    val got = IvfIndex.probedTopK(spark, h, q0, nProbe = nCents, k = 10)
       .collect().map(_.getLong(0)).toSeq
     val exact = Tables.embeddings(spark, sf("sf0.001"))
       .select(col("vec_id").cast("long").as("vec_id"),

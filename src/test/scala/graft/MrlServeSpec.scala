@@ -17,11 +17,11 @@ class MrlServeSpec extends SparkSpec {
   private val dim = 64
   private val prefixDim = 16
 
-  private lazy val built: IvfIndex.MrlHandle = {
+  private lazy val built: IvfIndex.Handle = {
     val emb = Tables.embeddings(spark, sf("sf0.001"))
     val path = java.nio.file.Files.createTempDirectory("graft-ivfmrl").toString
-    IvfIndex.writeMrl(emb, "embedding", "vec_id", path,
-      nCentroids = nCents, iters = 3, prefixDim = prefixDim)
+    IvfIndex.write(emb, "embedding", "vec_id", path,
+      nCentroids = nCents, iters = 3, tier = IvfIndex.mrl(prefixDim))
   }
 
   private def qVec(id: Long): Array[Double] =
@@ -31,8 +31,8 @@ class MrlServeSpec extends SparkSpec {
 
   test("sidecars round-trip: centroids and prefix width reopen without a scan") {
     val h = built
-    val reopened = IvfIndex.openMrl(spark, h.path)
-    assert(reopened.prefixDim == prefixDim)
+    val reopened = IvfIndex.open(spark, h.path)
+    assert(reopened.tier == IvfIndex.Mrl(prefixDim))
     assert(reopened.centroids.length == h.centroids.length)
     (reopened.centroids, h.centroids).zipped.foreach { (a, b) =>
       assert(a.toSeq == b.toSeq) }
@@ -42,7 +42,8 @@ class MrlServeSpec extends SparkSpec {
     val h = built
     val q0 = qVec(7L)
     val nProbe = 2
-    val df = IvfIndex.mrlShortlist(spark, h, q0, nProbe, shortlist = 20)
+    // the unrefined MRL probe IS the shortlist stage
+    val df = IvfIndex.probedTopK(spark, h, q0, nProbe, k = 20)
     df.collect()
     val plan = df.queryExecution.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.executedPlan
@@ -56,8 +57,7 @@ class MrlServeSpec extends SparkSpec {
     assert(!schema.contains("v") && !schema.contains("vn"),
       s"shortlist scan must NOT read the exact vectors: $schema")
     // directory pruning on top of the column pruning
-    val cells = IvfIndex.probeCells(
-      IvfIndex.Handle(h.path, h.centroids), q0, nProbe)
+    val cells = IvfIndex.probeCells(h, q0, nProbe)
     val expectFiles = cells.map { c =>
       new java.io.File(s"${h.path}/cid=$c").listFiles()
         .count(_.getName.endsWith(".parquet"))
@@ -73,11 +73,11 @@ class MrlServeSpec extends SparkSpec {
     val h = built
     val q0 = qVec(3L)
     val n = Tables.embeddings(spark, sf("sf0.001")).count().toInt
-    val mrl = IvfIndex.probedTopKMrl(spark, h, q0, nProbe = nCents, k = 10,
+    val mrl = IvfIndex.probedTopK(spark, h, q0, nProbe = nCents, k = 10,
         shortlist = n)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val flat = IvfIndex.probedTopK(spark,
-        IvfIndex.Handle(h.path, h.centroids), q0, nProbe = nCents, k = 10)
+        h.copy(tier = IvfIndex.Flat), q0, nProbe = nCents, k = 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(mrl == flat, s"untruncated MRL must equal flat probed:\n$mrl\n$flat")
   }
@@ -87,11 +87,11 @@ class MrlServeSpec extends SparkSpec {
     val k = 10
     val recalls = Seq(3L, 7L, 11L).map { id =>
       val q = qVec(id)
-      val mrl = IvfIndex.probedTopKMrl(spark, h, q, nProbe = nCents, k = k,
+      val mrl = IvfIndex.probedTopK(spark, h, q, nProbe = nCents, k = k,
           shortlist = 4 * k)
         .collect().map(_.getLong(0)).toSet
       val flat = IvfIndex.probedTopK(spark,
-          IvfIndex.Handle(h.path, h.centroids), q, nProbe = nCents, k = k)
+          h.copy(tier = IvfIndex.Flat), q, nProbe = nCents, k = k)
         .collect().map(_.getLong(0))
       flat.count(mrl.contains).toDouble / k
     }
@@ -108,8 +108,8 @@ class MrlServeSpec extends SparkSpec {
     val n = Tables.embeddings(spark, sf("sf0.001")).count().toInt
     val sample = Seq(3L, 7L, 11L).map(qVec)
     val target = 0.6
-    val (chosen, curve) = IvfIndex.calibrateShortlistMrl(spark, h, sample,
-      nProbe = nCents, k = 5, target = target, maxShortlist = n)
+    val (chosen, curve) = IvfIndex.calibrate(spark, h, sample,
+      k = 5, target = target, nProbe = nCents, maxShortlist = n)
     info(s"chosen shortlist=$chosen; curve=${curve.map { case (s, r) => f"$s:$r%.2f" }.mkString(", ")}")
     val m = curve.toMap
     assert(m(chosen) >= target)
@@ -128,8 +128,8 @@ class MrlServeSpec extends SparkSpec {
     val h = built
     val qs = Seq(0L, 3L, 7L, 11L).map(qVec)
     val nProbe = 2; val k = 5; val shortlist = 20
-    val batch = IvfIndex.probedTopKMrlBatch(spark, h, qs, nProbe, k, shortlist)
-    val seq = qs.map(q => IvfIndex.probedTopKMrl(spark, h, q, nProbe, k, shortlist)
+    val batch = IvfIndex.probedTopKBatch(spark, h, qs, nProbe, k, shortlist)
+    val seq = qs.map(q => IvfIndex.probedTopK(spark, h, q, nProbe, k, shortlist)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq)
     (batch, seq).zipped.zipWithIndex.foreach { case ((b, s), i) =>
       assert(b == s, s"query $i diverged:\nbatch $b\nseq   $s")

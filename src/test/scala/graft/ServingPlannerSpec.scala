@@ -28,15 +28,15 @@ class ServingPlannerSpec extends SparkSpec {
     ServingPlanner.Tiers(
       flat = IvfIndex.write(emb, "embedding", "vec_id", tierPaths("flat"),
         nCentroids = nCents, iters = 3),
-      sq = Some(IvfIndex.writeSq(emb, "embedding", "vec_id", tierPaths("sq"),
-        nCentroids = nCents, iters = 3, dim = dim)),
-      pq = Some(IvfIndex.writePq(emb, "embedding", "vec_id", tierPaths("pq"),
-        nCentroids = nCents, iters = 3, dim = dim, m = 8, ksub = 16,
-        pqIters = 3)),
-      bq = Some(IvfIndex.writeBq(emb, "embedding", "vec_id", tierPaths("bq"),
-        nCentroids = nCents, iters = 3, dim = dim)),
-      mrl = Some(IvfIndex.writeMrl(emb, "embedding", "vec_id", tierPaths("mrl"),
-        nCentroids = nCents, iters = 3, prefixDim = 16)))
+      sq = Some(IvfIndex.write(emb, "embedding", "vec_id", tierPaths("sq"),
+        nCentroids = nCents, iters = 3, tier = IvfIndex.sq8)),
+      pq = Some(IvfIndex.write(emb, "embedding", "vec_id", tierPaths("pq"),
+        nCentroids = nCents, iters = 3,
+        tier = IvfIndex.pq(m = 8, ksub = 16, pqIters = 3))),
+      bq = Some(IvfIndex.write(emb, "embedding", "vec_id", tierPaths("bq"),
+        nCentroids = nCents, iters = 3, tier = IvfIndex.binary)),
+      mrl = Some(IvfIndex.write(emb, "embedding", "vec_id", tierPaths("mrl"),
+        nCentroids = nCents, iters = 3, tier = IvfIndex.mrl(prefixDim = 16))))
   }
 
   private lazy val sample: Seq[Array[Double]] = {
@@ -59,13 +59,13 @@ class ServingPlannerSpec extends SparkSpec {
     val truth = IvfIndex.probedTopKBatch(spark, tiers.flat, sample, nCents, k)
       .map(_.map(_._1).toSet)
     val got: IndexedSeq[Seq[(Long, Double)]] = plan.tier match {
-      case "binary" => IvfIndex.probedTopKBqBatch(spark, tiers.bq.get, sample,
+      case "binary" => IvfIndex.probedTopKBatch(spark, tiers.bq.get, sample,
         plan.nProbe, k, plan.shortlist.get)
-      case "pq" => IvfIndex.probedTopKBatchAdc(spark, tiers.pq.get, sample,
+      case "pq" => IvfIndex.probedTopKBatch(spark, tiers.pq.get, sample,
         plan.nProbe, k)
-      case "mrl" => IvfIndex.probedTopKMrlBatch(spark, tiers.mrl.get, sample,
+      case "mrl" => IvfIndex.probedTopKBatch(spark, tiers.mrl.get, sample,
         plan.nProbe, k, plan.shortlist.get)
-      case "sq8" => IvfIndex.probedTopKBatchSq(spark, tiers.sq.get, sample,
+      case "sq8" => IvfIndex.probedTopKBatch(spark, tiers.sq.get, sample,
         plan.nProbe, k)
       case "flat" => IvfIndex.probedTopKBatch(spark, tiers.flat, sample,
         plan.nProbe, k)
@@ -149,10 +149,10 @@ class ServingPlannerSpec extends SparkSpec {
     }
     val cold = ServingPlanner.Tiers(
       flat = IvfIndex.open(spark, tierPaths("flat")),
-      sq = Some(IvfIndex.openSq(spark, tierPaths("sq"))),
-      pq = Some(IvfIndex.openPq(spark, tierPaths("pq"))),
-      bq = Some(IvfIndex.openBq(spark, tierPaths("bq"))),
-      mrl = Some(IvfIndex.openMrl(spark, tierPaths("mrl"))))
+      sq = Some(IvfIndex.open(spark, tierPaths("sq"))),
+      pq = Some(IvfIndex.open(spark, tierPaths("pq"))),
+      bq = Some(IvfIndex.open(spark, tierPaths("bq"))),
+      mrl = Some(IvfIndex.open(spark, tierPaths("mrl"))))
     // the sidecar round-trip must preserve centroid geometry bit-for-bit
     // (any drift would silently re-route probes)
     assert(cold.flat.centroids.map(_.toSeq).toSeq ==
@@ -171,13 +171,13 @@ class ServingPlannerSpec extends SparkSpec {
     val truth = IvfIndex.probedTopKBatch(spark, cold.flat, sample, nCents, k)
       .map(_.map(_._1).toSet)
     val served: IndexedSeq[Seq[(Long, Double)]] = coldPlan.tier match {
-      case "binary" => IvfIndex.probedTopKBqBatch(spark, cold.bq.get, sample,
+      case "binary" => IvfIndex.probedTopKBatch(spark, cold.bq.get, sample,
         coldPlan.nProbe, k, coldPlan.shortlist.get)
-      case "pq" => IvfIndex.probedTopKBatchAdc(spark, cold.pq.get, sample,
+      case "pq" => IvfIndex.probedTopKBatch(spark, cold.pq.get, sample,
         coldPlan.nProbe, k)
-      case "mrl" => IvfIndex.probedTopKMrlBatch(spark, cold.mrl.get, sample,
+      case "mrl" => IvfIndex.probedTopKBatch(spark, cold.mrl.get, sample,
         coldPlan.nProbe, k, coldPlan.shortlist.get)
-      case "sq8" => IvfIndex.probedTopKBatchSq(spark, cold.sq.get, sample,
+      case "sq8" => IvfIndex.probedTopKBatch(spark, cold.sq.get, sample,
         coldPlan.nProbe, k)
       case "flat" => IvfIndex.probedTopKBatch(spark, cold.flat, sample,
         coldPlan.nProbe, k)
