@@ -45,56 +45,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    // Local-mode benchmark tuning: AQE's exchange materialization barriers
-    // and re-planning cost ~15% on sub-second local queries with no skew.
-    // Cluster deployments of this library SHOULD enable AQE (skew joins,
-    // partition coalescing) — this is harness config, not library config.
-    builder.config("spark.sql.adaptive.enabled", "false")
-    // SF-sized inputs are single-digit-MB parquet files — at the default
-    // 128 MB split size every scan is ONE task and narrow pipelines run on
-    // one core, so the harness shrinks the split size to spread scans
-    // across the local[32] cores. Round 8's sf10 superlinearity screen
-    // proved a FIXED small split cannot be right across scale decades: at
-    // sf10 a 2 MB split turned a 1.2 GB lineitem scan into ~600 tasks,
-    // each parsing the full multi-hundred-row-group footer — #tasks and
-    // footer size both grow with data, so total overhead grows
-    // QUADRATICALLY (t2_sqrt: 7.97 s at 2 MB vs 0.32 s at 128 MB, same
-    // data, same plan). Size the split from the data instead: target ~2
-    // tasks per core on the largest table, clamped to [2 MB, Spark's
-    // 128 MB default]. sf0.1/sf1 land on the 2 MB floor (bit-identical to
-    // the old behavior); sf10 gets ~19 MB splits — measured best-total
-    // compromise across scan-bound queries (which prefer even bigger
-    // splits: fewer per-task footer parses) and CPU-bound-on-the-scan
-    // queries like x11 (which prefer more tasks; most heavy operators
-    // instead repartition via Tables.spread and are split-insensitive).
-    // Real deployments exceed the cap and get the default. (Harness
-    // config, not library behavior — a cluster sizes this per-deployment.)
-    val splitBytes = {
-      val nCpu = scala.util.Try(cpus.toInt).getOrElse(32).max(1)
-      val maxTableBytes = scala.util.Try {
-        val root = new java.io.File(sfDir)
-        // recursive walk: a partitioned table (nested key=value dirs) must
-        // count its leaf files, else it under-reports as 0 bytes and drags
-        // the split toward the 2 MB floor — the footer-parse quadratic
-        def bytes(f: java.io.File): Long =
-          if (f.isDirectory) f.listFiles().map(bytes).sum else f.length
-        root.listFiles().map(bytes).max
-      }.getOrElse(0L)
-      (maxTableBytes / (2L * nCpu)).max(2L << 20).min(128L << 20)
-    }
-    builder.config("spark.sql.files.maxPartitionBytes", splitBytes.toString)
-    // ad-hoc config experiments: "k1=v1,k2=v2"
-    sys.env.get("SPARK_GRAFT_BENCH_CONF").foreach(_.split(",").filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session(sfDir)
     // Every unpartitioned window in the library is bounded by construction
     // (k-row re-rank frames, single-row counts) — WindowExec's "No
     // Partition Defined" warning is by-design noise here, and ~200 copies
@@ -308,5 +259,23 @@ object Bench {
       detail.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
     println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","calibration":${fmt(calibration)},"calib_ratio":${fmt(calibRatio)},"attempts":$attempts,"calib_retries_exhausted":$retriesExhausted,"queries":$qs,"errors":$errs,"sf":"$sfDir"}""")
     spark.stop()
+  }
+
+  /** Bench's session: [[LocalSpark]] with AQE off, the data-sized split
+    * and any SPARK_GRAFT_BENCH_CONF pairs. `graft.Trace` runs on the same
+    * session so a trace explains Bench's numbers. */
+  def session(sfDir: String): SparkSession = {
+    // Local-mode benchmark tuning: AQE's exchange materialization barriers
+    // and re-planning cost ~15% on sub-second local queries with no skew.
+    // Cluster deployments of this library SHOULD enable AQE (skew joins,
+    // partition coalescing) — this is harness config, not library config.
+    val tuning = Seq("spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.files.maxPartitionBytes" ->
+        LocalSpark.splitBytes(sfDir, LocalSpark.cpus).toString)
+    // ad-hoc config experiments: "k1=v1,k2=v2"
+    val adHoc = sys.env.get("SPARK_GRAFT_BENCH_CONF").toSeq
+      .flatMap(_.split(",").filter(_.contains("=")))
+      .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }
+    LocalSpark.session(conf = tuning ++ adHoc)
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import graft.incremental.IncrementalState
 import graft.queries.Pipeline
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** MEASURED multi-batch ingest loop (VERDICT r14 ask #1): the production
@@ -38,16 +38,7 @@ object IngestLoopBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/sf1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session(conf = Seq("spark.sql.adaptive.enabled" -> "false"))
     import spark.implicits._
 
     val root = java.nio.file.Files.createTempDirectory("graft-ingest-loop")

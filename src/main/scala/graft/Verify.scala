@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.QueryTrace.jsonString
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,7 +11,6 @@ object Verify {
       case Array(s, o)          => (s, o, Set.empty[String])
       case Array(s, o, f @ _*)  => (s, o, f.flatMap(_.split(",")).toSet)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
     // Split size derived from the data, exactly like Bench: at sf1 the
     // 30 MB documents.parquet is ONE 128 MB-default split, so a heavy
     // row-local projection (x9's interpreted LangId expression measured
@@ -19,24 +18,8 @@ object Verify {
     // then runs at 1-core speed however many cores the session has.
     // Row content is split-invariant: every hashed query ends in a global
     // ORDER BY, re-applied within the single output partition below.
-    val splitBytes = {
-      val nCpu = scala.util.Try(cpus.toInt).getOrElse(16).max(1)
-      val maxTableBytes = scala.util.Try {
-        def bytes(f: java.io.File): Long =
-          if (f.isDirectory) f.listFiles().map(bytes).sum else f.length
-        new java.io.File(sfDir).listFiles().map(bytes).max
-      }.getOrElse(0L)
-      (maxTableBytes / (2L * nCpu)).max(2L << 20).min(128L << 20)
-    }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", splitBytes.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session(conf = Seq("spark.sql.files.maxPartitionBytes" ->
+      LocalSpark.splitBytes(sfDir, LocalSpark.cpus).toString))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
@@ -62,20 +45,8 @@ object Verify {
       // accumulation hygiene as Bench.runOne
       spark.catalog.clearCache()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -2,8 +2,9 @@ package graft
 
 import graft.incremental.IncrementalState
 import graft.queries.Pipeline
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.QueryTrace
 
 /** PRODUCTION-SHAPED warm-screen bench: the read-scaling claim the x32
   * fixture cannot show. x32's delta is 20% OF the corpus, so partition
@@ -27,7 +28,8 @@ import org.apache.spark.sql.functions._
   *
   * Usage: `runMain graft.WarmBatchBench [sfDir] [pMod] [batchSizes csv]
   * [reps]` — defaults /tmp/sf100, 512, "8,64,1024", 3. Prints one line
-  * per (batchSize, arm) plus medians.
+  * per (batchSize, arm) plus medians, then each arm's [[QueryTrace]]
+  * (jobs with their wall times and descriptions) as one JSON line.
   */
 object WarmBatchBench {
 
@@ -36,15 +38,7 @@ object WarmBatchBench {
     val pMod = args.lift(1).map(_.toInt).getOrElse(512)
     val sizes = args.lift(2).getOrElse("8,64,1024").split(",").map(_.trim.toInt).toSeq
     val reps = args.lift(3).map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
 
     // one state per (fixture, version, pMod) — reused across runs, like
     // the x32 bench cache
@@ -73,12 +67,6 @@ object WarmBatchBench {
       b.localCheckpoint(true)
     }
 
-    def secs(body: => Long): (Long, Double) = {
-      val t0 = System.nanoTime()
-      val n = body
-      (n, (System.nanoTime() - t0) / 1e9)
-    }
-
     sizes.foreach { n =>
       val batch = batchOf(n)
       // one untimed warm-up of EACH arm first (JIT + codegen), then
@@ -92,20 +80,25 @@ object WarmBatchBench {
       }
       val times = scala.collection.mutable.Map(true -> Vector.empty[Double],
         false -> Vector.empty[Double])
+      val traces = scala.collection.mutable.Map.empty[Boolean, QueryTrace.Trace]
       var accepted = -1L
       (1 to reps).foreach { _ =>
         Seq(true, false).foreach { p =>
-          val (acc, sec) = secs {
+          val (acc, trace) = QueryTrace.during(spark, s"batch=$n prune=$p") {
             Pipeline.warmScreenAccepted(spark, stateDir, batch, prune = p,
               pruneBytesFloor = 0L).count()
           }
           if (accepted < 0) accepted = acc
           else require(acc == accepted,
             s"arms must accept identically (pruning is exact): $acc vs $accepted")
-          times(p) :+= sec
+          times(p) :+= trace.wallMs / 1e3
+          traces(p) = trace
           spark.catalog.clearCache()
         }
       }
+      // per-job decomposition of each arm's last rep: a constant overhead
+      // in one arm is attributed to the job that pays it
+      Seq(true, false).foreach(p => println(s"[warmbatch-trace] ${traces(p).json}"))
       def med(v: Vector[Double]) = v.sorted.apply(v.size / 2)
       println(f"[warmbatch] batch=$n%6d accepted=$accepted%5d " +
         f"pruned=${med(times(true))}%6.2f s (${times(true).map(t => f"$t%.2f").mkString(",")})  " +

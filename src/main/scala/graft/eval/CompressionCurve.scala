@@ -1,8 +1,7 @@
 package graft.eval
 
-import graft.Tables
+import graft.{LocalSpark, Tables}
 import graft.search.Search
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Recall-vs-compression artifact for the ANN portfolio: every serving
@@ -22,14 +21,7 @@ import org.apache.spark.sql.functions._
   */
 object CompressionCurve {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val dim = 64
     val k = 10

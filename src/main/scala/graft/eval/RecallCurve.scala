@@ -1,6 +1,6 @@
 package graft.eval
 
-import graft.Tables
+import graft.{LocalSpark, Tables}
 import graft.encode._
 import graft.prep.Prep
 import graft.profile.Profiler
@@ -116,14 +116,7 @@ object RecallCurve {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
 
     val harmonics = (1 to 10).map(_ * 50)
     val epsilons = Seq(0.0, 0.005, 0.01, 0.015, 0.02, 0.025, 0.03)

@@ -1,5 +1,6 @@
 package graft.multimodal
 
+import graft.LocalSpark
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Deterministic media fixture corpora for the x20/x21 differential rows —
@@ -109,9 +110,7 @@ object MediaFixture {
 
   /** Regenerate the committed fixtures (single tiny file each). */
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session(cores = 2)
     images(spark).coalesce(1).write.mode("overwrite").parquet(imagesPath)
     audio(spark).coalesce(1).write.mode("overwrite").parquet(audioPath)
     videos(spark).coalesce(1).write.mode("overwrite").parquet(videosPath)

@@ -19,14 +19,9 @@ object Search {
   /** Inner product of two ArrayType(Double) columns; sequential left-to-right
     * accumulation (deterministic per row). Native codegen expression
     * (org.apache.spark.sql.graft.DotProduct) — identical result order to the
-    * HOF fallback below, ~10-40× faster at high dims. */
+    * built-ins twin in the test sources, ~10-40× faster at high dims. */
   def dot(a: Column, b: Column): Column =
     org.apache.spark.sql.graft.DotProduct.dot(a, b)
-
-  /** Built-ins-only fallback (used by tests to cross-check the native
-    * expression; same left-to-right accumulation). */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (s, x) => s + x)
 
   def l2Norm(a: Column): Column = sqrt(dot(a, a))
 
@@ -432,24 +427,10 @@ object Search {
     * centroid-id tiebreak. Native expression with the centroid matrix as a
     * reference object (org.apache.spark.sql.graft.IvfAssign) — code size is
     * independent of nCentroids, so IVF-realistic centroid counts (10⁴–10⁵)
-    * stay inside whole-stage codegen. Bit-identical to [[ivfAssignLiteral]]
-    * (asserted in IvfSpec). */
+    * stay inside whole-stage codegen. Bit-identical to its built-ins twin
+    * (array_min over literal centroid structs; asserted in IvfSpec). */
   def ivfAssign(vec: Column, cents: Array[Array[Double]]): Column =
     org.apache.spark.sql.graft.IvfAssign.assign(vec, cents)
-
-  /** Built-ins-only formulation (array_min over literal centroid structs) —
-    * cross-check twin for tests; inlines every centroid into the generated
-    * code, so it stops codegenning at large nCentroids. */
-  def ivfAssignLiteral(vec: Column, cents: Array[Array[Double]]): Column = {
-    val vv = dot(vec, vec)
-    val entries = cents.zipWithIndex.map { case (c, i) =>
-      var cn = 0.0; var j = 0
-      while (j < c.length) { cn += c(j) * c(j); j += 1 }
-      struct((vv - lit(2.0) * dot(vec, typedLit(c)) + lit(cn)).as("d"),
-        lit(i).as("cid"))
-    }
-    array_min(array(entries.toIndexedSeq: _*)).getField("cid")
-  }
 
   /** IVF ANN top-k for a small query-id set: fit centroids, assign every
     * vector to its bucket, probe the `nProbe` nearest centroids per query
@@ -938,23 +919,10 @@ object Search {
     * sign-agnostic. Native expression with the thresholds as a reference
     * object (org.apache.spark.sql.graft.BqSignature) — code size is
     * independent of dim, so fused-vector widths (405+) stay inside
-    * whole-stage codegen. Bit-identical to [[bqSignaturesHof]]. */
+    * whole-stage codegen. Bit-identical to its built-ins twin (one
+    * when-branch per dimension; asserted in BinarySpec). */
   def bqSignatures(vec: Column, thresholds: Array[Double]): Column =
     org.apache.spark.sql.graft.BqSignature.pack(asDouble(vec), thresholds)
-
-  /** Built-ins-only formulation (64 when-branches per word) — cross-check
-    * twin for tests; inlines one branch per dimension into the generated
-    * code, so it bloats at fused-vector widths. */
-  def bqSignaturesHof(vec: Column, thresholds: Array[Double]): Column = {
-    val v = asDouble(vec)
-    val words = thresholds.indices.grouped(64).map { idxs =>
-      idxs.map { i =>
-        when(element_at(v, i + 1) > lit(thresholds(i)), lit(1L << (i % 64)))
-          .otherwise(lit(0L))
-      }.reduce(_ + _)
-    }.toSeq
-    array(words: _*)
-  }
 
   /** Hamming distance between two packed signature arrays: per-word
     * xor + popcount, summed. Native kernel — the former

@@ -1,7 +1,6 @@
 package graft.serve
 
-import graft.Tables
-import org.apache.spark.sql.SparkSession
+import graft.{LocalSpark, Tables}
 import org.apache.spark.sql.functions.col
 
 /** Serving latency per tier for BASELINE.md: build the cid-partitioned
@@ -22,13 +21,7 @@ object IvfServeBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
     val emb = Tables.embeddings(spark, sfDir)
     val queries = emb.filter(col("vec_id") < 16L)
       .select("vec_id", "embedding").collect()

@@ -100,35 +100,34 @@ case class CharLmScore(child: Expression, n3: Array[Long], n2: Array[Long])
     }
   }
 
-  // byte-level cell: ' ' = 26, a-z, negative (a multi-byte UTF-8 lead or
-  // continuation byte) = -1 -> delegate to the char path, which preserves
-  // the exact pre-round-17 semantics for non-normalized input (loud throw,
-  // or the (0, null) short-string result when numChars < 3 < numBytes);
-  // any other ASCII byte fails loudly like cellOf
+  // byte-level cell of ASCII input: ' ' = 26, a-z; any other byte fails
+  // loudly like cellOf
   private def cellOfByte(b: Byte): Int =
     if (b == 0x20) 26
     else if (b >= 'a' && b <= 'z') b - 'a'
-    else if (b < 0) -1
     else throw new IllegalArgumentException(
       s"CharLmScore input not [a-z ]-normalized: '${b.toChar}'")
 
   def scorePublic(s: UTF8String): InternalRow = {
     // normalized input is pure ASCII: one byte per char, so the trigram
-    // walk runs on raw bytes with no String materialization; a non-ASCII
-    // byte (unreachable through LmNormalize) falls back to the char path
+    // walk runs on raw bytes with no String materialization. Any non-ASCII
+    // byte (unreachable through LmNormalize) routes the WHOLE input to the
+    // char path before any byte is decoded, so such input gets exactly the
+    // char path's answer (loud throw, or the (0, null) short-string
+    // result when numChars < 3 <= numBytes).
     val len = s.numBytes()
     if (len < 3) return new GenericInternalRow(Array[Any](0L, null))
+    var k = 0
+    while (k < len) { if (s.getByte(k) < 0) return scoreSlowChars(s); k += 1 }
     val n = (len - 2).toLong
     val table = scaledTable
     if (table == null || n > maxSafeN) return scoreSlow(s.toString)
     var accL = 0L
     var c1 = cellOfByte(s.getByte(0))
     var c2c = cellOfByte(s.getByte(1))
-    if (c1 < 0 || c2c < 0) return scoreSlowChars(s)
     var i = 2
     while (i < len) {
       val c3c = cellOfByte(s.getByte(i))
-      if (c3c < 0) return scoreSlowChars(s)
       accL += table((c1 * 27 + c2c) * 27 + c3c)
       c1 = c2c
       c2c = c3c

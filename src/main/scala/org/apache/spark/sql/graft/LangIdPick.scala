@@ -30,6 +30,9 @@ case class LangIdPick(child: Expression, profiles: Seq[(String, Set[String])])
   extends UnaryExpression with ExpectsInputTypes {
 
   require(profiles.nonEmpty, "need at least one language profile")
+  // the trigram table's per-language mask is an Int: a 33rd profile's
+  // bit would wrap onto language l - 32 and silently credit it
+  require(profiles.size <= 32, s"at most 32 language profiles: ${profiles.size}")
 
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
   override def dataType: DataType = StringType

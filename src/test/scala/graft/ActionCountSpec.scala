@@ -1,7 +1,7 @@
 package graft
 
 import graft.queries.Registry
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.graft.QueryTrace
 
 /** Action-count regression pins for the flagship chains.
   *
@@ -32,44 +32,11 @@ class ActionCountSpec extends SparkSpec {
 
   private val dir = sf("sf0.001")
 
-  /** Runs `body` under a unique job group and returns how many driver
-    * ACTIONS it submitted: distinct `spark.sql.execution.id`s plus one
-    * per execution-id-less job (RDD actions outside SQLExecution). The
-    * listener bus is async, so the count is read only after it has been
-    * stable for a beat. */
-  private def actionsDuring(tag: String)(body: => Unit): Int = {
-    val group = s"acs-$tag-${System.nanoTime()}"
-    val execIds = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    val bare = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        Option(js.properties)
-          .filter(p => group == p.getProperty("spark.jobGroup.id"))
-          .foreach { p =>
-            Option(p.getProperty("spark.sql.execution.id")) match {
-              case Some(id) => execIds.add(id); ()
-              case None => bare.incrementAndGet(); ()
-            }
-          }
-    }
-    def count() = execIds.size + bare.get
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      spark.sparkContext.setJobGroup(group, tag)
-      body
-      spark.sparkContext.clearJobGroup()
-      // drain: wait until no new jobStart has landed for 500 ms (cap 10 s)
-      var last = -1
-      var stableSince = System.nanoTime()
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (System.nanoTime() < deadline &&
-             (count() != last || System.nanoTime() - stableSince < 500L * 1000 * 1000)) {
-        if (count() != last) { last = count(); stableSince = System.nanoTime() }
-        Thread.sleep(50)
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
-    count()
-  }
+  /** Driver ACTIONS `body` submitted, counted by [[QueryTrace]]: distinct
+    * `spark.sql.execution.id`s plus one per execution-id-less job, scoped
+    * to the body's own job group. */
+  private def actionsDuring(tag: String)(body: => Unit): Int =
+    QueryTrace.during(spark, tag)(body)._2.actions
 
   private def runQuery(name: String): Unit = {
     val q = Registry.all.find(_.name == name)

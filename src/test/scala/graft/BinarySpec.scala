@@ -70,7 +70,7 @@ class BinarySpec extends SparkSpec {
       val th = Search.bqThresholds(df, "v", d)
       val both = df.select(
           Search.bqSignatures(col("v"), th).as("nat"),
-          Search.bqSignaturesHof(col("v"), th).as("hof"))
+          ReferenceTwins.bqSignaturesHof(col("v"), th).as("hof"))
         .collect()
       both.foreach { r =>
         assert(r.getSeq[Long](0) == r.getSeq[Long](1), s"dim $d drifted")

@@ -151,4 +151,17 @@ class CharLmSpec extends SparkSpec {
       }
     }
   }
+
+  test("non-ASCII input routes to the char path before any byte is decoded") {
+    // "Aé" is 3 bytes but 2 chars: the char path answers (0, null), and
+    // the byte walk must not see the 'A' (which it would reject) first
+    import org.apache.spark.sql.graft.CharLmScore
+    import org.apache.spark.unsafe.types.UTF8String
+    val expr = CharLmScore(org.apache.spark.sql.catalyst.expressions.Literal("x"),
+      Array.fill(27 * 27 * 27)(1L), Array.fill(27 * 27)(27L))
+    val fast = expr.scorePublic(UTF8String.fromString("Aé"))
+    val slow = expr.scoreSlow("Aé")
+    assert(fast.getLong(0) == slow.getLong(0) && fast.getLong(0) == 0L)
+    assert(fast.isNullAt(1) && slow.isNullAt(1))
+  }
 }

@@ -2,6 +2,7 @@ package graft
 
 import graft.dedup.Components
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.QueryTrace
 
 /** Connected components for dedup clustering: fixpoint correctness on
   * known graphs (chains exercise pointer jumping, cliques the common
@@ -108,37 +109,22 @@ class ComponentsSpec extends SparkSpec {
     // the r13 contract: the size gate's edge count and the fast path's
     // edge gather are one treeAggregate — a regression back to
     // count-then-collect would double the scheduling cost of every small
-    // dedup graph (x26/d8 pay this per run). Job-count pinned via a
-    // listener; the labeling itself is driver-local (no further jobs).
-    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        counter.incrementAndGet(); ()
-      }
-    }
+    // dedup graph (x26/d8 pay this per run). Job-count pinned via
+    // QueryTrace; the labeling itself is driver-local (no further jobs).
     val df = edgeDf(Seq((1L, 2L), (2L, 3L), (10L, 11L)), parts = 3)
     df.count() // materialize the input lineage outside the window
-    spark.sparkContext.addSparkListener(l)
-    // the listener bus is async; poll until the count is stable rather
-    // than racing it (the public API exposes no flush)
-    def settled(): Int = {
-      var prev = -1
-      var cur = counter.get()
-      while (cur != prev) { Thread.sleep(200); prev = cur; cur = counter.get() }
-      cur
+    val (out, gate) = QueryTrace.during(spark, "cc-fast-path") {
+      Components.connectedComponentsAuto(df, "a", "b")
     }
-    try {
-      val out = Components.connectedComponentsAuto(df, "a", "b")
-      val jobsBeforeCollect = settled()
-      assert(jobsBeforeCollect == 1,
-        s"fast path submitted $jobsBeforeCollect jobs; the gate+gather fusion requires 1")
-      // result is a LOCAL relation: collecting it must not run another job
-      val m = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(settled() == jobsBeforeCollect,
-        "collecting the fast-path labeling ran a Spark job — result should be driver-local")
-      assert(m == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
-    } finally spark.sparkContext.removeSparkListener(l)
+    val jobsBeforeCollect = gate.jobs.size
+    assert(jobsBeforeCollect == 1,
+      s"fast path submitted $jobsBeforeCollect jobs; the gate+gather fusion requires 1")
+    // result is a LOCAL relation: collecting it must not run another job
+    val (rows, collected) = QueryTrace.during(spark, "cc-collect")(out.collect())
+    val m = rows.map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(collected.jobs.isEmpty,
+      "collecting the fast-path labeling ran a Spark job — result should be driver-local")
+    assert(m == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
   }
 
   test("sf0.1 real star-edge graph: Spark CC == driver union-find (uncapped witness)") {

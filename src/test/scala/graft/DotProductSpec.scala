@@ -20,7 +20,7 @@ class DotProductSpec extends SparkSpec {
     val out = df.select(
       col("id"),
       Search.dot(col("a"), col("b")).as("native"),
-      Search.dotHof(col("a"), col("b")).as("hof"))
+      ReferenceTwins.dotHof(col("a"), col("b")).as("hof"))
       .collect()
     out.foreach { row =>
       if (row.isNullAt(1) || row.isNullAt(2))

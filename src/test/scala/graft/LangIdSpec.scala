@@ -51,6 +51,14 @@ class LangIdSpec extends SparkSpec {
       }.mkString("\n"))
   }
 
+  test("a 33rd profile fails loudly instead of wrapping the Int language mask") {
+    val profiles = (0 until 33).map(l => s"l$l" -> Set("abc"))
+    intercept[IllegalArgumentException] {
+      org.apache.spark.sql.graft.LangIdPick(
+        org.apache.spark.sql.catalyst.expressions.Literal("x"), profiles)
+    }
+  }
+
   test("profiles are well-formed: trigram-length entries, no duplicates") {
     LangId.profiles.foreach { case (l, prof) =>
       assert(prof.forall(_.length == 3), s"$l has a non-trigram entry")

@@ -2,6 +2,7 @@ package graft
 
 import graft.profile.{ModalityKind, Profiler}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.QueryTrace
 
 /** Two-phase profile: the vocabulary cap must fail LOUDLY from the exact
   * phase-1 distinct counts — before any `collect_set` buffers are built —
@@ -22,30 +23,16 @@ class ProfilerSpec extends SparkSpec {
     assert(ex.getMessage.contains((Profiler.MaxVocab + 1).toString))
   }
 
-  /** Job count for `body` under a fresh job group, with AQE pinned OFF so
-    * one action = one job (AQE materializes each exchange as its own job,
-    * which would make the count an AQE-stage count, not an action count). */
+  /** Job count for `body` ([[QueryTrace]], scoped to its own job group),
+    * with AQE pinned OFF so one action = one job (AQE materializes each
+    * exchange as its own job, which would make the count an AQE-stage
+    * count, not an action count). */
   private def countJobs[A](tag: String)(body: => A): (A, Int) = {
     val aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val group = s"profiler-spec-$tag-" + System.nanoTime()
-    spark.sparkContext.setJobGroup(group, tag)
-    val out = try body finally {
-      spark.sparkContext.clearJobGroup()
-      spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    }
-    // statusTracker is fed by the async listener bus — poll until the
-    // count is stable so a slow bus can't under-report the job count
-    def count() = spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
-    var last = count()
-    var stable = 0
-    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-    while (stable < 3 && System.nanoTime() < deadline) {
-      Thread.sleep(100)
-      val c = count()
-      if (c == last) stable += 1 else { stable = 0; last = c }
-    }
-    (out, last)
+    val (out, trace) = try QueryTrace.during(spark, tag)(body)
+      finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    (out, trace.jobs.size)
   }
 
   test("common-case profile runs at most 2 jobs and matches single-pass results") {
