@@ -172,18 +172,6 @@ final class FuseRankEngine private (
     * Searches issued after close() still work — they recompute the encode
     * projection (and re-scan the item source). */
   def close(): Unit = { indexed.unpersist(); items.unpersist(); () }
-
-  /** Persist the vector table as the durable index (S3/S4 sink). `packed`
-    * stores fused vectors as one binary value per row (PackedVectors) —
-    * ~2× faster write and scan than parquet array<double> at high dims. */
-  def writeIndex(path: String, packed: Boolean = true): Unit = {
-    val out =
-      if (packed) indexed.withColumn("fused_vec_packed",
-          org.apache.spark.sql.graft.PackedVectors.pack(col("fused_vec")))
-        .drop("fused_vec")
-      else indexed
-    out.write.mode("overwrite").parquet(path)
-  }
 }
 
 object FuseRankEngine {

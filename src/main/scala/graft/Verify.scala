@@ -34,7 +34,7 @@ object Verify {
         val sorted = df.queryExecution.analyzed match {
           case s: org.apache.spark.sql.catalyst.plans.logical.Sort if s.global =>
             df.coalesce(1).sortWithinPartitions(
-              s.order.map(org.apache.spark.sql.graft.Bridge.column): _*)
+              s.order.map(org.apache.spark.sql.graft.GraftKernel.column): _*)
           case _ => df.coalesce(1)
         }
         sorted.write.mode("overwrite").parquet(s"$outDir/$name")

@@ -183,21 +183,6 @@ object Search {
     }.toIndexedSeq
   }
 
-  /** K1 over the PACKED index format (binary column of little-endian
-    * doubles — the on-disk/in-memory serving form; see
-    * org.apache.spark.sql.graft.PackedVectors). Cached packed index +
-    * dotPacked ≈ FAISS-flat serving latency (0.4s warm over 600k×814 dims
-    * on local[32]). */
-  def fusedTopKPacked(vectors: DataFrame, packedCol: String, idCol: String,
-                      q: Array[Double], k: Int): DataFrame = {
-    import org.apache.spark.sql.graft.PackedVectors
-    vectors
-      .withColumn("score", PackedVectors.dotPacked(col(packedCol), typedLit(q)))
-      .orderBy(col("score").desc, col(idCol))
-      .limit(k)
-      .select(col(idCol), col("score"))
-  }
-
   /** K2: hard-filter top-k — the oracle-path query family
     * (reference src/eval/milvus_experiment.py:72-89). */
   def hardFilterTopK(items: DataFrame, preds: Seq[Column], score: Column,
@@ -652,7 +637,7 @@ object Search {
     val books = pqCodebooks(base, "v", "id", dim, m, ksub, iters, exactMeans)
     // packed codes + the native ADC kernel (knnSq's scoring path): the
     // former aggregate(zip_with(...)) lookup-sum was an interpreted HOF
-    // per candidate row; adcBytes is the same left-to-right accumulation
+    // per candidate row; AdcPacked is the same left-to-right accumulation
     // over the flattened subspace-major table, bit-identical scores
     val encoded = base.select(col("id"),
       org.apache.spark.sql.graft.PqCodes.pack(

@@ -2,10 +2,8 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
+import org.apache.spark.sql.graft.GraftKernel.{column, expr}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -36,7 +34,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * docs-without-rows LEFT-join null.
   */
 case class CharLmScore(child: Expression, n3: Array[Long], n2: Array[Long])
-  extends UnaryExpression with ExpectsInputTypes {
+  extends GraftKernel1[UTF8String] {
 
   require(n3.length == 27 * 27 * 27 && n2.length == 27 * 27,
     s"model arrays must be 27^3/27^2 cells: ${n3.length}/${n2.length}")
@@ -57,7 +55,7 @@ case class CharLmScore(child: Expression, n3: Array[Long], n2: Array[Long])
       s"CharLmScore input not [a-z ]-normalized: '$c'")
 
   /** The 27³ per-cell cast results, precomputed ONCE per (deserialized)
-    * expression instance as scale-12 unscaled longs. `p` depends only on
+    * kernel instance as scale-12 unscaled longs. `p` depends only on
     * the model cell — (n3[cell]+1)/(n2[cell/27]+27) — so the per-trigram
     * Decimal(double) construction (a Double.toString + BigDecimal parse!),
     * changePrecision, and immutable BigDecimal add the round-16 loop paid
@@ -108,7 +106,7 @@ case class CharLmScore(child: Expression, n3: Array[Long], n2: Array[Long])
     else throw new IllegalArgumentException(
       s"CharLmScore input not [a-z ]-normalized: '${b.toChar}'")
 
-  def scorePublic(s: UTF8String): InternalRow = {
+  def compute(s: UTF8String): InternalRow = {
     // normalized input is pure ASCII: one byte per char, so the trigram
     // walk runs on raw bytes with no String materialization. Any non-ASCII
     // byte (unreachable through LmNormalize) routes the WHOLE input to the
@@ -170,35 +168,12 @@ case class CharLmScore(child: Expression, n3: Array[Long], n2: Array[Long])
     val n = (last + 1).toLong
     new GenericInternalRow(Array[Any](n, acc.doubleValue() / n))
   }
-
-  override protected def nullSafeEval(a: Any): Any =
-    scorePublic(a.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("charLm", this, classOf[CharLmScore].getName)
-    defineCodeGen(ctx, ev, a => s"$self.scorePublic($a)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): CharLmScore =
-    copy(child = newChild)
-
-  // value equality over the model arrays (the BqSignature canonicalization fix)
-  override def equals(other: Any): Boolean = other match {
-    case c: CharLmScore =>
-      child == c.child && java.util.Arrays.equals(n3, c.n3) &&
-        java.util.Arrays.equals(n2, c.n2)
-    case _ => false
-  }
-  override def hashCode(): Int =
-    31 * (31 * child.hashCode() + java.util.Arrays.hashCode(n3)) +
-      java.util.Arrays.hashCode(n2)
 }
 
 object CharLmScore {
   /** struct(n, mean) column; input must be the [a-z ]-normalized text. */
   def score(normText: Column, n3: Array[Long], n2: Array[Long]): Column =
-    ExpressionUtils.column(
-      CharLmScore(ExpressionUtils.expression(normText), n3, n2))
+    column(CharLmScore(expr(normText), n3, n2))
 
   /** Trigram cell index for a 3-char [a-z ] string — the fit side's
     * mapping from the aggregated trigram STRINGS to the model array. */

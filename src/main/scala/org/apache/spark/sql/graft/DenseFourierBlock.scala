@@ -1,13 +1,12 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graft.GraftKernel.{column, expr, NullPolicy, PassThrough}
 import org.apache.spark.sql.types._
 
-/** Native codegen builder of the full dense (numerical) modality block
+/** Native builder of the full dense (numerical) modality block
   * (reference src/encode.py:85-100): for an already min-max-scaled input x̂
   * (the (1−range_ε) factor applied by the caller),
   *
@@ -21,11 +20,11 @@ import org.apache.spark.sql.types._
   *
   * The built-in-HOF formulation (flatten(transform(sequence(1,K),…)))
   * evaluates ~2K interpreted lambdas and allocates per harmonic — ~190 µs
-  * per row at K=200; this expression is one primitive loop writing a
-  * single double[] (~2 µs). The hot write-path operator of the engine.
+  * per row at K=200; this kernel is one primitive loop writing a single
+  * double[] (~2 µs). The hot write-path operator of the engine.
   */
 case class DenseFourierBlock(child: Expression, numHarmonics: Int)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends GraftKernel1[java.lang.Double] {
 
   require(numHarmonics >= 1)
 
@@ -33,8 +32,7 @@ case class DenseFourierBlock(child: Expression, numHarmonics: Int)
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = "graft_dense_fourier"
   // null input must still produce the zero-block row (nullInd = −1)
-  override def nullable: Boolean = false
-  override def nullIntolerant: Boolean = false
+  override def nullPolicy: NullPolicy = PassThrough
 
   private lazy val sigmas: Array[Double] =
     Array.tabulate(numHarmonics) { i =>
@@ -42,14 +40,16 @@ case class DenseFourierBlock(child: Expression, numHarmonics: Int)
       math.sin(math.Pi * k / numHarmonics) / (math.Pi * k / numHarmonics)
     }
 
-  @inline private def fill(out: Array[Double], x: Double, isNull: Boolean): Unit = {
+  def compute(xBoxed: java.lang.Double): ArrayData = {
     val k = numHarmonics
-    if (isNull || x.isNaN) {
+    val out = new Array[Double](2 * k + 5)
+    if (xBoxed == null || xBoxed.isNaN) {
       // zeros everywhere except the two shift dims and the null indicator
       out(2) = 1.0
       out(2 * k + 3) = 1.0
       out(2 * k + 4) = -1.0
     } else {
+      val x = xBoxed.doubleValue
       out(0) = math.sin(math.Pi / 2 * x)
       out(1) = math.cos(math.Pi / 2 * x)
       out(2) = 1.0
@@ -64,41 +64,11 @@ case class DenseFourierBlock(child: Expression, numHarmonics: Int)
       out(2 * k + 3) = 1.0
       out(2 * k + 4) = 0.0
     }
-  }
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    val out = new Array[Double](2 * numHarmonics + 5)
-    fill(out, if (v == null) 0.0 else v.asInstanceOf[Double], v == null)
     new GenericArrayData(out)
   }
-
-  import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    val self = ctx.addReferenceObj("denseFourier", this, classOf[DenseFourierBlock].getName)
-    val arr = ctx.freshName("arr")
-    val code =
-      code"""
-        ${childGen.code}
-        double[] $arr = new double[${2 * numHarmonics + 5}];
-        $self.fillPublic($arr, ${childGen.isNull} ? 0.0 : ${childGen.value}, ${childGen.isNull});
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-          new org.apache.spark.sql.catalyst.util.GenericArrayData($arr);
-      """
-    ev.copy(code = code, isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
-
-  /** Public bridge for generated code. */
-  def fillPublic(out: Array[Double], x: Double, isNull: Boolean): Unit =
-    fill(out, x, isNull)
-
-  override protected def withNewChildInternal(newChild: Expression): DenseFourierBlock =
-    copy(child = newChild)
 }
 
 object DenseFourierBlock {
   def block(scaledX: Column, numHarmonics: Int): Column =
-    ExpressionUtils.column(DenseFourierBlock(ExpressionUtils.expression(scaledX), numHarmonics))
+    column(DenseFourierBlock(expr(scaledX), numHarmonics))
 }

@@ -1,38 +1,33 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.graft.GraftKernel.{column, expr}
 import org.apache.spark.sql.types._
 
-/** Native codegen inner product over two ArrayType(Double) columns.
+/** Native inner product over two ArrayType(Double) columns.
   *
   * The built-in `aggregate(zip_with(a, b, _*_), 0d, _+_)` evaluates its
   * lambdas through interpreted HigherOrderFunction machinery and allocates
   * an intermediate array per row — at d≈1400 dims that is the hot loop of
   * every search (SURVEY.md §7.3, reference IndexFlatIP scan src/app.py:78).
-  * This expression generates a tight primitive loop over the two ArrayData
-  * (no allocation) and stays inside whole-stage codegen.
-  *
-  * Hosted under org.apache.spark.sql because the Column↔Expression bridge
-  * (ExpressionUtils) is private[sql].
+  * This kernel is one tight primitive loop over the two ArrayData (no
+  * allocation) that stays inside whole-stage codegen.
   *
   * Null semantics: null array → null; null ELEMENTS contribute 0 (fused
   * vectors never contain null elements — encoders emit explicit zeros).
   */
 case class DotProduct(left: Expression, right: Expression)
-  extends BinaryExpression with ExpectsInputTypes {
+  extends GraftKernel2[ArrayData, ArrayData] {
 
   override def inputTypes: Seq[AbstractDataType] =
     Seq(ArrayType(DoubleType), ArrayType(DoubleType))
   override def dataType: DataType = DoubleType
   override def prettyName: String = "graft_dot"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  /** Σ x_i·y_i over the shorter length, accumulated left to right. */
+  def compute(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var s = 0.0
     var i = 0
@@ -42,31 +37,9 @@ case class DotProduct(left: Expression, right: Expression)
     }
     s
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$a.isNullAt($i) && !$b.isNullAt($i)) {
-         |    $s += $a.getDouble($i) * $b.getDouble($i);
-         |  }
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): DotProduct =
-    copy(left = newLeft, right = newRight)
 }
 
 object DotProduct {
   /** Column-level inner product; inputs must be array<double> (cast first). */
-  def dot(a: Column, b: Column): Column =
-    ExpressionUtils.column(DotProduct(ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
+  def dot(a: Column, b: Column): Column = column(DotProduct(expr(a), expr(b)))
 }

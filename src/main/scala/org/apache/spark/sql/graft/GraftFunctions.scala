@@ -54,7 +54,7 @@ object GraftFunctions {
       s"$fn: argument $pos must be a literal integer, got non-foldable ${e.sql}")
     e.eval() match {
       case i: Int    => i
-      case l: Long   => math.toIntExact(l)
+      case l: Long if l.isValidInt => l.toInt
       case s: Short  => s.toInt
       case b: Byte   => b.toInt
       case null      => throw new IllegalArgumentException(

@@ -1,10 +1,9 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.graft.GraftKernel.{column, expr}
 import org.apache.spark.sql.types._
 
 /** Native Hamming distance between two packed signature arrays (xor +
@@ -25,35 +24,16 @@ import org.apache.spark.sql.types._
   * same fit cannot happen; spec-pinned anyway).
   */
 case class HammingDistance(left: Expression, right: Expression)
-  extends BinaryExpression with ExpectsInputTypes {
+  extends GraftKernel2[ArrayData, ArrayData] {
 
   override def inputTypes: Seq[AbstractDataType] =
     Seq(ArrayType(LongType), ArrayType(LongType))
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_hamming"
-
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    HammingDistance.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => s"""
-      Object r = org.apache.spark.sql.graft.HammingDistance.compute($a, $b);
-      if (r == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = ((Long) r).longValue(); }
-    """)
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): HammingDistance =
-    copy(left = newLeft, right = newRight)
-}
-
-object HammingDistance {
+  override protected def computeMayReturnNull: Boolean = true
 
   /** Null when lengths differ (the HOF chain's null-padded sum) or a
-    * word is null; else Σ popcount(a_i ^ b_i). Boxed Long/null return so
-    * the codegen null check stays one branch. */
+    * word is null; else Σ popcount(a_i ^ b_i). */
   def compute(a: ArrayData, b: ArrayData): java.lang.Long = {
     val n = a.numElements()
     if (b.numElements() != n) return null
@@ -66,8 +46,8 @@ object HammingDistance {
     }
     s
   }
+}
 
-  def hamming(a: Column, b: Column): Column =
-    ExpressionUtils.column(HammingDistance(
-      ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
+object HammingDistance {
+  def hamming(a: Column, b: Column): Column = column(HammingDistance(expr(a), expr(b)))
 }

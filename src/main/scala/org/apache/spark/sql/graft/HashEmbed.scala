@@ -1,14 +1,10 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.graft.GraftKernel.{column, expr, NullPolicy, PassThrough}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Native weighted hashed-trigram text embedding: exactly
   * [[graft.encode.Embedders.fuseInto]]'s per-row math — per column,
@@ -32,71 +28,32 @@ import org.apache.spark.unsafe.types.UTF8String
   * Null/empty contract (= the Row path's): a null text contributes
   * `embed("")` = the zero vector; an all-zero accumulation skips the
   * final normalize and returns zeros.
-  *
-  * Hosted under org.apache.spark.sql because the Column↔Expression
-  * bridge (ExpressionUtils) is private[sql].
   */
-case class HashEmbed(children: Seq[Expression], dim: Int, weights: Seq[Double])
-  extends Expression with ExpectsInputTypes {
+case class HashEmbed(override val children: Seq[Expression], dim: Int, weights: Seq[Double])
+  extends GraftKernelN {
   require(children.nonEmpty && children.size == weights.size,
     s"HashEmbed needs one weight per text column: ${children.size} vs ${weights.size}")
 
   override def inputTypes: Seq[AbstractDataType] =
     Seq.fill(children.size)(StringType)
   override def dataType: DataType = ArrayType(DoubleType)
-  override def nullable: Boolean = false
-  override def foldable: Boolean = children.forall(_.foldable)
   override def prettyName: String = "graft_hash_embed"
+  override def nullPolicy: NullPolicy = PassThrough
 
   private lazy val weightsArr = weights.toArray
-
-  override def eval(input: InternalRow): Any = {
-    val texts = new Array[UTF8String](children.size)
-    var i = 0
-    while (i < children.size) {
-      texts(i) = children(i).eval(input).asInstanceOf[UTF8String]
-      i += 1
-    }
-    HashEmbed.compute(texts, dim, weightsArr)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val gens = children.map(_.genCode(ctx))
-    val wRef = ctx.addReferenceObj("weights", weightsArr, "double[]")
-    val arr = ctx.freshName("texts")
-    val fill = gens.zipWithIndex.map { case (g, i) =>
-      s"$arr[$i] = ${g.isNull} ? null : ${g.value};"
-    }.mkString("\n")
-    val code = code"""
-      ${gens.map(_.code).reduce(_ + _)}
-      org.apache.spark.unsafe.types.UTF8String[] $arr =
-        new org.apache.spark.unsafe.types.UTF8String[${children.size}];
-      $fill
-      org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-        org.apache.spark.sql.graft.HashEmbed.compute($arr, $dim, $wRef);
-    """
-    ev.copy(code = code, isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): HashEmbed =
-    copy(children = newChildren)
-}
-
-object HashEmbed {
 
   /** Per-row fused embed: same call chain as the Row path — one
     * `HashingEmbedder.embed` per column (null → ""), weighted
     * accumulation in order, final L2 — so every double matches the
     * mapPartitions form bit-for-bit. */
-  def compute(texts: Array[UTF8String], dim: Int, weights: Array[Double]): ArrayData = {
+  def compute(texts: Array[Any]): ArrayData = {
     val e = graft.encode.HashingEmbedder(dim)
     val acc = new Array[Double](dim)
     var c = 0
     while (c < texts.length) {
       val t = if (texts(c) == null) "" else texts(c).toString
       val v = e.embed(t)
-      val w = weights(c)
+      val w = weightsArr(c)
       var i = 0
       while (i < dim) { acc(i) += w * v(i); i += 1 }
       c += 1
@@ -109,12 +66,12 @@ object HashEmbed {
       i = 0
       while (i < dim) { acc(i) *= s; i += 1 }
     }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      .fromPrimitiveArray(acc)
+    UnsafeArrayData.fromPrimitiveArray(acc)
   }
+}
 
+object HashEmbed {
   /** Column form: weighted fusion over (text column, weight) pairs. */
   def embed(cols: Seq[(Column, Double)], dim: Int): Column =
-    ExpressionUtils.column(HashEmbed(
-      cols.map(c => ExpressionUtils.expression(c._1)), dim, cols.map(_._2)))
+    column(HashEmbed(cols.map(c => expr(c._1)), dim, cols.map(_._2)))
 }

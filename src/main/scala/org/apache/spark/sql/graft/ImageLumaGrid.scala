@@ -2,11 +2,9 @@ package org.apache.spark.sql.graft
 
 import graft.multimodal.Multimodal
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.graft.GraftKernel.{column, expr}
 import org.apache.spark.sql.types._
 import scala.util.control.NonFatal
 
@@ -44,13 +42,10 @@ import scala.util.control.NonFatal
   * expression's eval touches them, and the output is 8·(gw·gh+1) bytes —
   * the scan's output is ~1000× smaller than its input, exactly what you
   * want feeding a parquet index write.
-  *
-  * Hosted under org.apache.spark.sql for the private[sql]
-  * Column↔Expression bridge, like the rest of the native family.
   */
 case class ImageLumaGrid(child: Expression, gridW: Int, gridH: Int,
                          codec: Multimodal.Codec)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends GraftKernel1[Array[Byte]] {
 
   require(gridW > 0 && gridH > 0, s"grid ${gridW}x$gridH must be positive")
 
@@ -58,27 +53,21 @@ case class ImageLumaGrid(child: Expression, gridW: Int, gridH: Int,
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = "graft_image_luma_grid"
 
-  override protected def nullSafeEval(payload: Any): Any =
-    ImageGridMath.blockData(codec, payload.asInstanceOf[Array[Byte]], gridW, gridH)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // the codec is a runtime object (pluggable boundary) — generated code
-    // reaches it through a reference slot, everything else is a static call
-    val codecRef = ctx.addReferenceObj("imageCodec", codec,
-      classOf[Multimodal.Codec].getName)
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.graft.ImageGridMath.blockData($codecRef, $c, $gridW, $gridH)")
+  /** The product-side block: signature + indicator (steps 1–5). */
+  def compute(payload: Array[Byte]): ArrayData = {
+    val n = gridW * gridH
+    val sig = ImageGridMath.signature(codec, payload, gridW, gridH)
+    val out = new Array[Double](n + 1)
+    if (sig == null) out(n) = -1.0
+    else System.arraycopy(sig, 0, out, 0, n)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
-
-  override protected def withNewChildInternal(newChild: Expression): ImageLumaGrid =
-    copy(child = newChild)
 }
 
 object ImageLumaGrid {
   def block(payload: Column, gridW: Int, gridH: Int,
             codec: Multimodal.Codec): Column =
-    ExpressionUtils.column(
-      ImageLumaGrid(ExpressionUtils.expression(payload), gridW, gridH, codec))
+    column(ImageLumaGrid(expr(payload), gridW, gridH, codec))
 }
 
 object ImageGridMath {
@@ -142,14 +131,4 @@ object ImageGridMath {
     out
   }
 
-  /** Product-side block (signature + indicator) as Catalyst ArrayData —
-    * called from both nullSafeEval and generated code. */
-  def blockData(codec: Multimodal.Codec, payload: Array[Byte],
-                gw: Int, gh: Int): ArrayData = {
-    val sig = signature(codec, payload, gw, gh)
-    val out = new Array[Double](gw * gh + 1)
-    if (sig == null) out(gw * gh) = -1.0
-    else System.arraycopy(sig, 0, out, 0, gw * gh)
-    UnsafeArrayData.fromPrimitiveArray(out)
-  }
 }

@@ -1,10 +1,9 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.graft.GraftKernel.{column, expr}
 import org.apache.spark.sql.types._
 
 /** Nearest-centroid assignment (IVF coarse quantization) with the WHOLE
@@ -14,7 +13,7 @@ import org.apache.spark.sql.types._
   * nCentroids))`) inlines every centroid into the generated code: at
   * IVF-realistic centroid counts (√n ≈ 10⁴–10⁵ for a 100 TB corpus) that
   * blows past JVM constant-pool/method-size limits and falls out of
-  * codegen. Here the matrix lives on the expression object (broadcast once
+  * codegen. Here the matrix lives on the kernel object (broadcast once
   * per task with the serialized plan), the generated code is ONE call, and
   * the argmin is a tight primitive loop — centroid count no longer affects
   * code size.
@@ -27,25 +26,13 @@ import org.apache.spark.sql.types._
   * (DotProduct's convention).
   */
 case class IvfAssign(child: Expression, cents: Array[Array[Double]])
-  extends UnaryExpression with ExpectsInputTypes {
+  extends GraftKernel1[ArrayData] {
 
   require(cents.nonEmpty, "need at least one centroid")
 
   override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(DoubleType))
   override def dataType: DataType = IntegerType
   override def prettyName: String = "graft_ivf_assign"
-
-  // value equality over the centroid matrix (reference equality would stop
-  // canonicalization/CSE from ever matching two semantically equal assigns)
-  override def equals(other: Any): Boolean = other match {
-    case a: IvfAssign =>
-      child == a.child && java.util.Arrays.deepEquals(
-        cents.asInstanceOf[Array[AnyRef]], a.cents.asInstanceOf[Array[AnyRef]])
-    case _ => false
-  }
-  override def hashCode(): Int =
-    31 * child.hashCode() +
-      java.util.Arrays.deepHashCode(cents.asInstanceOf[Array[AnyRef]])
 
   // |c|² per centroid, left-to-right — matches the literal form's driver loop
   @transient private lazy val centNorms: Array[Double] = cents.map { c =>
@@ -54,7 +41,7 @@ case class IvfAssign(child: Expression, cents: Array[Array[Double]])
     s
   }
 
-  def assignPublic(v: ArrayData): Int = {
+  def compute(v: ArrayData): Int = {
     val dim = v.numElements()
     // |v|² with DotProduct's null-element convention (nulls contribute 0)
     var vv = 0.0
@@ -81,21 +68,10 @@ case class IvfAssign(child: Expression, cents: Array[Array[Double]])
     }
     best
   }
-
-  override protected def nullSafeEval(a: Any): Any =
-    assignPublic(a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("ivfAssign", this, classOf[IvfAssign].getName)
-    defineCodeGen(ctx, ev, a => s"$self.assignPublic($a)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): IvfAssign =
-    copy(child = newChild)
 }
 
 object IvfAssign {
   /** Column-level nearest-centroid id; input must be array<double>. */
   def assign(vec: Column, cents: Array[Array[Double]]): Column =
-    ExpressionUtils.column(IvfAssign(ExpressionUtils.expression(vec), cents))
+    column(IvfAssign(expr(vec), cents))
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.graft.GraftKernel.{column, expr}
 import org.apache.spark.sql.types._
 
 /** KMV (k-minimum-values) distinct-count sketch as a native aggregate —
@@ -35,7 +35,7 @@ case class KMinValues(
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[java.util.TreeSet[java.lang.Long]]
-  with ExpectsInputTypes {
+  with ExpectsInputTypes with ValueEquality {
 
   require(k >= 2, s"KMV needs k >= 2, got $k")
 
@@ -107,8 +107,7 @@ object KMinValues {
   /** Distinct-count estimate of `hash52` (a 52-bit non-negative long hash
     * column, e.g. [[hash52]]) with sketch size k. */
   def kmvDistinct(hashCol: Column, k: Int): Column =
-    ExpressionUtils.column(
-      KMinValues(ExpressionUtils.expression(hashCol), k).toAggregateExpression())
+    column(KMinValues(expr(hashCol), k).toAggregateExpression())
 
   /** The cross-engine 52-bit uniform hash: first 13 hex digits of md5,
     * parsed base-16. DuckDB twin: `('0x' || substr(md5(x), 1, 13))::UBIGINT`. */

@@ -1,9 +1,8 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.graft.GraftKernel.{column, expr}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -27,7 +26,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * construction, so Catalyst canonicalization dedups equal picks.
   */
 case class LangIdPick(child: Expression, profiles: Seq[(String, Set[String])])
-  extends UnaryExpression with ExpectsInputTypes {
+  extends GraftKernel1[UTF8String] {
 
   require(profiles.nonEmpty, "need at least one language profile")
   // the trigram table's per-language mask is an Int: a 33rd profile's
@@ -72,7 +71,7 @@ case class LangIdPick(child: Expression, profiles: Seq[(String, Set[String])])
     (keys, masks)
   }
 
-  def pickPublic(s: UTF8String): UTF8String = {
+  def compute(s: UTF8String): UTF8String = {
     val t = s.toString
     val nLang = profiles.size
     val (keys, masks) = triTable
@@ -111,17 +110,6 @@ case class LangIdPick(child: Expression, profiles: Seq[(String, Set[String])])
     }
     und // unreachable
   }
-
-  override protected def nullSafeEval(a: Any): Any =
-    pickPublic(a.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("langIdPick", this, classOf[LangIdPick].getName)
-    defineCodeGen(ctx, ev, a => s"$self.pickPublic($a)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): LangIdPick =
-    copy(child = newChild)
 }
 
 object LangIdPick {
@@ -134,6 +122,5 @@ object LangIdPick {
 
   /** Predicted-language column over the PADDED normalized text. */
   def pick(paddedText: Column, profiles: Seq[(String, Set[String])]): Column =
-    ExpressionUtils.column(
-      LangIdPick(ExpressionUtils.expression(paddedText), profiles))
+    column(LangIdPick(expr(paddedText), profiles))
 }

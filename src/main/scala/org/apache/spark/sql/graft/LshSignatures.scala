@@ -1,12 +1,9 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.graft.GraftKernel.{column, expr}
 import org.apache.spark.sql.types._
 
 /** All random-hyperplane LSH signatures of a vector in one expression:
@@ -22,7 +19,7 @@ import org.apache.spark.sql.types._
   */
 case class LshSignatures(child: Expression, planes: Array[Array[Double]],
                          nTables: Int, nBits: Int)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends GraftKernel1[ArrayData] {
 
   require(planes.length == nTables * nBits, "planes must be nTables*nBits rows")
 
@@ -30,22 +27,7 @@ case class LshSignatures(child: Expression, planes: Array[Array[Double]],
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_lsh_signatures"
 
-  // value equality over the plane matrix — the BqSignature/IvfAssign
-  // canonicalization fix (array fields otherwise compare by reference)
-  override def equals(other: Any): Boolean = other match {
-    case l: LshSignatures =>
-      child == l.child && nTables == l.nTables && nBits == l.nBits &&
-        java.util.Arrays.deepEquals(
-          planes.asInstanceOf[Array[AnyRef]], l.planes.asInstanceOf[Array[AnyRef]])
-    case _ => false
-  }
-  override def hashCode(): Int = {
-    var h = 31 * child.hashCode() + nTables
-    h = 31 * h + nBits
-    31 * h + java.util.Arrays.deepHashCode(planes.asInstanceOf[Array[AnyRef]])
-  }
-
-  def signPublic(v: ArrayData): Array[Long] = {
+  def compute(v: ArrayData): ArrayData = {
     val dim = v.numElements()
     val out = new Array[Long](nTables)
     var t = 0
@@ -64,20 +46,8 @@ case class LshSignatures(child: Expression, planes: Array[Array[Double]],
       out(t) = sig
       t += 1
     }
-    out
+    new GenericArrayData(out)
   }
-
-  override protected def nullSafeEval(a: Any): Any =
-    new GenericArrayData(signPublic(a.asInstanceOf[ArrayData]))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("lshSigs", this, classOf[LshSignatures].getName)
-    defineCodeGen(ctx, ev, a =>
-      s"new org.apache.spark.sql.catalyst.util.GenericArrayData($self.signPublic($a))")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): LshSignatures =
-    copy(child = newChild)
 }
 
 object LshSignatures {
@@ -89,6 +59,5 @@ object LshSignatures {
 
   def signatures(vec: Column, planes: Array[Array[Double]],
                  nTables: Int, nBits: Int): Column =
-    ExpressionUtils.column(
-      LshSignatures(ExpressionUtils.expression(vec), planes, nTables, nBits))
+    column(LshSignatures(expr(vec), planes, nTables, nBits))
 }

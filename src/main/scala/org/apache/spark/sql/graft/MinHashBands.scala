@@ -3,10 +3,9 @@ package org.apache.spark.sql.graft
 import java.nio.charset.StandardCharsets
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.graft.GraftKernel.{column, expr}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -35,7 +34,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * oracle twins hash the same band-bucket values either way.
   *
   * ONE documented divergence: a NULL input ARRAY (the array itself, not
-  * its elements) yields SQL NULL here (UnaryExpression null-in→null-out),
+  * its elements) yields SQL NULL here (the kernel's null-in→null-out policy),
   * where the HOF form yields `array(null, …)` — so `explode()` drops the
   * row instead of emitting nBands null-bucket rows. Unobservable in every
   * caller (null buckets never survive the bucket equi-joins, and the
@@ -48,7 +47,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * needs.
   */
 case class MinHashBands(child: Expression, nSeeds: Int, bandSize: Int)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends GraftKernel1[ArrayData] {
 
   require(nSeeds > 0 && bandSize > 0 && nSeeds % bandSize == 0,
     s"nSeeds $nSeeds must be a positive multiple of bandSize $bandSize")
@@ -57,43 +56,12 @@ case class MinHashBands(child: Expression, nSeeds: Int, bandSize: Int)
   override def dataType: DataType = ArrayType(StringType, containsNull = true)
   override def prettyName: String = "graft_minhash_bands"
 
-  private val nBands = nSeeds / bandSize
-  // "j:" prefixes, precomputed once per expression instance
-  @transient private lazy val prefixes: Array[Array[Byte]] =
-    Array.tabulate(nSeeds)(j => (j.toString + ":").getBytes(StandardCharsets.UTF_8))
+  @transient private lazy val prefixes = MinHashSigs.prefixes(nSeeds)
 
-  private def hex(d: Array[Byte]): String = {
-    val sb = new java.lang.StringBuilder(d.length * 2)
-    var i = 0
-    while (i < d.length) {
-      sb.append(Character.forDigit((d(i) >> 4) & 0xf, 16))
-      sb.append(Character.forDigit(d(i) & 0xf, 16))
-      i += 1
-    }
-    sb.toString
-  }
-
-  def bandsPublic(arr: ArrayData): ArrayData = {
-    val n = arr.numElements()
+  def compute(arr: ArrayData): ArrayData = {
     val md = java.security.MessageDigest.getInstance("MD5")
-    val mins = new Array[Array[Byte]](nSeeds)
-    var i = 0
-    while (i < n) {
-      if (!arr.isNullAt(i)) { // array_min skips null elements
-        val bytes = arr.getUTF8String(i).getBytes
-        var j = 0
-        while (j < nSeeds) {
-          md.reset()
-          md.update(prefixes(j))
-          md.update(bytes)
-          val dig = md.digest()
-          if (mins(j) == null ||
-              java.util.Arrays.compareUnsigned(dig, mins(j)) < 0) mins(j) = dig
-          j += 1
-        }
-      }
-      i += 1
-    }
+    val mins = MinHashSigs.seedMinima(arr, prefixes, md)
+    val nBands = nSeeds / bandSize
     val out = new Array[AnyRef](nBands)
     var b = 0
     while (b < nBands) {
@@ -101,7 +69,7 @@ case class MinHashBands(child: Expression, nSeeds: Int, bandSize: Int)
       val sb = new java.lang.StringBuilder(32 * bandSize)
       var j = b * bandSize
       while (j < (b + 1) * bandSize) {
-        if (mins(j) == null) anyNull = true else sb.append(hex(mins(j)))
+        if (mins(j) == null) anyNull = true else sb.append(MinHashSigs.hex(mins(j)))
         j += 1
       }
       // concat(h…) is null if any h is null; md5(null) is null; the
@@ -111,38 +79,25 @@ case class MinHashBands(child: Expression, nSeeds: Int, bandSize: Int)
         else {
           md.reset()
           val bandDig = md.digest(sb.toString.getBytes(StandardCharsets.US_ASCII))
-          UTF8String.fromString(b.toString + ":" + hex(bandDig))
+          UTF8String.fromString(b.toString + ":" + MinHashSigs.hex(bandDig))
         }
       b += 1
     }
     new GenericArrayData(out)
   }
-
-  override protected def nullSafeEval(a: Any): Any =
-    bandsPublic(a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("minhashBands", this, classOf[MinHashBands].getName)
-    defineCodeGen(ctx, ev, a => s"$self.bandsPublic($a)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashBands =
-    copy(child = newChild)
 }
 
 object MinHashBands {
   /** array<string> of band-bucket strings ("0:<md5hex>", "1:<md5hex>", …)
     * for the given string-set column. */
   def bands(arr: Column, nSeeds: Int, bandSize: Int): Column =
-    ExpressionUtils.column(
-      MinHashBands(ExpressionUtils.expression(arr), nSeeds, bandSize))
+    column(MinHashBands(expr(arr), nSeeds, bandSize))
 
   /** array<string> of the nSeeds MinHash signature hexes themselves —
     * exactly `array_min(transform(toks, t => md5(concat("j:", t))))` per
     * seed j (d2's signature columns), sharing [[MinHashBands]]'s
     * digest-min loop. */
-  def sigs(arr: Column, nSeeds: Int): Column =
-    ExpressionUtils.column(MinHashSigs(ExpressionUtils.expression(arr), nSeeds))
+  def sigs(arr: Column, nSeeds: Int): Column = column(MinHashSigs(expr(arr), nSeeds))
 }
 
 /** The signature half of [[MinHashBands]]: the per-seed minima as
@@ -154,7 +109,7 @@ object MinHashBands {
   * `element_at(null, j)` columns read null exactly as the HOF form's
   * per-column nulls did. */
 case class MinHashSigs(child: Expression, nSeeds: Int)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends GraftKernel1[ArrayData] {
 
   require(nSeeds > 0, s"nSeeds must be positive: $nSeeds")
 
@@ -162,26 +117,33 @@ case class MinHashSigs(child: Expression, nSeeds: Int)
   override def dataType: DataType = ArrayType(StringType, containsNull = true)
   override def prettyName: String = "graft_minhash_sigs"
 
-  @transient private lazy val prefixes: Array[Array[Byte]] =
+  @transient private lazy val prefixes = MinHashSigs.prefixes(nSeeds)
+
+  def compute(arr: ArrayData): ArrayData = {
+    val mins = MinHashSigs.seedMinima(
+      arr, prefixes, java.security.MessageDigest.getInstance("MD5"))
+    new GenericArrayData(mins.map[AnyRef](m =>
+      if (m == null) null else UTF8String.fromString(MinHashSigs.hex(m))))
+  }
+}
+
+object MinHashSigs {
+
+  /** The "j:" salt prefix of each seed. */
+  private[graft] def prefixes(nSeeds: Int): Array[Array[Byte]] =
     Array.tabulate(nSeeds)(j => (j.toString + ":").getBytes(StandardCharsets.UTF_8))
 
-  private def hex(d: Array[Byte]): String = {
-    val sb = new java.lang.StringBuilder(d.length * 2)
-    var i = 0
-    while (i < d.length) {
-      sb.append(Character.forDigit((d(i) >> 4) & 0xf, 16))
-      sb.append(Character.forDigit(d(i) & 0xf, 16))
-      i += 1
-    }
-    sb.toString
-  }
-
-  def sigsPublic(arr: ArrayData): ArrayData = {
-    val n = arr.numElements()
-    val md = java.security.MessageDigest.getInstance("MD5")
+  /** THE per-seed minimum loop: for each seed j, the smallest raw digest
+    * md5("j:" + element) over the non-null elements (null when there are
+    * none). Unsigned byte order over an MD5 digest IS the lexicographic
+    * order of its lowercase-hex encoding, so these are array_min's
+    * winners. */
+  private[graft] def seedMinima(arr: ArrayData, prefixes: Array[Array[Byte]],
+                                md: java.security.MessageDigest): Array[Array[Byte]] = {
+    val nSeeds = prefixes.length
     val mins = new Array[Array[Byte]](nSeeds)
     var i = 0
-    while (i < n) {
+    while (i < arr.numElements()) {
       if (!arr.isNullAt(i)) { // array_min skips null elements
         val bytes = arr.getUTF8String(i).getBytes
         var j = 0
@@ -197,23 +159,18 @@ case class MinHashSigs(child: Expression, nSeeds: Int)
       }
       i += 1
     }
-    val out = new Array[AnyRef](nSeeds)
-    var j = 0
-    while (j < nSeeds) {
-      out(j) = if (mins(j) == null) null else UTF8String.fromString(hex(mins(j)))
-      j += 1
+    mins
+  }
+
+  /** Lowercase hex of a digest. */
+  private[graft] def hex(d: Array[Byte]): String = {
+    val sb = new java.lang.StringBuilder(d.length * 2)
+    var i = 0
+    while (i < d.length) {
+      sb.append(Character.forDigit((d(i) >> 4) & 0xf, 16))
+      sb.append(Character.forDigit(d(i) & 0xf, 16))
+      i += 1
     }
-    new GenericArrayData(out)
+    sb.toString
   }
-
-  override protected def nullSafeEval(a: Any): Any =
-    sigsPublic(a.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("minhashSigs", this, classOf[MinHashSigs].getName)
-    defineCodeGen(ctx, ev, a => s"$self.sigsPublic($a)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSigs =
-    copy(child = newChild)
 }

@@ -1,11 +1,9 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.graft.GraftKernel.{column, expr}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
 
@@ -19,14 +17,17 @@ import org.apache.spark.unsafe.Platform
   * the interchange/SQL-facing form.
   */
 object PackedVectors {
-  def pack(a: Column): Column =
-    ExpressionUtils.column(PackDoubles(ExpressionUtils.expression(a)))
-  def unpack(b: Column): Column =
-    ExpressionUtils.column(UnpackDoubles(ExpressionUtils.expression(b)))
-  def dotPacked(b: Column, q: Column): Column =
-    ExpressionUtils.column(DotPacked(ExpressionUtils.expression(b), ExpressionUtils.expression(q)))
+  def pack(a: Column): Column = column(PackDoubles(expr(a)))
+  def unpack(b: Column): Column = column(UnpackDoubles(expr(b)))
+  def dotPacked(b: Column, q: Column): Column = column(DotPacked(expr(b), expr(q)))
+}
 
-  @inline final def packArray(xs: ArrayData): Array[Byte] = {
+case class PackDoubles(child: Expression) extends GraftKernel1[ArrayData] {
+  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(DoubleType))
+  override def dataType: DataType = BinaryType
+  override def prettyName: String = "graft_pack"
+
+  def compute(xs: ArrayData): Array[Byte] = {
     val n = xs.numElements()
     val out = new Array[Byte](n * 8)
     var i = 0
@@ -36,19 +37,33 @@ object PackedVectors {
     }
     out
   }
+}
 
-  @inline final def unpackArray(b: Array[Byte]): Array[Double] = {
-    val n = b.length / 8
-    val out = new Array[Double](n)
+case class UnpackDoubles(child: Expression) extends GraftKernel1[Array[Byte]] {
+  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+  override def prettyName: String = "graft_unpack"
+
+  def compute(b: Array[Byte]): ArrayData = {
+    val out = new Array[Double](b.length / 8)
     var i = 0
-    while (i < n) {
+    while (i < out.length) {
       out(i) = Platform.getDouble(b, Platform.BYTE_ARRAY_OFFSET + i * 8L)
       i += 1
     }
-    out
+    new GenericArrayData(out)
   }
+}
 
-  @inline final def dotBytes(b: Array[Byte], q: ArrayData): Double = {
+/** Inner product of a packed (binary) vector with an array<double> vector
+  * (typically a literal query vector): the serving-path hot loop. */
+case class DotPacked(left: Expression, right: Expression)
+  extends GraftKernel2[Array[Byte], ArrayData] {
+  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, ArrayType(DoubleType))
+  override def dataType: DataType = DoubleType
+  override def prettyName: String = "graft_dot_packed"
+
+  def compute(b: Array[Byte], q: ArrayData): Double = {
     val n = math.min(b.length / 8, q.numElements())
     var s = 0.0
     var i = 0
@@ -58,50 +73,4 @@ object PackedVectors {
     }
     s
   }
-}
-
-case class PackDoubles(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(DoubleType))
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_pack"
-  override protected def nullSafeEval(a: Any): Any =
-    PackedVectors.packArray(a.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a =>
-      s"org.apache.spark.sql.graft.PackedVectors.packArray($a)")
-  override protected def withNewChildInternal(newChild: Expression): PackDoubles =
-    copy(child = newChild)
-}
-
-case class UnpackDoubles(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "graft_unpack"
-  override protected def nullSafeEval(a: Any): Any =
-    new GenericArrayData(PackedVectors.unpackArray(a.asInstanceOf[Array[Byte]]))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a =>
-      s"new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-        s"org.apache.spark.sql.graft.PackedVectors.unpackArray($a))")
-  override protected def withNewChildInternal(newChild: Expression): UnpackDoubles =
-    copy(child = newChild)
-}
-
-/** Inner product of a packed (binary) vector with an array<double> vector
-  * (typically a literal query vector): the serving-path hot loop. */
-case class DotPacked(left: Expression, right: Expression)
-  extends BinaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, ArrayType(DoubleType))
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_dot_packed"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    PackedVectors.dotBytes(a.asInstanceOf[Array[Byte]], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"org.apache.spark.sql.graft.PackedVectors.dotBytes($a, $b)")
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): DotPacked =
-    copy(left = newLeft, right = newRight)
 }

@@ -1,10 +1,9 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.graft.GraftKernel.{column, expr}
 import org.apache.spark.sql.types._
 
 /** Byte-tight PQ code storage: the array<int> code vector packed as ONE
@@ -20,21 +19,23 @@ import org.apache.spark.sql.types._
   * sibling, src/app.py:171).
   */
 object PqCodes {
-  def pack(codes: Column): Column =
-    ExpressionUtils.column(PackPqCodes(ExpressionUtils.expression(codes)))
-  def unpack(b: Column): Column =
-    ExpressionUtils.column(UnpackPqCodes(ExpressionUtils.expression(b)))
+  def pack(codes: Column): Column = column(PackPqCodes(expr(codes)))
+  def unpack(b: Column): Column = column(UnpackPqCodes(expr(b)))
   /** ADC score of a packed code row against the flattened lookup table
     * `tFlat` (m·ksub doubles, subspace-major: T[j][c] at j·ksub + c). */
   def adcPacked(b: Column, tFlat: Column, ksub: Int): Column =
-    ExpressionUtils.column(AdcPacked(
-      ExpressionUtils.expression(b), ExpressionUtils.expression(tFlat), ksub))
+    column(AdcPacked(expr(b), expr(tFlat), ksub))
+}
 
-  @inline final def packArray(xs: ArrayData): Array[Byte] = {
-    val n = xs.numElements()
-    val out = new Array[Byte](n)
+case class PackPqCodes(child: Expression) extends GraftKernel1[ArrayData] {
+  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(IntegerType))
+  override def dataType: DataType = BinaryType
+  override def prettyName: String = "graft_pack_pq"
+
+  def compute(xs: ArrayData): Array[Byte] = {
+    val out = new Array[Byte](xs.numElements())
     var i = 0
-    while (i < n) {
+    while (i < out.length) {
       val c = xs.getInt(i)
       if (c < 0 || c > 255)
         throw new IllegalArgumentException(s"PQ code $c outside [0,255] at $i")
@@ -43,17 +44,27 @@ object PqCodes {
     }
     out
   }
+}
 
-  @inline final def unpackArray(b: Array[Byte]): Array[Int] = {
-    val out = new Array[Int](b.length)
-    var i = 0
-    while (i < b.length) { out(i) = b(i) & 0xff; i += 1 }
-    out
-  }
+case class UnpackPqCodes(child: Expression) extends GraftKernel1[Array[Byte]] {
+  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+  override def prettyName: String = "graft_unpack_pq"
+
+  def compute(b: Array[Byte]): ArrayData = new GenericArrayData(b.map(_ & 0xff))
+}
+
+/** ADC lookup-sum over packed codes: the compressed serving hot loop. */
+case class AdcPacked(left: Expression, right: Expression, ksub: Int)
+  extends GraftKernel2[Array[Byte], ArrayData] {
+  require(ksub > 0 && ksub <= 256, s"ksub $ksub outside (0,256]")
+  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, ArrayType(DoubleType))
+  override def dataType: DataType = DoubleType
+  override def prettyName: String = "graft_adc_packed"
 
   /** Sequential (left-to-right) lookup-sum — the same accumulation order
     * as the array<int> ADC path, so scores are bit-identical. */
-  @inline final def adcBytes(b: Array[Byte], t: ArrayData, ksub: Int): Double = {
+  def compute(b: Array[Byte], t: ArrayData): Double = {
     var s = 0.0
     var j = 0
     while (j < b.length) {
@@ -62,50 +73,4 @@ object PqCodes {
     }
     s
   }
-}
-
-case class PackPqCodes(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(IntegerType))
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "graft_pack_pq"
-  override protected def nullSafeEval(a: Any): Any =
-    PqCodes.packArray(a.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a =>
-      s"org.apache.spark.sql.graft.PqCodes.packArray($a)")
-  override protected def withNewChildInternal(newChild: Expression): PackPqCodes =
-    copy(child = newChild)
-}
-
-case class UnpackPqCodes(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "graft_unpack_pq"
-  override protected def nullSafeEval(a: Any): Any =
-    new GenericArrayData(PqCodes.unpackArray(a.asInstanceOf[Array[Byte]]))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a =>
-      s"new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-        s"org.apache.spark.sql.graft.PqCodes.unpackArray($a))")
-  override protected def withNewChildInternal(newChild: Expression): UnpackPqCodes =
-    copy(child = newChild)
-}
-
-/** ADC lookup-sum over packed codes: the compressed serving hot loop. */
-case class AdcPacked(left: Expression, right: Expression, ksub: Int)
-  extends BinaryExpression with ExpectsInputTypes {
-  require(ksub > 0 && ksub <= 256, s"ksub $ksub outside (0,256]")
-  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType, ArrayType(DoubleType))
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_adc_packed"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    PqCodes.adcBytes(a.asInstanceOf[Array[Byte]], b.asInstanceOf[ArrayData], ksub)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"org.apache.spark.sql.graft.PqCodes.adcBytes($a, $b, $ksub)")
-  override protected def withNewChildrenInternal(newLeft: Expression,
-                                                 newRight: Expression): AdcPacked =
-    copy(left = newLeft, right = newRight)
 }

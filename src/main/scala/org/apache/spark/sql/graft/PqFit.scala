@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.graft.GraftKernel.{column, expr}
 import org.apache.spark.sql.types._
 
 /** ONE Lloyd iteration for ALL m product-quantization subspaces in a
@@ -50,7 +50,7 @@ case class PqFit(
     exact: Boolean,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[PqFit.Buf] with ExpectsInputTypes {
+  extends TypedImperativeAggregate[PqFit.Buf] with ExpectsInputTypes with ValueEquality {
 
   import PqFit._
 
@@ -70,26 +70,6 @@ case class PqFit(
     StructField("n", ArrayType(LongType, containsNull = false), nullable = false)))
   override def nullable: Boolean = false
   override def prettyName: String = "graft_pq_fit"
-
-  // value equality over the codebook tensor (the IvfAssign convention)
-  override def equals(other: Any): Boolean = other match {
-    case p: PqFit =>
-      child == p.child && exact == p.exact &&
-        mutableAggBufferOffset == p.mutableAggBufferOffset &&
-        inputAggBufferOffset == p.inputAggBufferOffset &&
-        books.length == p.books.length &&
-        books.indices.forall(j => java.util.Arrays.deepEquals(
-          books(j).asInstanceOf[Array[AnyRef]],
-          p.books(j).asInstanceOf[Array[AnyRef]]))
-    case _ => false
-  }
-  override def hashCode(): Int = {
-    var h = 31 * child.hashCode() + (if (exact) 1 else 0)
-    books.foreach { b =>
-      h = 31 * h + java.util.Arrays.deepHashCode(b.asInstanceOf[Array[AnyRef]])
-    }
-    h
-  }
 
   // |c|² per (subspace, cell), left-to-right — IvfAssign's centNorms
   @transient private lazy val cellNorms: Array[Array[Double]] =
@@ -229,6 +209,5 @@ object PqFit {
   /** struct(s, n) aggregate of one all-subspaces Lloyd round. */
   def fit(vec: Column, books: Array[Array[Array[Double]]],
           exact: Boolean): Column =
-    ExpressionUtils.column(
-      PqFit(ExpressionUtils.expression(vec), books, exact).toAggregateExpression())
+    column(PqFit(expr(vec), books, exact).toAggregateExpression())
 }

@@ -1,12 +1,9 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.graft.GraftKernel.{column, expr, Fixed, NullPolicy}
 import org.apache.spark.sql.types._
 
 /** Native 16-bit SimHash over a distinct-token array — d6's signature as
@@ -33,35 +30,12 @@ import org.apache.spark.sql.types._
   * `size(null) = null` made every per-bit `when` fall to its
   * `.otherwise(0)`, summing to 0, NOT to SQL null.
   */
-case class SimHash(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+case class SimHash(child: Expression) extends GraftKernel1[ArrayData] {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
   override def dataType: DataType = LongType
-  override def nullable: Boolean = false
   override def prettyName: String = "graft_simhash16"
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) 0L
-    else SimHash.compute(v.asInstanceOf[ArrayData])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    val code = code"""
-      ${childGen.code}
-      long ${ev.value} = ${childGen.isNull} ? 0L
-        : org.apache.spark.sql.graft.SimHash.compute(${childGen.value});
-    """
-    ev.copy(code = code, isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash =
-    copy(child = newChild)
-}
-
-object SimHash {
+  override def nullPolicy: NullPolicy = Fixed(0L)
 
   /** 16-bit simhash: bit j set iff a strict majority of tokens have the
     * high bit of md5 nibble j set (null tokens count in the denominator
@@ -95,8 +69,9 @@ object SimHash {
     }
     sig
   }
+}
 
+object SimHash {
   /** Column form over a (distinct-)token array. */
-  def simhash16(toks: Column): Column =
-    ExpressionUtils.column(SimHash(ExpressionUtils.expression(toks)))
+  def simhash16(toks: Column): Column = column(SimHash(expr(toks)))
 }

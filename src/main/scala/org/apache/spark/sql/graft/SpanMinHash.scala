@@ -1,10 +1,9 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.graft.GraftKernel.{column, expr}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -36,12 +35,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * (pinned by SpanMinHashSpec's parity property): Spark `trim` strips
   * 0x20 only; Java `\s` is six ASCII bytes, so UTF-8 continuation bytes
   * can never alias a separator and the scan works on raw bytes.
-  *
-  * Hosted under org.apache.spark.sql because the Column↔Expression
-  * bridge (ExpressionUtils) is private[sql].
   */
 case class SpanMinHash(child: Expression, span: Int)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends GraftKernel1[UTF8String] {
+
+  import SpanMinHash._
 
   require(span > 0, s"span must be positive: $span")
 
@@ -49,44 +47,8 @@ case class SpanMinHash(child: Expression, span: Int)
   override def dataType: DataType = SpanMinHash.OutType
   override def prettyName: String = "graft_span_minhash"
 
-  override protected def nullSafeEval(s: Any): Any =
-    SpanMinHash.sigs(s.asInstanceOf[UTF8String], span)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.graft.SpanMinHash.sigs($c, $span)")
-
-  override protected def withNewChildInternal(newChild: Expression): SpanMinHash =
-    copy(child = newChild)
-}
-
-object SpanMinHash {
-
-  private val NumHashes = 8
-  private val DigestLen = 16
-
-  val OutType: ArrayType = ArrayType(
-    StructType(StructField("span_idx", LongType, nullable = false) +:
-      (0 until NumHashes).map(j => StructField(s"h$j", StringType, nullable = false))),
-    containsNull = false)
-
-  // "0:".."7:" salt prefixes as raw ASCII, md5-input-ready
-  private val Prefixes: Array[Array[Byte]] =
-    (0 until NumHashes).map(j => s"$j:".getBytes("US-ASCII")).toArray
-
-  private val HexChars = "0123456789abcdef".getBytes("US-ASCII")
-
-  // per-thread reusable state: digest instance, token-bytes staging
-  // buffer, digest output scratch (MessageDigest needs byte[] inputs, so
-  // offheap-backed strings stage through `buf`; heap-backed ones digest
-  // in place)
-  private val tlMd = ThreadLocal.withInitial[java.security.MessageDigest](() =>
-    java.security.MessageDigest.getInstance("MD5"))
-  private val tlBuf = ThreadLocal.withInitial[Array[Byte]](() => new Array[Byte](1 << 12))
-  private val tlOut = ThreadLocal.withInitial[Array[Byte]](() => new Array[Byte](DigestLen))
-
   /** Span MinHash signature rows for one document — see class doc. */
-  def sigs(s: UTF8String, span: Int): ArrayData = {
+  def compute(s: UTF8String): ArrayData = {
     val bounds = TokenCount.spaceTrimBounds(s) // shared trim + \s contract
     val from = (bounds >>> 32).toInt
     val to = bounds.toInt
@@ -183,8 +145,34 @@ object SpanMinHash {
     }
     new GenericArrayData(rows)
   }
+}
+
+object SpanMinHash {
+
+  private val NumHashes = 8
+  private val DigestLen = 16
+
+  val OutType: ArrayType = ArrayType(
+    StructType(StructField("span_idx", LongType, nullable = false) +:
+      (0 until NumHashes).map(j => StructField(s"h$j", StringType, nullable = false))),
+    containsNull = false)
+
+  // "0:".."7:" salt prefixes as raw ASCII, md5-input-ready
+  private val Prefixes: Array[Array[Byte]] =
+    (0 until NumHashes).map(j => s"$j:".getBytes("US-ASCII")).toArray
+
+  private val HexChars = "0123456789abcdef".getBytes("US-ASCII")
+
+  // per-thread reusable state: digest instance, token-bytes staging
+  // buffer, digest output scratch (MessageDigest needs byte[] inputs, so
+  // offheap-backed strings stage through `buf`; heap-backed ones digest
+  // in place)
+  private val tlMd = ThreadLocal.withInitial[java.security.MessageDigest](() =>
+    java.security.MessageDigest.getInstance("MD5"))
+  private val tlBuf = ThreadLocal.withInitial[Array[Byte]](() => new Array[Byte](1 << 12))
+  private val tlOut = ThreadLocal.withInitial[Array[Byte]](() => new Array[Byte](DigestLen))
 
   /** Column-level span-minhash array over a string column. */
   def spanMinHash(c: Column, span: Int): Column =
-    ExpressionUtils.column(SpanMinHash(ExpressionUtils.expression(c), span))
+    column(SpanMinHash(expr(c), span))
 }

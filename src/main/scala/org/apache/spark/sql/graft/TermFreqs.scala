@@ -1,11 +1,9 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.graft.GraftKernel.{column, expr}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -33,26 +31,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * separator and the scan works on raw bytes. (RE2 — DuckDB's engine —
   * defines `\s` WITHOUT vertical tab, so the oracle twins spell the six
   * bytes out as `[ \t\n\x0b\f\r]+`; see TokenCount.isWs.)
-  *
-  * Hosted under org.apache.spark.sql because the Column↔Expression
-  * bridge (ExpressionUtils) is private[sql].
   */
 case class TermFreqs(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends GraftKernel1[UTF8String] {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
   override def dataType: DataType = TermFreqs.OutType
   override def prettyName: String = "graft_term_freqs"
 
-  override protected def nullSafeEval(s: Any): Any =
-    TermFreqs.freqs(s.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.graft.TermFreqs.freqs($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): TermFreqs =
-    copy(child = newChild)
+  def compute(s: UTF8String): ArrayData = TermFreqs.freqs(s)
 }
 
 object TermFreqs {
@@ -114,5 +101,5 @@ object TermFreqs {
 
   /** Column-level term-frequency array over a string column. */
   def termFreqs(c: Column): Column =
-    ExpressionUtils.column(TermFreqs(ExpressionUtils.expression(c)))
+    column(TermFreqs(expr(c)))
 }

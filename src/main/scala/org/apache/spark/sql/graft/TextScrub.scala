@@ -1,9 +1,8 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.graft.GraftKernel.{column, expr}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -20,21 +19,23 @@ import org.apache.spark.unsafe.types.UTF8String
   * TextScrubSpec and by the x2/x26 oracle hashes.
   */
 case class AlphaCount(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends GraftKernel1[UTF8String] {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
   override def dataType: DataType = IntegerType
   override def prettyName: String = "graft_alpha_count"
 
-  override protected def nullSafeEval(s: Any): Any =
-    TextScrub.alphaCount(s.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.graft.TextScrub.alphaCount($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): AlphaCount =
-    copy(child = newChild)
+  def compute(s: UTF8String): Int = {
+    val n = s.numBytes()
+    var c = 0
+    var i = 0
+    while (i < n) {
+      val b = s.getByte(i)
+      if (b >= 'a' && b <= 'z') c += 1
+      i += 1
+    }
+    c
+  }
 }
 
 /** Native LM normalization: exactly `regexp_replace(lower(s), "[^a-z ]",
@@ -54,38 +55,13 @@ case class AlphaCount(child: Expression)
   * mixed-case inputs) and by the x23/x26/x30/x31/x32 oracle hashes.
   */
 case class LmNormalize(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends GraftKernel1[UTF8String] {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
   override def dataType: DataType = StringType
   override def prettyName: String = "graft_lm_normalize"
 
-  override protected def nullSafeEval(s: Any): Any =
-    TextScrub.lmNormalize(s.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.graft.TextScrub.lmNormalize($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): LmNormalize =
-    copy(child = newChild)
-}
-
-object TextScrub {
-
-  def alphaCount(s: UTF8String): Int = {
-    val n = s.numBytes()
-    var c = 0
-    var i = 0
-    while (i < n) {
-      val b = s.getByte(i)
-      if (b >= 'a' && b <= 'z') c += 1
-      i += 1
-    }
-    c
-  }
-
-  def lmNormalize(s: UTF8String): UTF8String = {
+  def compute(s: UTF8String): UTF8String = {
     val n = s.numBytes()
     var ascii = true
     var i = 0
@@ -118,12 +94,12 @@ object TextScrub {
       UTF8String.fromBytes(out, 0, k)
     }
   }
+}
 
+object TextScrub {
   /** Column form: count of a–z chars. */
-  def alphaCountCol(c: Column): Column =
-    ExpressionUtils.column(AlphaCount(ExpressionUtils.expression(c)))
+  def alphaCountCol(c: Column): Column = column(AlphaCount(expr(c)))
 
   /** Column form: the [a-z ]-normalized LM text. */
-  def lmNormalizeCol(c: Column): Column =
-    ExpressionUtils.column(LmNormalize(ExpressionUtils.expression(c)))
+  def lmNormalizeCol(c: Column): Column = column(LmNormalize(expr(c)))
 }

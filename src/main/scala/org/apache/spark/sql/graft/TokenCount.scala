@@ -1,9 +1,8 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.graft.GraftKernel.{column, expr}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -28,26 +27,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * re, -1)` yields (#separator matches) + 1 elements including leading/
   * trailing empties, and the empty string yields [""] — so the count is
   * always (#whitespace runs after space-trim) + 1.
-  *
-  * Hosted under org.apache.spark.sql because the Column↔Expression
-  * bridge (ExpressionUtils) is private[sql].
   */
 case class TokenCount(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends GraftKernel1[UTF8String] {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
   override def dataType: DataType = IntegerType
   override def prettyName: String = "graft_token_count"
 
-  override protected def nullSafeEval(s: Any): Any =
-    TokenCount.count(s.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.graft.TokenCount.count($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): TokenCount =
-    copy(child = newChild)
+  def compute(s: UTF8String): Int = TokenCount.count(s)
 }
 
 object TokenCount {
@@ -90,5 +78,5 @@ object TokenCount {
 
   /** Column-level token count over a string column. */
   def tokenCount(c: Column): Column =
-    ExpressionUtils.column(TokenCount(ExpressionUtils.expression(c)))
+    column(TokenCount(expr(c)))
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.graft.GraftKernel.{column, expr}
 import org.apache.spark.sql.types._
 
 /** Char-trigram occurrence counts over a corpus as ONE bounded-state
@@ -39,7 +39,7 @@ case class TriCounts(
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[Array[Long]]
-  with ExpectsInputTypes {
+  with ExpectsInputTypes with ValueEquality {
 
   override def children: Seq[Expression] = Seq(child)
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
@@ -120,6 +120,5 @@ object TriCounts {
     * [a-z ]-normalized text column (the same bound normalization the
     * scoring side consumes). */
   def triCounts(normText: Column): Column =
-    ExpressionUtils.column(
-      TriCounts(ExpressionUtils.expression(normText)).toAggregateExpression())
+    column(TriCounts(expr(normText)).toAggregateExpression())
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.graft.GraftKernel.{column, expr}
 import org.apache.spark.sql.types._
 
 /** Native element-wise SUM over an ArrayType(Double) column — one
@@ -47,7 +47,7 @@ case class VectorSum(
     exact: Boolean,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[VectorSum.Buf] with ExpectsInputTypes {
+  extends TypedImperativeAggregate[VectorSum.Buf] with ExpectsInputTypes with ValueEquality {
 
   import VectorSum._
 
@@ -179,6 +179,5 @@ object VectorSum {
     * `exact` = bit-identical DECIMAL(28,6) arithmetic (order-independent);
     * otherwise native double sums. */
   def sums(vec: Column, exact: Boolean): Column =
-    ExpressionUtils.column(
-      VectorSum(ExpressionUtils.expression(vec), exact).toAggregateExpression())
+    column(VectorSum(expr(vec), exact).toAggregateExpression())
 }

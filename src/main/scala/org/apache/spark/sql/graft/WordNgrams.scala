@@ -1,12 +1,9 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.graft.GraftKernel.{column, expr, Fixed, NullPolicy}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -38,87 +35,70 @@ import org.apache.spark.unsafe.types.UTF8String
   * `DigestUtils`, the identical library call Spark's own `md5` expression
   * makes) and first-occurrence-deduplicates — exactly
   * `array_distinct(transform(wordNgrams(toks, n), md5))`.
-  *
-  * Hosted under org.apache.spark.sql because the Column↔Expression
-  * bridge (ExpressionUtils) is private[sql].
   */
-case class WordNgrams(child: Expression, n: Int)
-  extends UnaryExpression with ExpectsInputTypes {
+case class WordNgrams(child: Expression, n: Int) extends GraftKernel1[ArrayData] {
   require(n >= 1, s"ngram size must be >= 1: $n")
 
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(StringType))
+  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = false
   override def prettyName: String = "graft_word_ngrams"
+  override def nullPolicy: NullPolicy = Fixed(WordNgrams.Empty)
 
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) WordNgrams.Empty
-    else WordNgrams.compute(v.asInstanceOf[ArrayData], n)
+  /** Empty when the array has fewer than n tokens (the `when` guard). */
+  def compute(arr: ArrayData): ArrayData = {
+    val sz = arr.numElements()
+    if (sz < n) return WordNgrams.Empty
+    val out = new Array[AnyRef](sz - n + 1)
+    val scratch = new Array[UTF8String](n)
+    var i = 0
+    while (i <= sz - n) {
+      out(i) = WordNgrams.gramAt(arr, i, n, scratch)
+      i += 1
+    }
+    new GenericArrayData(out)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    val code = code"""
-      ${childGen.code}
-      org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-        ${childGen.isNull} ? org.apache.spark.sql.graft.WordNgrams.Empty()
-          : org.apache.spark.sql.graft.WordNgrams.compute(${childGen.value}, $n);
-    """
-    ev.copy(code = code, isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): WordNgrams =
-    copy(child = newChild)
 }
 
 /** [[WordNgrams]] + md5 + first-occurrence distinct in one pass — the
   * gram-hash form the contamination operators consume. */
-case class GramHashes(child: Expression, n: Int)
-  extends UnaryExpression with ExpectsInputTypes {
+case class GramHashes(child: Expression, n: Int) extends GraftKernel1[ArrayData] {
   require(n >= 1, s"ngram size must be >= 1: $n")
 
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(StringType))
+  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(StringType))
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = false
   override def prettyName: String = "graft_gram_hashes"
+  override def nullPolicy: NullPolicy = Fixed(WordNgrams.Empty)
 
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) WordNgrams.Empty
-    else WordNgrams.computeHashed(v.asInstanceOf[ArrayData], n)
+  /** Distinct (first-occurrence order) md5 hex of each n-gram. */
+  def compute(arr: ArrayData): ArrayData = {
+    val sz = arr.numElements()
+    if (sz < n) return WordNgrams.Empty
+    val seen = new java.util.LinkedHashSet[UTF8String]()
+    val scratch = new Array[UTF8String](n)
+    var i = 0
+    while (i <= sz - n) {
+      val g = WordNgrams.gramAt(arr, i, n, scratch)
+      // identical call chain to Spark's Md5 expression: commons-codec
+      // md5Hex over the string's UTF-8 bytes, lowercase hex
+      seen.add(UTF8String.fromString(
+        org.apache.commons.codec.digest.DigestUtils.md5Hex(g.getBytes)))
+      i += 1
+    }
+    new GenericArrayData(seen.toArray.asInstanceOf[Array[AnyRef]])
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    val code = code"""
-      ${childGen.code}
-      org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-        ${childGen.isNull} ? org.apache.spark.sql.graft.WordNgrams.Empty()
-          : org.apache.spark.sql.graft.WordNgrams.computeHashed(${childGen.value}, $n);
-    """
-    ev.copy(code = code, isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): GramHashes =
-    copy(child = newChild)
 }
 
 object WordNgrams {
 
   private val Space = UTF8String.fromString(" ")
 
-  private val EmptyArray: ArrayData = new GenericArrayData(new Array[AnyRef](0))
-
   /** Shared empty result (immutable; GenericArrayData over a 0-length
     * array) — the `.otherwise(array())` branch. */
-  def Empty(): ArrayData = EmptyArray
+  val Empty: ArrayData = new GenericArrayData(new Array[AnyRef](0))
 
   /** One n-gram: the concat_ws(" ", ...) of window [i, i+n) — null tokens
     * skipped, like ConcatWs. */
-  private def gramAt(arr: ArrayData, i: Int, n: Int,
+  private[graft] def gramAt(arr: ArrayData, i: Int, n: Int,
                      scratch: Array[UTF8String]): UTF8String = {
     var k = 0
     var o = 0
@@ -130,43 +110,9 @@ object WordNgrams {
     UTF8String.concatWs(Space, java.util.Arrays.copyOfRange(scratch, 0, k): _*)
   }
 
-  /** Empty when the array has fewer than n tokens (the `when` guard). */
-  def compute(arr: ArrayData, n: Int): ArrayData = {
-    val sz = arr.numElements()
-    if (sz < n) return EmptyArray
-    val out = new Array[AnyRef](sz - n + 1)
-    val scratch = new Array[UTF8String](n)
-    var i = 0
-    while (i <= sz - n) {
-      out(i) = gramAt(arr, i, n, scratch)
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  /** Distinct (first-occurrence order) md5 hex of each n-gram. */
-  def computeHashed(arr: ArrayData, n: Int): ArrayData = {
-    val sz = arr.numElements()
-    if (sz < n) return EmptyArray
-    val seen = new java.util.LinkedHashSet[UTF8String]()
-    val scratch = new Array[UTF8String](n)
-    var i = 0
-    while (i <= sz - n) {
-      val g = gramAt(arr, i, n, scratch)
-      // identical call chain to Spark's Md5 expression: commons-codec
-      // md5Hex over the string's UTF-8 bytes, lowercase hex
-      seen.add(UTF8String.fromString(
-        org.apache.commons.codec.digest.DigestUtils.md5Hex(g.getBytes)))
-      i += 1
-    }
-    new GenericArrayData(seen.toArray.asInstanceOf[Array[AnyRef]])
-  }
-
   /** Column form of [[WordNgrams]]. */
-  def wordNgrams(toks: Column, n: Int): Column =
-    ExpressionUtils.column(WordNgrams(ExpressionUtils.expression(toks), n))
+  def wordNgrams(toks: Column, n: Int): Column = column(WordNgrams(expr(toks), n))
 
   /** Column form of [[GramHashes]]. */
-  def gramHashes(toks: Column, n: Int): Column =
-    ExpressionUtils.column(GramHashes(ExpressionUtils.expression(toks), n))
+  def gramHashes(toks: Column, n: Int): Column = column(GramHashes(expr(toks), n))
 }

@@ -1,10 +1,9 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.graft.GraftKernel.{column, expr}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -29,27 +28,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * Null input → null (split-on-null semantics).
   */
 case class WsTokens(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends GraftKernel1[UTF8String] {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "graft_ws_tokens"
 
-  override protected def nullSafeEval(s: Any): Any =
-    WsTokens.tokens(s.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.sql.graft.WsTokens.tokens($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): WsTokens =
-    copy(child = newChild)
-}
-
-object WsTokens {
-
   /** The token array of `split(trim(s), "\\s+")` — see class doc. */
-  def tokens(s: UTF8String): ArrayData = {
+  def compute(s: UTF8String): ArrayData = {
     // byte bounds after Spark's space-only trim (TokenCount's helper)
     val bounds = TokenCount.spaceTrimBounds(s)
     val from = (bounds >>> 32).toInt
@@ -83,8 +69,10 @@ object WsTokens {
     out(k) = UTF8String.fromBytes(bytes, start, to - start)
     new GenericArrayData(out)
   }
+}
 
+object WsTokens {
   /** Column form — drop-in for `split(trim(c), "\\s+")`. */
   def wsTokens(c: Column): Column =
-    ExpressionUtils.column(WsTokens(ExpressionUtils.expression(c)))
+    column(WsTokens(expr(c)))
 }

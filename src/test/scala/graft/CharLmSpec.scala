@@ -120,7 +120,7 @@ class CharLmSpec extends SparkSpec {
   }
 
   test("scaled-long table path == per-trigram Decimal fallback, bit-identical") {
-    // round-17 pin: the precomputed scale-12 table (scorePublic's fast
+    // round-17 pin: the precomputed scale-12 table (compute's fast
     // path) must reproduce the round-16 per-trigram Decimal loop
     // (scoreSlow) EXACTLY — same n, same mean double — across random
     // models and random normalized strings
@@ -138,7 +138,7 @@ class CharLmSpec extends SparkSpec {
       for (_ <- 1 to 60) {
         val len = rnd.nextInt(400)
         val s = (1 to len).map(_ => alphabet(rnd.nextInt(alphabet.length))).mkString
-        val fast = expr.scorePublic(UTF8String.fromString(s))
+        val fast = expr.compute(UTF8String.fromString(s))
         val slow = expr.scoreSlow(s)
         assert(fast.getLong(0) == slow.getLong(0), s"trial $trial: n differs for '$s'")
         if (fast.getLong(0) == 0L) {
@@ -159,7 +159,7 @@ class CharLmSpec extends SparkSpec {
     import org.apache.spark.unsafe.types.UTF8String
     val expr = CharLmScore(org.apache.spark.sql.catalyst.expressions.Literal("x"),
       Array.fill(27 * 27 * 27)(1L), Array.fill(27 * 27)(27L))
-    val fast = expr.scorePublic(UTF8String.fromString("Aé"))
+    val fast = expr.compute(UTF8String.fromString("Aé"))
     val slow = expr.scoreSlow("Aé")
     assert(fast.getLong(0) == slow.getLong(0) && fast.getLong(0) == 0L)
     assert(fast.isNullAt(1) && slow.isNullAt(1))

@@ -148,6 +148,12 @@ class GraftSqlSpec extends SparkSpec {
     val e2 = intercept[Exception](spark.sql(
       "SELECT graft_dense_fourier(0.5, id) FROM gsql_docs").head())
     assert(e2.getMessage.contains("must be a literal integer"))
+    // an integer literal outside Int range gets the same named error, not
+    // the ArithmeticException of a Long → Int narrowing
+    val e3 = intercept[Exception](spark.sql(
+      "SELECT graft_span_minhash(text, 3000000000) FROM gsql_docs").head())
+    assert(!e3.isInstanceOf[ArithmeticException])
+    assert(e3.getMessage.contains("argument 2 must be a literal integer, got 3000000000"))
     // unregistered sessions stay clean: a bogus name is an analysis error
     intercept[AnalysisException](spark.sql("SELECT graft_nope(1)").head())
   }
