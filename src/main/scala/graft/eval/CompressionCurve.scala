@@ -1,16 +1,16 @@
 package graft.eval
 
 import graft.{LocalSpark, Tables}
-import graft.search.Search
+import graft.search.{Quantizer, Search}
+import graft.search.Search.Coarse
 import org.apache.spark.sql.functions._
 
 /** Recall-vs-compression artifact for the ANN portfolio: every serving
   * tier (exact flat, SQ8, PQ at two code widths, IVF probe sweep, and
   * combined IVF+PQ) measured against the exact inner-product ranking on
   * the SAME corpus and query set — the FAISS-style "which index do I
-  * build" tradeoff table, produced by the engine's own operators
-  * ([[Search.knnSq]]/[[Search.knnPq]]/[[Search.knnIvf]]/
-  * [[Search.knnIvfPq]], the sim3–sim6 pipelines). Recall\@k = mean over
+  * build" tradeoff table, produced by the engine's own ANN spine
+  * ([[Search.knn]], the sim3–sim9 pipelines). Recall\@k = mean over
   * queries of |ANN top-k ∩ exact top-k| / k; ties and rounding follow
   * each operator's own serving semantics (5-dp round, id tiebreak).
   *
@@ -35,7 +35,7 @@ object CompressionCurve {
 
     // exact top-k per query under BOTH metrics (driver ground truth, same
     // id tiebreak): SQ8/PQ/IVF+PQ approximate the INNER PRODUCT, while
-    // knnIvf's probed tail scores exact COSINE — each tier is graded
+    // the flat tier's probed tail scores exact COSINE — each tier is graded
     // against the metric its operator actually serves
     def exactTop(cos: Boolean): Map[Long, Seq[Long]] = qIds.map { q =>
       val qv = rows(q)
@@ -57,23 +57,21 @@ object CompressionCurve {
         .toDouble / k).sum / nQ
     }
 
+    def knn(fit: Quantizer.Fit, coarse: Option[Coarse] = None, shortlist: Int = 0) =
+      Search.knn(emb, "embedding", "vec_id", qIds, k, fit, coarse, shortlist)
     case class Tier(name: String, bytes: Int, ioShare: String, recall: Double)
     val tiers = Seq(
       Tier("exact flat (sim1 class)", dim * 8, "1.00", 1.0),
-      Tier("SQ8 (sim6)", dim, "1.00",
-        recallOf(Search.knnSq(emb, "embedding", "vec_id", qIds, dim, k))),
+      Tier("SQ8 (sim6)", dim, "1.00", recallOf(knn(Quantizer.sq8))),
       Tier("PQ m=8 ksub=16 (sim4 wide)", 8, "1.00",
-        recallOf(Search.knnPq(emb, "embedding", "vec_id", qIds, dim,
-          m = 8, ksub = 16, iters = 3, k = k))),
+        recallOf(knn(Quantizer.pq(m = 8, ksub = 16, pqIters = 3)))),
       Tier("PQ m=4 ksub=8 (sim4)", 4, "1.00",
-        recallOf(Search.knnPq(emb, "embedding", "vec_id", qIds, dim,
-          m = 4, ksub = 8, iters = 2, k = k)))) ++
+        recallOf(knn(Quantizer.pq(m = 4, ksub = 8, pqIters = 2))))) ++
       Seq(
         // binary: 1 bit/dim (ONE long at dim=64) Hamming shortlist of 4k
         // + exact refine — graded vs cosine (what the refine serves)
         Tier("binary+refine shortlist=4k (sim7)", dim / 8, "1.00",
-          recallOf(Search.knnBinary(emb, "embedding", "vec_id", qIds, dim,
-            k = k, shortlist = 4 * k), topCos))) ++
+          recallOf(knn(Quantizer.binary, shortlist = 4 * k), topCos))) ++
       // Matryoshka prefix truncation: NO fit stage — the coarse code is
       // the vector's own first p coordinates (column projection); graded
       // vs cosine (what the refine serves). Random iid coordinates are
@@ -81,22 +79,17 @@ object CompressionCurve {
       // the prefix), so these recalls are the technique's FLOOR.
       Seq(16, 32).map(p =>
         Tier(s"MRL prefix=$p + refine shortlist=4k (sim9)", p * 8, "1.00",
-          recallOf(Search.knnMrl(emb, "embedding", "vec_id", qIds,
-            prefixDim = p, k = k, shortlist = 4 * k), topCos))) ++
+          recallOf(knn(Quantizer.mrl(p), shortlist = 4 * k), topCos))) ++
       Seq(1, 2, 4, 8).map(p =>
         Tier(s"IVF nProbe=$p/8 (sim3)", dim * 8, f"${p / 8.0}%.2f",
-          recallOf(Search.knnIvf(emb, "embedding", "vec_id", qIds,
-            nCentroids = 8, iters = 3, nProbe = p, k = k), topCos))) ++
+          recallOf(knn(Quantizer.flat, Some(Coarse(8, 3, p))), topCos))) ++
       Seq(
       Tier("IVF+PQ nProbe=2 m=8 (sim5)", 8, "0.25",
-        recallOf(Search.knnIvfPq(emb, "embedding", "vec_id", qIds, dim,
-          nCentroids = 8, iters = 3, nProbe = 2, m = 8, ksub = 16,
-          pqIters = 3, k = k))),
+        recallOf(knn(Quantizer.pq(m = 8, ksub = 16, pqIters = 3), Some(Coarse(8, 3, 2))))),
       // residual encoding at the SAME byte budget — the sim8-vs-sim5 gain
       Tier("IVF+PQ residual nProbe=2 m=8 (sim8)", 8, "0.25",
-        recallOf(Search.knnIvfPq(emb, "embedding", "vec_id", qIds, dim,
-          nCentroids = 8, iters = 3, nProbe = 2, m = 8, ksub = 16,
-          pqIters = 3, k = k, residual = true))))
+        recallOf(knn(Quantizer.pq(m = 8, ksub = 16, pqIters = 3),
+          Some(Coarse(8, 3, 2, residual = true))))))
 
     println("| tier | bytes/vec | IO share | recall@10 |")
     println("|---|---|---|---|")

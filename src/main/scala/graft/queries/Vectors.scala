@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.search.Search
+import graft.search.{Quantizer, Search}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -375,12 +375,11 @@ object Vectors {
 
   private val sim4 = Q(
     "sim4_knn_pq",
-    (s, d) => Search.knnPq(
+    (s, d) => Search.knn(
         Tables.embeddings(s, d).select(col("vec_id"), col("embedding")),
-        "embedding", "vec_id", queryIds = Seq(0L, 1L, 2L), dim = IvfDim,
-        m = PqM, ksub = PqKsub, iters = PqIters, k = 5,
+        "embedding", "vec_id", queryIds = Seq(0L, 1L, 2L), k = 5,
         // DECIMAL means: the oracle twin re-runs the identical per-subspace fits
-        exactMeans = true)
+        Quantizer.pq(PqM, PqKsub, PqIters, exactMeans = true))
       .orderBy("q_id", "rk"),
     Some(pqSql))
 
@@ -482,12 +481,12 @@ object Vectors {
 
   private val sim8 = Q(
     "sim8_knn_ivfpq_residual",
-    (s, d) => Search.knnIvfPq(
+    (s, d) => Search.knn(
         Tables.embeddings(s, d).select(col("vec_id"), col("embedding")),
-        "embedding", "vec_id", queryIds = Seq(0L, 1L, 2L), dim = IvfDim,
-        nCentroids = IvfCentroidsN, iters = IvfIters, nProbe = IvfProbe,
-        m = PqM, ksub = PqKsub, pqIters = PqIters, k = 5,
-        exactMeans = true, residual = true)
+        "embedding", "vec_id", queryIds = Seq(0L, 1L, 2L), k = 5,
+        Quantizer.pq(PqM, PqKsub, PqIters, exactMeans = true),
+        Some(Search.Coarse(IvfCentroidsN, IvfIters, IvfProbe,
+          exactMeans = true, residual = true)))
       .orderBy("q_id", "rk"),
     Some(sim8Sql))
 
@@ -539,12 +538,11 @@ object Vectors {
 
   private val sim5 = Q(
     "sim5_knn_ivfpq",
-    (s, d) => Search.knnIvfPq(
+    (s, d) => Search.knn(
         Tables.embeddings(s, d).select(col("vec_id"), col("embedding")),
-        "embedding", "vec_id", queryIds = Seq(0L, 1L, 2L), dim = IvfDim,
-        nCentroids = IvfCentroidsN, iters = IvfIters, nProbe = IvfProbe,
-        m = PqM, ksub = PqKsub, pqIters = PqIters, k = 5,
-        exactMeans = true)
+        "embedding", "vec_id", queryIds = Seq(0L, 1L, 2L), k = 5,
+        Quantizer.pq(PqM, PqKsub, PqIters, exactMeans = true),
+        Some(Search.Coarse(IvfCentroidsN, IvfIters, IvfProbe, exactMeans = true)))
       .orderBy("q_id", "rk"),
     Some(sim5Sql))
 
@@ -584,9 +582,9 @@ object Vectors {
 
   private val sim6 = Q(
     "sim6_knn_sq8",
-    (s, d) => Search.knnSq(
+    (s, d) => Search.knn(
         Tables.embeddings(s, d).select(col("vec_id"), col("embedding")),
-        "embedding", "vec_id", queryIds = Seq(0L, 1L, 2L), dim = IvfDim, k = 5)
+        "embedding", "vec_id", queryIds = Seq(0L, 1L, 2L), k = 5, Quantizer.sq8)
       .orderBy("q_id", "rk"),
     Some(sq8Sql))
 
@@ -667,19 +665,19 @@ object Vectors {
 
   private val sim9 = Q(
     "sim9_knn_mrl",
-    (s, d) => Search.knnMrl(
+    (s, d) => Search.knn(
         Tables.embeddings(s, d).select(col("vec_id"), col("embedding")),
-        "embedding", "vec_id", queryIds = Seq(0L, 1L, 2L),
-        prefixDim = MrlPrefixDim, k = 5, shortlist = MrlShortlist)
+        "embedding", "vec_id", queryIds = Seq(0L, 1L, 2L), k = 5,
+        Quantizer.mrl(MrlPrefixDim), shortlist = MrlShortlist)
       .orderBy("q_id", "rk"),
     Some(mrlSql))
 
   private val sim7 = Q(
     "sim7_knn_binary",
-    (s, d) => Search.knnBinary(
+    (s, d) => Search.knn(
         Tables.embeddings(s, d).select(col("vec_id"), col("embedding")),
-        "embedding", "vec_id", queryIds = Seq(0L, 1L, 2L), dim = IvfDim,
-        k = 5, shortlist = BqShortlist)
+        "embedding", "vec_id", queryIds = Seq(0L, 1L, 2L), k = 5,
+        Quantizer.binary, shortlist = BqShortlist)
       .orderBy("q_id", "rk"),
     Some(binarySql))
 
@@ -840,12 +838,11 @@ object Vectors {
 
   private val sim3 = Q(
     "sim3_knn_ivf",
-    (s, d) => Search.knnIvf(
+    (s, d) => Search.knn(
         Tables.embeddings(s, d).select(col("vec_id"), col("embedding")),
-        "embedding", "vec_id", queryIds = Seq(0L, 1L, 2L),
-        nCentroids = IvfCentroidsN, iters = IvfIters, nProbe = IvfProbe, k = 5,
+        "embedding", "vec_id", queryIds = Seq(0L, 1L, 2L), k = 5, Quantizer.flat,
         // DECIMAL means: the oracle twin re-runs the identical fit
-        exactMeans = true)
+        Some(Search.Coarse(IvfCentroidsN, IvfIters, IvfProbe, exactMeans = true)))
       .orderBy("q_id", "rk"),
     Some(ivfSql))
 

@@ -378,8 +378,8 @@ object Search {
     // every round re-ran the scan (and any upstream repartition) — the
     // fit is eager, so the blocks are released in the finally before the
     // caller's encode/score passes run
-    // already-cached input (the knn* entry points persist their shared
-    // base across fit/encode/score actions): a second cache layer here
+    // already-cached input (the vectorRows base, persisted across the
+    // fit/encode/score actions): a second cache layer here
     // would double the memory for zero saved work — compute through it
     val inputCached =
       vectors.storageLevel != org.apache.spark.storage.StorageLevel.NONE
@@ -417,72 +417,131 @@ object Search {
   def ivfAssign(vec: Column, cents: Array[Array[Double]]): Column =
     org.apache.spark.sql.graft.IvfAssign.assign(vec, cents)
 
-  /** IVF ANN top-k for a small query-id set: fit centroids, assign every
-    * vector to its bucket, probe the `nProbe` nearest centroids per query
-    * (driver math — centroids are tiny), exact cosine on the probed
-    * buckets only. The scale shape: candidate generation is a broadcast
-    * join on centroid id over ~nProbe/nCentroids of the table, never a
-    * full scan per query. */
-  def knnIvf(vectors: DataFrame, vecCol: String, idCol: String,
-             queryIds: Seq[Long], nCentroids: Int, iters: Int,
-             nProbe: Int, k: Int, exactMeans: Boolean = false): DataFrame = {
-    val spark = vectors.sparkSession
-    // spread: the sf-scale embeddings file is a handful of splits, and
-    // every stage from the fit to the encode/score pass is CPU-bound per
-    // row — without the repartition the whole ANN pass runs on ≤3 of 32
-    // cores (round-12 sf10 profile); a no-op on inputs already wider
-    // than the cores, and hash-safe (every query-path fit is exact /
-    // order-independent). The FIT reads the spread base too (round-13
-    // advisor fix: fitting from the unspread input pinned every Lloyd
-    // round of the CPU-bound k-means to the raw split count — the exact
-    // stage the spread exists for). Value-identical where it is CLAIMED:
-    // the oracle-hashed path (sim3) fits with exactMeans=true, whose
-    // DECIMAL sums are partitioning-independent; the default
-    // exactMeans=false mode sums native doubles, so the repartition can
-    // move centroids by summation-order fp-noise — explicitly the
-    // documented contract of that mode (see ivfCentroids: "centroid
-    // drift from summation order is fp-noise that does not move ANN
-    // quality"), and CompressionCurve grades recall on exact cosine of
-    // whatever cells result, so its tiers stay internally consistent.
-    // persisted for the QUERY's lifetime (fit rounds + query-row collect +
-    // the final score pass all read it; without the persist each of those
-    // actions re-ran the scan + spread exchange + array decode). Released
-    // by the caller's clearCache — the d3/d7 persisted-intermediate
-    // lifecycle this engine's harnesses (Bench.runOne, Verify) already
-    // implement.
-    val base = graft.Tables.spread(vectors)
-      .select(col(idCol).cast("long").as("id"),
-        asDouble(col(vecCol)).as("v"))
+  /** The `n` cells nearest `q`, by [[ivfAssign]]'s arithmetic
+    * (|q|² − 2·q·c + |c|², each dot accumulated left to right) and tie
+    * rule (equal distances keep the lower cell id) — so a query's first
+    * cell is the one its own row was assigned to. The one probe order of
+    * the [[knn]] spine's coarse stage and the serving index. */
+  def nearestCells(q: Array[Double], cents: Array[Array[Double]], n: Int): Seq[Int] = {
+    val qq = ip(q, q)
+    cents.indices.map(i => (qq - 2.0 * ip(q, cents(i)) + ip(cents(i), cents(i)), i))
+      .sorted.take(n).map(_._2)
+  }
+
+  /** Driver-side inner product, accumulated left to right (DotProduct's
+    * order). */
+  private[search] def ip(a: Array[Double], b: Array[Double]): Double = {
+    var s = 0.0; var j = 0
+    while (j < a.length) { s += a(j) * b(j); j += 1 }
+    s
+  }
+
+  /** The one (id, v) prelude of every ANN pass — the [[knn]] spine,
+    * [[semanticDedup]] and the serving index's write: null vectors
+    * dropped, ids cast to long, `extra` columns carried, persisted because
+    * the fit rounds, the query-row collect and the score or write pass all
+    * read it. The knn spine's caller releases it with clearCache (the
+    * d3/d7 lifecycle of Bench.runOne and Verify).
+    *
+    * The query paths pass `Tables.spread(vectors)`: the sf-scale
+    * embeddings file is a handful of splits, and every stage from the fit
+    * to the score pass is CPU-bound per row — without the repartition the
+    * whole pass runs on ≤3 of 32 cores (round-12 sf10 profile).
+    * Value-identical where it is claimed: the oracle-hashed fits use
+    * exact DECIMAL means, which are partitioning-independent; the default
+    * native-double means can move by summation-order fp-noise (see
+    * [[ivfCentroids]]). The write keeps its input's partitioning, since
+    * the parquet writer emits one file per (task, cell). */
+  private[graft] def vectorRows(vectors: DataFrame, vecCol: String, idCol: String,
+                                extra: Seq[String] = Nil): DataFrame =
+    vectors.filter(col(vecCol).isNotNull)
+      .select(Seq(col(idCol).cast("long").as("id"),
+        asDouble(col(vecCol)).as("v")) ++ extra.map(col): _*)
       .persist()
-    val cents = ivfCentroids(base, "v", "id", nCentroids, iters, exactMeans)
-    val assigned = base.withColumn("cid", ivfAssign(col("v"), cents))
-      .withColumn("vn", l2Norm(col("v")))
-    val qRows = base.filter(col("id").isin(queryIds: _*)).collect()
-    val probes = qRows.flatMap { r =>
-      val qid = r.getLong(0)
-      val qv = r.getSeq[Double](1).toArray
-      var qq = 0.0; var j = 0
-      while (j < qv.length) { qq += qv(j) * qv(j); j += 1 }
-      cents.zipWithIndex.map { case (c, i) =>
-        var vc = 0.0; var cn = 0.0; var m = 0
-        while (m < c.length) { vc += qv(m) * c(m); cn += c(m) * c(m); m += 1 }
-        (qid, i, qq - 2.0 * vc + cn)
-      }.sortBy { case (_, cid, d) => (d, cid) }
-        .take(nProbe).map { case (q, cid, _) => (q, cid) }
+
+  /** The top-k argument contract shared by [[knn]] and the serving
+    * probes: a silent short or empty answer is a named error instead. */
+  private[graft] def requireTopK(k: Int, shortlist: Int): Unit = {
+    require(k >= 1, s"k must be positive: $k")
+    require(shortlist == 0 || shortlist >= k, s"shortlist $shortlist smaller than k=$k")
+  }
+
+  /** The IVF coarse stage of [[knn]]: fit `nCentroids` cells by
+    * [[ivfCentroids]] and score only the rows of each query's `nProbe`
+    * [[nearestCells]]. `residual` is the FAISS IVFPQ encoding: the tier
+    * fits and encodes v − c_cid (the within-cell displacement, whose
+    * spread is far tighter, so the same code budget quantizes finer) and
+    * the score adds ⟨q, c_cid⟩ back, since ⟨q, v⟩ = ⟨q, c_cid⟩ + ⟨q, r⟩. */
+  final case class Coarse(nCentroids: Int, iters: Int, nProbe: Int,
+                          exactMeans: Boolean = false, residual: Boolean = false) {
+    require(nProbe >= 1, s"nProbe must be positive: $nProbe")
+  }
+
+  /** In-memory ANN top-k for a small query-id set — the one spine behind
+    * the flat/IVF, PQ, IVF-PQ, SQ8, binary and Matryoshka queries
+    * (sim3–sim9):
+    *  1. one spread, persisted (id, v) base ([[vectorRows]]) and one
+    *     collect of the query rows;
+    *  2. optionally the coarse stage: the rows of each query's probed
+    *     cells, reached by a broadcast join on the cell id — never a full
+    *     scan per query;
+    *  3. the tier's [[Quantizer.score]] against its broadcast per-query
+    *     side, so a compressed tier reads its codes, never the vectors;
+    *  4. a window top-k on (score desc, id asc), the query's own row
+    *     excluded;
+    *  5. with `shortlist > 0`, the exact-cosine refine of the shortlist
+    *     only: the vectors are re-read for |queries|·shortlist rows by a
+    *     broadcast id join, and the output carries the tier's first-pass
+    *     score ([[Quantizer.firstPass]]) beside the exact one.
+    * Output: (q_id, vec_id[, first-pass score], score, rk). A query id
+    * absent from the table is an error, not a silently missing query. */
+  def knn(vectors: DataFrame, vecCol: String, idCol: String,
+          queryIds: Seq[Long], k: Int, fit: Quantizer.Fit,
+          coarse: Option[Coarse] = None, shortlist: Int = 0): DataFrame = {
+    requireTopK(k, shortlist)
+    require(queryIds.nonEmpty, "queryIds must be non-empty")
+    val spark = vectors.sparkSession
+    import spark.implicits._
+    val base = vectorRows(graft.Tables.spread(vectors), vecCol, idCol)
+    val qs = base.filter(col("id").isin(queryIds: _*))
+      .as[(Long, Array[Double])].collect().toSeq
+    val absent = queryIds.distinct.filterNot(qs.map(_._1).toSet)
+    require(absent.isEmpty, s"queryIds absent from the table: ${absent.mkString(", ")}")
+    val cents = coarse.map(c => ivfCentroids(base, "v", "id", c.nCentroids, c.iters, c.exactMeans))
+    val residual = coarse.exists(_.residual)
+    val assigned = cents.fold(base)(cs => base.withColumn("cid", ivfAssign(col("v"), cs)))
+    // native CentroidDelta kernel: one compiled loop per row, swept by
+    // every codebook-fit round and the encode
+    val coded = if (!residual) assigned else assigned.withColumn("v",
+      org.apache.spark.sql.graft.CentroidDelta.delta(col("v"), col("cid"), cents.get))
+    val tier = fit(if (residual) coded else base, qs.head._2.length)
+    val sides = broadcast(tier.sides(spark, qs))
+    val scan = cents.fold(tier.encode(coded).crossJoin(sides)) { cs =>
+      val probes = qs.flatMap { case (id, q) =>
+        nearestCells(q, cs, coarse.get.nProbe)
+          .map(cid => (id, cid, if (residual) ip(q, cs(cid)) else 0.0))
+      }
+      tier.encode(coded).join(broadcast(probes.toDF("q_id", "cid", "off")), "cid")
+        .join(sides, "q_id")
     }
-    val probesDf = spark.createDataFrame(probes.toIndexedSeq).toDF("q_id", "cid")
-    val qSide = base.filter(col("id").isin(queryIds: _*))
-      .select(col("id").as("q_id"), col("v").as("qv"),
-        l2Norm(col("v")).as("qn"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("id"))
-    assigned.join(broadcast(probesDf), "cid")
-      .filter(col("q_id") =!= col("id"))
-      .join(broadcast(qSide), "q_id")
-      .withColumn("score",
-        round(dot(col("qv"), col("v")) / (col("qn") * col("vn")), 5) + 0.0)
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
-      .select(col("q_id"), col("id").as("vec_id"), col("score"), col("rk"))
+    val score = if (residual) col("off") + tier.score(col("qs")) else tier.score(col("qs"))
+    val byScore = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("id"))
+    def top(df: DataFrame, s: Column, n: Int): DataFrame =
+      df.withColumn("score", round(s, 5) + 0.0)
+        .withColumn("rk", row_number().over(byScore).cast("long"))
+        .filter(col("rk") <= n)
+    val first = top(scan.filter(col("q_id") =!= col("id")), score,
+      if (shortlist == 0) k else shortlist)
+    if (shortlist == 0)
+      first.select(col("q_id"), col("id").as("vec_id"), col("score"), col("rk"))
+    else {
+      val short = first.select(col("q_id"), col("id"), tier.firstPass(col("score")))
+      val refined = Quantizer.Flat.encode(base.join(broadcast(short), "id")
+        .join(broadcast(Quantizer.Flat.sides(spark, qs)), "q_id"))
+      top(refined, Quantizer.Flat.score(col("qs")), k)
+        .select(col("q_id"), col("id").as("vec_id"), col(short.columns.last),
+          col("score"), col("rk"))
+    }
   }
 
   /** Product-quantization codebooks: the vector space split into `m`
@@ -565,176 +624,6 @@ object Search {
       ivfAssign(slice(vec, j * dsub + 1, dsub), codebooks(j))): _*)
   }
 
-  /** Per-query ADC lookup table T[j][c] = ⟨q_j, codebook_j[c]⟩, flattened
-    * subspace-major (T[j][c] at j·ksub + c, the layout the codegen
-    * AdcPacked loop reads). ONE function for [[knnPq]], [[knnIvfPq]] and
-    * the IVF serving PQ tier: the left-to-right accumulation order is
-    * pinned by the sim4/sim5/sim8 oracle hashes. */
-  def adcTable(q: Array[Double], books: Array[Array[Array[Double]]]): Array[Double] = {
-    val ksub = books(0).length
-    val dsub = books(0)(0).length
-    val t = new Array[Double](books.length * ksub)
-    var j = 0
-    while (j < books.length) {
-      var c = 0
-      while (c < ksub) {
-        val cent = books(j)(c)
-        var s = 0.0; var i = 0
-        while (i < dsub) { s += q(j * dsub + i) * cent(i); i += 1 }
-        t(j * ksub + c) = s
-        c += 1
-      }
-      j += 1
-    }
-    t
-  }
-
-  /** Per-query SQ8 lookup table T[i][c] = (mn_i + c·Δ_i/255)·q_i — the
-    * dequantization grid folded into the byte-lookup table (T[i][c] at
-    * i·256 + c). ONE function for [[knnSq]] and the IVF serving SQ8 tier;
-    * the op order ((c·Δ)/255, +mn, ·q_i) is the oracle's dequant, pinned by
-    * the sim6 hash. */
-  def sqTable(q: Array[Double], mins: Array[Double], maxs: Array[Double]): Array[Double] = {
-    val t = new Array[Double](mins.length * 256)
-    var i = 0
-    while (i < mins.length) {
-      val mn = mins(i); val d = maxs(i) - mn
-      var c = 0
-      while (c < 256) { t(i * 256 + c) = (mn + c * d / 255.0) * q(i); c += 1 }
-      i += 1
-    }
-    t
-  }
-
-  /** PQ ANN top-k by ASYMMETRIC DISTANCE COMPUTATION for a small query-id
-    * set: fit codebooks, encode every vector to `m` codes, and score a row
-    * WITHOUT touching its original vector — per query, the inner-product
-    * table T[j][c] = ⟨q_j, codebook_j[c]⟩ (m·ksub doubles, driver math) is
-    * broadcast and the approximate score is Σ_j T[j][code_j], a pure
-    * lookup-sum over the codes. The scale shape: the scan reads m SMALL
-    * codes per row instead of dim doubles — IO and memory shrink by the
-    * compression factor, scoring is m array lookups + adds per row, and
-    * ranking quality is the PQ approximation (recall vs exact asserted in
-    * PqSpec; re-rank the top candidates against exact vectors to recover
-    * the tail, the standard FAISS IVFPQ + refine recipe). Composes with
-    * [[knnIvf]]/[[graft.serve.IvfIndex]]: coarse cells prune IO, PQ codes
-    * shrink what's read. */
-  def knnPq(vectors: DataFrame, vecCol: String, idCol: String,
-            queryIds: Seq[Long], dim: Int, m: Int, ksub: Int, iters: Int,
-            k: Int, exactMeans: Boolean = false): DataFrame = {
-    val spark = vectors.sparkSession
-    // spread: the sf-scale embeddings file is a handful of splits, and
-    // every stage from the fit to the encode/score pass is CPU-bound per
-    // row — without the repartition the whole ANN pass runs on ≤3 of 32
-    // cores (round-12 sf10 profile); a no-op on inputs already wider
-    // than the cores, and hash-safe (every query-path fit is exact /
-    // order-independent)
-    // persisted for the query's lifetime (see knnIvf's note)
-    val base = graft.Tables.spread(vectors)
-      .select(col(idCol).cast("long").as("id"),
-        asDouble(col(vecCol)).as("v"))
-      .persist()
-    val books = pqCodebooks(base, "v", "id", dim, m, ksub, iters, exactMeans)
-    // packed codes + the native ADC kernel (knnSq's scoring path): the
-    // former aggregate(zip_with(...)) lookup-sum was an interpreted HOF
-    // per candidate row; AdcPacked is the same left-to-right accumulation
-    // over the flattened subspace-major table, bit-identical scores
-    val encoded = base.select(col("id"),
-      org.apache.spark.sql.graft.PqCodes.pack(
-        pqCodes(col("v"), books, dim)).as("codes"))
-    val qRows = base.filter(col("id").isin(queryIds: _*)).collect()
-    val qT = qRows.map(r => (r.getLong(0), adcTable(r.getSeq[Double](1).toArray, books).toSeq))
-    val qDf = spark.createDataFrame(qT.toIndexedSeq).toDF("q_id", "t")
-    val w = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("id"))
-    encoded.crossJoin(broadcast(qDf))
-      .filter(col("q_id") =!= col("id"))
-      .withColumn("score", round(
-        org.apache.spark.sql.graft.PqCodes.adcPacked(
-          col("codes"), col("t"), books(0).length), 5) + 0.0)
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
-      .select(col("q_id"), col("id").as("vec_id"), col("score"), col("rk"))
-  }
-
-  /** The combined FAISS-IVFPQ query semantics in-memory: coarse probe
-    * (nProbe nearest cells per query — candidate generation is a broadcast
-    * join on cell id over ~nProbe/nCentroids of the table, [[knnIvf]]'s
-    * shape) × PQ asymmetric-distance scoring on the candidates only
-    * ([[knnPq]]'s lookup-sum — the candidate rows' codes, never their
-    * vectors). The serving twin is [[graft.serve.IvfIndex]]'s partitioned
-    * ADC path, where the probe becomes directory pruning and the codes
-    * column pruning; here the whole pipeline stays a single lazy plan so
-    * it can be differentially hash-checked (sim5). */
-  def knnIvfPq(vectors: DataFrame, vecCol: String, idCol: String,
-               queryIds: Seq[Long], dim: Int, nCentroids: Int, iters: Int,
-               nProbe: Int, m: Int, ksub: Int, pqIters: Int, k: Int,
-               exactMeans: Boolean = false, residual: Boolean = false): DataFrame = {
-    val spark = vectors.sparkSession
-    // spread: the sf-scale embeddings file is a handful of splits, and
-    // every stage from the fit to the encode/score pass is CPU-bound per
-    // row — without the repartition the whole ANN pass runs on ≤3 of 32
-    // cores (round-12 sf10 profile); a no-op on inputs already wider
-    // than the cores, and hash-safe (every query-path fit is exact /
-    // order-independent)
-    // persisted for the query's lifetime (see knnIvf's note)
-    val base = graft.Tables.spread(vectors)
-      .select(col(idCol).cast("long").as("id"),
-        asDouble(col(vecCol)).as("v"))
-      .persist()
-    val cents = ivfCentroids(base, "v", "id", nCentroids, iters, exactMeans)
-    val assigned = base.withColumn("cid", ivfAssign(col("v"), cents))
-    // residual mode = the real FAISS IVFPQ: PQ encodes v − c_cid (the
-    // within-cell displacement, whose spread is much tighter than the raw
-    // space, so the same byte budget quantizes finer); scoring adds the
-    // per-(query, cell) offset ⟨q, c_cid⟩ back, since
-    // ⟨q, v⟩ = ⟨q, c_cid⟩ + ⟨q, r⟩ exactly.
-    // native CentroidDelta kernel: the zip_with/element_at HOF form
-    // re-evaluated its lambda interpretively per element, and this
-    // un-persisted projection is swept by every PQ codebook-fit pass
-    // plus the encode — pqIters + 1 interpreted sweeps (round-16's
-    // known-HOF list item; CentroidDeltaSpec pins value parity)
-    val pqInput =
-      if (residual)
-        assigned.withColumn("pqv", org.apache.spark.sql.graft.CentroidDelta
-          .delta(col("v"), col("cid"), cents))
-      else assigned.withColumn("pqv", col("v"))
-    val books = pqCodebooks(pqInput, "pqv", "id", dim, m, ksub, pqIters, exactMeans)
-    val encoded = pqInput
-      .select(col("id"), col("cid"),
-        // packed codes + native ADC, as in knnPq — bit-identical scores
-        org.apache.spark.sql.graft.PqCodes.pack(
-          pqCodes(col("pqv"), books, dim)).as("codes"))
-    val qRows = base.filter(col("id").isin(queryIds: _*)).collect()
-    // per-query probe list (with the ⟨q, c_cid⟩ offset) + lookup table,
-    // both tiny driver math
-    val probes = qRows.flatMap { r =>
-      val qid = r.getLong(0)
-      val qv = r.getSeq[Double](1).toArray
-      cents.zipWithIndex.map { case (c, i) =>
-        var d = 0.0; var o = 0.0; var j = 0
-        while (j < c.length) {
-          val t = qv(j) - c(j); d += t * t; o += qv(j) * c(j); j += 1
-        }
-        (qid, i, d, if (residual) o else 0.0)
-      }.sortBy { case (_, cid, d, _) => (d, cid) }
-        .take(nProbe).map { case (q, cid, _, o) => (q, cid, o) }
-    }
-    val probesDf = spark.createDataFrame(probes.toIndexedSeq)
-      .toDF("q_id", "cid", "off")
-    val qT = qRows.map(r => (r.getLong(0), adcTable(r.getSeq[Double](1).toArray, books).toSeq))
-    val qtDf = spark.createDataFrame(qT.toIndexedSeq).toDF("q_id", "t")
-    val w = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("id"))
-    encoded.join(broadcast(probesDf), "cid")
-      .filter(col("q_id") =!= col("id"))
-      .join(broadcast(qtDf), "q_id")
-      .withColumn("score", round(
-        col("off") + org.apache.spark.sql.graft.PqCodes.adcPacked(
-          col("codes"), col("t"), books(0).length), 5) + 0.0)
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
-      .select(col("q_id"), col("id").as("vec_id"), col("score"), col("rk"))
-  }
-
   /** Scalar-quantization (SQ8) fit: per-dimension (min, max) over the
     * corpus — ONE aggregation pass (2·dim agg expressions, partial+final
     * combine), the FAISS ScalarQuantizer QT_8bit train step. Null vectors
@@ -767,52 +656,6 @@ object Search {
     }: _*)
   }
 
-  /** SQ8 ANN top-k by dequantized asymmetric scoring for a small query-id
-    * set: fit per-dimension (min, max), encode every vector to dim packed
-    * code BYTES, and score a row without touching its original vector.
-    * SQ8 is exactly PQ with dsub = 1 / ksub = 256 whose per-dimension
-    * codebook is the uniform grid mn + c·Δ/255 — so scoring REUSES the
-    * packed-ADC codegen kernel: per query the lookup table
-    * T[i][c] = (mn_i + c·Δ_i/255) · q_i (dim·256 doubles, driver math) is
-    * broadcast and score = Σ_i T[i][code_i], a lookup-sum over the raw
-    * bytes. The scale shape: the scan reads dim bytes per row instead of
-    * dim doubles (8× IO/memory), the query side is a broadcast, ranking is
-    * TakeOrderedAndProject-class per-query heaps via the window top-k;
-    * quantization error is ≤ Δ_i/510 per dimension, so recall is
-    * near-exact (asserted in SqSpec). Composes with [[knnIvf]]'s coarse
-    * probe the same way [[knnPq]] does. */
-  def knnSq(vectors: DataFrame, vecCol: String, idCol: String,
-            queryIds: Seq[Long], dim: Int, k: Int): DataFrame = {
-    import org.apache.spark.sql.graft.PqCodes
-    val spark = vectors.sparkSession
-    // spread: the sf-scale embeddings file is a handful of splits, and
-    // every stage from the fit to the encode/score pass is CPU-bound per
-    // row — without the repartition the whole ANN pass runs on ≤3 of 32
-    // cores (round-12 sf10 profile); a no-op on inputs already wider
-    // than the cores, and hash-safe (every query-path fit is exact /
-    // order-independent)
-    // persisted for the query's lifetime (see knnIvf's note)
-    val base = graft.Tables.spread(vectors)
-      .select(col(idCol).cast("long").as("id"),
-        asDouble(col(vecCol)).as("v"))
-      .persist()
-    val (mins, maxs) = sqParams(base, "v", dim)
-    val encoded = base.select(col("id"),
-      PqCodes.pack(sqCodes(col("v"), mins, maxs)).as("sq"))
-    val qRows = base.filter(col("id").isin(queryIds: _*)).collect()
-    val qT = qRows.map(r =>
-      (r.getLong(0), sqTable(r.getSeq[Double](1).toArray, mins, maxs).toSeq))
-    val qDf = spark.createDataFrame(qT.toIndexedSeq).toDF("q_id", "t")
-    val w = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("id"))
-    encoded.crossJoin(broadcast(qDf))
-      .filter(col("q_id") =!= col("id"))
-      .withColumn("score",
-        round(PqCodes.adcPacked(col("sq"), col("t"), 256), 5) + 0.0)
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
-      .select(col("q_id"), col("id").as("vec_id"), col("score"), col("rk"))
-  }
-
   /** SemDeDup-style semantic deduplication (Abbas et al. 2023): k-means
     * cluster the embeddings, then mark near-duplicates WITHIN each cell
     * only — the clustering bounds the pairwise cost (Σ|cell|² instead of
@@ -827,19 +670,9 @@ object Search {
   def semanticDedup(vectors: DataFrame, vecCol: String, idCol: String,
                     nCentroids: Int, iters: Int, tau: Double,
                     exactMeans: Boolean = false): DataFrame = {
-    // spread: the sf-scale embeddings file is a handful of splits, and
-    // every stage from the fit to the encode/score pass is CPU-bound per
-    // row — without the repartition the whole ANN pass runs on ≤3 of 32
-    // cores (round-12 sf10 profile); a no-op on inputs already wider
-    // than the cores, and hash-safe (every query-path fit is exact /
-    // order-independent)
-    // persisted for the query's lifetime (see knnIvf's note) — the cell
-    // self-join references `assigned` twice and the keeper join a third
-    // time, on top of the fit rounds
-    val base = graft.Tables.spread(vectors)
-      .select(col(idCol).cast("long").as("id"),
-        asDouble(col(vecCol)).as("v"))
-      .persist()
+    // the cell self-join references `assigned` twice and the keeper join
+    // a third time, on top of the fit rounds
+    val base = vectorRows(graft.Tables.spread(vectors), vecCol, idCol)
     val cents = ivfCentroids(base, "v", "id", nCentroids, iters, exactMeans)
     val assigned = base
       .withColumn("cid", ivfAssign(col("v"), cents).cast("long"))
@@ -916,106 +749,6 @@ object Search {
     * WordNgrams); HammingSpec pins kernel == fold incl. null chains. */
   def hammingDistance(a: Column, b: Column): Column =
     org.apache.spark.sql.graft.HammingDistance.hamming(a, b)
-
-  /** Binary ANN top-k for a small query-id set — the FIFTH compression
-    * lever (LSH buckets / IVF cells / PQ codes / SQ8 bytes / sign BITS):
-    * fit per-dimension mean thresholds, pack every vector to ⌈dim/64⌉
-    * signature words, Hamming-rank a shortlist of `shortlist` candidates
-    * per query (xor + popcount per row — the cheapest possible scoring),
-    * then exact-cosine refine the shortlist only. The 100-TB shape: the
-    * shortlist phase scans ONLY (id, sig) — 64× less IO than the vectors —
-    * and the exact vectors are read for the |queries|·shortlist survivors
-    * alone via an id join; both rankings break ties on id, so the whole
-    * fit→pack→Hamming→refine pipeline is deterministic and differentially
-    * hash-checkable (sim7). */
-  def knnBinary(vectors: DataFrame, vecCol: String, idCol: String,
-                queryIds: Seq[Long], dim: Int, k: Int,
-                shortlist: Int): DataFrame = {
-    // spread: the sf-scale embeddings file is a handful of splits, and
-    // every stage from the fit to the encode/score pass is CPU-bound per
-    // row — without the repartition the whole ANN pass runs on ≤3 of 32
-    // cores (round-12 sf10 profile); a no-op on inputs already wider
-    // than the cores, and hash-safe (every query-path fit is exact /
-    // order-independent)
-    // persisted for the query's lifetime (see knnIvf's note) — the single
-    // final action here references `sigs` twice (shortlist + refine) and
-    // `base` three times; without the cache each reference re-ran the
-    // scan + spread + decode subtree inside the one job
-    val base = graft.Tables.spread(vectors)
-      .select(col(idCol).cast("long").as("id"),
-        asDouble(col(vecCol)).as("v"))
-      .persist()
-    val th = bqThresholds(base, "v", dim)
-    // narrow (id, sig) projection — at scale this is the serving scan
-    val sigs = base.select(col("id"), bqSignatures(col("v"), th).as("sig"))
-    val q = sigs.filter(col("id").isin(queryIds: _*))
-      .select(col("id").as("q_id"), col("sig").as("q_sig"))
-    val wH = Window.partitionBy(col("q_id")).orderBy(col("hamming"), col("id"))
-    val short = sigs.crossJoin(broadcast(q))
-      .filter(col("q_id") =!= col("id"))
-      .withColumn("hamming", hammingDistance(col("sig"), col("q_sig")))
-      .withColumn("hrk", row_number().over(wH))
-      .filter(col("hrk") <= shortlist)
-      .select(col("q_id"), col("id"), col("hamming"))
-    // exact refine: vectors are read ONLY for the shortlist (broadcast id
-    // join against the full table — shortlist is |queries|·shortlist rows)
-    val qv = base.filter(col("id").isin(queryIds: _*))
-      .select(col("id").as("q_id"), col("v").as("qv"))
-    val wS = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("id"))
-    base.join(broadcast(short), "id")
-      .join(broadcast(qv), "q_id")
-      .withColumn("score", round(cosine(col("qv"), col("v")), 5) + 0.0)
-      .withColumn("rk", row_number().over(wS).cast("long"))
-      .filter(col("rk") <= k)
-      .select(col("q_id"), col("id").as("vec_id"), col("hamming"),
-        col("score"), col("rk"))
-  }
-
-  /** Matryoshka / prefix-truncated two-stage retrieval (Kusupati et al.
-    * 2022, "Matryoshka Representation Learning", §4 adaptive retrieval):
-    * shortlist by cosine over the FIRST `prefixDim` coordinates, then
-    * exact full-dimension cosine rerank of the shortlist only.
-    *
-    * The 100-TB story: the prefix is the engine's cheapest compression
-    * tier that needs NO fit at all (no codebook, no thresholds, no
-    * centroids — a column projection). At scale the prefix ships as its
-    * own narrow column (prefixDim/dim of the exhaustive pass's bytes and
-    * FLOPs — 4× here), the shortlist is |queries|·shortlist rows, and the
-    * full vectors are re-read only for that shortlist via a broadcast id
-    * join — the same pruned-refine shape as [[knnBinary]]. Emits the
-    * prefix score so the shortlist stage itself sits under the oracle
-    * hash, not just the reranked survivors.
-    */
-  def knnMrl(vectors: DataFrame, vecCol: String, idCol: String,
-             queryIds: Seq[Long], prefixDim: Int, k: Int,
-             shortlist: Int): DataFrame = {
-    // persisted for the query's lifetime (see knnIvf's note): the one
-    // final action references base/pre four times across shortlist + refine
-    val base = vectors.select(col(idCol).cast("long").as("id"),
-      asDouble(col(vecCol)).as("v"))
-      .persist()
-    // narrow (id, prefix) projection — at scale this is the serving scan
-    val pre = base.select(col("id"), slice(col("v"), 1, prefixDim).as("p"))
-    val qp = pre.filter(col("id").isin(queryIds: _*))
-      .select(col("id").as("q_id"), col("p").as("q_p"))
-    val wP = Window.partitionBy(col("q_id")).orderBy(col("pscore").desc, col("id"))
-    val short = pre.crossJoin(broadcast(qp))
-      .filter(col("q_id") =!= col("id"))
-      .withColumn("pscore", round(cosine(col("p"), col("q_p")), 5) + 0.0)
-      .withColumn("prk", row_number().over(wP))
-      .filter(col("prk") <= shortlist)
-      .select(col("q_id"), col("id"), col("pscore"))
-    val qv = base.filter(col("id").isin(queryIds: _*))
-      .select(col("id").as("q_id"), col("v").as("qv"))
-    val wS = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("id"))
-    base.join(broadcast(short), "id")
-      .join(broadcast(qv), "q_id")
-      .withColumn("score", round(cosine(col("qv"), col("v")), 5) + 0.0)
-      .withColumn("rk", row_number().over(wS).cast("long"))
-      .filter(col("rk") <= k)
-      .select(col("q_id"), col("id").as("vec_id"), col("pscore"),
-        col("score"), col("rk"))
-  }
 
   /** ANN top-k via multi-table LSH: candidates = vectors sharing ANY
     * table's bucket with the query (deduplicated), then exact cosine on the

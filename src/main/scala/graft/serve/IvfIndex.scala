@@ -1,160 +1,61 @@
 package graft.serve
 
-import graft.search.Search
+import graft.search.{Quantizer, Search}
+import graft.search.Quantizer.{Bq, Flat, Mrl, Pq, Sq}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.PqCodes
 import org.apache.spark.sql.types.StructType
 import org.json4s._
 
 /** IVF-partitioned serving index (VERDICT r8 ask #8): the 100-TB serving
-  * story for ANN retrieval. [[Search.knnIvf]] proves the IVF math but
-  * scans the whole vector relation per query batch; at cluster scale the
-  * index must live on disk PARTITIONED BY the coarse cell so a probed
-  * query only READS nProbe/nCentroids of the files — Spark's partition
-  * pruning (directory-level, before any IO) is then the file-skipping an
-  * IVF serving system does with its inverted lists.
+  * story for ANN retrieval. At cluster scale the index lives on disk
+  * PARTITIONED BY the coarse cell so a probed query only READS
+  * nProbe/nCentroids of the files — Spark's partition pruning
+  * (directory-level, before any IO) is then the file-skipping an IVF
+  * serving system does with its inverted lists.
   *
   * Layout: one parquet dataset partitioned by `cid` (id, v, vn per row —
   * norms precomputed at build time so serving never recomputes them),
   * with the fitted centroids in a `_centroids.json` sidecar (underscore
   * prefix: invisible to Spark's file listing) so a serving session opens
-  * the index without refitting or rescanning. A compressed [[Tier]] adds
-  * its code columns beside (id, v, vn) and its fit in one more sidecar;
-  * the exact vectors stay, so every tier can refine a shortlist.
+  * the index without refitting or rescanning. A compressed tier (a
+  * [[Quantizer]], the same one the in-memory [[Search.knn]] spine uses)
+  * adds its code columns beside (id, v, vn) and its fit in one more
+  * sidecar; the exact vectors stay, so every tier can refine a shortlist.
   *
   * Serving is ONE spine for every tier: [[probedTopK]] (one query, a lazy
   * DataFrame) and [[probedTopKBatch]] (P queries, one pruned scan per
   * stage). Both read the probed cells only, score with the tier's
-  * [[Tier.score]], keep (score desc, id asc), and optionally re-score a
-  * `shortlist` of survivors with the exact cosine — so single and batched
-  * answers are bit-identical by construction.
+  * [[Quantizer.score]] against the query's side as a literal, keep
+  * (score desc, id asc), and optionally re-score a `shortlist` of
+  * survivors with the exact cosine — so single and batched answers are
+  * bit-identical by construction.
   */
 object IvfIndex {
 
-  /** What a compressed serving tier adds to the (id, v, vn, cid) layout,
-    * stated once: the columns it writes, the columns its shortlist scan
-    * reads (directory pruning via `cid IN (probes)` composes with column
-    * pruning of everything else), its sidecar, and its per-query score
-    * before the shared 5-dp rounding. */
-  sealed trait Tier {
-    private[serve] def columns: Seq[(String, Column)]
-    /** The first is the column a null disqualifies a row on. */
-    private[serve] def scanCols: Seq[String]
-    private[serve] def sidecar: Option[(String, String)]
-    private[serve] def score(q: Array[Double]): Column
-  }
+  /** What serving adds to a [[Quantizer]]: the columns its scan reads (the
+    * first is the one a null disqualifies a row on; directory pruning via
+    * `cid IN (probes)` composes with column pruning of everything else)
+    * and its sidecar. */
+  private def scanCols(t: Quantizer): Seq[String] =
+    if (t == Flat) Seq("v", "vn") else t.columns.map(_._1)
 
-  /** The exact tier: rounded cosine over the stored vectors and norms —
-    * also the refine score of every other tier. */
-  case object Flat extends Tier {
-    private[serve] def columns: Seq[(String, Column)] = Nil
-    private[serve] def scanCols: Seq[String] = Seq("v", "vn")
-    private[serve] def sidecar: Option[(String, String)] = None
-    private[serve] def score(q: Array[Double]): Column = cosine(q, "v", "vn")
+  private def sidecar(t: Quantizer): Option[(String, String)] = t match {
+    case Flat => None
+    case Pq(books) => Some("_pq.json" -> s"""{"dim": ${books.length * books(0)(0).length}, "books": ${
+      books.map(matrixJson).mkString("[", ",", "]")}}""")
+    case Sq(mins, maxs) => Some("_sq.json" -> s"""{"dim": ${mins.length}, "mins": ${
+      mins.mkString("[", ",", "]")}, "maxs": ${maxs.mkString("[", ",", "]")}}""")
+    case Bq(th) => Some("_bq.json" ->
+      s"""{"dim": ${th.length}, "thresholds": ${th.mkString("[", ",", "]")}}""")
+    case Mrl(prefixDim) => Some("_mrl.json" -> s"""{"prefixDim": $prefixDim}""")
   }
-
-  /** IVF + PQ (the FAISS IVFPQ layout on parquet): `codes` holds m packed
-    * bytes per row (org.apache.spark.sql.graft.PqCodes — one binary value,
-    * not a repeated int group), the codebooks ride `_pq.json`, and the
-    * score is [[Search.knnPq]]'s asymmetric lookup-sum over the query's
-    * [[Search.adcTable]]. Codes quantize the RAW vectors; the exact
-    * refine recovers the tail accuracy the residual variant would. */
-  final case class Pq(books: Array[Array[Array[Double]]]) extends Tier {
-    private def dim = books.length * books(0)(0).length
-    private[serve] def columns: Seq[(String, Column)] =
-      Seq("codes" -> PqCodes.pack(Search.pqCodes(col("v"), books, dim)))
-    private[serve] def scanCols: Seq[String] = Seq("codes")
-    private[serve] def sidecar: Option[(String, String)] = Some("_pq.json" ->
-      s"""{"dim": $dim, "books": ${books.map(matrixJson).mkString("[", ",", "]")}}""")
-    private[serve] def score(q: Array[Double]): Column = PqCodes.adcPacked(
-      col("codes"), typedLit(Search.adcTable(q, books).toSeq), books(0).length)
-  }
-
-  /** IVF + SQ8, the near-exact tier: `sq` holds dim packed bytes per row
-    * ([[Search.sqCodes]]), the per-dimension (min, max) grid rides
-    * `_sq.json`, and the score is [[Search.knnSq]]'s byte lookup-sum over
-    * the query's [[Search.sqTable]] — 8× less IO at ≤ Δ/510 per-dimension
-    * error, trustworthy without a refine pass. */
-  final case class Sq(mins: Array[Double], maxs: Array[Double]) extends Tier {
-    private[serve] def columns: Seq[(String, Column)] =
-      Seq("sq" -> PqCodes.pack(Search.sqCodes(col("v"), mins, maxs)))
-    private[serve] def scanCols: Seq[String] = Seq("sq")
-    private[serve] def sidecar: Option[(String, String)] = Some("_sq.json" ->
-      s"""{"dim": ${mins.length}, "mins": ${mins.mkString("[", ",", "]")}, "maxs": ${
-        maxs.mkString("[", ",", "]")}}""")
-    private[serve] def score(q: Array[Double]): Column = PqCodes.adcPacked(
-      col("sq"), typedLit(Search.sqTable(q, mins, maxs).toSeq), 256)
-  }
-
-  /** IVF + binary, the 64× tier: `sig` holds ⌈dim/64⌉ BIGINT words per row
-    * ([[Search.bqSignatures]]), the per-dimension mean thresholds ride
-    * `_bq.json`, and the score is the NEGATED Hamming distance to the
-    * query's signature — (score desc, id asc) is (Hamming asc, id asc).
-    * Its ranking is coarse: serve it with a `shortlist` refine. */
-  final case class Bq(thresholds: Array[Double]) extends Tier {
-    private[serve] def columns: Seq[(String, Column)] =
-      Seq("sig" -> Search.bqSignatures(col("v"), thresholds))
-    private[serve] def scanCols: Seq[String] = Seq("sig")
-    private[serve] def sidecar: Option[(String, String)] = Some("_bq.json" ->
-      s"""{"dim": ${thresholds.length}, "thresholds": ${
-        thresholds.mkString("[", ",", "]")}}""")
-    // the driver twin of Search.bqSignatures: same strict >, same
-    // 64-per-word layout, same sign-bit placement
-    private[serve] def score(q: Array[Double]): Column = {
-      val words = q.indices.grouped(64).map { idxs =>
-        idxs.foldLeft(0L) { (w, i) =>
-          if (q(i) > thresholds(i)) w | (1L << (i % 64)) else w
-        }
-      }.toSeq
-      -Search.hammingDistance(col("sig"), typedLit(words))
-    }
-  }
-
-  /** IVF + MRL prefix, the fit-free tier (sim9's two-stage on disk):
-    * `pre` is the vector's own first prefixDim coordinates and `pn` its
-    * norm; `_mrl.json` records just the width. The score is the SAME
-    * rounded cosine as the refine, over the prefix — truncation is the
-    * tier's only error source. Serve it with a `shortlist` refine. */
-  final case class Mrl(prefixDim: Int) extends Tier {
-    require(prefixDim > 0, s"prefixDim must be positive: $prefixDim")
-    private[serve] def columns: Seq[(String, Column)] =
-      Seq("pre" -> slice(col("v"), 1, prefixDim), "pn" -> Search.l2Norm(col("pre")))
-    private[serve] def scanCols: Seq[String] = Seq("pre", "pn")
-    private[serve] def sidecar: Option[(String, String)] =
-      Some("_mrl.json" -> s"""{"prefixDim": $prefixDim}""")
-    private[serve] def score(q: Array[Double]): Column =
-      cosine(q.take(prefixDim), "pre", "pn")
-  }
-
-  /** How [[write]] fits a tier: from the index's (id, v) rows and the
-    * vector dimension. */
-  type Fit = (DataFrame, Int) => Tier
-  val flat: Fit = (_, _) => Flat
-  def pq(m: Int, ksub: Int, pqIters: Int): Fit = {
-    require(ksub <= 256, s"ksub $ksub exceeds the one-byte code width")
-    (base, dim) => Pq(Search.pqCodebooks(base, "v", "id", dim, m, ksub, pqIters))
-  }
-  val sq8: Fit = (base, dim) => {
-    val (mins, maxs) = Search.sqParams(base, "v", dim)
-    Sq(mins, maxs)
-  }
-  val binary: Fit = (base, dim) => Bq(Search.bqThresholds(base, "v", dim))
-  def mrl(prefixDim: Int): Fit = { val t = Mrl(prefixDim); (_, _) => t }
 
   /** An open index. `schema` is the dataset's read schema, recorded at
     * [[write]]/[[open]] so a probe lists files but never re-infers it. */
   final case class Handle(path: String, centroids: Array[Array[Double]],
-                          tier: Tier, schema: StructType) {
+                          tier: Quantizer, schema: StructType) {
     def dim: Int = centroids.head.length
-  }
-
-  /** Cosine of `q` against a (vector, norm) column pair, before rounding —
-    * the one exact score every tier refines with. */
-  private def cosine(q: Array[Double], v: String, vn: String): Column = {
-    var qn = 0.0; var j = 0
-    while (j < q.length) { qn += q(j) * q(j); j += 1 }
-    Search.dot(typedLit(q.toSeq), col(v)) / (lit(math.sqrt(qn)) * col(vn))
   }
 
   /** Fit nCentroids (and the tier) on the vectors, assign every row, write
@@ -167,26 +68,25 @@ object IvfIndex {
     * very deployments the layout exists for. */
   def write(vectors: DataFrame, vecCol: String, idCol: String, path: String,
             nCentroids: Int, iters: Int, metaCols: Seq[String] = Nil,
-            tier: Fit = flat): Handle = {
+            tier: Quantizer.Fit = Quantizer.flat): Handle = {
     val spark = vectors.sparkSession
-    def rows(extra: Seq[String]) = vectors.filter(col(vecCol).isNotNull)
-      .select(Seq(col(idCol).cast("long").as("id"),
-        Search.asDouble(col(vecCol)).as("v")) ++ extra.map(col): _*)
-    val base = rows(Nil)
-    val cents = Search.ivfCentroids(base, "v", "id", nCentroids, iters)
-    val t = tier(base, cents.head.length)
-    val reserved = metaCols.toSet.intersect(
-      Set("id", "v", "vn", "cid") ++ t.columns.map(_._1))
-    require(reserved.isEmpty,
-      s"metaCols ${reserved.mkString(", ")} collide with the index layout's " +
-        "reserved columns — rename them before indexing")
-    t.columns.foldLeft(rows(metaCols).withColumn("vn", Search.l2Norm(col("v")))) {
-      case (df, (name, c)) => df.withColumn(name, c)
-    }.withColumn("cid", Search.ivfAssign(col("v"), cents))
-      .write.mode("overwrite").partitionBy("cid").parquet(path)
-    writeSidecar(spark, path, "_centroids.json", matrixJson(cents))
-    t.sidecar.foreach { case (name, json) => writeSidecar(spark, path, name, json) }
-    Handle(path, cents, t, spark.read.parquet(path).schema)
+    def requireFree(reserved: Iterable[String]): Unit = {
+      val hit = metaCols.toSet.intersect(reserved.toSet)
+      require(hit.isEmpty, s"metaCols ${hit.mkString(", ")} collide with the index " +
+        "layout's reserved columns — rename them before indexing")
+    }
+    requireFree(Seq("id", "v", "vn", "cid"))
+    val base = Search.vectorRows(vectors, vecCol, idCol, metaCols)
+    try {
+      val cents = Search.ivfCentroids(base, "v", "id", nCentroids, iters)
+      val t = tier(base, cents.head.length)
+      requireFree(t.columns.map(_._1))
+      t.encode(Flat.encode(base)).withColumn("cid", Search.ivfAssign(col("v"), cents))
+        .write.mode("overwrite").partitionBy("cid").parquet(path)
+      writeSidecar(spark, path, "_centroids.json", matrixJson(cents))
+      sidecar(t).foreach { case (name, json) => writeSidecar(spark, path, name, json) }
+      Handle(path, cents, t, spark.read.parquet(path).schema)
+    } finally { base.unpersist(blocking = false); () }
   }
 
   /** Crash-safe cell swap used by [[delete]] and [[compact]]: the freshly
@@ -247,7 +147,7 @@ object IvfIndex {
   }
 
   /** Each tier sidecar and its strict parser; `dim` is the centroids'. */
-  private val tierSidecars: Seq[(String, (JValue, Int) => Tier)] = Seq(
+  private val tierSidecars: Seq[(String, (JValue, Int) => Quantizer)] = Seq(
     "_pq.json" -> { (j, dim) =>
       val books = items(j \ "books").map(b => items(b).map(doubles).toArray).toArray
       requireDim(j, dim, books.length * books(0)(0).length)
@@ -291,15 +191,11 @@ object IvfIndex {
     Handle(path, cents, tier, spark.read.parquet(path).schema)
   }
 
-  /** The nProbe nearest cells to `q` — the same L2 ordering (ties on cell
-    * id) the assignment and [[Search.knnIvf]]'s probe selection use. */
+  /** The nProbe nearest cells to `q` ([[Search.nearestCells]]: the
+    * assignment's ordering, so the first is the cell `q`'s own row lives
+    * in). */
   def probeCells(h: Handle, q: Array[Double], nProbe: Int): Seq[Int] =
-    h.centroids.zipWithIndex.map { case (c, i) =>
-      var d = 0.0; var j = 0
-      while (j < c.length) { val t = q(j) - c(j); d += t * t; j += 1 }
-      (i, d)
-    }.sortBy { case (cid, d) => (d, cid) }
-      .take(nProbe).map(_._1).toSeq
+    Search.nearestCells(q, h.centroids, nProbe)
 
   /** The pruned dataset a probe set reads: `cid IN (cells)` is a partition
     * filter, so non-probed directories are skipped before any IO. Read
@@ -318,9 +214,8 @@ object IvfIndex {
     * IllegalArgumentException instead. */
   private def validate(h: Handle, queries: Seq[Array[Double]], nProbe: Int,
                        k: Int, shortlist: Int): Unit = {
-    require(k >= 1, s"k must be positive: $k")
+    Search.requireTopK(k, shortlist)
     require(nProbe >= 1, s"nProbe must be positive: $nProbe")
-    require(shortlist == 0 || shortlist >= k, s"shortlist $shortlist smaller than k=$k")
     queries.foreach(q => require(q.length == h.dim,
       s"query dimension ${q.length} != index dimension ${h.dim}"))
   }
@@ -336,7 +231,7 @@ object IvfIndex {
   /** Probed top-k of one query, as a lazy (vec_id, score) DataFrame: the
     * `cid IN (probes)` partition filter prunes the non-probed directories
     * before a byte is read (IvfServeSpec pins numFiles), the scan projects
-    * only the tier's [[Tier.scanCols]] (the compressed tiers never read
+    * only the tier's [[scanCols]] (the compressed tiers never read
     * `v`/`vn`), and the tier's rounded score ranks with ascending-id ties.
     *
     * `pred` is the "metadata filter + ANN" query vector databases
@@ -356,13 +251,14 @@ object IvfIndex {
     validate(h, Seq(q), nProbe, k, shortlist)
     val cells = probeCells(h, q, nProbe)
     val scan = pred.foldLeft(prunedScan(spark, h, cells))(_.filter(_))
-      .select(("id" +: h.tier.scanCols).map(col): _*)
-    if (shortlist == 0) topK(scan, h.tier.score(q), k)
+      .select(("id" +: scanCols(h.tier)).map(col): _*)
+    val score = h.tier.score(h.tier.sideLit(q))
+    if (shortlist == 0) topK(scan, score, k)
     else {
-      val ids = topK(scan, h.tier.score(q), shortlist).collect()
+      val ids = topK(scan, score, shortlist).collect()
         .map(r => java.lang.Long.valueOf(r.getLong(0)))
       topK(prunedScan(spark, h, cells).filter(col("id").isin(ids: _*)),
-        Flat.score(q), k)
+        Flat.score(Flat.sideLit(q)), k)
     }
   }
 
@@ -373,7 +269,7 @@ object IvfIndex {
     * that scan via [[Search.multiTopK]]'s per-partition k-heaps.
     *
     * Bit-identical to P sequential [[probedTopK]] calls with the same
-    * arguments (spec-asserted for every tier): the same [[Tier.score]],
+    * arguments (spec-asserted for every tier): the same [[Quantizer.score]],
     * the same 5-dp round / −0.0 collapse and (score desc, id asc)
     * tie-break, and each query's `eligible` mask restricts it to ITS OWN
     * probed cells and `preds(i)` — a row read only because some other
@@ -395,9 +291,9 @@ object IvfIndex {
     val cellsPer = queries.map(q => probeCells(h, q, nProbe))
     val inCells = cellsPer.map(cs => col("cid").isin(cs.map(Integer.valueOf): _*))
     val union = cellsPer.flatten.distinct.sorted
-    def scored(scan: DataFrame, tier: Tier, n: Int, eligible: Seq[Column]) =
-      Search.multiTopK(scan, tier.scanCols.head, "id", queries, n,
-        eligible = eligible, scoreExpr = (_, q) => tier.score(q))
+    def scored(scan: DataFrame, tier: Quantizer, n: Int, eligible: Seq[Column]) =
+      Search.multiTopK(scan, scanCols(tier).head, "id", queries, n,
+        eligible = eligible, scoreExpr = (_, q) => tier.score(tier.sideLit(q)))
     val first = scored(prunedScan(spark, h, union), h.tier,
       if (shortlist == 0) k else shortlist,
       if (preds.isEmpty) inCells else inCells.zip(preds).map { case (c, p) => c && p })

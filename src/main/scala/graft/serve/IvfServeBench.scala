@@ -1,6 +1,7 @@
 package graft.serve
 
 import graft.{LocalSpark, Tables}
+import graft.search.Quantizer
 import org.apache.spark.sql.functions.col
 
 /** Serving latency per tier for BASELINE.md: build the cid-partitioned
@@ -29,11 +30,11 @@ object IvfServeBench {
       .map(_.getSeq[Float](1).map(_.toDouble).toArray).toSeq
     // (tier, its fit, the refine shortlist it is served with)
     val tiers = Seq(
-      ("flat", IvfIndex.flat, 0),
-      ("pq", IvfIndex.pq(m = 8, ksub = 16, pqIters = 3), 0),
-      ("sq8", IvfIndex.sq8, 0),
-      ("binary", IvfIndex.binary, 40),
-      ("mrl", IvfIndex.mrl(prefixDim = 16), 40))
+      ("flat", Quantizer.flat, 0),
+      ("pq", Quantizer.pq(m = 8, ksub = 16, pqIters = 3), 0),
+      ("sq8", Quantizer.sq8, 0),
+      ("binary", Quantizer.binary, 40),
+      ("mrl", Quantizer.mrl(prefixDim = 16), 40))
     println(f"[ivf] sf=$sfDir n=${emb.count()} cells=$NCents k=$K")
     tiers.foreach { case (name, fit, shortlist) =>
       val path = java.nio.file.Files.createTempDirectory(s"graft-ivf-$name").toString

@@ -1,5 +1,6 @@
 package graft.serve
 
+import graft.search.Quantizer
 import org.apache.spark.sql.SparkSession
 
 /** ONE serving entry point over the compression ladder (VERDICT r10 ask
@@ -45,7 +46,7 @@ object ServingPlanner {
                          pq: Option[IvfIndex.Handle] = None,
                          bq: Option[IvfIndex.Handle] = None,
                          mrl: Option[IvfIndex.Handle] = None) {
-    require(flat.tier == IvfIndex.Flat, s"the flat slot holds a ${flat.tier} index")
+    require(flat.tier == Quantizer.Flat, s"the flat slot holds a ${flat.tier} index")
   }
 
   /** A measured, deployable configuration. `curve` holds every
@@ -67,12 +68,12 @@ object ServingPlanner {
 
   /** A tier's planner label, scan bytes/row at `dim`, and whether it is
     * served through a refine shortlist. */
-  private def profile(t: IvfIndex.Tier, dim: Int): (String, Int, Boolean) = t match {
-    case IvfIndex.Bq(_) => ("binary", ((dim + 63) / 64) * 8, true)
-    case IvfIndex.Pq(books) => ("pq", books.length, false)
-    case IvfIndex.Mrl(prefixDim) => ("mrl", prefixDim * 8, true)
-    case IvfIndex.Sq(_, _) => ("sq8", dim, false)
-    case IvfIndex.Flat => ("flat", dim * 8, false)
+  private def profile(t: Quantizer, dim: Int): (String, Int, Boolean) = t match {
+    case Quantizer.Bq(_) => ("binary", ((dim + 63) / 64) * 8, true)
+    case Quantizer.Pq(books) => ("pq", books.length, false)
+    case Quantizer.Mrl(prefixDim) => ("mrl", prefixDim * 8, true)
+    case Quantizer.Sq(_, _) => ("sq8", dim, false)
+    case Quantizer.Flat => ("flat", dim * 8, false)
   }
 
   /** `scanBudgetBytesPerRow` bounds the bytes/row the serving SCAN reads

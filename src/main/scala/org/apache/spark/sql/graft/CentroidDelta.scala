@@ -9,7 +9,8 @@ import org.apache.spark.sql.types._
 /** Native residual-vector computation for IVF-PQ: exactly
   * `zip_with(v, element_at(centsLit, cid + 1), (x, c) -> x - c)` — the
   * within-cell displacement v − c_cid that residual-mode PQ encodes
-  * (knnIvfPq / sim8) — as one compiled loop over the vector.
+  * (the knn spine's residual coarse stage, sim8) — as one compiled loop
+  * over the vector.
   *
   * Why it exists: the zip_with HOF re-evaluates its lambda (and the
   * element_at over the centroid-literal array) interpretively per

@@ -1,6 +1,6 @@
 package graft
 
-import graft.search.Search
+import graft.search.{Quantizer, Search}
 import org.apache.spark.sql.functions._
 
 /** Binary quantization (sim7): per-dimension mean thresholds, sign bits
@@ -97,8 +97,8 @@ class BinarySpec extends SparkSpec {
 
   test("binary shortlist + exact refine recall vs exact cosine top-k") {
     val k = 10
-    val got = Search.knnBinary(emb, "embedding", "vec_id",
-        queryIds = Seq(0L, 1L, 2L), dim = dim, k = k, shortlist = 40)
+    val got = Search.knn(emb, "embedding", "vec_id",
+        queryIds = Seq(0L, 1L, 2L), k = k, Quantizer.binary, shortlist = 40)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val rows = emb.collect().map(r =>
       r.getLong(0) -> r.getSeq[Float](1).map(_.toDouble).toArray).toMap

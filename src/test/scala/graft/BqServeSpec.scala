@@ -1,5 +1,6 @@
 package graft
 
+import graft.search.Quantizer
 import graft.serve.IvfIndex
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.FileSourceScanExec
@@ -20,10 +21,10 @@ class BqServeSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sf("sf0.001"))
     val path = java.nio.file.Files.createTempDirectory("graft-ivfbq").toString
     IvfIndex.write(emb, "embedding", "vec_id", path,
-      nCentroids = nCents, iters = 3, tier = IvfIndex.binary)
+      nCentroids = nCents, iters = 3, tier = Quantizer.binary)
   }
 
-  private def thresholds(h: IvfIndex.Handle) = h.tier.asInstanceOf[IvfIndex.Bq].thresholds
+  private def thresholds(h: IvfIndex.Handle) = h.tier.asInstanceOf[Quantizer.Bq].thresholds
 
   private lazy val q0: Array[Double] = Tables.embeddings(spark, sf("sf0.001"))
     .filter(col("vec_id") === 7L).select("embedding")
@@ -73,7 +74,7 @@ class BqServeSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     // exact tier on the same layout (the binary tier keeps v/vn)
     val exact = IvfIndex.probedTopK(spark,
-        h.copy(tier = IvfIndex.Flat), q0, nProbe = nCents, k = 10)
+        h.copy(tier = Quantizer.Flat), q0, nProbe = nCents, k = 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(refined == exact,
       "corpus-wide-shortlist binary serving must equal exact serving")
@@ -147,7 +148,7 @@ class BqServeSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSet
     assert(got.size == 10)
     val exact = IvfIndex.probedTopK(spark,
-        h.copy(tier = IvfIndex.Flat), q0, nProbe = nCents, k = 10)
+        h.copy(tier = Quantizer.Flat), q0, nProbe = nCents, k = 10)
       .collect().map(_.getLong(0)).toSet
     val recall = exact.count(got.contains).toDouble / exact.size
     info(s"binary(shortlist=40) recall@10 vs exact: $recall")

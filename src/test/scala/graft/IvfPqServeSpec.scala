@@ -1,6 +1,6 @@
 package graft
 
-import graft.search.Search
+import graft.search.{Quantizer, Search}
 import graft.serve.IvfIndex
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.FileSourceScanExec
@@ -20,10 +20,10 @@ class IvfPqServeSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sf("sf0.001"))
     val path = java.nio.file.Files.createTempDirectory("graft-ivfpq").toString
     IvfIndex.write(emb, "embedding", "vec_id", path,
-      nCentroids = nCents, iters = 3, tier = IvfIndex.pq(m = 8, ksub = 16, pqIters = 3))
+      nCentroids = nCents, iters = 3, tier = Quantizer.pq(m = 8, ksub = 16, pqIters = 3))
   }
 
-  private def books(h: IvfIndex.Handle) = h.tier.asInstanceOf[IvfIndex.Pq].books
+  private def books(h: IvfIndex.Handle) = h.tier.asInstanceOf[Quantizer.Pq].books
 
   private lazy val q0: Array[Double] = Tables.embeddings(spark, sf("sf0.001"))
     .filter(col("vec_id") === 7L).select("embedding")
@@ -147,7 +147,7 @@ class IvfPqServeSpec extends SparkSpec {
     val plain = java.nio.file.Files.createTempDirectory("graft-ivf-plain").toString
     IvfIndex.write(Tables.embeddings(spark, sf("sf0.001")),
       "embedding", "vec_id", plain, nCentroids = 4, iters = 1)
-    assert(IvfIndex.open(spark, plain).tier == IvfIndex.Flat)
+    assert(IvfIndex.open(spark, plain).tier == Quantizer.Flat)
     // the happy path is unaffected
     assert(books(IvfIndex.open(spark, h.path)).nonEmpty)
   }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.search.Search
+import graft.search.{Quantizer, Search}
 import graft.serve.IvfIndex
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.FileSourceScanExec
@@ -35,6 +35,20 @@ class IvfServeSpec extends SparkSpec {
     val scans = plan.collect { case s: FileSourceScanExec => s }
     assert(scans.nonEmpty, s"no file scan in plan:\n$plan")
     scans.map(_.metrics("numFiles").value).sum
+  }
+
+  test("probeCells ranks cells by the assignment's arithmetic and tie rule") {
+    import spark.implicits._
+    // |q−c|² ties at 0.43 for both cells; the assignment's
+    // |q|² − 2·q·c + |c|² puts cell 1 first (0.42999999999999994 < 0.43),
+    // so a probe of 1 must read the cell q's own row was written to
+    val q = Array(0.2, 0.7, 0.2, 0.2)
+    val cents = Array(Array(-0.3, 0.3, 0.1, 0.1), Array(-0.3, 0.3, 0.3, 0.3))
+    val h = IvfIndex.Handle("unused", cents, Quantizer.Flat,
+      new org.apache.spark.sql.types.StructType())
+    val assigned = Seq(q.toSeq).toDF("v")
+      .select(Search.ivfAssign(col("v"), cents)).head().getInt(0)
+    assert(IvfIndex.probeCells(h, q, 1) == Seq(assigned))
   }
 
   test("delete: doomed ids vanish, only their cells rewritten") {

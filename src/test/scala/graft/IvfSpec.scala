@@ -1,6 +1,6 @@
 package graft
 
-import graft.search.Search
+import graft.search.{Quantizer, Search}
 import org.apache.spark.sql.functions._
 
 /** IVF nearest-centroid assignment: the native reference-object expression
@@ -67,8 +67,8 @@ class IvfSpec extends SparkSpec {
     val dim = 16
     val data = randVecs(800, dim, 21L)
     val df = data.toDF("vec_id", "embedding")
-    val got = Search.knnIvf(df, "embedding", "vec_id", queryIds = Seq(0L),
-        nCentroids = 64, iters = 2, nProbe = 64, k = 5)
+    val got = Search.knn(df, "embedding", "vec_id", queryIds = Seq(0L), k = 5,
+        Quantizer.flat, Some(Search.Coarse(nCentroids = 64, iters = 2, nProbe = 64)))
       .orderBy("rk").collect().map(_.getLong(1))
     // nProbe == nCentroids → probes every bucket → exact == brute force
     val q = df.filter(col("vec_id") === 0L)
@@ -77,5 +77,30 @@ class IvfSpec extends SparkSpec {
         "q_embedding", "q_id", 5)
       .orderBy("rk").collect().map(_.getLong(1))
     assert(got.toSeq == bf.toSeq)
+  }
+  /** Degenerate knn arguments are named errors, not short answers. */
+  private def knnError(k: Int = 5, nProbe: Int = 2, shortlist: Int = 0,
+                       ids: Seq[Long] = Seq(0L)): String = {
+    import spark.implicits._
+    val df = randVecs(40, 8, 3L).toDF("vec_id", "embedding")
+    intercept[IllegalArgumentException](Search.knn(df, "embedding", "vec_id", ids, k,
+      Quantizer.flat, Some(Search.Coarse(4, 1, nProbe)), shortlist)).getMessage
+  }
+
+  test("knn rejects k < 1") {
+    assert(knnError(k = 0).contains("k must be positive: 0"))
+  }
+
+  test("knn rejects nProbe < 1") {
+    assert(knnError(nProbe = 0).contains("nProbe must be positive: 0"))
+  }
+
+  test("knn rejects a nonzero shortlist below k") {
+    assert(knnError(shortlist = 3).contains("shortlist 3 smaller than k=5"))
+  }
+
+  test("knn rejects a query id absent from the table") {
+    assert(knnError(ids = Seq(0L, 999L)).contains("absent from the table: 999"))
+    assert(knnError(ids = Nil).contains("queryIds must be non-empty"))
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.search.Search
+import graft.search.{Quantizer, Search}
 import graft.serve.IvfIndex
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.FileSourceScanExec
@@ -21,10 +21,10 @@ class IvfSqServeSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sf("sf0.001"))
     val path = java.nio.file.Files.createTempDirectory("graft-ivfsq").toString
     IvfIndex.write(emb, "embedding", "vec_id", path,
-      nCentroids = nCents, iters = 3, tier = IvfIndex.sq8)
+      nCentroids = nCents, iters = 3, tier = Quantizer.sq8)
   }
 
-  private def grid(h: IvfIndex.Handle) = h.tier.asInstanceOf[IvfIndex.Sq]
+  private def grid(h: IvfIndex.Handle) = h.tier.asInstanceOf[Quantizer.Sq]
 
   // MUST be a lazy val, not a def: test 3's driver recompute indexes
   // q0(i) inside a per-row/per-dim loop — as a def that ran the whole

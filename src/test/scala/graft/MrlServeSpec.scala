@@ -1,5 +1,6 @@
 package graft
 
+import graft.search.Quantizer
 import graft.serve.IvfIndex
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.FileSourceScanExec
@@ -21,7 +22,7 @@ class MrlServeSpec extends SparkSpec {
     val emb = Tables.embeddings(spark, sf("sf0.001"))
     val path = java.nio.file.Files.createTempDirectory("graft-ivfmrl").toString
     IvfIndex.write(emb, "embedding", "vec_id", path,
-      nCentroids = nCents, iters = 3, tier = IvfIndex.mrl(prefixDim))
+      nCentroids = nCents, iters = 3, tier = Quantizer.mrl(prefixDim))
   }
 
   private def qVec(id: Long): Array[Double] =
@@ -32,7 +33,7 @@ class MrlServeSpec extends SparkSpec {
   test("sidecars round-trip: centroids and prefix width reopen without a scan") {
     val h = built
     val reopened = IvfIndex.open(spark, h.path)
-    assert(reopened.tier == IvfIndex.Mrl(prefixDim))
+    assert(reopened.tier == Quantizer.Mrl(prefixDim))
     assert(reopened.centroids.length == h.centroids.length)
     (reopened.centroids, h.centroids).zipped.foreach { (a, b) =>
       assert(a.toSeq == b.toSeq) }
@@ -77,7 +78,7 @@ class MrlServeSpec extends SparkSpec {
         shortlist = n)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val flat = IvfIndex.probedTopK(spark,
-        h.copy(tier = IvfIndex.Flat), q0, nProbe = nCents, k = 10)
+        h.copy(tier = Quantizer.Flat), q0, nProbe = nCents, k = 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(mrl == flat, s"untruncated MRL must equal flat probed:\n$mrl\n$flat")
   }
@@ -91,7 +92,7 @@ class MrlServeSpec extends SparkSpec {
           shortlist = 4 * k)
         .collect().map(_.getLong(0)).toSet
       val flat = IvfIndex.probedTopK(spark,
-          h.copy(tier = IvfIndex.Flat), q, nProbe = nCents, k = k)
+          h.copy(tier = Quantizer.Flat), q, nProbe = nCents, k = k)
         .collect().map(_.getLong(0))
       flat.count(mrl.contains).toDouble / k
     }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.search.Search
+import graft.search.{Quantizer, Search}
 import org.apache.spark.sql.functions._
 
 /** Matryoshka prefix-truncation retrieval (sim9): shortlist on the first
@@ -32,8 +32,8 @@ class MrlSpec extends SparkSpec {
     .sortBy { case (id, s) => (-s, id) }.take(k).map(_._1).toSeq
 
   private def recallAt(prefixDim: Int, shortlist: Int): Seq[Double] = {
-    val got = Search.knnMrl(emb, "embedding", "vec_id",
-        queryIds = Seq(0L, 1L, 2L), prefixDim = prefixDim, k = k,
+    val got = Search.knn(emb, "embedding", "vec_id",
+        queryIds = Seq(0L, 1L, 2L), k = k, Quantizer.mrl(prefixDim),
         shortlist = shortlist)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     Seq(0L, 1L, 2L).map { q =>
@@ -68,8 +68,8 @@ class MrlSpec extends SparkSpec {
   test("results come only from the prefix shortlist; pscore is the prefix cosine") {
     val prefixDim = 16
     val shortlist = 4 * k
-    val got = Search.knnMrl(emb, "embedding", "vec_id",
-        queryIds = Seq(0L), prefixDim = prefixDim, k = k, shortlist = shortlist)
+    val got = Search.knn(emb, "embedding", "vec_id",
+        queryIds = Seq(0L), k = k, Quantizer.mrl(prefixDim), shortlist = shortlist)
       .collect()
     // driver twin of the shortlist stage
     val qp = rows(0L).take(prefixDim)

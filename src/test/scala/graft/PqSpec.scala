@@ -1,6 +1,6 @@
 package graft
 
-import graft.search.Search
+import graft.search.{Quantizer, Search}
 import org.apache.spark.sql.functions._
 
 /** Product quantization (sim4): codebook fit, encode, and ADC scoring.
@@ -30,8 +30,8 @@ class PqSpec extends SparkSpec {
 
   test("ADC top-k recall vs exact IP ranking; scores match a driver recompute") {
     val k = 10
-    val pq = Search.knnPq(emb, "embedding", "vec_id", queryIds = Seq(0L, 1L, 2L),
-      dim = dim, m = 8, ksub = 16, iters = 3, k = k)
+    val pq = Search.knn(emb, "embedding", "vec_id", queryIds = Seq(0L, 1L, 2L),
+      k = k, Quantizer.pq(m = 8, ksub = 16, pqIters = 3))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     // exact inner-product ranking (ADC approximates IP, not cosine)
     val rows = emb.collect().map(r =>
@@ -88,8 +88,8 @@ class PqSpec extends SparkSpec {
         centers(c).map(x => (x + rnd.nextGaussian() * 0.05).toFloat).toSeq)
     val df = rows.toDF("vec_id", "embedding")
     val k = 11 // the query's own cluster (minus itself)
-    val pq = Search.knnPq(df, "embedding", "vec_id", Seq(0L, 60L, 120L),
-      dim, m = 8, ksub = 16, iters = 3, k = k)
+    val pq = Search.knn(df, "embedding", "vec_id", Seq(0L, 60L, 120L),
+      k, Quantizer.pq(m = 8, ksub = 16, pqIters = 3))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val byQ = pq.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     val recalls = Seq(0L, 60L, 120L).map { q =>
@@ -161,9 +161,9 @@ class PqSpec extends SparkSpec {
     val exact = rows.map { case (id, v) => id -> v.map(_.toDouble).toArray }.toMap
     val qIds = Seq(0L, 60L, 120L)
     def meanErr(residual: Boolean): Double = {
-      val got = Search.knnIvfPq(df, "embedding", "vec_id", qIds, dim,
-        nCentroids = 16, iters = 3, nProbe = 4, m = 8, ksub = 16, pqIters = 3,
-        k = 10, residual = residual)
+      val got = Search.knn(df, "embedding", "vec_id", qIds, k = 10,
+        Quantizer.pq(m = 8, ksub = 16, pqIters = 3),
+        Some(Search.Coarse(nCentroids = 16, iters = 3, nProbe = 4, residual = residual)))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       val errs = got.map { case (q, id, s) =>
         val ip = (exact(q), exact(id)).zipped.map(_ * _).sum
@@ -186,8 +186,8 @@ class PqSpec extends SparkSpec {
     val e1 = emb.repartition(1)
     val e8 = emb.repartition(8)
     def top(e: org.apache.spark.sql.DataFrame) =
-      Search.knnPq(e, "embedding", "vec_id", Seq(0L, 1L), dim, 4, 8, 2, 5,
-        exactMeans = true)
+      Search.knn(e, "embedding", "vec_id", Seq(0L, 1L), 5,
+        Quantizer.pq(4, 8, 2, exactMeans = true))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSeq
     assert(top(e1) == top(e8),
       "exact-means PQ must be bit-reproducible across partitionings")

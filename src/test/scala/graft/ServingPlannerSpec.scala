@@ -1,5 +1,6 @@
 package graft
 
+import graft.search.Quantizer
 import graft.serve.{IvfIndex, ServingPlanner}
 import org.apache.spark.sql.functions._
 
@@ -29,14 +30,14 @@ class ServingPlannerSpec extends SparkSpec {
       flat = IvfIndex.write(emb, "embedding", "vec_id", tierPaths("flat"),
         nCentroids = nCents, iters = 3),
       sq = Some(IvfIndex.write(emb, "embedding", "vec_id", tierPaths("sq"),
-        nCentroids = nCents, iters = 3, tier = IvfIndex.sq8)),
+        nCentroids = nCents, iters = 3, tier = Quantizer.sq8)),
       pq = Some(IvfIndex.write(emb, "embedding", "vec_id", tierPaths("pq"),
         nCentroids = nCents, iters = 3,
-        tier = IvfIndex.pq(m = 8, ksub = 16, pqIters = 3))),
+        tier = Quantizer.pq(m = 8, ksub = 16, pqIters = 3))),
       bq = Some(IvfIndex.write(emb, "embedding", "vec_id", tierPaths("bq"),
-        nCentroids = nCents, iters = 3, tier = IvfIndex.binary)),
+        nCentroids = nCents, iters = 3, tier = Quantizer.binary)),
       mrl = Some(IvfIndex.write(emb, "embedding", "vec_id", tierPaths("mrl"),
-        nCentroids = nCents, iters = 3, tier = IvfIndex.mrl(prefixDim = 16))))
+        nCentroids = nCents, iters = 3, tier = Quantizer.mrl(prefixDim = 16))))
   }
 
   private lazy val sample: Seq[Array[Double]] = {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.search.Search
+import graft.search.{Quantizer, Search}
 import org.apache.spark.sql.functions._
 
 /** Scalar quantization SQ8 (sim6): per-dimension min/max fit, byte encode,
@@ -56,8 +56,8 @@ class SqSpec extends SparkSpec {
 
   test("SQ8 top-k ≈ exact IP top-k; scores match a driver recompute") {
     val k = 10
-    val sq = Search.knnSq(emb, "embedding", "vec_id",
-        queryIds = Seq(0L, 1L, 2L), dim = dim, k = k)
+    val sq = Search.knn(emb, "embedding", "vec_id",
+        queryIds = Seq(0L, 1L, 2L), k = k, Quantizer.sq8)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     val rows = emb.collect().map(r =>
       r.getLong(0) -> r.getSeq[Float](1).map(_.toDouble).toArray).toMap
@@ -104,7 +104,7 @@ class SqSpec extends SparkSpec {
       .collect().map(_.getSeq[Int](0))
     assert(codes.forall(_.head == 0))
     // full pipeline survives the degenerate dimension
-    val out = Search.knnSq(df, "v", "id", queryIds = Seq(0L), dim = 3, k = 2)
+    val out = Search.knn(df, "v", "id", queryIds = Seq(0L), k = 2, Quantizer.sq8)
       .collect()
     assert(out.length == 2)
   }

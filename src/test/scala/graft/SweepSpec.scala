@@ -5,7 +5,7 @@ import graft.eval.Eval
 import graft.profile.Profiler
 import graft.query._
 import graft.queries.Vectors
-import graft.search.Search
+import graft.search.{Quantizer, Search}
 
 /** A11 differential sweep on the documents/embeddings tables: the
   * reference's seeded repetition harness, asserting it runs reproducibly
@@ -134,8 +134,8 @@ class SweepSpec extends SparkSpec {
       .select("q_id", "vec_id").collect()
       .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSeq).toMap
     def ivfRecall(nProbe: Int): Double = {
-      val approx = Search.knnIvf(emb, "embedding", "vec_id", qids,
-          nCentroids = 8, iters = 3, nProbe = nProbe, k = 10)
+      val approx = Search.knn(emb, "embedding", "vec_id", qids, k = 10,
+          Quantizer.flat, Some(Search.Coarse(nCentroids = 8, iters = 3, nProbe = nProbe)))
         .select("q_id", "vec_id").collect()
         .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSeq).toMap
       val rs = exact.keys.map(k => Eval.recall(exact(k), approx.getOrElse(k, Seq.empty)))

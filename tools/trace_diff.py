@@ -1,0 +1,67 @@
+#!/usr/bin/env python3
+"""Compare two graft.Trace files (one JSON line per query tag).
+
+    python3 tools/trace_diff.py old.jsonl new.jsonl [tag ...]
+
+Prints, per tag present in either file, the old and new value and the change
+of actions, jobs, wall_ms and gap_ms, then the totals over the tags both files
+hold. Tags named on the command line restrict the table (not the totals'
+meaning: the totals cover the listed tags only). A tag missing from one file
+shows "-" on that side and is left out of the totals.
+"""
+import json
+import sys
+
+FIELDS = ("actions", "jobs", "wall_ms", "gap_ms")
+
+
+def load(path):
+    rows = {}
+    with open(path) as f:
+        for line in f:
+            line = line.strip()
+            if line.startswith("{"):
+                r = json.loads(line)
+                rows[r["tag"]] = r
+    return rows
+
+
+def fmt(v):
+    if v is None:
+        return "-"
+    return f"{v:.1f}" if isinstance(v, float) else str(v)
+
+
+def cell(old, new):
+    if old is None or new is None:
+        return f"{fmt(old)} -> {fmt(new)}"
+    d = new - old
+    sign = "+" if d > 0 else ""
+    return f"{fmt(old)} -> {fmt(new)} ({sign}{fmt(d)})"
+
+
+def main(argv):
+    if len(argv) < 3:
+        print(__doc__.strip(), file=sys.stderr)
+        return 2
+    old, new = load(argv[1]), load(argv[2])
+    tags = argv[3:] or sorted(set(old) | set(new))
+    width = max([len(t) for t in tags] + [5])
+    print(f"{'tag':<{width}}  " + "  ".join(f"{f:<26}" for f in FIELDS))
+    totals = {f: [0, 0] for f in FIELDS}
+    for t in tags:
+        o, n = old.get(t), new.get(t)
+        print(f"{t:<{width}}  " + "  ".join(
+            f"{cell(o and o[f], n and n[f]):<26}" for f in FIELDS))
+        if o and n:
+            for f in FIELDS:
+                totals[f][0] += o[f]
+                totals[f][1] += n[f]
+    print(f"{'total':<{width}}  " + "  ".join(
+        f"{cell(*[round(x, 1) if isinstance(x, float) else x for x in totals[f]]):<26}"
+        for f in FIELDS))
+    return 0
+
+
+if __name__ == "__main__":
+    sys.exit(main(sys.argv))
