@@ -8,6 +8,7 @@ import graft.search.Search
 import graft.transform.{FittedTransform, Transforms}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** The user-facing engine — the reference's end-to-end lifecycle
   * (src/app.py + src/encode.py) as a library:
@@ -25,10 +26,12 @@ import org.apache.spark.sql.functions._
   * }}}
   *
   * Index build (reference §3.2): ONE profile aggregation + optional
-  * transform fit + a narrow encode projection, persisted. Search
-  * (reference §3.1): driver-built query vector → scan + top-k
-  * (TakeOrderedAndProject — per-partition heaps, no shuffle) → broadcast
-  * gather join.
+  * transform fit + a narrow encode projection, persisted as `indexed`:
+  * the (transformed) item columns, `text_vec` and one `fused_vec` per
+  * row, in `defaultParallelism` partitions ([[Tables.spread]]), so every
+  * scan of it runs on every core. Search (reference §3.1): driver-built
+  * query vector → scan + top-k (TakeOrderedAndProject — per-partition
+  * heaps, no shuffle) → broadcast gather join.
   */
 sealed trait SearchMethod
 object SearchMethod {
@@ -67,7 +70,8 @@ final class FuseRankEngine private (
     val profiles: Map[String, ColumnProfile],
     val transforms: Map[String, FittedTransform],
     val layout: VectorLayout,
-    val indexed: DataFrame) {
+    val indexed: DataFrame,
+    ownsItemsCache: Boolean) {
 
   import config._
 
@@ -168,10 +172,14 @@ final class FuseRankEngine private (
   lazy val itemsTransformed: DataFrame =
     transforms.foldLeft(items) { case (df, (c, t)) => df.withColumn(c, t(col(c))) }
 
-  /** Release the persisted index and item cache (block-manager storage).
-    * Searches issued after close() still work — they recompute the encode
-    * projection (and re-scan the item source). */
-  def close(): Unit = { indexed.unpersist(); items.unpersist(); () }
+  /** Release the persisted index, and the item cache if [[FuseRankEngine.index]]
+    * added it: items the caller persisted stay cached. Searches issued
+    * after close() still work — they recompute the encode projection (and
+    * re-scan the item source). */
+  def close(): Unit = {
+    indexed.unpersist()
+    if (ownsItemsCache) items.unpersist()
+  }
 }
 
 object FuseRankEngine {
@@ -185,8 +193,11 @@ object FuseRankEngine {
     // farthest-point scan) — and the common callers hand us a multiLine
     // CSV scan under a global-sort row_id window, so each consumer
     // re-parsed the file single-task and re-ran the sort. Persist for the
-    // engine lifetime; released in close() with the index.
-    val items = rawItems.persist()
+    // engine lifetime; released in close() with the index — unless the
+    // caller already persisted it: persist() is then a no-op, and the
+    // cache is the caller's to release.
+    val ownsItemsCache = rawItems.storageLevel == StorageLevel.NONE
+    val items = if (ownsItemsCache) rawItems.persist() else rawItems
     // Geolocation inference from the schema (reference infers geolocation
     // from tuple-valued object columns, src/app.py:46-50): any aux column
     // typed struct(numeric, numeric, ...) is a geo modality with (lon, lat)
@@ -248,12 +259,13 @@ object FuseRankEngine {
     }
     val layout = VectorLayout(textBlock +: (auxBlocks ++ imageBlocks))
     // 4. narrow encode projection: weighted text fusion (partition-local
-    //    compiled embedder) + modality blocks. Single-row-group inputs give
-    //    parquet scans ONE task — spread the one-time index build across
-    //    the cluster before the per-row-heavy encode work.
+    //    compiled embedder) + modality blocks. Single-row-group parquet
+    //    scans and row-numbered (global-window) items are ONE partition —
+    //    spread before the per-row-heavy encode, which also leaves the
+    //    persisted index, and so every search scan, on every core.
     val spread = Tables.spread(transformed)
     val withText = Embedders.fuseInto(spread, embedder, textCols, "text_vec")
     val indexed = ProductEncoder.encode(withText, layout).persist()
-    new FuseRankEngine(items, config, profiles, transforms, layout, indexed)
+    new FuseRankEngine(items, config, profiles, transforms, layout, indexed, ownsItemsCache)
   }
 }

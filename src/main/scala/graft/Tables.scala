@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.types._
 
 /** Table access for the driver testdata layout (`TESTDATA.md`): one parquet
@@ -21,21 +23,37 @@ object Tables {
 
   /** Spread a (possibly single-row-group, therefore single-task) scan
     * across the cluster before per-row-heavy narrow work. Round-robin
-    * shuffle; callers re-establish output order downstream.
+    * shuffle to `p = defaultParallelism` partitions; callers re-establish
+    * output order downstream. Never repartitions when p ≤ 1.
     *
-    * Parallelism estimate = optimizer size stats / maxPartitionBytes — the
-    * same quantity the file-scan partitioner uses, so many small files that
-    * Spark packs into few tasks still trigger the spread, and one huge file
-    * (split into many tasks) correctly skips it. Plan-level only: no
-    * plan→RDD conversion, no job, AQE stays in charge. */
+    * Spread when either rule holds:
+    *  - size: the parallelism estimate = optimizer size stats /
+    *    maxPartitionBytes is below p/2 — the same quantity the file-scan
+    *    partitioner uses, so many small files that Spark packs into few
+    *    tasks still trigger the spread, and one huge file (split into many
+    *    tasks) correctly skips it;
+    *  - `SinglePartition`: the physical plan's output partitioning is
+    *    `SinglePartition` — a global window (`Prep.withRowId`), a global
+    *    limit, a `coalesce(1)`, or a cached scan of any of these — so
+    *    every row already sits in one partition, whatever the size says.
+    *
+    * Under AQE the prepared plan is an `AdaptiveSparkPlanExec`, which
+    * reports `UnknownPartitioning` until its stages have run, so the rule
+    * reads its `initialPlan` (exchanges already placed). Fallback: a plan
+    * that reports no partitioning is judged by size alone. Plan-level
+    * only: no plan→RDD conversion, no job. */
   def spread(df: DataFrame): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
-    val estParts = scala.util.Try {
+    def singlePartition = (df.queryExecution.executedPlan match {
+      case aqe: AdaptiveSparkPlanExec => aqe.initialPlan
+      case plan => plan
+    }).outputPartitioning == SinglePartition
+    def estParts = scala.util.Try {
       val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
       val split = BigInt(df.sparkSession.sessionState.conf.filesMaxPartitionBytes)
       ((bytes + split - 1) / split).toLong
     }.getOrElse(p.toLong)
-    if (estParts < p / 2) df.repartition(p) else df
+    if (p > 1 && (estParts < p / 2 || singlePartition)) df.repartition(p) else df
   }
 
   def lineitem(s: SparkSession, d: String): DataFrame  = apply(s, d, "lineitem")

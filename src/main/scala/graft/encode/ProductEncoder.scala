@@ -104,8 +104,8 @@ final case class ImageBlock(name: String, gridW: Int = 4, gridH: Int = 4,
 }
 
 /** Ordered fused-vector layout (reference block concat, src/encode.py:103).
-  * Offsets let a query touch few modalities while the per-block columns
-  * keep Parquet column pruning useful (SURVEY.md §4 physical layout).
+  * Offsets locate each block inside the one fused vector, so a query can
+  * address few modalities (SURVEY.md §4 physical layout).
   */
 final case class VectorLayout(blocks: Seq[Block]) {
   val dim: Int = blocks.map(_.dim).sum
@@ -115,18 +115,14 @@ final case class VectorLayout(blocks: Seq[Block]) {
 
 object ProductEncoder {
 
-  /** Append one column per block (`vec_<block>`) plus the fused vector
-    * (`fused_vec`). Narrow projection — no shuffle; at scale this pipelines
-    * straight into the parquet write.
+  /** Append the fused vector (`fused_vec`): every block's `encode`
+    * concatenated in layout order, and no other column, so a persisted
+    * index holds each block once. Narrow projection — no shuffle; at scale
+    * this pipelines straight into the parquet write.
     */
   def encode(df: DataFrame, layout: VectorLayout,
-             fusedCol: String = "fused_vec"): DataFrame = {
-    val withBlocks = layout.blocks.foldLeft(df) { (d, b) =>
-      d.withColumn(s"vec_${b.name}", b.encode)
-    }
-    withBlocks.withColumn(fusedCol,
-      concat(layout.blocks.map(b => col(s"vec_${b.name}")): _*))
-  }
+             fusedCol: String = "fused_vec"): DataFrame =
+    df.withColumn(fusedCol, concat(layout.blocks.map(_.encode): _*))
 
   /** Layout builder from profiles (modality kinds per Profiler inference). */
   def layoutFor(profiles: Seq[ColumnProfile], params: EncoderParams,

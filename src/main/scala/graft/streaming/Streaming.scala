@@ -20,7 +20,7 @@ import org.apache.spark.sql.Row
 object Streaming {
 
   /** Stateless incremental encode: stream of items → stream of items with
-    * per-block vectors + fused vector (append mode; no state, no shuffle).
+    * the fused vector (append mode; no state, no shuffle).
     * The batch twin is ProductEncoder.encode — SAME layout object, so
     * streamed vectors are bit-identical to a batch rebuild.
     */

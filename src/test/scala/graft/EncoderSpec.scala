@@ -108,6 +108,49 @@ class EncoderSpec extends SparkSpec {
     assert(math.abs(full0 - sum0) < 1e-9)
   }
 
+  test("encode adds only fused_vec: each block's encode alone, concatenated, bit for bit") {
+    import org.apache.spark.sql.functions.{col, element_at, lit, typedLit, when}
+    val img = png(8, 8)((x, y) => x * 20 + y)
+    // −0.0 and NaN in the text vector, −0.0 longitude, NaN price, plus a
+    // null in every aux modality and in the image payload
+    val text = Seq(Seq(0.5, -0.0), Seq(Double.NaN, 1.0), Seq(-0.0, -0.0),
+      Seq(0.0, 0.25), null, Seq(1.0, Double.NegativeInfinity))
+    val df = itemsDf
+      .union(spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+        Row(5L, "pune", "Yes", Double.NaN, -0.0, -0.0)), 1), itemsDf.schema))
+      .withColumn("text_vec", element_at(
+        typedLit(text), (col("id") + 1).cast("int")))
+      .withColumn("img", when(col("id") % 2 === 0, lit(img)))
+    val layout = VectorLayout(Seq(
+      TextBlock("text_vec", 2),
+      SparseBlock("city", Seq("agra", "goa", "pune")),
+      BinaryBlock("booked", "No", "Yes"),
+      DenseBlock("price", 10.0, 100.0, params),
+      GeoBlock("geo", "lon", "lat"),
+      ImageBlock("img", 2, 2)))
+    val encoded = ProductEncoder.encode(df, layout)
+    assert(encoded.columns.toSeq == df.columns.toSeq :+ "fused_vec")
+    def bits(v: Seq[Double]): Seq[Long] =
+      if (v == null) null else v.map(java.lang.Double.doubleToRawLongBits)
+    val fused = encoded.select("id", "fused_vec").collect()
+      .map(r => r.getLong(0) -> bits(r.getSeq[Double](1))).toMap
+    val alone = layout.blocks.map { b =>
+      df.select(col("id"), b.encode).collect()
+        .map(r => r.getLong(0) -> bits(r.getSeq[Double](1))).toMap
+    }
+    assert(fused.size == 6)
+    fused.foreach { case (id, got) =>
+      val blocks = alone.map(_(id))
+      // concat is null when any block is (only the null text vector here)
+      val want = if (blocks.contains(null)) null else blocks.flatten
+      assert(got == want, s"id $id")
+    }
+    assert(fused(4L) == null && fused.values.count(_ == null) == 1)
+    val stored = fused.values.filter(_ != null).flatten.toSet
+    assert(stored.contains(java.lang.Double.doubleToRawLongBits(-0.0)))
+    assert(stored.exists(b => java.lang.Double.longBitsToDouble(b).isNaN))
+  }
+
   test("interval query: rows inside the interval outrank rows far outside") {
     val df = itemsDf
     val layout = VectorLayout(Seq(DenseBlock("price", 10.0, 100.0, params)))

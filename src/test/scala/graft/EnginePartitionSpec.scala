@@ -1,0 +1,115 @@
+package graft
+
+import graft.prep.Prep
+import graft.query._
+import graft.search.Search
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
+
+/** The engine's index is `defaultParallelism` partitions, and no answer
+  * depends on that: every search equals the same top-k over the index
+  * coalesced to one partition, tie order included. Generated rows: every
+  * third row is duplicated (tied scores), and every modality has nulls. */
+class EnginePartitionSpec extends SparkSpec {
+
+  private def p = spark.sparkContext.defaultParallelism
+
+  private val logos = Seq(
+    png(8, 8)((x, _) => x * 30), png(8, 8)((_, y) => y * 30), png(8, 8)((x, y) => (x + y) * 15))
+
+  /** Row-numbered like the loaders (`Prep.withRowId`: one partition). */
+  private def items: DataFrame = {
+    val words = Seq("red", "blue", "green", "pasta", "pizza", "noodle", "cafe")
+    val cities = Seq("agra", "delhi", "goa", "pune")
+    val rows = (0 until 240).flatMap { i =>
+      val row = Row(
+        if (i % 11 == 0) null else s"${words(i % 7)} ${words((i / 7) % 7)}",
+        if (i % 13 == 0) null else s"${words((i + 3) % 7)} dish",
+        if (i % 9 == 0) null else cities(i % 4),
+        if (i % 10 == 0) null else if (i % 3 == 0) "Y" else "N",
+        if (i % 8 == 0) null else (i % 50).toDouble * 10,
+        if (i % 12 == 0) null else Row((i % 36) * 5.0 - 90, (i % 18) * 5.0 - 45),
+        if (i % 7 == 0) null else logos(i % 3))
+      if (i % 3 == 0) Seq(row, row) else Seq(row)
+    }
+    val schema = StructType(Seq(
+      StructField("name", StringType), StructField("desc", StringType),
+      StructField("city", StringType), StructField("flag", StringType),
+      StructField("price", DoubleType),
+      StructField("loc", StructType(Seq(
+        StructField("lon", DoubleType), StructField("lat", DoubleType)))),
+      StructField("logo", BinaryType)))
+    Prep.withRowId(spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema),
+      Seq(col("name"), col("desc"), col("city"), col("flag"), col("price"),
+        col("loc.lon"), col("loc.lat")))
+  }
+
+  private val config = FuseRankConfig(
+    idCol = "row_id",
+    textCols = Map("name" -> 0.6, "desc" -> 0.4),
+    auxCols = Seq("city", "flag", "price", "loc"),
+    imageCols = Seq("logo"),
+    params = graft.encode.EncoderParams(numHarmonics = 4))
+
+  private val queries: Seq[(String, Seq[Filter])] = Seq(
+    ("red pasta", Seq(SparseFilter("city", Seq("agra", "goa")), BinaryFilter("flag", "Y"))),
+    ("blue cafe", Seq(DenseIntervalFilter("price", 100, 300, weight = 1.5),
+      GeoFilter("loc", 10.0, 20.0))),
+    ("green noodle dish", Seq(ImageFilter("logo", logos(1), weight = 2.0),
+      SparseFilter("city", Seq("pune"), negated = true))),
+    ("pizza", Seq.empty))
+
+  private def pairs(df: DataFrame, id: String, score: String): Seq[(Long, Double)] =
+    df.select(col(id).cast("long"), col(score)).collect()
+      .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+
+  test("index is p partitions; search, rerank and searchBatch equal the one-partition index") {
+    assert(p > 1)
+    // a 1-byte split: the byte estimate alone never spreads, so only the
+    // SinglePartition rule can, through the engine's cached items (AQE on)
+    val eng = withConf("spark.sql.files.maxPartitionBytes" -> "1")(FuseRankEngine.index(items, config))
+    try {
+      assert(eng.indexed.rdd.getNumPartitions == p)
+      val one = eng.indexed.coalesce(1)
+      val far = QueryEncoder.sparkFarthest(eng.items, eng.config.geoCols)
+      def encode(text: String, filters: Seq[Filter]) =
+        QueryEncoder.encode(eng.layout, filters.map(f => f.column -> f).toMap,
+          textVec = config.embedder.embed(text), transforms = eng.transforms,
+          farthest = far)
+      val k = 12
+      queries.foreach { case (text, filters) =>
+        val want = pairs(Search.fusedTopK(one, "fused_vec", "row_id", encode(text, filters), k),
+          "row_id", "score")
+        assert(want.map(_._2).distinct.size < k, s"'$text': no tied scores in the top $k")
+        assert(pairs(eng.search(text, filters, k), "row_id", "relevance") == want, s"'$text'")
+
+        val textTop = pairs(Search.fusedTopK(one, "text_vec", "row_id",
+          config.embedder.embed(text), k), "row_id", "score")
+        val rr = pairs(eng.search(text, filters, k, SearchMethod.Reranking), "row_id", "relevance")
+        assert(rr.map(_._1).toSet == textTop.map(_._1).toSet, s"'$text' rerank ids")
+        assert(rr == rr.sortBy { case (id, rel) => (-rel, id) }, s"'$text' rerank order")
+      }
+      val batch = eng.searchBatch(queries, k)
+        .select(col("query_idx"), col("row_id").cast("long"), col("relevance")).collect()
+        .groupBy(_.getInt(0)).view
+        .mapValues(_.map(r => (r.getLong(1), r.getDouble(2))).toSeq).toMap
+      val want = Search.multiTopK(one, "fused_vec", "row_id",
+        queries.map { case (t, f) => encode(t, f) }, k)
+      queries.indices.foreach(qi => assert(batch(qi) == want(qi), s"batch query $qi"))
+    } finally eng.close()
+  }
+
+  test("close() keeps the cache of items the caller persisted") {
+    val cached = items.persist()
+    try {
+      cached.count()
+      val eng = FuseRankEngine.index(cached, config)
+      eng.indexed.count()
+      eng.close()
+      assert(cached.storageLevel != StorageLevel.NONE)
+      assert(eng.indexed.storageLevel == StorageLevel.NONE)
+    } finally { cached.unpersist(); () }
+  }
+}

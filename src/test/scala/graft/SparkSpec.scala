@@ -24,6 +24,18 @@ trait SparkSpec extends AnyFunSuite {
     bos.toByteArray
   }
 
+  /** Run `body` with the given session confs set, restoring the old
+    * values afterwards. */
+  protected def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** Hex md5 of a UTF-8 string — the driver-side twin of Spark/DuckDB
     * `md5(text)` used wherever a spec pins a rewritten text by hash. */
   protected def md5hex(s: String): String =
