@@ -55,20 +55,7 @@ object Bench {
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec",
       org.apache.logging.log4j.Level.ERROR)
-    // JVM/JIT + scheduler warmup (not query work) — doubles as the
-    // AMBIENT-LOAD CALIBRATION probe: the probe's workload never changes,
-    // so its time varies only with machine load. Recording it in the bench
-    // JSON lets a reader separate co-tenant noise from code regressions
-    // mechanically (BENCH_r06's uniform ~1.5× inflation vs the quiet
-    // BASELINE medians was exactly this). Median of 3 de-noises the probe;
-    // the first (discarded) run is the JIT warmup.
-    def calibProbe(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(4000000L)
-        .selectExpr("sum(cast(id as double) * id)", "count(distinct id % 1024)").collect()
-      (System.nanoTime() - t0) / 1e9
-    }
-    calibProbe() // JIT warmup, discarded
+    calibProbe(spark) // JIT warmup, discarded
     val calibBase = sys.env.get("SPARK_GRAFT_CALIB_BASELINE")
       .map(_.toDouble).getOrElse(CalibrationBaseline)
     // validate NOW, not at the final println: a zero/NaN baseline would
@@ -116,7 +103,7 @@ object Bench {
     /** One full measured suite pass-set: probe the ambient load, run all
       * reps, return (probe median, per-query samples, errors, wall). */
     def measureAttempt(): (Double, Map[String, Vector[Double]], Map[String, String], Double) = {
-      val calibration = Seq(calibProbe(), calibProbe(), calibProbe()).sorted.apply(1)
+      val calibration = calibMedian(spark)
       val samples = TrieMap.empty[String, Vector[Double]]
       val errors = TrieMap.empty[String, String]
 
@@ -260,6 +247,23 @@ object Bench {
     println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","calibration":${fmt(calibration)},"calib_ratio":${fmt(calibRatio)},"attempts":$attempts,"calib_retries_exhausted":$retriesExhausted,"queries":$qs,"errors":$errs,"sf":"$sfDir"}""")
     spark.stop()
   }
+
+  /** The AMBIENT-LOAD CALIBRATION probe, in seconds: the probe's workload
+    * never changes, so its time varies only with machine load. Recording
+    * it beside a measurement lets a reader separate co-tenant noise from
+    * code regressions mechanically (BENCH_r06's uniform ~1.5× inflation vs
+    * the quiet BASELINE medians was exactly this). Its first run in a JVM
+    * is the JIT and scheduler warmup: run it once and discard that. */
+  def calibProbe(spark: SparkSession): Double = {
+    val t0 = System.nanoTime()
+    spark.range(4000000L)
+      .selectExpr("sum(cast(id as double) * id)", "count(distinct id % 1024)").collect()
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  /** Median of 3 [[calibProbe]] runs: one slow run does not move it. */
+  def calibMedian(spark: SparkSession): Double =
+    Seq(calibProbe(spark), calibProbe(spark), calibProbe(spark)).sorted.apply(1)
 
   /** Bench's session: [[LocalSpark]] with AQE off, the data-sized split
     * and any SPARK_GRAFT_BENCH_CONF pairs. `graft.Trace` runs on the same

@@ -27,11 +27,13 @@ import org.apache.spark.storage.StorageLevel
   *
   * Index build (reference §3.2): ONE profile aggregation + optional
   * transform fit + a narrow encode projection, persisted as `indexed`:
-  * the (transformed) item columns, `text_vec` and one `fused_vec` per
-  * row, in `defaultParallelism` partitions ([[Tables.spread]]), so every
-  * scan of it runs on every core. Search (reference §3.1): driver-built
-  * query vector → scan + top-k (TakeOrderedAndProject — per-partition
-  * heaps, no shuffle) → broadcast gather join.
+  * the raw item columns under their own names, `text_vec` and one
+  * `fused_vec` per row, in `defaultParallelism` partitions
+  * ([[Tables.spread]]), so every scan of it runs on every core. Search
+  * (reference §3.1): driver-built query vector → one scan + top-k
+  * (TakeOrderedAndProject — per-partition heaps, no shuffle) whose
+  * projection outputs the answer rows themselves (the reference's iloc
+  * gather); Reranking then ranks those k rows in the same job.
   */
 sealed trait SearchMethod
 object SearchMethod {
@@ -76,9 +78,11 @@ final class FuseRankEngine private (
   import config._
 
   /** One search (reference do_search, src/app.py:73-89). Returns the top-k
-    * item rows with a `relevance` column, sorted descending. */
+    * item rows with a `relevance` column, sorted descending; lazy, and one
+    * Spark job unless a GeoFilter needs the farthest item first. */
   def search(queryText: String, filters: Seq[Filter], k: Int = 10,
              method: SearchMethod = SearchMethod.Retrieval): DataFrame = {
+    Search.requireTopK(k, shortlist = 0)
     val textVec = embedder.embed(queryText)
     val fmap = filters.map(f => f.column -> f).toMap
     method match {
@@ -87,17 +91,17 @@ final class FuseRankEngine private (
           transforms = transforms,
           farthest = QueryEncoder.sparkFarthest(items, geoCols),
           params = QueryEncoder.Params(params.intervalEpsilon, params.rangeEpsilon))
-        val top = Search.fusedTopK(indexed, "fused_vec", idCol, q, k)
+        Search.fusedTopK(indexed, "fused_vec", idCol, q, k, itemCols.map(col))
           .withColumnRenamed("score", "relevance")
-        gather(items, top).orderBy(col("relevance").desc, col(idCol))
       case SearchMethod.Reranking =>
         // text-only retrieval (aux blocks skipped: reference gates encode on
-        // method, src/encode.py:68,132), then window re-rank of the k rows
-        val top = Search.fusedTopK(indexed, "text_vec", idCol, textVec, k)
+        // method, src/encode.py:68,132), whose k answer rows carry the
+        // transformed values re-ranking compares (reference transformed_df)
+        val top = Search.fusedTopK(indexed, "text_vec", idCol, textVec, k,
+            itemCols.map(c => transforms.get(c).fold(col(c))(t => t(col(c)).as(c))))
           .withColumnRenamed("score", "relevance")
-        val gathered = gather(itemsTransformed, top)
         val minMax = profiles.map { case (c, p) => c -> (p.min, p.max) }
-        // Dense filter values arrive in ORIGINAL units; the gathered columns
+        // Dense filter values arrive in ORIGINAL units; the answer columns
         // and profile min/max are in TRANSFORMED scale — map the bounds
         // through the fitted transform first, exactly as the reference
         // transforms bounds before encode_query AND encode_result
@@ -119,7 +123,7 @@ final class FuseRankEngine private (
         val imageBlocks = layout.blocks.collect {
           case b: ImageBlock => b.name -> b
         }.toMap
-        Rerank.rerank(gathered, scaledFilters, minMax, geoCols, imageBlocks)
+        Rerank.rerank(top, scaledFilters, minMax, geoCols, imageBlocks)
           .orderBy(col("relevance").desc, col(idCol))
     }
   }
@@ -155,20 +159,12 @@ final class FuseRankEngine private (
       .orderBy(col("query_idx"), col("relevance").desc, col(idCol))
   }
 
-  /** Gather the full item rows for the k hits (reference iloc gather,
-    * src/app.py:80). The k-row top-k is the SMALL side — broadcast IT and
-    * stream the items table; at 100 TB broadcasting items would OOM every
-    * executor, while a k≤200-row broadcast is constant-size at any scale.
-    * Reselected to (id, relevance, item columns) so the output schema is
-    * join-order independent. */
-  private def gather(itemTable: DataFrame, top: DataFrame): DataFrame = {
-    val itemCols = itemTable.columns.filterNot(_ == idCol).map(col)
-    itemTable.join(broadcast(top), Seq(idCol))
-      .select(col(idCol) +: col("relevance") +: itemCols.toSeq: _*)
-  }
+  /** The item columns an answer row carries after its id and relevance. */
+  private def itemCols: Seq[String] = items.columns.toSeq.filterNot(_ == idCol)
 
   /** Items with fitted transforms applied (reference transformed_df,
-    * src/load.py:37-42) — what re-ranking ranks against. */
+    * src/load.py:37-42) — the values re-ranking ranks; a Reranking
+    * `search` applies the same `t(col(c))` to its k answer rows only. */
   lazy val itemsTransformed: DataFrame =
     transforms.foldLeft(items) { case (df, (c, t)) => df.withColumn(c, t(col(c))) }
 
@@ -189,7 +185,7 @@ object FuseRankEngine {
   def index(rawItems: DataFrame, config0: FuseRankConfig): FuseRankEngine = {
     // The item table feeds FOUR independent consumers over the engine's
     // life — the profile aggregation, the (optional) transform fit, the
-    // encode projection, and every search's gather join (plus the geo
+    // encode projection, and every searchBatch gather join (plus the geo
     // farthest-point scan) — and the common callers hand us a multiLine
     // CSV scan under a global-sort row_id window, so each consumer
     // re-parsed the file single-task and re-ran the sort. Persist for the
@@ -262,10 +258,21 @@ object FuseRankEngine {
     //    compiled embedder) + modality blocks. Single-row-group parquet
     //    scans and row-numbered (global-window) items are ONE partition —
     //    spread before the per-row-heavy encode, which also leaves the
-    //    persisted index, and so every search scan, on every core.
-    val spread = Tables.spread(transformed)
-    val withText = Embedders.fuseInto(spread, embedder, textCols, "text_vec")
-    val indexed = ProductEncoder.encode(withText, layout).persist()
+    //    persisted index, and so every search scan, on every core. The
+    //    encode reads transformed values, but the index keeps every item
+    //    column RAW under its own name — a search's answer rows come
+    //    straight from it — so a transformed column's raw value rides the
+    //    encode under an internal name.
+    val raw = transforms.keys.toSeq.map(c => c -> s"__raw_$c").toMap
+    val encodeIn = transforms.foldLeft(Tables.spread(items)
+        .select(col("*") +: raw.toSeq.map { case (c, r) => col(c).as(r) }: _*)) {
+      case (df, (c, t)) => df.withColumn(c, t(col(c)))
+    }
+    val withText = Embedders.fuseInto(encodeIn, embedder, textCols, "text_vec")
+    val indexed = ProductEncoder.encode(withText, layout)
+      .select(items.columns.toSeq.map(c => raw.get(c).fold(col(c))(r => col(r).as(c))) ++
+        Seq(col("text_vec"), col("fused_vec")): _*)
+      .persist()
     new FuseRankEngine(items, config, profiles, transforms, layout, indexed, ownsItemsCache)
   }
 }

@@ -10,6 +10,9 @@ import org.apache.spark.sql.graft.QueryTrace
   * runs once untraced to warm up, then the caches are cleared and it runs
   * once traced, counted like Bench counts it. A query that throws keeps
   * its line, with an `error` field and the jobs it ran before failing.
+  * The first line is the host calibration, `{"calibration_s": …}`:
+  * [[Bench.calibMedian]] after one discarded [[Bench.calibProbe]], so
+  * two traces from different hosts or loads can be told apart.
   *
   * Usage: `runMain graft.Trace <sfDir> [query…]`; the committed
   * `traces/sf0.1.jsonl` is this main's output on sf0.1.
@@ -20,6 +23,8 @@ object Trace {
     val sfDir = args.head
     val names = args.tail.toSet
     val spark = Bench.session(sfDir)
+    Bench.calibProbe(spark)
+    println(QueryTrace.jsonObject(Seq("calibration_s" -> Bench.calibMedian(spark).toString)))
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => names.isEmpty || names(name) }
       .foreach { case (name, fn) =>

@@ -107,10 +107,10 @@ object Flipkart {
         "product_specifications")
     // EVERY prep output is a row_id ordering key: a bug anywhere in the
     // prep chain reorders ids and fails the hash
-    // persisted: the engine lifecycle scans items several times (profile
-    // aggregate, encode projection, gather join) and each action would
-    // otherwise re-read + re-prep the gzip CSV (non-splittable scan);
-    // released with the index below
+    // persisted: the engine lifecycle scans items more than once (profile
+    // aggregate, encode projection; the search itself reads only the
+    // index) and each scan would otherwise re-read + re-prep the gzip CSV
+    // (non-splittable scan); released with the index below
     val items = Prep.withRowId(shaped, Seq(
       col("product_name"), col("brand"), col("description"),
       col("product_category_1"), col("product_category_2"),

@@ -37,17 +37,19 @@ object Search {
   def asDouble(a: Column): Column = a.cast("array<double>")
 
   /** K1: exact inner-product top-k of a literal query vector against a
-    * vector table. Physical plan: scan → project(score) →
-    * TakeOrderedAndProject (scales: no shuffle, k-sized heaps only).
+    * vector table: (id, score, `out`…) for the k best rows, in (score desc,
+    * id) order. Physical plan: scan → project(score) →
+    * TakeOrderedAndProject (scales: no shuffle, k-sized heaps only), whose
+    * projection evaluates `out` for the k answer rows only.
     */
   def fusedTopK(vectors: DataFrame, vecCol: String, idCol: String,
-                q: Array[Double], k: Int): DataFrame = {
+                q: Array[Double], k: Int, out: Seq[Column] = Nil): DataFrame = {
     val score = dot(asDouble(col(vecCol)), typedLit(q))
     vectors
       .withColumn("score", round(score, 5) + 0.0) // collapse IEEE −0.0
       .orderBy(col("score").desc, col(idCol))
       .limit(k)
-      .select(col(idCol), col("score"))
+      .select(col(idCol) +: col("score") +: out: _*)
   }
 
   /** Batched exact top-k: ONE scan of the vector table answers every query
@@ -78,7 +80,7 @@ object Search {
                 eligible: Seq[Column] = Nil,
                 roundScores: Boolean = true,
                 scoreExpr: (Column, Array[Double]) => Column = null): IndexedSeq[Seq[(Long, Double)]] = {
-    require(k > 0, s"k must be positive: $k")
+    requireTopK(k, shortlist = 0)
     require(eligible.isEmpty || eligible.size == queries.size,
       s"eligible size ${eligible.size} != queries size ${queries.size}")
     // tie-break and the downstream gather are by LONG id: a non-integral

@@ -1,5 +1,6 @@
 package graft
 
+import graft.encode.ImageBlock
 import graft.prep.Prep
 import graft.query._
 import graft.search.Search
@@ -18,6 +19,7 @@ class EnginePartitionSpec extends SparkSpec {
 
   private val logos = Seq(
     png(8, 8)((x, _) => x * 30), png(8, 8)((_, y) => y * 30), png(8, 8)((x, y) => (x + y) * 15))
+  private val undecodable = Array[Byte](1, 2, 3)
 
   /** Row-numbered like the loaders (`Prep.withRowId`: one partition). */
   private def items: DataFrame = {
@@ -31,7 +33,7 @@ class EnginePartitionSpec extends SparkSpec {
         if (i % 10 == 0) null else if (i % 3 == 0) "Y" else "N",
         if (i % 8 == 0) null else (i % 50).toDouble * 10,
         if (i % 12 == 0) null else Row((i % 36) * 5.0 - 90, (i % 18) * 5.0 - 45),
-        if (i % 7 == 0) null else logos(i % 3))
+        if (i % 7 == 0) null else if (i % 17 == 0) undecodable else logos(i % 3))
       if (i % 3 == 0) Seq(row, row) else Seq(row)
     }
     val schema = StructType(Seq(
@@ -51,6 +53,7 @@ class EnginePartitionSpec extends SparkSpec {
     textCols = Map("name" -> 0.6, "desc" -> 0.4),
     auxCols = Seq("city", "flag", "price", "loc"),
     imageCols = Seq("logo"),
+    presetTransforms = Map("price" -> graft.transform.Log2p1),
     params = graft.encode.EncoderParams(numHarmonics = 4))
 
   private val queries: Seq[(String, Seq[Filter])] = Seq(
@@ -111,5 +114,112 @@ class EnginePartitionSpec extends SparkSpec {
       assert(cached.storageLevel != StorageLevel.NONE)
       assert(eng.indexed.storageLevel == StorageLevel.NONE)
     } finally { cached.unpersist(); () }
+  }
+
+  /** Every value of a row, doubles by their bits and payloads by their
+    * bytes, so two answers compare bit for bit. */
+  private def bits(v: Any): Any = v match {
+    case d: Double => java.lang.Double.doubleToRawLongBits(d)
+    case b: Array[Byte] => b.toSeq
+    case r: Row => r.toSeq.map(bits)
+    case other => other
+  }
+  private def rows(df: DataFrame): Seq[Seq[Any]] = df.collect().toSeq.map(r => r.toSeq.map(bits))
+
+  test("answer rows: Retrieval = the items gather, Reranking = the window twin on transformed rows") {
+    val eng = FuseRankEngine.index(items, config)
+    try {
+      assert(eng.transforms.keySet == Set("price"))
+      val itemCols = eng.items.columns.filterNot(_ == "row_id").map(col).toSeq
+      def gather(table: DataFrame, top: DataFrame) =
+        table.join(broadcast(top.withColumnRenamed("score", "relevance")), Seq("row_id"))
+          .select(col("row_id") +: col("relevance") +: itemCols: _*)
+      val far = QueryEncoder.sparkFarthest(eng.items, eng.config.geoCols)
+      val t = eng.transforms("price")
+      val minMax = eng.profiles.map { case (c, p) => c -> (p.min, p.max) }
+      val imageBlocks = eng.layout.blocks.collect { case b: ImageBlock => b.name -> b }.toMap
+      val k = 12
+      queries.foreach { case (text, filters) =>
+        val q = QueryEncoder.encode(eng.layout, filters.map(f => f.column -> f).toMap,
+          textVec = config.embedder.embed(text), transforms = eng.transforms, farthest = far)
+        val retrieval = rows(eng.search(text, filters, k))
+        assert(retrieval == rows(gather(eng.items,
+            Search.fusedTopK(eng.indexed, "fused_vec", "row_id", q, k))
+          .orderBy(col("relevance").desc, col("row_id"))), s"'$text' retrieval rows")
+
+        val scaled = filters.map {
+          case f: DenseIntervalFilter if f.column == "price" =>
+            f.copy(lo = t.applyScalar(f.lo), hi = t.applyScalar(f.hi))
+          case f => f
+        }
+        val top = Search.fusedTopK(eng.indexed, "text_vec", "row_id",
+          config.embedder.embed(text), k)
+        val twin = ReferenceTwins.RerankWindows.rerank(gather(eng.itemsTransformed, top),
+            scaled, minMax, eng.config.geoCols, imageBlocks)
+          .orderBy(col("relevance").desc, col("row_id"))
+        assert(rows(eng.search(text, filters, k, SearchMethod.Reranking)) == rows(twin),
+          s"'$text' reranking rows")
+      }
+    } finally eng.close()
+  }
+
+  test("a search without a GeoFilter is one Spark job, for both methods") {
+    val eng = FuseRankEngine.index(items, config)
+    try {
+      eng.indexed.count()
+      for ((text, filters) <- queries if !filters.exists(_.isInstanceOf[GeoFilter]);
+           method <- Seq(SearchMethod.Retrieval, SearchMethod.Reranking)) {
+        val (_, trace) = org.apache.spark.sql.graft.QueryTrace.during(spark, text)(
+          eng.search(text, filters, 12, method).collect())
+        assert(trace.jobs.size == 1, s"'$text' $method: ${trace.jobs}")
+      }
+    } finally eng.close()
+  }
+
+  test("k: non-positive is a named error, past n returns all n rows in (relevance desc, id) order") {
+    val eng = FuseRankEngine.index(items, config)
+    try {
+      val n = eng.indexed.count()
+      val (text, filters) = queries(1)
+      for (bad <- Seq(0, -3)) {
+        for (method <- Seq(SearchMethod.Retrieval, SearchMethod.Reranking)) {
+          val e = intercept[IllegalArgumentException](eng.search(text, filters, bad, method))
+          assert(e.getMessage.contains("k must be positive"), e.getMessage)
+        }
+        val e = intercept[IllegalArgumentException](eng.searchBatch(queries, bad))
+        assert(e.getMessage.contains("k must be positive"), e.getMessage)
+      }
+      for (method <- Seq(SearchMethod.Retrieval, SearchMethod.Reranking)) {
+        val got = eng.search(text, filters, n.toInt + 50, method)
+          .select(col("row_id").cast("long"), col("relevance")).collect()
+          .map(r => (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toSeq
+        assert(got.size == n, s"$method")
+        // Spark's order: relevance desc (NaN first, null last), then id
+        val want = got.sortWith { case ((ia, ra), (ib, rb)) =>
+          val c = (ra, rb) match {
+            case (Some(a), Some(b)) => java.lang.Double.compare(b, a)
+            case (None, Some(_)) => 1
+            case (Some(_), None) => -1
+            case _ => 0
+          }
+          c < 0 || (c == 0 && ia < ib)
+        }
+        assert(got == want, s"$method order")
+      }
+    } finally eng.close()
+  }
+
+  test("k = 1 re-ranking: a ranked modality gives null relevance, a skipped one keeps the score") {
+    val eng = FuseRankEngine.index(items, config)
+    try {
+      def one(filters: Filter*): Row =
+        eng.search("red pasta", filters, 1, SearchMethod.Reranking)
+          .select("row_id", "relevance", "city").collect().toSeq match { case Seq(r) => r }
+      val hit = one()
+      assert(one(DensePointFilter("price", 120.0)).isNullAt(1))
+      assert(!hit.isNullAt(2), "the top row needs a city")
+      assert(one(SparseFilter("city", Seq(hit.getString(2)))).isNullAt(1))
+      assert(one(SparseFilter("city", Seq("nowhere"))) == hit)
+    } finally eng.close()
   }
 }

@@ -14,7 +14,7 @@ import graft.queries.Registry
   *    final determinism ORDER BY (range partitioning) — never a
   *    hash-partitioning exchange;
   *  - small-side joins (k3 dim table, x11 probe grams, x19 per-term df)
-  *    broadcast instead of sort-merge; flip1's spine (gather broadcast,
+  *    broadcast instead of sort-merge; flip1's spine (no gather join,
   *    top-k shape, single ingest window) is pinned by its own test below;
   *  - top-k queries (k1/fr6/x19) plan TakeOrderedAndProject (per-partition
   *    heaps, no global sort);
@@ -201,26 +201,29 @@ class PlanSpec extends SparkSpec {
       s"x24's corpus rows should pay exactly the two window shuffles:\n$p")
   }
 
-  // r10 ask #8: rr1/rr2 run ≤50-row unpartitioned windows BY DESIGN — the
-  // safety claim is that every such window sits ABOVE the k-bounded top-k
-  // cut, so the corpus side never routes through a single partition. Pin
-  // it structurally: each zero-partitionSpec WindowExec must have a
-  // TakeOrderedAndProject (or a global Limit) somewhere in its subtree.
+  // r10 ask #8: rr1/rr2 re-rank ≤50 rows in ONE partition BY DESIGN — the
+  // safety claim is that this single-partition step sits ABOVE the
+  // k-bounded top-k cut, so the corpus side never routes through a single
+  // partition. The rank step is no longer a chain of unpartitioned windows
+  // but one function after `coalesce(1)`: pin that no window is left and
+  // that every one-partition Coalesce has a TakeOrderedAndProject (or a
+  // global Limit) somewhere in its subtree.
   for (n <- Seq("rr1_rerank_pipeline", "rr2_geo_rerank"))
     test(s"$n: unpartitioned rerank windows are k-bounded by the top-k cut") {
       import org.apache.spark.sql.execution.window.WindowExec
-      import org.apache.spark.sql.execution.{BaseLimitExec, TakeOrderedAndProjectExec}
+      import org.apache.spark.sql.execution.{BaseLimitExec, CoalesceExec, TakeOrderedAndProjectExec}
       val p = sparkPlan(n)
-      val wins = p.collect { case w: WindowExec if w.partitionSpec.isEmpty => w }
-      assert(wins.nonEmpty, s"$n lost its rerank windows entirely:\n$p")
-      wins.foreach { w =>
-        val bounded = w.collectFirst {
+      assert(p.collect { case w: WindowExec => w }.isEmpty, s"$n grew a window:\n$p")
+      val ones = p.collect { case c: CoalesceExec if c.numPartitions == 1 => c }
+      assert(ones.nonEmpty, s"$n lost its one-partition rank step:\n$p")
+      ones.foreach { c =>
+        val bounded = c.collectFirst {
           case t: TakeOrderedAndProjectExec => t
           case l: BaseLimitExec => l
         }
         assert(bounded.nonEmpty,
-          s"$n has an unpartitioned window with NO k-bounding limit below it " +
-            s"— the corpus would flow through one partition:\n$w")
+          s"$n has a one-partition rank step with NO k-bounding limit below it " +
+            s"— the corpus would flow through one partition:\n$c")
       }
     }
 
@@ -421,14 +424,16 @@ class PlanSpec extends SparkSpec {
     }
   }
 
-  test("flip1 spine: broadcast gather, TakeOrderedAndProject top-k, one ingest window") {
+  test("flip1 spine: no gather join, TakeOrderedAndProject top-k, one ingest window") {
     // the lazy lifecycle (the query fn materializes before closing the
     // engine, leaving only a LocalTableScan — lazySearch exposes the plan)
     val (out, close) = graft.queries.Flipkart.lazySearch(spark)
     try {
       val p = out.queryExecution.executedPlan.toString
       assert(p.contains("TakeOrderedAndProject"), s"flip1 lost its top-k:\n$p")
-      assert(p.contains("BroadcastHashJoin"), s"flip1's gather lost its broadcast:\n$p")
+      // the top-k projection outputs the answer rows: no join of any kind
+      assert(!p.contains("BroadcastHashJoin") && !p.contains("BroadcastExchange"),
+        s"flip1 grew a gather join:\n$p")
       assert(!p.contains("SortMergeJoin"), s"flip1 degraded to sort-merge:\n$p")
       assert(!p.contains("CartesianProduct"), s"flip1 grew a cartesian:\n$p")
       assert(p.contains("FileScan csv"), s"flip1 lost the CSV ingest scan:\n$p")

@@ -8,6 +8,11 @@ of actions, jobs, wall_ms and gap_ms, then the totals over the tags both files
 hold. Tags named on the command line restrict the table (not the totals'
 meaning: the totals cover the listed tags only). A tag missing from one file
 shows "-" on that side and is left out of the totals.
+
+First it prints each file's host calibration (graft.Trace's first line, the
+Bench calibration probe median in seconds; "-" for a file without one) and
+their ratio new/old: a ratio far from 1 means the walls differ by host load
+as well as by code. The calibration is not a tag and is in no total.
 """
 import json
 import sys
@@ -16,14 +21,18 @@ FIELDS = ("actions", "jobs", "wall_ms", "gap_ms")
 
 
 def load(path):
-    rows = {}
+    """(rows by tag, calibration seconds or None)."""
+    rows, calib = {}, None
     with open(path) as f:
         for line in f:
             line = line.strip()
             if line.startswith("{"):
                 r = json.loads(line)
-                rows[r["tag"]] = r
-    return rows
+                if "calibration_s" in r:
+                    calib = r["calibration_s"]
+                else:
+                    rows[r["tag"]] = r
+    return rows, calib
 
 
 def fmt(v):
@@ -44,7 +53,10 @@ def main(argv):
     if len(argv) < 3:
         print(__doc__.strip(), file=sys.stderr)
         return 2
-    old, new = load(argv[1]), load(argv[2])
+    (old, old_calib), (new, new_calib) = load(argv[1]), load(argv[2])
+    ratio = f"{new_calib / old_calib:.2f}" if old_calib and new_calib else "-"
+    secs = [("-" if c is None else f"{c:.3f}") for c in (old_calib, new_calib)]
+    print(f"calibration_s  {secs[0]} -> {secs[1]}  (ratio new/old {ratio})")
     tags = argv[3:] or sorted(set(old) | set(new))
     width = max([len(t) for t in tags] + [5])
     print(f"{'tag':<{width}}  " + "  ".join(f"{f:<26}" for f in FIELDS))
