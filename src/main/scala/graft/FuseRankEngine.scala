@@ -7,7 +7,10 @@ import graft.rerank.Rerank
 import graft.search.Search
 import graft.transform.{FittedTransform, Transforms}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanLeaf
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** The user-facing engine — the reference's end-to-end lifecycle
@@ -128,15 +131,18 @@ final class FuseRankEngine private (
     }
   }
 
-  /** Batched retrieval: P queries answered in ONE scan of the index
-    * (Search.multiTopK — in-plan codegen dots, per-partition bounded
-    * heaps), then ONE broadcast gather of all P·k hit rows. The serving
-    * shape for query batches: per-query cost amortizes to 1/P of a scan
-    * instead of a scan job each (the reference answers its batches one
-    * FAISS search at a time, src/eval/experiment.py:27-28). Results are
-    * bit-identical to P [[search]] calls in Retrieval mode — same encode,
-    * same rounded scores, same (relevance desc, id) order — with a
-    * `query_idx` column (position in `queries`) prepended. */
+  /** Batched retrieval: P queries answered in ONE scan of the index, one
+    * Spark job (Search.multiTopKRows — in-plan codegen dots, per-partition
+    * bounded heaps that keep the answer rows themselves, read from the
+    * index's raw item columns). The merged P·k rows come back as a local
+    * relation, already in (query_idx, relevance desc, id) order, so
+    * collecting it runs no further job. The serving shape for query
+    * batches: per-query cost amortizes to 1/P of a scan instead of a scan
+    * job each (the reference answers its batches one FAISS search at a
+    * time, src/eval/experiment.py:27-28). Results are bit-identical to P
+    * [[search]] calls in Retrieval mode — same encode, same rounded
+    * scores, same (relevance desc, id) order — with a `query_idx` column
+    * (position in `queries`) prepended. Eager: the scan runs here. */
   def searchBatch(queries: Seq[(String, Seq[Filter])], k: Int = 10): DataFrame = {
     val far = QueryEncoder.sparkFarthest(items, geoCols)
     val qs = queries.map { case (text, filters) =>
@@ -145,18 +151,15 @@ final class FuseRankEngine private (
         farthest = far,
         params = QueryEncoder.Params(params.intervalEpsilon, params.rangeEpsilon))
     }
-    val tops = Search.multiTopK(indexed, "fused_vec", idCol, qs, k)
-    val spark = items.sparkSession
-    import spark.implicits._
-    val hits = tops.zipWithIndex.flatMap { case (rs, qi) =>
-      rs.map { case (id, s) => (qi, id, s) }
-    }.toDF("query_idx", "__hit_id", "relevance")
-      .withColumn("__hit_id", col("__hit_id").cast(items.schema(idCol).dataType))
-      .withColumnRenamed("__hit_id", idCol)
-    val itemCols = items.columns.filterNot(_ == idCol).map(col)
-    items.join(broadcast(hits), Seq(idCol))
-      .select(col("query_idx") +: col(idCol) +: col("relevance") +: itemCols.toSeq: _*)
-      .orderBy(col("query_idx"), col("relevance").desc, col(idCol))
+    val (out, tops) = Search.multiTopKRows(indexed, "fused_vec", idCol, qs, k,
+      (idCol +: itemCols).map(col))
+    val rows = for ((hits, qi) <- tops.zipWithIndex; h <- hits) yield {
+      val v = h.out.toSeq(out)
+      InternalRow.fromSeq(qi +: v.head +: h.score +: v.tail)
+    }
+    PlanLeaf.local(items.sparkSession, StructType(
+      StructField("query_idx", IntegerType, nullable = false) +: out.head +:
+        StructField("relevance", DoubleType, nullable = false) +: out.tail), rows)
   }
 
   /** The item columns an answer row carries after its id and relevance. */
@@ -185,13 +188,13 @@ object FuseRankEngine {
   def index(rawItems: DataFrame, config0: FuseRankConfig): FuseRankEngine = {
     // The item table feeds FOUR independent consumers over the engine's
     // life — the profile aggregation, the (optional) transform fit, the
-    // encode projection, and every searchBatch gather join (plus the geo
-    // farthest-point scan) — and the common callers hand us a multiLine
-    // CSV scan under a global-sort row_id window, so each consumer
-    // re-parsed the file single-task and re-ran the sort. Persist for the
-    // engine lifetime; released in close() with the index — unless the
-    // caller already persisted it: persist() is then a no-op, and the
-    // cache is the caller's to release.
+    // encode projection, and the farthest-point scan of every search or
+    // batch with a GeoFilter (answer rows come from the index) — and the
+    // common callers hand us a multiLine CSV scan under a global-sort
+    // row_id window, so each consumer would re-parse the file single-task
+    // and re-run the sort. Persist for the engine lifetime; released in
+    // close() with the index — unless the caller already persisted it:
+    // persist() is then a no-op, and the cache is the caller's to release.
     val ownsItemsCache = rawItems.storageLevel == StorageLevel.NONE
     val items = if (ownsItemsCache) rawItems.persist() else rawItems
     // Geolocation inference from the schema (reference infers geolocation

@@ -6,6 +6,7 @@ import graft.query._
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Param.param
 import org.apache.spark.sql.types.{DoubleType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -15,12 +16,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * modality-specific sort key: relevance += (2·(rank−1)/(n−1) − 1) · weight.
   *
   * Each row's sort key is a Column expression, projected in the result's
-  * own stage. What needs the whole result set (the pandas average-tie
-  * rank, n, the sparse any-match and the geo farthest point) is one
-  * function over the k rows ([[rankRows]]), applied in-plan after
-  * `coalesce(1)`: a re-ranked search stays lazy and runs as one job. The
-  * function sees every row in one task, so it is for result sets of
-  * k ≤ 100 rows, never for unbounded data.
+  * own stage. Filter values enter it as [[param]]s, not literals, so the
+  * projection's generated code does not depend on them: searches that
+  * differ only in filter values reuse one compiled class. What needs the
+  * whole result set (the pandas average-tie rank, n, the sparse any-match
+  * and the geo farthest point) is one function over the k rows
+  * ([[rankRows]]), applied in-plan after `coalesce(1)`: a re-ranked
+  * search stays lazy and runs as one job. The function sees every row in
+  * one task, so it is for result sets of k ≤ 100 rows, never for
+  * unbounded data.
   */
 object Rerank {
 
@@ -63,11 +67,11 @@ object Rerank {
       case DensePointFilter(_, v, negated, _) =>
         if (v == colMax) byKey(c, ascending = true)
         else if (v == colMin) byKey(c, ascending = false)
-        else byKey(coalesce(abs(lit(v) - c), lit(Double.MaxValue)), ascending = negated)
+        else byKey(coalesce(abs(param(v) - c), lit(Double.MaxValue)), ascending = negated)
       // R2 dense interval (reference src/encode.py:225-231)
       case DenseIntervalFilter(_, lo, hi, negated, _) =>
         byKey(coalesce(
-          when(c.between(lo, hi), Double.MinPositiveValue).otherwise(c),
+          when(c.between(param(lo), param(hi)), Double.MinPositiveValue).otherwise(c),
           lit(Double.MaxValue)), ascending = negated)
       // R3 geolocation (reference src/encode.py:232-246): is_ascending =
       // NOT negated (reference :234) — closest rows get the highest dot →
@@ -78,12 +82,12 @@ object Rerank {
         // null location → zero cartesian (reference _geospatial_to_cartesian
         // returns zeros for None), so the key degenerates to the shift dim
         val dotQ =
-          coalesce(Geo.cartesianX(col(lonCol), col(latCol)), lit(0.0)) * qx(0) +
-            coalesce(Geo.cartesianY(col(lonCol), col(latCol)), lit(0.0)) * qx(1) +
-            coalesce(Geo.cartesianZ(col(lonCol), col(latCol)), lit(0.0)) * qx(2)
+          coalesce(Geo.cartesianX(col(lonCol), col(latCol)), lit(0.0)) * param(qx(0)) +
+            coalesce(Geo.cartesianY(col(lonCol), col(latCol)), lit(0.0)) * param(qx(1)) +
+            coalesce(Geo.cartesianZ(col(lonCol), col(latCol)), lit(0.0)) * param(qx(2))
         Some(Term(None, Seq(
           col(lonCol).isNull || col(latCol).isNull,
-          Geo.haversine(col(lonCol), col(latCol), lit(lon), lit(lat)),
+          Geo.haversine(col(lonCol), col(latCol), param(lon), param(lat)),
           col(lonCol).cast("double"), col(latCol).cast("double"), dotQ),
           GeoKey(qx, ascending = !negated), f.weight))
       // R4 binary (reference src/encode.py:247-254): match → smallest
@@ -124,7 +128,7 @@ object Rerank {
         val vecName = s"__rerank_img_$i"
         val vec = col(vecName)
         val cosine = qsig.zipWithIndex
-          .map { case (s, j) => element_at(vec, j + 1) * lit(s) }
+          .map { case (s, j) => element_at(vec, j + 1) * param(s) }
           .reduce(_ + _)
         val signedCos = if (img.negated) -cosine else cosine
         Some(Term(Some(vecName -> b.encode),

@@ -1,8 +1,11 @@
 package graft.search
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types._
 
 /** Exact inner-product / cosine search (reference K1, `src/app.py:78`,
   * `src/eval/faiss_experiment.py:66-68`). The reference's FAISS
@@ -10,9 +13,11 @@ import org.apache.spark.sql.expressions.Window
   * narrow projection + `TakeOrderedAndProject` top-k (per-partition heap,
   * driver merge — no shuffle of the full table).
   *
-  * Dot product uses higher-order functions (codegen'd by Catalyst); at
-  * ~1.4K dims a custom codegen Expression is the profiled follow-up
-  * (SURVEY.md §7.3).
+  * The dot product is the native kernel `graft_dot`
+  * (org.apache.spark.sql.graft.DotProduct): one primitive loop inside
+  * whole-stage codegen, with a literal query bound once per task into a
+  * `double[]` — its built-in higher-order-function twin lives in the test
+  * sources.
   */
 object Search {
 
@@ -67,35 +72,49 @@ object Search {
     * dot is computed once per row (the sweep oracle issues P copies of the
     * same text query under P different filters).
     *
-    * Scale shape: narrow projection (id, scores, mask) → mapPartitions
-    * keeping q bounded k-heaps per partition → ≤ q·k candidate rows per
-    * partition → driver merges numPartitions·q·k rows. No shuffle, no
-    * per-query jobs: P searches cost one scan. Rows with a null vector are
-    * skipped (the per-query path's NULLS LAST never surfaces them either
-    * unless matches < k). Ties on (rounded) score break on the ascending
-    * long id, matching the per-query orderBy.
+    * Scale shape: narrow projection (id, scores, mask) → per-partition
+    * bounded k-heaps per query over the scan's internal rows → ≤ q·k
+    * candidate rows per partition → driver merges numPartitions·q·k rows.
+    * No shuffle, no per-query jobs: P searches cost one scan. Rows with a
+    * null vector are skipped (the per-query path's NULLS LAST never
+    * surfaces them either unless matches < k). Ties on (rounded) score
+    * break on the ascending long id, matching the per-query orderBy.
     */
   def multiTopK(vectors: DataFrame, vecCol: String, idCol: String,
                 queries: Seq[Array[Double]], k: Int,
                 eligible: Seq[Column] = Nil,
                 roundScores: Boolean = true,
-                scoreExpr: (Column, Array[Double]) => Column = null): IndexedSeq[Seq[(Long, Double)]] = {
+                scoreExpr: (Column, Array[Double]) => Column = null): IndexedSeq[Seq[(Long, Double)]] =
+    multiTopKRows(vectors, vecCol, idCol, queries, k, Nil, eligible, roundScores, scoreExpr)._2
+      .map(_.map(h => (h.id, h.score)))
+
+  /** One kept row of [[multiTopKRows]]: its id, score and the values of
+    * the `out` columns (null without them). */
+  final case class Hit(id: Long, score: Double, out: InternalRow)
+
+  /** [[multiTopK]] whose hits also carry the values of the `out` columns
+    * (the answer rows themselves), so a batch needs no gather back to its
+    * source: the scan reads them, and a row's values are copied only when
+    * it enters a heap. Returns the `out` columns' schema and, per query,
+    * its hits in (score desc, id asc) order. */
+  def multiTopKRows(vectors: DataFrame, vecCol: String, idCol: String,
+                    queries: Seq[Array[Double]], k: Int, out: Seq[Column],
+                    eligible: Seq[Column] = Nil,
+                    roundScores: Boolean = true,
+                    scoreExpr: (Column, Array[Double]) => Column = null)
+      : (StructType, IndexedSeq[Seq[Hit]]) = {
     requireTopK(k, shortlist = 0)
     require(eligible.isEmpty || eligible.size == queries.size,
       s"eligible size ${eligible.size} != queries size ${queries.size}")
-    // tie-break and the downstream gather are by LONG id: a non-integral
-    // id would cast to null (encoder crash) or reorder ties vs the
-    // per-query paths' orderBy — refuse loudly instead
+    // the tie-break is by LONG id: a non-integral id would cast to null
+    // or reorder ties vs the per-query paths' orderBy — refuse loudly
+    // instead
     val idType = vectors.schema(idCol).dataType
-    require({
-      import org.apache.spark.sql.types._
-      idType == LongType || idType == IntegerType ||
-        idType == ShortType || idType == ByteType
-    }, s"multiTopK needs an integral id column; '$idCol' is $idType")
+    require(idType == LongType || idType == IntegerType ||
+      idType == ShortType || idType == ByteType,
+      s"multiTopK needs an integral id column; '$idCol' is $idType")
     val nq = queries.size
-    if (nq == 0) return IndexedSeq.empty
-    val spark = vectors.sparkSession
-    import spark.implicits._
+    if (nq == 0) return (vectors.select(out: _*).schema, IndexedSeq.empty)
     // one score column per DISTINCT query vector
     val distinctQ = scala.collection.mutable.LinkedHashMap.empty[Seq[Double], Int]
     val qIdx: Array[Int] = queries.map(q =>
@@ -104,7 +123,7 @@ object Search {
     // a custom scoreExpr — pass the raw column through for those; the
     // array<double> cast stays the default for real vector columns
     val vd = vectors.schema(vecCol).dataType match {
-      case org.apache.spark.sql.types.BinaryType =>
+      case BinaryType =>
         require(scoreExpr != null,
           s"binary column '$vecCol' needs an explicit scoreExpr")
         col(vecCol)
@@ -120,21 +139,23 @@ object Search {
       val s = scoreOf(vd, q.toArray)
       coalesce(if (roundScores) round(s, 5) + 0.0 else s, lit(0.0))
     }.toIndexedSeq
-    // a null vector nulls every score — fold that into the mask so the
-    // scores array stays non-nullable for the primitive encoder. With no
-    // eligibility predicates every element would be the identical
-    // null-check: serialize it ONCE per row, not nq times
+    // a null vector nulls every score — fold that into the mask so every
+    // score element is non-null. With no eligibility predicates every
+    // element would be the identical null-check: evaluate it ONCE per
+    // row, not nq times
     val sharedMask = eligible.isEmpty
     val maskElems =
       if (sharedMask) IndexedSeq(vd.isNotNull)
       else (0 until nq).map { i =>
         coalesce(eligible(i).cast("boolean"), lit(false)) && vd.isNotNull
       }
-    val rows = vectors.select(
-      col(idCol).cast("long").as("_1"),
-      array(scoreCols: _*).as("_2"),
-      array(maskElems: _*).as("_3")).as[(Long, Seq[Double], Seq[Boolean])]
+    val rows = vectors.select(Seq(col(idCol).cast("long"), array(scoreCols: _*),
+      array(maskElems: _*)) ++ (if (out.isEmpty) Nil else Seq(struct(out: _*))): _*)
+    val outType = if (out.isEmpty) new StructType()
+      else rows.schema(3).dataType.asInstanceOf[StructType]
+    val nOut = outType.length
     val qIdxB = qIdx; val kB = k; val nqB = nq; val sharedB = sharedMask
+    val idName = idCol
     // All score comparisons use java.lang.Double.compare — the IEEE total
     // order Spark's `desc` sort applies — so a non-finite score (NaN dot
     // from a NaN/∞ vector element) ranks exactly like the per-query
@@ -142,47 +163,53 @@ object Search {
     // would silently never admit NaN once the heap fills.
     // PriorityQueue dequeues its MAX; order so the max is the WORST kept
     // entry (lowest score in total order, then highest id)
-    val byWorst: Ordering[(Double, Long)] = new Ordering[(Double, Long)] {
-      def compare(a: (Double, Long), b: (Double, Long)): Int = {
-        val c = java.lang.Double.compare(b._1, a._1)
-        if (c != 0) c else java.lang.Long.compare(a._2, b._2)
+    val byWorst: Ordering[Hit] = new Ordering[Hit] {
+      def compare(a: Hit, b: Hit): Int = {
+        val c = java.lang.Double.compare(b.score, a.score)
+        if (c != 0) c else java.lang.Long.compare(a.id, b.id)
       }
     }
-    val candidates = rows.mapPartitions { it =>
-      val heaps = Array.fill(nqB)(
-        scala.collection.mutable.PriorityQueue.empty[(Double, Long)](byWorst))
-      it.foreach { case (id, scores, mask) =>
+    // one SQL execution, as a Dataset action would be: its jobs and scan
+    // metrics are reported against the plan
+    val qe = rows.queryExecution
+    val candidates = SQLExecution.withNewExecutionId(qe, Some("multiTopK"))(qe.toRdd.mapPartitions { it =>
+      val heaps = Array.fill(nqB)(scala.collection.mutable.PriorityQueue.empty[Hit](byWorst))
+      // the scan reuses its row: copy the out values of a row a heap keeps
+      def hit(row: InternalRow, id: Long, s: Double) =
+        Hit(id, s, if (nOut == 0) null else row.getStruct(3, nOut).copy())
+      it.foreach { row =>
+        if (row.isNullAt(0)) throw new IllegalArgumentException(s"multiTopK: null id in '$idName'")
+        val id = row.getLong(0)
+        val scores = row.getArray(1)
+        val mask = row.getArray(2)
         var i = 0
         while (i < nqB) {
-          if (mask(if (sharedB) 0 else i)) {
-            val s = scores(qIdxB(i)) + 0.0 // collapse IEEE −0.0 like the SQL path
+          if (mask.getBoolean(if (sharedB) 0 else i)) {
+            val s = scores.getDouble(qIdxB(i)) + 0.0 // collapse IEEE −0.0 like the SQL path
             val h = heaps(i)
-            if (h.size < kB) h.enqueue((s, id))
+            if (h.size < kB) h.enqueue(hit(row, id, s))
             else {
               val w = h.head
-              val c = java.lang.Double.compare(s, w._1)
-              if (c > 0 || (c == 0 && id < w._2)) {
-                h.dequeue(); h.enqueue((s, id))
+              val c = java.lang.Double.compare(s, w.score)
+              if (c > 0 || (c == 0 && id < w.id)) {
+                h.dequeue(); h.enqueue(hit(row, id, s))
               }
             }
           }
           i += 1
         }
       }
-      heaps.iterator.zipWithIndex.flatMap { case (h, i) =>
-        h.iterator.map { case (s, id) => (i, id, s) }
-      }
-    }.collect()
+      heaps.iterator.zipWithIndex.flatMap { case (h, i) => h.iterator.map(i -> _) }
+    }.collect())
     val grouped = candidates.groupBy(_._1)
-    (0 until nq).map { i =>
-      grouped.getOrElse(i, Array.empty[(Int, Long, Double)])
-        .map { case (_, id, s) => (id, s) }
-        .sortWith { case ((idA, sA), (idB, sB)) =>
-          val c = java.lang.Double.compare(sB, sA) // desc, NaN first
-          c < 0 || (c == 0 && idA < idB)
+    (outType, (0 until nq).map { i =>
+      grouped.getOrElse(i, Array.empty[(Int, Hit)]).map(_._2)
+        .sortWith { (a, b) =>
+          val c = java.lang.Double.compare(b.score, a.score) // desc, NaN first
+          c < 0 || (c == 0 && a.id < b.id)
         }
         .take(k).toSeq
-    }.toIndexedSeq
+    })
   }
 
   /** K2: hard-filter top-k — the oracle-path query family

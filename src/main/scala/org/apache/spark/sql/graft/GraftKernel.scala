@@ -2,10 +2,12 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.unsafe.Platform
 
 /** The one contract of the native Catalyst kernels in this package. A
   * kernel states its input types, data type, `prettyName`, constructor
@@ -153,6 +155,41 @@ object GraftKernel {
   /** The one Column↔Expression bridge for code outside the sql package. */
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expr(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** The query side of a scoring kernel, bound once: the value of a
+    * foldable array<double> child as a primitive array, so the row loop
+    * reads `q(i)` instead of unboxing a literal's element and testing its
+    * null bit per row. Null when the child is not foldable, evaluates to
+    * null or holds a null element; the kernel then keeps its element-wise
+    * loop. Kernels hold it in a `@transient lazy val`: equality,
+    * hashing and serialization see only the constructor fields, and each
+    * deserialized copy binds again on first use. */
+  def boundDoubles(child: Expression): Array[Double] =
+    if (!child.foldable) null
+    else child.eval() match {
+      case a: ArrayData =>
+        var i = 0
+        while (i < a.numElements() && !a.isNullAt(i)) i += 1
+        if (i < a.numElements()) null else a.toDoubleArray()
+      case _ => null
+    }
+
+  /** Address of element 0 of `a`'s doubles, for `Platform.getDouble(
+    * a.getBaseObject, offset + 8·i)`: an UnsafeArrayData whose null bitset
+    * is all zero (checked a word at a time). -1 for any other array, or
+    * one that holds a null element. */
+  def nullFreeOffset(a: ArrayData): Long = a match {
+    case u: UnsafeArrayData =>
+      val base = u.getBaseObject
+      val end = u.getBaseOffset + UnsafeArrayData.calculateHeaderPortionInBytes(u.numElements())
+      var w = u.getBaseOffset + 8 // the null bitset follows the element count
+      while (w < end) {
+        if (Platform.getLong(base, w) != 0L) return -1L
+        w += 8
+      }
+      end
+    case _ => -1L
+  }
 }
 
 /** Value equality and hashing over every constructor field, arrays (of

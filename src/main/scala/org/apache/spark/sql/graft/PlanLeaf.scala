@@ -1,6 +1,10 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.types.StructType
 
 /** Rebind a PERSISTED frame as a LogicalRDD leaf: the same rows flow
   * through the same InMemoryRelation scan (no extra serialization, no
@@ -61,4 +65,11 @@ object PlanLeaf {
       ds.queryExecution.toRdd, ds, isStreaming = false)
     org.apache.spark.sql.classic.Dataset.ofRows(ds.sparkSession, rebound)
   }
+
+  /** A local relation over rows already on the driver (`rows` match
+    * `schema`): collecting it runs no Spark job. */
+  def local(spark: SparkSession, schema: StructType, rows: Seq[InternalRow]): DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      LocalRelation(DataTypeUtils.toAttributes(schema), rows))
 }

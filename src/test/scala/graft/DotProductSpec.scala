@@ -30,6 +30,104 @@ class DotProductSpec extends SparkSpec {
     }
   }
 
+  test("bound query: a literal scores cached and parquet rows bit for bit, in both argument orders") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val q = Array(0.5, -1.25, -0.0, 3.0, 1e300, -2.0, Double.MinPositiveValue, 7.5)
+    val qNull: Seq[Any] = q.toSeq.updated(2, null)
+    val specials = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, -0.0)
+    val r = new scala.util.Random(11)
+    val vs: Seq[Seq[Any]] = (0 until 300).map { i =>
+      val len = i % 5 match {
+        case 0 => r.nextInt(q.length) // shorter than q
+        case 1 => q.length + 1 + r.nextInt(4) // longer
+        case _ => q.length
+      }
+      if (i == 7) null
+      else Seq.fill(len) {
+        r.nextInt(24) match {
+          case 0 => null
+          case 1 | 2 => specials(r.nextInt(specials.size))
+          case _ => r.nextDouble() * 8 - 4
+        }
+      }
+    }
+    val schema = StructType(Seq(StructField("id", LongType), StructField("v", ArrayType(DoubleType)),
+      StructField("qc", ArrayType(DoubleType)), StructField("qn", ArrayType(DoubleType))))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(
+      vs.zipWithIndex.map { case (v, i) => Row(i.toLong, v, q.toSeq, qNull) }, 3), schema)
+    assert(vs.count(v => v != null && v.contains(null)) > 20)
+    assert(vs.count(v => v != null && !v.contains(null) && v.size == q.length) > 50)
+
+    val dir = java.nio.file.Files.createTempDirectory("graft-dot-bound")
+    val path = dir.resolve("t").toString
+    df.write.parquet(path)
+    val cached = df.persist()
+    cached.count()
+    val lq = typedLit(q)
+    // folds to one literal holding a null element: the element-wise loop
+    val lqNull = array(qNull.map(x => lit(x).cast("double")): _*)
+    // bits that tell −0.0 from 0.0 but every NaN alike: Spark orders and
+    // compares all NaNs as one value, and the x86 NaN of ∞−∞ carries a
+    // sign bit that no Spark operator reads
+    def bits(row: Row, i: Int): Option[Long] =
+      if (row.isNullAt(i)) None else Some(java.lang.Double.doubleToLongBits(row.getDouble(i)))
+    /** The kernel's contract in Scala: Σ over the shorter length, null
+      * elements skipped, left to right. */
+    def twin(v: Seq[Any], query: Seq[Any]): Option[Long] =
+      Option(v).map { xs =>
+        var s = 0.0
+        xs.zip(query).foreach {
+          case (x: Double, y: Double) => s += x * y
+          case _ =>
+        }
+        java.lang.Double.doubleToLongBits(s)
+      }
+    try {
+      for ((source, frame) <- Seq("cached" -> cached, "parquet" -> spark.read.parquet(path))) {
+        val out = frame.select(col("id"),
+          Search.dot(col("v"), lq), Search.dot(lq, col("v")),
+          Search.dot(col("v"), col("qc")), Search.dot(col("qc"), col("v")),
+          Search.dot(col("v"), lqNull), Search.dot(col("v"), col("qn")),
+          ReferenceTwins.dotHof(col("v"), lq), ReferenceTwins.dotHof(lq, col("v"))).collect()
+        assert(out.length == vs.size)
+        out.foreach { row =>
+          val v = vs(row.getLong(0).toInt)
+          val at = s"$source id=${row.getLong(0)}"
+          assert(bits(row, 1) == twin(v, q.toSeq), s"$at v·q")
+          assert(bits(row, 2) == twin(v, q.toSeq), s"$at q·v")
+          assert(bits(row, 1) == bits(row, 3) && bits(row, 2) == bits(row, 4), s"$at vs unbound")
+          assert(bits(row, 5) == twin(v, qNull) && bits(row, 5) == bits(row, 6),
+            s"$at null-element literal")
+          if (v != null && !v.contains(null) && v.size == q.length)
+            assert(bits(row, 1) == bits(row, 7) && bits(row, 2) == bits(row, 8), s"$at vs HOF")
+        }
+      }
+    } finally {
+      cached.unpersist()
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+  }
+
+  test("nullFreeOffset: raw reads for a null-free UnsafeArrayData only") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.graft.GraftKernel.nullFreeOffset
+    import org.apache.spark.sql.types._
+    import org.apache.spark.unsafe.Platform
+    val proj = UnsafeProjection.create(Array[DataType](ArrayType(DoubleType)))
+    def unsafe(xs: Seq[Any]) = proj(InternalRow(new GenericArrayData(xs.toArray))).getArray(0).copy()
+    val xs: Seq[Any] = (0 until 130).map(_.toDouble)
+    val u = unsafe(xs)
+    val at = nullFreeOffset(u)
+    assert(at >= 0 && Platform.getDouble(u.getBaseObject, at + 8L * 129) == 129.0)
+    // a null in the first, a middle and the last bitset word
+    for (j <- Seq(0, 63, 64, 129)) assert(nullFreeOffset(unsafe(xs.updated(j, null))) == -1, j)
+    assert(nullFreeOffset(new GenericArrayData(xs.toArray)) == -1)
+    assert(nullFreeOffset(unsafe(Nil)) >= 0)
+  }
+
   test("native dot participates in whole-stage codegen top-k plan") {
     val emb = Tables.embeddings(spark, sf("sf0.001"))
     val plan = Search.fusedTopK(emb, "embedding", "vec_id",

@@ -163,6 +163,50 @@ class EnginePartitionSpec extends SparkSpec {
     } finally eng.close()
   }
 
+  test("searchBatch: rows equal the old items gather bit for bit; without a GeoFilter one job") {
+    val eng = FuseRankEngine.index(items, config)
+    try {
+      assert(eng.transforms.keySet == Set("price"))
+      val far = QueryEncoder.sparkFarthest(eng.items, eng.config.geoCols)
+      val k = 12
+      val qs = queries.map { case (text, filters) =>
+        QueryEncoder.encode(eng.layout, filters.map(f => f.column -> f).toMap,
+          textVec = config.embedder.embed(text), transforms = eng.transforms, farthest = far)
+      }
+      val twin = ReferenceTwins.batchGather(eng.items, "row_id",
+        Search.multiTopK(eng.indexed, "fused_vec", "row_id", qs, k))
+      val got = eng.searchBatch(queries, k)
+      assert(got.schema.map(f => f.name -> f.dataType) == twin.schema.map(f => f.name -> f.dataType))
+      assert(rows(got) == rows(twin))
+      assert(rows(got).size == queries.size * k)
+      // the scan is the one job; collecting the answer runs none
+      val noGeo = queries.filterNot(_._2.exists(_.isInstanceOf[GeoFilter]))
+      val (_, trace) = org.apache.spark.sql.graft.QueryTrace.during(spark, "searchBatch")(
+        eng.searchBatch(noGeo, k).collect())
+      assert(trace.jobs.size == 1, trace.jobs)
+    } finally eng.close()
+  }
+
+  test("Reranking searches that differ only in filter values compile no new class") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val eng = FuseRankEngine.index(items, config)
+    try {
+      // each filter kind whose values are doubles: dense point and
+      // interval, geo (query point and its cartesian), image (signature)
+      val kinds: Seq[Int => Seq[Filter]] = Seq(
+        i => Seq(DensePointFilter("price", 120.0 + 10 * i)),
+        i => Seq(DenseIntervalFilter("price", 100.0 + i, 300.0 - i)),
+        i => Seq(GeoFilter("loc", 10.0 - 7 * i, 20.0 + 3 * i)),
+        i => Seq(ImageFilter("logo", logos(i))))
+      kinds.foreach { filters =>
+        eng.search("red pasta", filters(0), 12, SearchMethod.Reranking).collect()
+        val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        eng.search("red pasta", filters(1), 12, SearchMethod.Reranking).collect()
+        assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before == 0, filters(1))
+      }
+    } finally eng.close()
+  }
+
   test("a search without a GeoFilter is one Spark job, for both methods") {
     val eng = FuseRankEngine.index(items, config)
     try {

@@ -20,7 +20,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The gate every native kernel passes: one generic contract check over
   * every [[GraftKernel]] in org.apache.spark.sql.graft, on seeded random
   * inputs that include null, empty, whitespace-only and non-ASCII text,
-  * NaN, ±∞, −0.0 and null elements.
+  * NaN, ±∞, −0.0 and null elements. DotProduct also runs with a literal
+  * query child (its bound-query path) over generic and unsafe arrays.
   *
   *  - interpreted evaluation and GenerateUnsafeProjection write the same
   *    UnsafeRow bytes, or both throw the same exception class;
@@ -93,6 +94,23 @@ class KernelContractSpec extends AnyFunSuite {
   private def generic(k: GraftKernel, twin: GraftKernel, changed: GraftKernel): Case =
     Case(k, twin, changed, rowsOf(k.children.map(c => value(c.dataType)): _*))
 
+  /** An array<double> literal child: the bound query side of DotProduct
+    * (null elements allowed, to reach its element-wise loop). */
+  private def qlit(xs: Any*): Literal = Literal(new GenericArrayData(xs.toArray), arrD)
+  private val q6 = Seq(0.5, -1.25, -0.0, 3.0, 1e300, -2.0)
+
+  /** Array values of a row as UnsafeArrayData half the time (per value,
+    * seeded): how a cached or shuffled row reaches a kernel, including its
+    * null bitset. */
+  private def someUnsafe(rows: Gen[Seq[Any]]): Gen[Seq[Any]] = rows.flatMap { vs =>
+    Gen.sequence[Seq[Any], Any](vs.map {
+      case a: GenericArrayData => Gen.oneOf(true, false).map(u => if (u) unsafe(a) else a)
+      case v => Gen.const(v)
+    })
+  }
+  private def unsafe(a: GenericArrayData): Any =
+    UnsafeProjection.create(Array[DataType](arrD))(InternalRow(a)).getArray(0).copy()
+
   private val cents = Array(Array(0.25, -1.5, 3.0, 0.0), Array(1.0, 2.0, -0.125, 4.5),
     Array(-3.25, 0.5, 0.75, -2.0))
   private def clone2(a: Array[Array[Double]]) = a.map(_.clone())
@@ -123,6 +141,12 @@ class KernelContractSpec extends AnyFunSuite {
     val other = BoundReference(7, StringType, nullable = true)
     Seq(
       generic(DotProduct(d0, d1), DotProduct(d0, d1), DotProduct(d1, d0)),
+      Case(DotProduct(d0, qlit(q6: _*)), DotProduct(d0, qlit(q6: _*)),
+        DotProduct(d0, qlit(q6.updated(0, 9.0): _*)), someUnsafe(rowsOf(value(arrD), value(arrD)))),
+      Case(DotProduct(qlit(q6: _*), d1), DotProduct(qlit(q6: _*), d1),
+        DotProduct(qlit(q6.updated(0, 9.0): _*), d1), someUnsafe(rowsOf(value(arrD), value(arrD)))),
+      Case(DotProduct(d0, qlit(q6.updated(2, null): _*)), DotProduct(d0, qlit(q6.updated(2, null): _*)),
+        DotProduct(d0, qlit(q6: _*)), someUnsafe(rowsOf(value(arrD), value(arrD)))),
       Case(HammingDistance(l0, l1), HammingDistance(l0, l1), HammingDistance(l1, l0),
         Gen.frequency(3 -> Gen.choose(0, 4).flatMap(n =>
           rowsOf(arrayN(n, value(LongType)), arrayN(n, value(LongType)))),
@@ -226,19 +250,26 @@ class KernelContractSpec extends AnyFunSuite {
       val k = c.kernel
       val (ip, gp) = (interpreted(k), generated(k))
       k.children.indices.foreach { i =>
+        // a literal child is nulled as a null literal; a bound one by its row value
+        val (kn, ipn, gpn) = k.children(i) match {
+          case l: Literal =>
+            val n = k.withNewChildren(k.children.updated(i, Literal(null, l.dataType)))
+            (n, interpreted(n), generated(n))
+          case _ => (k, ip, gp)
+        }
         sample(c, 2 + i).take(30).foreach { base =>
           val vs = base.toSeq(k.children.map(_.dataType))
           val row = InternalRow.fromSeq(vs.updated(i, null))
           val want: Outcome = k.nullPolicy match {
             case NullOut =>
-              assert(k.nullable, s"${name(k)}: a null-out kernel over nullable children is nullable")
+              assert(kn.nullable, s"${name(k)}: a null-out kernel over nullable children is nullable")
               Right(UnsafeProjection.create(Seq(Literal(null, k.dataType)))(InternalRow.empty).copy())
             case Fixed(v) =>
               Right(UnsafeProjection.create(Seq(Literal(v, k.dataType)))(InternalRow.empty).copy())
             case PassThrough => outcome(ip, InternalRow.fromSeq(vs.updated(i, c.nullLike(i))))
           }
-          assert(outcome(ip, row) == want, s"${name(k)} interpreted, null child $i")
-          assert(outcome(gp, row) == want, s"${name(k)} generated, null child $i")
+          assert(outcome(ipn, row) == want, s"${name(k)} interpreted, null child $i")
+          assert(outcome(gpn, row) == want, s"${name(k)} generated, null child $i")
         }
       }
     }
@@ -252,7 +283,10 @@ class KernelContractSpec extends AnyFunSuite {
       assert(t.canonicalized == k.canonicalized && t.semanticEquals(k), name(k))
       assert(c.changed != k && k != c.changed, s"${name(k)} changed parameter still ==")
       // copies made through the tree API keep the parameters
-      val moved = k.children.map { case b: BoundReference => b.copy(ordinal = b.ordinal + 1) }
+      val moved = k.children.map {
+        case b: BoundReference => b.copy(ordinal = b.ordinal + 1)
+        case l: Literal => l
+      }
       val copy = k.withNewChildren(moved)
       assert(copy.getClass == k.getClass && copy.children == moved && copy != k, name(k))
       assert(copy.withNewChildren(k.children) == k, name(k))

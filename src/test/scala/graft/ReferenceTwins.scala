@@ -16,6 +16,26 @@ object ReferenceTwins {
   def dotHof(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (s, x) => s + x)
 
+  /** Twin of `FuseRankEngine.searchBatch`'s answer rows: the per-query
+    * hits of `Search.multiTopK` joined back to `items` by one broadcast
+    * gather, as the engine answered a batch before its heaps carried the
+    * rows — (query_idx, id, relevance, item columns…) in (query_idx,
+    * relevance desc, id) order. */
+  def batchGather(items: DataFrame, idCol: String,
+                  tops: IndexedSeq[Seq[(Long, Double)]]): DataFrame = {
+    val spark = items.sparkSession
+    import spark.implicits._
+    val hits = tops.zipWithIndex.flatMap { case (rs, qi) =>
+      rs.map { case (id, s) => (qi, id, s) }
+    }.toDF("query_idx", "__hit_id", "relevance")
+      .withColumn("__hit_id", col("__hit_id").cast(items.schema(idCol).dataType))
+      .withColumnRenamed("__hit_id", idCol)
+    val itemCols = items.columns.filterNot(_ == idCol).map(col)
+    items.join(broadcast(hits), Seq(idCol))
+      .select(col("query_idx") +: col(idCol) +: col("relevance") +: itemCols.toSeq: _*)
+      .orderBy(col("query_idx"), col("relevance").desc, col(idCol))
+  }
+
   /** Twin of `Search.ivfAssign`: array_min over literal centroid structs;
     * inlines every centroid into the generated code, so it stops
     * codegenning at large nCentroids. */
