@@ -4,8 +4,9 @@ import org.apache.spark.sql.graft.QueryTrace
 
 /** Per-query trace of the bench suite: one JSON line per registered query
   * (or per named query), tagged with the query name: wall time, actions,
-  * jobs, task time, shuffle write and spill bytes, driver gap and every
-  * job's (id, ms, description). Runs on Bench's own session
+  * jobs, task time, shuffle write and spill bytes, driver gap, classes
+  * compiled (`compiles`, a JVM-global count; see [[QueryTrace.Trace]])
+  * and every job's (id, ms, description). Runs on Bench's own session
   * ([[Bench.session]]), so a trace explains Bench's numbers. Each query
   * runs once untraced to warm up, then the caches are cleared and it runs
   * once traced, counted like Bench counts it. A query that throws keeps

@@ -5,7 +5,12 @@ import graft.profile.{ColumnProfile, Profiler}
 import graft.query._
 import graft.search.Search
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Param.param
+import org.apache.spark.sql.types.StructType
 
 /** Differential-evaluation harness (reference src/eval/): the fused-vector
   * top-k (subject) vs the hard-filter top-k (oracle), scored by recall /
@@ -53,11 +58,14 @@ object Eval {
 
   /** The hard-filter predicate family (reference milvus filter strings,
     * src/eval/milvus_experiment.py:72-89) — shared by the per-point and
-    * batched oracle paths. */
+    * batched oracle paths. A dense bound is a [[Param]] leaf, not a
+    * literal: Spark casts it exactly as it would cast a double literal,
+    * but keeps it out of the generated code, so oracle scans that differ
+    * only in their bounds share one compiled class. */
   private def filterPreds(filters: Seq[Filter]): Seq[org.apache.spark.sql.Column] =
     filters.collect {
-      case DenseIntervalFilter(c, _, hi, false, _) => col(c) <= hi
-      case DensePointFilter(c, v, false, _) => col(c) <= v
+      case DenseIntervalFilter(c, _, hi, false, _) => col(c) <= param(hi)
+      case DensePointFilter(c, v, false, _) => col(c) <= param(v)
       case SparseFilter(c, sel, false, _) => col(c).isin(sel: _*)
       case BinaryFilter(c, v, _) => col(c).cast("string") === v
     }
@@ -92,23 +100,68 @@ object Eval {
       eligible = preds, roundScores = false).map(_.map(_._1))
   }
 
-  /** Every seeded row sample in ONE aggregation job: the per-seed sample
+  /** Every seeded row sample in ONE map-side scan: the per-seed sample
     * (orderBy md5(id:seed) LIMIT 1 — the distributed twin of pandas
-    * df.sample(random_state=seed), reference evaluate.py:176) re-expressed
-    * as min_by(struct(cols), md5(id:seed)). One full scan computes every
-    * seed's argmin with map-side partial aggregation, instead of one
-    * scan-and-topk job per seed; md5 keys are unique w.h.p. so the argmin
-    * equals the per-seed sort-limit row. */
+    * df.sample(random_state=seed), reference evaluate.py:176). Each
+    * partition keeps, per distinct seed, the row with the least key
+    * md5(concat_ws(":", id, seed)) — a null id keys as md5("<seed>"),
+    * since concat_ws skips nulls — and the driver merges the partitions'
+    * bests. Keys compare as their 16 raw digest bytes, unsigned: the
+    * order of the lowercase hex strings the SQL sample sorts by.
+    *
+    * No seed value enters the plan (the key's seed part is built here,
+    * once), so the scan compiles once per schema whatever the seeds, and
+    * there is no exchange or aggregation stage. md5 keys are unique
+    * w.h.p.; equal keys, which only duplicate ids produce, resolve to the
+    * earliest row in scan order. A seed listed twice is sampled once.
+    * The values are those `Dataset.head()` returns for the columns.
+    * Throws IllegalArgumentException on a table with no rows. */
   def batchSamples(items: DataFrame, idCol: String, candidateCols: Seq[String],
                    seeds: Seq[Int]): Map[Int, Map[String, Any]] = {
     if (seeds.isEmpty) return Map.empty
-    val aggs = seeds.zipWithIndex.map { case (s, j) =>
-      min_by(struct(candidateCols.map(col): _*),
-        md5(concat_ws(":", col(idCol), lit(s)))).as(s"__s$j")
+    val distinct = seeds.distinct.toIndexedSeq
+    // ":<seed>"; its tail is the null-id key's whole text
+    val suffixes = distinct.map(s => s":$s".getBytes(java.nio.charset.StandardCharsets.UTF_8)).toArray
+    val rows = items.select(col(idCol).cast("string"), struct(candidateCols.map(col): _*))
+    val sampleType = rows.schema(1).dataType.asInstanceOf[StructType]
+    val nCols = sampleType.length
+    // one SQL execution, as a Dataset action would be: its jobs and scan
+    // metrics are reported against the plan
+    val qe = rows.queryExecution
+    val bests = SQLExecution.withNewExecutionId(qe, Some("batchSamples"))(qe.toRdd.mapPartitions { it =>
+      val md = java.security.MessageDigest.getInstance("MD5")
+      val ns = suffixes.length
+      val keys = new Array[Array[Byte]](ns)
+      val picks = new Array[InternalRow](ns)
+      val key = new Array[Byte](16)
+      it.foreach { row =>
+        val id = if (row.isNullAt(0)) null else row.getUTF8String(0).getBytes
+        var j = 0
+        while (j < ns) {
+          val sfx = suffixes(j)
+          if (id == null) md.update(sfx, 1, sfx.length - 1)
+          else { md.update(id); md.update(sfx) }
+          md.digest(key, 0, 16)
+          // strict: the earliest row keeps an equal key
+          if (keys(j) == null || java.util.Arrays.compareUnsigned(key, keys(j)) < 0) {
+            keys(j) = key.clone()
+            // the scan reuses its row: copy only a new best
+            picks(j) = row.getStruct(1, nCols).copy()
+          }
+          j += 1
+        }
+      }
+      Iterator.range(0, ns).filter(keys(_) != null).map(j => (j, keys(j), picks(j)))
+    }.collect())
+    // collect keeps partition order: a strict merge keeps the earliest row
+    val best = new Array[(Array[Byte], InternalRow)](distinct.size)
+    bests.foreach { case (j, k, r) =>
+      if (best(j) == null || java.util.Arrays.compareUnsigned(k, best(j)._1) < 0) best(j) = (k, r)
     }
-    val row = items.agg(aggs.head, aggs.tail: _*).head()
-    seeds.zipWithIndex.map { case (s, j) =>
-      val st = row.getStruct(j)
+    require(best.forall(_ != null), s"batchSamples: no rows to sample in '$idCol'")
+    val toRow = ExpressionEncoder(sampleType).resolveAndBind().createDeserializer()
+    distinct.zip(best).map { case (s, (_, r)) =>
+      val st = toRow(r)
       s -> candidateCols.zipWithIndex.map { case (c, i) => c -> st.get(i) }.toMap
     }.toMap
   }
@@ -161,9 +214,10 @@ object Eval {
     * the sweep drives any engine configuration; it receives ALL points'
     * filter sets at once so the engine can answer them in one batched scan
     * ([[Search.multiTopK]]). The sweep itself runs exactly THREE jobs
-    * regardless of point count: one batched sample aggregation, one batched
-    * oracle scan, one batched subject search — the reference shape (one
-    * search per point) costs a full-scan job per point on Spark.
+    * regardless of point count: one map-side sample scan
+    * ([[batchSamples]]), one batched oracle scan, one batched subject
+    * search — the reference shape (one search per point) costs a
+    * full-scan job per point on Spark.
     */
   def sweep(items: DataFrame, idCol: String, textVecCol: String,
             qText: Array[Double],
@@ -180,8 +234,8 @@ object Eval {
 
   /** Config-independent sweep-point prep, shared by [[sweep]] and
     * [[fullSweep]]: the (m, i, seed, modalities) grid plus each point's
-    * synthesized filters from its batched seeded sample (ONE job for all
-    * points). */
+    * synthesized filters from its seeded sample ([[batchSamples]]: ONE
+    * scan job for all points). */
   private def sweepPoints(items: DataFrame, idCol: String,
                           candidateCols: Seq[String],
                           profiles: Map[String, ColumnProfile],
@@ -241,7 +295,9 @@ object Eval {
     *
     * The row samples and the hard-filter oracle lists depend on neither
     * grid axis and are computed in TWO batched jobs for the whole point
-    * grid (one min_by sample aggregation + one multiTopK oracle scan).
+    * grid (one map-side [[batchSamples]] scan + one multiTopK oracle
+    * scan). Neither job's generated code holds a seed or a filter bound,
+    * so sweeps that differ only in their samples share compiled classes.
     * Total jobs: 2 + |harmonicsSweep| scans (and as many encodes),
     * independent of the ε × modality-count × repetition grid size.
     *
@@ -269,7 +325,7 @@ object Eval {
     import scala.concurrent.duration.Duration
     require(sampleTextCol.isEmpty || embedText != null,
       "sampleTextCol needs an embedText function")
-    // config-independent work, batched: ONE sample job + ONE oracle job
+    // config-independent work, batched: ONE sample scan + ONE oracle scan
     // for the whole point grid
     val (keys, filtersPer, samplesPer) = sweepPoints(items, idCol,
       candidateCols, profiles, repetitions, extraSampleCols = sampleTextCol.toSeq)

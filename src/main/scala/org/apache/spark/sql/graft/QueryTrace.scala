@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
@@ -29,16 +30,21 @@ object QueryTrace {
   final case class Job(id: Int, ms: Double, description: String)
 
   /** What one traced body cost. `gapMs` is driver time: wall time minus
-    * the union of the job intervals, so 0 ≤ gapMs ≤ wallMs. */
+    * the union of the job intervals, so 0 ≤ gapMs ≤ wallMs. `compiles` is
+    * the number of classes Spark's code generator compiled during the
+    * body (the change in `CodegenMetrics.METRIC_COMPILATION_TIME`'s
+    * count). That count is JVM-global: a class compiled for another
+    * thread's work while the body ran is counted too, and a class found
+    * in the generator's cache is not counted. */
   final case class Trace(tag: String, actions: Int, jobs: Seq[Job], taskMs: Long,
                          shuffleWriteBytes: Long, spillBytes: Long,
-                         wallMs: Double, gapMs: Double) {
+                         wallMs: Double, gapMs: Double, compiles: Long) {
     /** The trace as JSON (key, rendered value) pairs; see [[jsonObject]]. */
     def fields: Seq[(String, String)] = Seq(
       "tag" -> jsonString(tag), "wall_ms" -> f"$wallMs%.1f", "actions" -> actions.toString,
       "jobs" -> jobs.size.toString, "task_ms" -> taskMs.toString,
       "shuffle_write_bytes" -> shuffleWriteBytes.toString, "spill_bytes" -> spillBytes.toString,
-      "gap_ms" -> f"$gapMs%.1f",
+      "gap_ms" -> f"$gapMs%.1f", "compiles" -> compiles.toString,
       "job_list" -> jobs.map(j => jsonObject(Seq("id" -> j.id.toString,
         "ms" -> f"${j.ms}%.1f", "description" -> jsonString(j.description)))).mkString("[", ",", "]"))
 
@@ -98,8 +104,9 @@ object QueryTrace {
       }
 
     /** The trace of a body that ran from `t0` to `t1` (epoch ms) in
-      * `wallMs`; a job still open at the end is closed at `t1`. */
-    def trace(tag: String, t0: Long, t1: Long, wallMs: Double): Trace = {
+      * `wallMs` and compiled `compiles` classes; a job still open at the
+      * end is closed at `t1`. */
+    def trace(tag: String, t0: Long, t1: Long, wallMs: Double, compiles: Long): Trace = {
       val spans = ended.asScala.toSeq ++
         started.asScala.toSeq.map { case (id, (s, d)) => (id, s, t1, d) }
       val jobs = spans.sortBy(_._1).map { case (id, s, e, d) => Job(id, (e - s).toDouble, d) }
@@ -110,7 +117,7 @@ object QueryTrace {
           if (e <= reach) (acc, reach) else (acc + e - s.max(reach), e)
         }
       Trace(tag, execIds.size + bare.get, jobs, taskMs.get, shuffleWrite.get, spill.get,
-        wallMs, (wallMs - covered).max(0.0))
+        wallMs, (wallMs - covered).max(0.0), compiles)
     }
   }
 
@@ -124,13 +131,15 @@ object QueryTrace {
     sc.addSparkListener(recorder)
     try {
       sc.setJobGroup(group, description)
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t0 = System.currentTimeMillis()
       val n0 = System.nanoTime()
       val out = try body finally sc.clearJobGroup()
       val wallMs = (System.nanoTime() - n0) / 1e6
       val t1 = System.currentTimeMillis()
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
       sc.listenerBus.waitUntilEmpty()
-      (out, recorder.trace(tag, t0, t1, wallMs))
+      (out, recorder.trace(tag, t0, t1, wallMs, compiles))
     } finally {
       sc.removeSparkListener(recorder)
       if (description != null) sc.setJobDescription(description)

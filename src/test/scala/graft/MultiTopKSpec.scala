@@ -4,7 +4,9 @@ import graft.eval.Eval
 import graft.profile.Profiler
 import graft.query._
 import graft.search.Search
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Batched multi-query top-k (`Search.multiTopK`) parity with the
   * per-query paths it replaces in the sweep harness: `Search.fusedTopK`
@@ -102,18 +104,99 @@ class MultiTopKSpec extends SparkSpec {
     }
   }
 
+  /** The SQL sample [[Eval.batchSamples]] stands in for: the row first
+    * in md5(concat_ws(":", id, seed)) order. */
+  private def sortLimitSample(df: DataFrame, idCol: String, cols: Seq[String],
+                              seed: Int): Map[String, Any] = {
+    val row = df
+      .withColumn("__h", md5(concat_ws(":", col(idCol), lit(seed))))
+      .orderBy("__h").limit(1).select(cols.map(col): _*).head()
+    cols.zipWithIndex.map { case (c, i) => c -> row.get(i) }.toMap
+  }
+
+  private def assertSamplesMatch(df: DataFrame, idCol: String, cols: Seq[String],
+                                 seeds: Seq[Int]): Map[Int, Map[String, Any]] = {
+    val batched = Eval.batchSamples(df, idCol, cols, seeds)
+    assert(batched.keySet == seeds.toSet)
+    seeds.foreach { s =>
+      assert(batched(s) == sortLimitSample(df, idCol, cols, s), s"$idCol seed $s sample diverged")
+    }
+    batched
+  }
+
   test("batchSamples == per-seed orderBy(md5).limit(1) sample") {
     val docs = Tables.documents(spark, sf("sf0.001"))
     val cands = Seq("lang", "n_chars")
-    val seeds = Seq(10, 11, 20, 21)
-    val batched = Eval.batchSamples(docs, "doc_id", cands, seeds)
-    seeds.foreach { s =>
-      val row = docs
-        .withColumn("__h", md5(concat_ws(":", col("doc_id"), lit(s))))
-        .orderBy("__h").limit(1).select(cands.map(col): _*).head()
-      val expected = cands.zipWithIndex.map { case (c, i) => c -> row.get(i) }.toMap
-      assert(batched(s) == expected, s"seed $s sample diverged")
+    assertSamplesMatch(docs, "doc_id", cands, Seq(10, 11, 20, 21))
+    // spread over 4 partitions; negative seeds; a seed listed twice
+    assertSamplesMatch(docs.repartition(4), "doc_id", cands,
+      Seq(-7, 10, -7, Int.MinValue, 0, Int.MaxValue))
+    // int, long and non-ASCII string ids, each with a null-id row, over 4
+    // partitions of at most 2 rows: more seeds than rows per partition
+    val schema = StructType(Seq(StructField("i", IntegerType), StructField("l", LongType),
+      StructField("s", StringType), StructField("v", StringType),
+      StructField("d", DecimalType(10, 2))))
+    val small = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      Row(1, 10L, "é-1", "a", new java.math.BigDecimal("1.50")),
+      Row(-2, null, "日本語", "b", null),
+      Row(null, Long.MaxValue, "ü", "c", new java.math.BigDecimal("-0.25")),
+      Row(40, -3L, null, "d", new java.math.BigDecimal("7.00")),
+      Row(5, Long.MinValue, "🙂", "e", new java.math.BigDecimal("0.01")),
+      Row(Int.MinValue, 0L, "plain", "f", new java.math.BigDecimal("2.00"))), 4), schema)
+    val seeds = (-30 to 30 by 3) :+ Int.MinValue
+    val nullPicks = Seq("i", "l", "s").map { idCol =>
+      val got = assertSamplesMatch(small, idCol, Seq("v", "d"), seeds)
+      val nullRow = small.where(col(idCol).isNull).select("v").head().getString(0)
+      seeds.count(s => got(s)("v") == nullRow)
     }
+    // the null-id key md5("<seed>") is exercised, not only admitted
+    assert(nullPicks.forall(_ > 0), s"a null-id row never won: $nullPicks")
+  }
+
+  test("batchSamples: equal keys keep the earliest row; no rows raises a named error") {
+    val schema = StructType(Seq(StructField("id", LongType), StructField("v", StringType)))
+    // duplicate ids give equal keys: the first in scan order wins, within
+    // a partition and across partitions
+    val dup = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      Row(7L, "p0-first"), Row(7L, "p0-second"), Row(7L, "p1-first"), Row(7L, "p1-second")), 2),
+      schema)
+    val picks = Eval.batchSamples(dup, "id", Seq("v"), Seq(1, 2, 3, -4))
+    assert(picks.values.map(_("v")).toSet == Set("p0-first"), picks)
+    val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    val ex = intercept[IllegalArgumentException](Eval.batchSamples(empty, "id", Seq("v"), Seq(1)))
+    assert(ex.getMessage.contains("no rows"), ex.getMessage)
+    assert(Eval.batchSamples(empty, "id", Seq("v"), Nil).isEmpty)
+  }
+
+  test("batchSamples and the oracle: one scan each, and a second sweep compiles no class") {
+    import org.apache.spark.sql.graft.QueryTrace
+    val d = sf("sf0.001")
+    val items = graft.encode.Embedders.precomputed(
+      Tables.documents(spark, d), Tables.embeddings(spark, d), "doc_id", "vec_id", "embedding")
+      .persist()
+    try {
+      val cands = Seq("lang", "n_chars")
+      Eval.batchSamples(items, "doc_id", cands, Seq(10, 11, 12))
+      val (_, sample) = QueryTrace.during(spark, "sample")(
+        Eval.batchSamples(items, "doc_id", cands, Seq(-5, 33, 34, 35)))
+      assert(sample.compiles == 0, sample.json)
+      assert(sample.jobs.size == 1 && sample.shuffleWriteBytes == 0L, sample.json)
+      // the oracle's dense bounds differ between the two sweeps, and so do
+      // its query texts
+      def filters(b: Double): Seq[Seq[Filter]] = Seq(
+        Seq(DenseIntervalFilter("n_chars", 0.0, b)),
+        Seq(DensePointFilter("n_chars", b + 50.5)),
+        Seq(SparseFilter("lang", Seq("en")), DenseIntervalFilter("n_chars", 0.0, 2 * b)))
+      Eval.hardFilterTopKBatchPerQuery(items, "doc_id", "embedding",
+        Seq.fill(3)(randVec(64)), filters(300.0), k = 10)
+      val qs = Seq.fill(3)(randVec(64))
+      val (got, oracle) = QueryTrace.during(spark, "oracle")(
+        Eval.hardFilterTopKBatchPerQuery(items, "doc_id", "embedding", qs, filters(411.25), k = 10))
+      assert(oracle.compiles == 0, oracle.json)
+      filters(411.25).zip(qs).zipWithIndex.foreach { case ((fs, q), i) =>
+        assert(got(i) == Eval.hardFilterTopK(items, "doc_id", "embedding", q, fs, k = 10), s"point $i")
+      }
+    } finally items.unpersist()
   }
 
   test("oracle parity when null vectors coexist with fewer than k matches") {

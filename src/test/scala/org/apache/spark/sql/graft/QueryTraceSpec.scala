@@ -4,8 +4,8 @@ import graft.SparkSpec
 
 /** QueryTrace counts exactly its own body's work: actions as
   * ActionCountSpec defines them, jobs scoped to the body's job group, a
-  * driver gap inside the wall time, and no listener or job group left
-  * behind when the body throws. */
+  * driver gap inside the wall time, the classes it compiled, and no
+  * listener or job group left behind when the body throws. */
 class QueryTraceSpec extends SparkSpec {
 
   private def sumQuery() = spark.range(0, 100, 1, 2).selectExpr("sum(id)")
@@ -55,6 +55,16 @@ class QueryTraceSpec extends SparkSpec {
     assert(t.actions == 2 && t.jobs.nonEmpty)
     assert(t.jobs.map(_.id) == t.jobs.map(_.id).sorted && t.jobs.forall(_.ms >= 0.0))
     assert(t.shuffleWriteBytes > 0L, "the groupBy's shuffle write was not recorded")
+  }
+
+  test("compiles counts the classes the body compiled; a cached class counts 0") {
+    // a long literal is written into the generated source: a new value is a new class
+    val q = spark.range(0, 10, 1, 1).selectExpr(s"id * ${System.nanoTime()}L as x")
+    val (_, first) = QueryTrace.during(spark, "fresh")(q.collect())
+    assert(first.compiles >= 1, first)
+    val (_, again) = QueryTrace.during(spark, "again")(q.collect())
+    assert(again.compiles == 0, again)
+    assert(again.json.contains("\"compiles\":0"), again.json)
   }
 
   test("a throwing body leaves no listener attached and no job group set") {

@@ -4,10 +4,12 @@
     python3 tools/trace_diff.py old.jsonl new.jsonl [tag ...]
 
 Prints, per tag present in either file, the old and new value and the change
-of actions, jobs, wall_ms and gap_ms, then the totals over the tags both files
-hold. Tags named on the command line restrict the table (not the totals'
-meaning: the totals cover the listed tags only). A tag missing from one file
-shows "-" on that side and is left out of the totals.
+of actions, jobs, wall_ms, gap_ms and compiles (classes the code generator
+compiled; a JVM-global count), then the totals over the tags both files hold.
+Tags named on the command line restrict the table (not the totals' meaning:
+the totals cover the listed tags only). A tag missing from one file shows "-"
+on that side and is left out of the totals; so is a field missing from one
+side's line (a trace written before that field existed).
 
 First it prints each file's host calibration (graft.Trace's first line, the
 Bench calibration probe median in seconds; "-" for a file without one) and
@@ -17,7 +19,7 @@ as well as by code. The calibration is not a tag and is in no total.
 import json
 import sys
 
-FIELDS = ("actions", "jobs", "wall_ms", "gap_ms")
+FIELDS = ("actions", "jobs", "wall_ms", "gap_ms", "compiles")
 
 
 def load(path):
@@ -60,17 +62,17 @@ def main(argv):
     tags = argv[3:] or sorted(set(old) | set(new))
     width = max([len(t) for t in tags] + [5])
     print(f"{'tag':<{width}}  " + "  ".join(f"{f:<26}" for f in FIELDS))
-    totals = {f: [0, 0] for f in FIELDS}
+    totals = {}
     for t in tags:
-        o, n = old.get(t), new.get(t)
+        o, n = old.get(t, {}), new.get(t, {})
         print(f"{t:<{width}}  " + "  ".join(
-            f"{cell(o and o[f], n and n[f]):<26}" for f in FIELDS))
-        if o and n:
-            for f in FIELDS:
-                totals[f][0] += o[f]
-                totals[f][1] += n[f]
+            f"{cell(o.get(f), n.get(f)):<26}" for f in FIELDS))
+        for f in FIELDS:
+            if f in o and f in n:
+                a, b = totals.get(f, (0, 0))
+                totals[f] = (a + o[f], b + n[f])
     print(f"{'total':<{width}}  " + "  ".join(
-        f"{cell(*[round(x, 1) if isinstance(x, float) else x for x in totals[f]]):<26}"
+        f"{cell(*[round(x, 1) if isinstance(x, float) else x for x in totals.get(f, (None, None))]):<26}"
         for f in FIELDS))
     return 0
 
