@@ -85,7 +85,6 @@ final class FuseRankEngine private (
     * Spark job unless a GeoFilter needs the farthest item first. */
   def search(queryText: String, filters: Seq[Filter], k: Int = 10,
              method: SearchMethod = SearchMethod.Retrieval): DataFrame = {
-    Search.requireTopK(k, shortlist = 0)
     val textVec = embedder.embed(queryText)
     val fmap = filters.map(f => f.column -> f).toMap
     method match {

@@ -36,22 +36,17 @@ object Eval {
 
   /** Hard-filter oracle: boolean-filter the items then text-score top-k
     * (reference milvus filter strings, src/eval/milvus_experiment.py:72-89:
-    * numeric → `col <= v`, categorical/binary → `col == value`).
+    * numeric → `col <= v`, categorical/binary → `col == value`) — the
+    * single form [[Search.topK]] by the raw dot. A row with no text vector
+    * never ranks: it has no index entry in the reference oracle (Milvus
+    * only returns embedded rows).
     */
   def hardFilterTopK(items: DataFrame, idCol: String, textVecCol: String,
                      qText: Array[Double], filters: Seq[Filter], k: Int): Seq[Long] = {
     val preds = filterPreds(filters)
-    val filtered0 = if (preds.isEmpty) items else items.filter(preds.reduce(_ && _))
-    // only scoreable rows rank: a row with no text vector has no index
-    // entry in the reference oracle (Milvus only returns embedded rows),
-    // and the batched twin (multiTopK's null mask) skips them — without
-    // this filter the two paths diverge when matches < k (the desc sort's
-    // NULLS LAST would back-fill null-score rows here only)
-    val filtered = filtered0.filter(col(textVecCol).isNotNull)
-    filtered
-      .withColumn("score", Search.dot(Search.asDouble(col(textVecCol)), typedLit(qText)))
-      .orderBy(col("score").desc, col(idCol))
-      .limit(k)
+    val filtered = if (preds.isEmpty) items else items.filter(preds.reduce(_ && _))
+    Search.topK(filtered, textVecCol, idCol,
+        Search.dot(Search.asDouble(col(textVecCol)), typedLit(qText)), k)
       .select(col(idCol).cast("long"))
       .collect().map(_.getLong(0)).toSeq
   }
@@ -70,21 +65,12 @@ object Eval {
       case BinaryFilter(c, v, _) => col(c).cast("string") === v
     }
 
-  /** Batched [[hardFilterTopK]]: every point's oracle list in ONE scan via
-    * [[Search.multiTopK]] — the point's filter conjunction becomes its
-    * eligibility predicate, the shared text query is deduplicated to a
-    * single in-plan dot. Raw (un-rounded) scores, ascending-id tiebreak:
-    * the same ordering as the per-point path. */
-  def hardFilterTopKBatch(items: DataFrame, idCol: String, textVecCol: String,
-                          qText: Array[Double], filtersPerPoint: Seq[Seq[Filter]],
-                          k: Int): IndexedSeq[Seq[Long]] =
-    hardFilterTopKBatchPerQuery(items, idCol, textVecCol,
-      Seq.fill(filtersPerPoint.size)(qText), filtersPerPoint, k)
-
-  /** [[hardFilterTopKBatch]] with a PER-POINT text query (the reference
-    * embeds each repetition's sampled row name, src/eval/evaluate.py:176-181
-    * — every point scores against ITS OWN text). multiTopK dedupes
-    * identical vectors, so the fixed-text case costs the same one dot. */
+  /** Batched [[hardFilterTopK]] with a PER-POINT text query: every
+    * point's oracle list in ONE scan via [[Search.multiTopK]] — the point's
+    * filter conjunction becomes its eligibility predicate; raw scores, as
+    * the per-point path. The reference embeds each repetition's sampled
+    * row name (src/eval/evaluate.py:176-181); multiTopK dedupes identical
+    * vectors, so a fixed text costs one dot. */
   def hardFilterTopKBatchPerQuery(items: DataFrame, idCol: String,
                                   textVecCol: String,
                                   qTexts: Seq[Array[Double]],
@@ -166,14 +152,6 @@ object Eval {
     }.toMap
   }
 
-  /** Fused-vector subject: encode the query against the layout, exact
-    * inner-product top-k over the fused vectors. */
-  def fusedTopK(vectors: DataFrame, idCol: String, fusedCol: String,
-                q: Array[Double], k: Int): Seq[Long] =
-    Search.fusedTopK(vectors, fusedCol, idCol, q, k)
-      .select(col(idCol).cast("long"))
-      .collect().map(_.getLong(0)).toSeq
-
   /** One differential experiment point (reference run_experiment,
     * src/eval/faiss_experiment.py:36-74): filters synthesized from a sampled
     * row — dense → interval [col min, row value]; sparse → [value];
@@ -194,9 +172,6 @@ object Eval {
       }
     }
 
-  final case class SweepPoint(numModalities: Int, repetition: Int, seed: Int,
-                              modalities: Seq[String], recall: Double)
-
   /** The reference's exact seeding discipline (src/eval/evaluate.py:174-181):
     * seed = int("<m><i>"), then a seeded shuffle picks the m modalities.
     * Shared by the sweep driver and the a11 oracle-SQL builder so both
@@ -206,36 +181,10 @@ object Eval {
     (seed, new scala.util.Random(seed).shuffle(candidateCols).take(m))
   }
 
-  /** A11 experiment sweep (reference src/eval/evaluate.py:156-242):
-    * modality-count m = 1..N × `repetitions`, seed = int("<m><i>") —
-    * the reference's exact seeding discipline — sample one row, choose m
-    * random modalities, synthesize filters, run oracle (hard filter) and
-    * subject (fused) top-k, score recall. `encodeAndSearch` is injected so
-    * the sweep drives any engine configuration; it receives ALL points'
-    * filter sets at once so the engine can answer them in one batched scan
-    * ([[Search.multiTopK]]). The sweep itself runs exactly THREE jobs
-    * regardless of point count: one map-side sample scan
-    * ([[batchSamples]]), one batched oracle scan, one batched subject
-    * search — the reference shape (one search per point) costs a
-    * full-scan job per point on Spark.
-    */
-  def sweep(items: DataFrame, idCol: String, textVecCol: String,
-            qText: Array[Double],
-            candidateCols: Seq[String], profiles: Map[String, ColumnProfile],
-            encodeAndSearch: (Seq[Seq[Filter]], Int) => Seq[Seq[Long]],
-            k: Int = 10, repetitions: Int = 3): Seq[SweepPoint] = {
-    val (keys, filtersPer, _) = sweepPoints(items, idCol, candidateCols, profiles, repetitions)
-    val oracles = hardFilterTopKBatch(items, idCol, textVecCol, qText, filtersPer, k)
-    val subjects = encodeAndSearch(filtersPer, k)
-    keys.zipWithIndex.map { case ((m, i, seed, mods), j) =>
-      SweepPoint(m, i, seed, mods, recall(oracles(j), subjects(j)))
-    }
-  }
-
-  /** Config-independent sweep-point prep, shared by [[sweep]] and
-    * [[fullSweep]]: the (m, i, seed, modalities) grid plus each point's
-    * synthesized filters from its seeded sample ([[batchSamples]]: ONE
-    * scan job for all points). */
+  /** Config-independent sweep-point prep of [[fullSweep]]: the
+    * (m, i, seed, modalities) grid plus each point's synthesized filters
+    * from its seeded sample ([[batchSamples]]: ONE scan job for all
+    * points). */
   private def sweepPoints(items: DataFrame, idCol: String,
                           candidateCols: Seq[String],
                           profiles: Map[String, ColumnProfile],
@@ -268,26 +217,24 @@ object Eval {
     * `interval_epsilon` in the grid (the product encode depends only on the
     * harmonic count and `rangeEpsilon` — interval ε enters at query time,
     * [[QueryEncoder.Params]]), with a BATCHED search closure: ε values ×
-    * points' filter sets → per-ε per-point top-k lists, ALL answered in one
-    * [[Search.multiTopK]] scan of the index. `close()` is the optional
-    * release hook for engines that pin resources (e.g. a persisted index
-    * scanned by more than one action — SweepSpec's); [[fullSweep]] calls
-    * it as soon as the harmonic's points are evaluated. The production
-    * a11 engine pipelines its encode into the single scan and needs no
-    * close (EvalQueries). */
+    * points' filter sets × points' text vectors → per-ε per-point top-k
+    * lists, ALL answered in one [[Search.multiTopK]] scan of the index.
+    * `close()` is the optional release hook for engines that pin resources
+    * (e.g. a persisted index scanned by more than one action — SweepSpec's);
+    * [[fullSweep]] calls it as soon as the harmonic's points are
+    * evaluated. The production a11 engine pipelines its encode into the
+    * single scan and needs no close (EvalQueries). */
   final case class SweepEngine(
-      search: (Seq[Double], Seq[Seq[Filter]], Int) => IndexedSeq[IndexedSeq[Seq[Long]]],
-      close: () => Unit = () => (),
-      /** Per-point-text variant (reference per-repetition sampled-name
-        * embedding): receives one text vector PER POINT alongside its
-        * filter set. Required when [[fullSweep]] runs with a
-        * `sampleTextCol`; `search` is used otherwise. */
-      searchPerText: (Seq[Double], Seq[Seq[Filter]], Seq[Array[Double]], Int)
-        => IndexedSeq[IndexedSeq[Seq[Long]]] = null)
+      search: (Seq[Double], Seq[Seq[Filter]], Seq[Array[Double]], Int)
+        => IndexedSeq[IndexedSeq[Seq[Long]]],
+      close: () => Unit = () => ())
 
-  /** Full A11 sweep (reference src/eval/evaluate.py:156-242): the modality
-    * sweep of [[sweep]] repeated over the `num_harmonics` ×
-    * `interval_epsilon` grid (reference config.yaml:7-8). The reference
+  /** Full A11 sweep (reference src/eval/evaluate.py:156-242): modality
+    * count m = 1..N × `repetitions`, seed = int("<m><i>") ([[modalitiesFor]]),
+    * one sampled row per seed, its m modalities' filters, then the oracle
+    * (hard filter) and subject (fused) top-k per point, scored by recall —
+    * repeated over the `num_harmonics` × `interval_epsilon` grid
+    * (reference config.yaml:7-8). The reference
     * re-encodes products per (harmonics, ε) config (evaluate.py:186-189),
     * but ε never reaches the product vectors — only the query encoding —
     * so `engineFor` builds ONE index per harmonic count and each index
@@ -330,10 +277,10 @@ object Eval {
     val (keys, filtersPer, samplesPer) = sweepPoints(items, idCol,
       candidateCols, profiles, repetitions, extraSampleCols = sampleTextCol.toSeq)
     // per-point query text (reference src/eval/evaluate.py:176-181: each
-    // repetition embeds ITS sampled row's text); a null sampled text falls
-    // back to the fixed query — both sides of the differential use the
-    // same vector either way, so the metric stays an apples-to-apples
-    // ranking comparison
+    // repetition embeds ITS sampled row's text); without a sampleTextCol,
+    // or for a null sampled text, the fixed query — both sides of the
+    // differential use the same vector either way, so the metric stays an
+    // apples-to-apples ranking comparison
     val qTexts: Seq[Array[Double]] = sampleTextCol match {
       case None => Seq.fill(keys.size)(qText)
       case Some(tc) => samplesPer.map(s =>
@@ -351,12 +298,7 @@ object Eval {
             val eng = engineFor(kh)
             // one batched subject scan answers the harmonic's full ε × point grid
             try {
-              val perEps =
-                if (sampleTextCol.isDefined) {
-                  require(eng.searchPerText != null,
-                    "per-point text sweep needs SweepEngine.searchPerText")
-                  eng.searchPerText(epsilonSweep, filtersPer, qTexts, k)
-                } else eng.search(epsilonSweep, filtersPer, k)
+              val perEps = eng.search(epsilonSweep, filtersPer, qTexts, k)
               for {
                 (eps, e) <- epsilonSweep.zipWithIndex
                 ((m, i, seed, _), j) <- keys.zipWithIndex

@@ -79,8 +79,7 @@ object RecallCurve {
       val layout = ProductEncoder.layoutFor(cands.map(profsT), params,
         textBlock = Some(TextBlock("text_vec", 64)))
       val indexed = ProductEncoder.encode(transformed, layout)
-      def batched(epsList: Seq[Double], filterSets: Seq[Seq[graft.query.Filter]],
-                  texts: Seq[Array[Double]], k: Int) = {
+      Eval.SweepEngine(search = (epsList, filterSets, texts, k) => {
         val qs = for { eps <- epsList; (fs, qt) <- filterSets.zip(texts) }
           yield graft.query.QueryEncoder.encode(layout,
             fs.map(f => f.column -> f).toMap, textVec = qt,
@@ -90,12 +89,7 @@ object RecallCurve {
           .multiTopK(indexed, "fused_vec", "row_id", qs, k).map(_.map(_._1))
         epsList.indices.map(e =>
           filterSets.indices.map(j => flat(e * filterSets.size + j)))
-      }
-      Eval.SweepEngine(
-        search = (epsList, filterSets, k) =>
-          batched(epsList, filterSets, Seq.fill(filterSets.size)(qVec), k),
-        searchPerText = (epsList, filterSets, texts, k) =>
-          batched(epsList, filterSets, texts, k))
+      })
     }
 
     val rs = Eval.fullSweep(withText, "row_id", "text_vec", qVec, cands,

@@ -126,9 +126,11 @@ object EvalQueries {
         val layout = ProductEncoder.layoutFor(Cands.map(profs), params)
         val indexed = ProductEncoder.encode(items, layout)
         Eval.SweepEngine(
-          search = (epsList, filterSets, k) => {
-            // ε × points queries concatenated into ONE scan (batched twin
-            // of Eval.fusedTopK): row-major [ε][point]
+          // the layout has no text block: the per-point texts (all the
+          // zero query here) do not enter the encode
+          search = (epsList, filterSets, _, k) => {
+            // ε × points queries concatenated into ONE scan: row-major
+            // [ε][point]
             val qs = for { eps <- epsList; fs <- filterSets }
               yield QueryEncoder.encode(layout, fs.map(f => f.column -> f).toMap,
                 params = QueryEncoder.Params(eps, params.rangeEpsilon))

@@ -3,7 +3,6 @@ package graft.queries
 import graft.Tables
 import graft.search.{Quantizer, Search}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** Vector-search operators (SURVEY.md §2.7 K1 + pipeline extensions):
   * exact inner-product top-k, brute-force cosine k-NN, embedding-cosine
@@ -25,16 +24,13 @@ object Vectors {
              round(list_dot_product(embedding::DOUBLE[], $qvecSql), 5) + 0.0 AS score
              FROM embeddings ORDER BY score DESC, vec_id LIMIT 10"""))
 
-  // Similarity search: brute-force cosine top-k for a small query set
+  // Similarity search: exact cosine top-k for a small query set — the
+  // knn spine's Flat tier with no coarse stage
   private val sim1 = Q(
     "sim1_knn_cosine",
-    (s, d) => {
-      val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-      val q = e.filter(col("vec_id").isin(0L, 1L, 2L))
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_embedding"))
-      Search.knnBruteForce(e, q, "embedding", "vec_id", "q_embedding", "q_id", 5)
-        .orderBy("q_id", "rk")
-    },
+    (s, d) => Search.knn(Tables.embeddings(s, d), "embedding", "vec_id",
+        Seq(0L, 1L, 2L), 5, Quantizer.flat)
+      .orderBy("q_id", "rk"),
     Some("""SELECT q.vec_id AS q_id, e.vec_id AS vec_id,
             round(list_cosine_similarity(q.embedding::DOUBLE[], e.embedding::DOUBLE[]), 5) + 0.0 AS score,
             row_number() OVER (PARTITION BY q.vec_id

@@ -9,9 +9,16 @@ import org.apache.spark.sql.types._
 
 /** Exact inner-product / cosine search (reference K1, `src/app.py:78`,
   * `src/eval/faiss_experiment.py:66-68`). The reference's FAISS
-  * `IndexFlatIP` is a brute-force scan; the Spark-native equivalent is a
-  * narrow projection + `TakeOrderedAndProject` top-k (per-partition heap,
-  * driver merge — no shuffle of the full table).
+  * `IndexFlatIP` is a brute-force scan. Every exact score top-k in the
+  * engine runs through one of two bodies that keep one contract (5-dp
+  * rounded or raw score, (score desc, id asc) ties in IEEE total order,
+  * null vectors never returned, k ≥ 1):
+  *  - [[topK]], one query: a lazy narrow projection under a root
+  *    `TakeOrderedAndProject` (per-partition heap, driver merge — no
+  *    shuffle of the full table);
+  *  - [[multiTopKRows]], P queries: one scan with P per-partition heaps.
+  * The caller's shape selects the body. [[knn]]'s window top-k is the ANN
+  * spine's (every tier, shortlist refine).
   *
   * The dot product is the native kernel `graft_dot`
   * (org.apache.spark.sql.graft.DotProduct): one primitive loop inside
@@ -41,45 +48,65 @@ object Search {
 
   def asDouble(a: Column): Column = a.cast("array<double>")
 
-  /** K1: exact inner-product top-k of a literal query vector against a
-    * vector table: (id, score, `out`…) for the k best rows, in (score desc,
-    * id) order. Physical plan: scan → project(score) →
-    * TakeOrderedAndProject (scales: no shuffle, k-sized heaps only), whose
-    * projection evaluates `out` for the k answer rows only.
-    */
-  def fusedTopK(vectors: DataFrame, vecCol: String, idCol: String,
-                q: Array[Double], k: Int, out: Seq[Column] = Nil): DataFrame = {
-    val score = dot(asDouble(col(vecCol)), typedLit(q))
-    vectors
-      .withColumn("score", round(score, 5) + 0.0) // collapse IEEE −0.0
+  /** The 5-dp score of the exact top-k contract, IEEE −0.0 collapsed to
+    * 0.0 (the two hash differently). */
+  def rounded(score: Column): Column = round(score, 5) + 0.0
+
+  /** The exact top-k of one query — K1, the hard-filter oracle and the
+    * serving index's probe. The contract, shared with the batched form
+    * ([[multiTopKRows]]):
+    *  - `score` is taken as given: [[rounded]] for the 5-dp contract, or
+    *    a raw score (the oracle's dot);
+    *  - rows rank by (score desc, id asc), the score in IEEE total order
+    *    (NaN above +∞ above every finite score);
+    *  - a row whose `vecCol` is null is never returned;
+    *  - k < 1 is [[requireTopK]]'s error.
+    * Lazy; (id, score, `out`…) for the k best rows, in that order. Plan:
+    * scan → filter(vector not null) → project(score) → root
+    * TakeOrderedAndProject (per-partition k-heaps, driver merge, no
+    * shuffle), whose projection evaluates `out` for the k answer rows
+    * only. The null rule filters the vector below the projection: Catalyst
+    * pushes a score filter below the projection too and computes the
+    * score twice per row, and a filter above the limit leaves
+    * TakeOrderedAndProject non-root, which adds a shuffle stage. */
+  def topK(vectors: DataFrame, vecCol: String, idCol: String, score: Column,
+           k: Int, out: Seq[Column] = Nil): DataFrame = {
+    requireTopK(k, shortlist = 0)
+    vectors.filter(col(vecCol).isNotNull)
+      .withColumn("score", score)
       .orderBy(col("score").desc, col(idCol))
       .limit(k)
       .select(col(idCol) +: col("score") +: out: _*)
   }
 
-  /** Batched exact top-k: ONE scan of the vector table answers every query
-    * in `queries` at once. The reference's experiment harness issues one
-    * FAISS search per sweep point (src/eval/evaluate.py:182-189); on Spark
-    * that shape costs a full scan JOB per point, and the ~0.1-0.3 s per-job
-    * floor dominates long before the scan does. This is the batch twin of
-    * [[fusedTopK]] / the hard-filter oracle: per-query result = top k rows
-    * by (score desc, id asc) among rows whose `eligible` predicate holds.
+  /** K1: [[topK]] of a literal query vector by the rounded inner product
+    * (reference `IndexFlatIP.search`, src/app.py:78). */
+  def fusedTopK(vectors: DataFrame, vecCol: String, idCol: String,
+                q: Array[Double], k: Int, out: Seq[Column] = Nil): DataFrame =
+    topK(vectors, vecCol, idCol, rounded(dot(asDouble(col(vecCol)), typedLit(q))), k, out)
+
+  /** The exact top-k of P queries in ONE scan of the vector table — the
+    * batched form of [[topK]]'s contract, for the sweep oracle and
+    * subject and `FuseRankEngine.searchBatch`. The reference's experiment
+    * harness issues one FAISS search per sweep point
+    * (src/eval/evaluate.py:182-189); on Spark that shape costs a full scan
+    * JOB per point, and the ~0.1-0.3 s per-job floor dominates long before
+    * the scan does. Query i's result is its top k rows among those whose
+    * `eligible(i)` holds.
     *
-    * Scores are computed IN-PLAN by the native codegen dot — identical
-    * arithmetic to [[fusedTopK]], including the 5-dp round + IEEE −0.0
-    * collapse when `roundScores` — so batched results are bit-identical to
-    * the per-query path. Identical query vectors are deduplicated: their
-    * dot is computed once per row (the sweep oracle issues P copies of the
-    * same text query under P different filters).
+    * Scores are computed in-plan by the native codegen dot — [[rounded]]
+    * when `roundScores`, raw otherwise, or `scoreExpr`'s — so a batch
+    * returns the rows and order of P [[topK]] calls with the same score
+    * (a raw −0.0 reports as 0.0; rounded scores are bit-identical).
+    * Identical query vectors are deduplicated: their dot is computed once
+    * per row (the sweep oracle issues P copies of the same text query
+    * under P different filters).
     *
     * Scale shape: narrow projection (id, scores, mask) → per-partition
     * bounded k-heaps per query over the scan's internal rows → ≤ q·k
     * candidate rows per partition → driver merges numPartitions·q·k rows.
-    * No shuffle, no per-query jobs: P searches cost one scan. Rows with a
-    * null vector are skipped (the per-query path's NULLS LAST never
-    * surfaces them either unless matches < k). Ties on (rounded) score
-    * break on the ascending long id, matching the per-query orderBy.
-    */
+    * No shuffle, no per-query jobs: P searches cost one scan. Ids must be
+    * integral: ties break on the ascending long id. */
   def multiTopK(vectors: DataFrame, vecCol: String, idCol: String,
                 queries: Seq[Array[Double]], k: Int,
                 eligible: Seq[Column] = Nil,
@@ -92,11 +119,12 @@ object Search {
     * the `out` columns (null without them). */
   final case class Hit(id: Long, score: Double, out: InternalRow)
 
-  /** [[multiTopK]] whose hits also carry the values of the `out` columns
-    * (the answer rows themselves), so a batch needs no gather back to its
-    * source: the scan reads them, and a row's values are copied only when
-    * it enters a heap. Returns the `out` columns' schema and, per query,
-    * its hits in (score desc, id asc) order. */
+  /** The batched exact top-k body ([[multiTopK]] is its id-and-score
+    * view): the hits also carry the values of the `out` columns (the
+    * answer rows themselves), so a batch needs no gather back to its
+    * source — the scan reads them, and a row's values are copied only
+    * when it enters a heap. Returns the `out` columns' schema and, per
+    * query, its hits in (score desc, id asc) order. */
   def multiTopKRows(vectors: DataFrame, vecCol: String, idCol: String,
                     queries: Seq[Array[Double]], k: Int, out: Seq[Column],
                     eligible: Seq[Column] = Nil,
@@ -107,7 +135,7 @@ object Search {
     require(eligible.isEmpty || eligible.size == queries.size,
       s"eligible size ${eligible.size} != queries size ${queries.size}")
     // the tie-break is by LONG id: a non-integral id would cast to null
-    // or reorder ties vs the per-query paths' orderBy — refuse loudly
+    // or reorder ties vs the single form's orderBy — refuse loudly
     // instead
     val idType = vectors.schema(idCol).dataType
     require(idType == LongType || idType == IntegerType ||
@@ -132,12 +160,12 @@ object Search {
     // scoreExpr generalizes the per-(row, query) score beyond the raw inner
     // product — e.g. the IVF serving path's cosine with its precomputed
     // per-row norm column — while keeping the same rounding / −0.0 collapse
-    // so batched results stay bit-identical to the per-query orderBy path
+    // so batched results stay bit-identical to the single form
     val scoreOf: (Column, Array[Double]) => Column =
       if (scoreExpr != null) scoreExpr else (v, q) => dot(v, typedLit(q))
     val scoreCols = distinctQ.keysIterator.map { q =>
       val s = scoreOf(vd, q.toArray)
-      coalesce(if (roundScores) round(s, 5) + 0.0 else s, lit(0.0))
+      coalesce(if (roundScores) rounded(s) else s, lit(0.0))
     }.toIndexedSeq
     // a null vector nulls every score — fold that into the mask so every
     // score element is non-null. With no eligibility predicates every
@@ -158,8 +186,8 @@ object Search {
     val idName = idCol
     // All score comparisons use java.lang.Double.compare — the IEEE total
     // order Spark's `desc` sort applies — so a non-finite score (NaN dot
-    // from a NaN/∞ vector element) ranks exactly like the per-query
-    // orderBy path: NaN above +∞ above every finite score. Naive `>`/`==`
+    // from a NaN/∞ vector element) ranks exactly like the single form's
+    // desc sort: NaN above +∞ above every finite score. Naive `>`/`==`
     // would silently never admit NaN once the heap fills.
     // PriorityQueue dequeues its MAX; order so the max is the WORST kept
     // entry (lowest score in total order, then highest id)
@@ -185,7 +213,7 @@ object Search {
         var i = 0
         while (i < nqB) {
           if (mask.getBoolean(if (sharedB) 0 else i)) {
-            val s = scores.getDouble(qIdxB(i)) + 0.0 // collapse IEEE −0.0 like the SQL path
+            val s = scores.getDouble(qIdxB(i)) + 0.0 // −0.0 → 0.0: the single form's sort ties them
             val h = heaps(i)
             if (h.size < kB) h.enqueue(hit(row, id, s))
             else {
@@ -210,47 +238,6 @@ object Search {
         }
         .take(k).toSeq
     })
-  }
-
-  /** K2: hard-filter top-k — the oracle-path query family
-    * (reference src/eval/milvus_experiment.py:72-89). */
-  def hardFilterTopK(items: DataFrame, preds: Seq[Column], score: Column,
-                     tieBreak: Seq[Column], k: Int): DataFrame = {
-    val filtered = if (preds.isEmpty) items else items.filter(preds.reduce(_ && _))
-    filtered.orderBy((score.desc +: tieBreak.map(_.asc)): _*).limit(k)
-  }
-
-  /** Brute-force k-NN for a small broadcast query set: each query row joined
-    * (broadcast nested-loop) against the full vector table, per-query top-k
-    * via window. Scales linearly in table size; query side must be small.
-    */
-  def knnBruteForce(vectors: DataFrame, queries: DataFrame,
-                    vecCol: String, idCol: String,
-                    qVecCol: String, qIdCol: String, k: Int,
-                    metric: String = "cosine"): DataFrame = {
-    // L2 norms hoisted to the per-row sides (n + q rows) instead of per
-    // pair (n·q) — same sqrt(dot) arithmetic as cosine(), identical doubles.
-    // spread: the scoring pass is CPU-bound per row and the sf-scale file
-    // is a handful of splits (see the knn* base comment); row-local, so
-    // hash-indifferent
-    val v = graft.Tables.spread(vectors)
-      .withColumn("__vd", asDouble(col(vecCol)))
-      .withColumn("__vn", l2Norm(col("__vd")))
-    val q = queries.withColumn("__qd", asDouble(col(qVecCol)))
-      .withColumn("__qn", l2Norm(col("__qd")))
-    val score = metric match {
-      case "cosine" => dot(col("__qd"), col("__vd")) / (col("__qn") * col("__vn"))
-      case "ip"     => dot(col("__qd"), col("__vd"))
-      case m        => throw new IllegalArgumentException(s"metric $m")
-    }
-    val w = Window.partitionBy(col(qIdCol))
-      .orderBy(col("score").desc, col(idCol))
-    v.crossJoin(broadcast(q))
-      .filter(col(qIdCol) =!= col(idCol))
-      .withColumn("score", round(score, 5) + 0.0)
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
-      .select(col(qIdCol), col(idCol), col("score"), col("rk"))
   }
 
   /** Random-hyperplane LSH bucketing: deterministic hyperplanes derived
@@ -556,7 +543,7 @@ object Search {
     val score = if (residual) col("off") + tier.score(col("qs")) else tier.score(col("qs"))
     val byScore = Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("id"))
     def top(df: DataFrame, s: Column, n: Int): DataFrame =
-      df.withColumn("score", round(s, 5) + 0.0)
+      df.withColumn("score", rounded(s))
         .withColumn("rk", row_number().over(byScore).cast("long"))
         .filter(col("rk") <= n)
     val first = top(scan.filter(col("q_id") =!= col("id")), score,
@@ -781,7 +768,7 @@ object Search {
 
   /** ANN top-k via multi-table LSH: candidates = vectors sharing ANY
     * table's bucket with the query (deduplicated), then exact cosine on the
-    * candidate set only. Recall vs knnBruteForce asserted in tests. */
+    * candidate set only. Recall vs the exact top-k asserted in tests. */
   def knnLsh(vectors: DataFrame, queries: DataFrame, vecCol: String,
              idCol: String, qVecCol: String, qIdCol: String,
              dim: Int, nBits: Int, k: Int, nTables: Int = 8,
@@ -797,7 +784,7 @@ object Search {
       .orderBy(col("score").desc, col(idCol))
     candidates
       .withColumn("score",
-        round(cosine(asDouble(col(qVecCol)), asDouble(col(vecCol))), 5) + 0.0)
+        rounded(cosine(asDouble(col(qVecCol)), asDouble(col(vecCol)))))
       .withColumn("rk", row_number().over(w).cast("long"))
       .filter(col("rk") <= k)
       .select(col(qIdCol), col(idCol), col("score"), col("rk"))

@@ -220,19 +220,12 @@ object IvfIndex {
       s"query dimension ${q.length} != index dimension ${h.dim}"))
   }
 
-  /** Rounded-score top-n over a scan: (score desc, id asc), planned as
-    * TakeOrderedAndProject. */
-  private def topK(scan: DataFrame, score: Column, n: Int): DataFrame =
-    scan.withColumn("score", round(score, 5) + 0.0)
-      .orderBy(col("score").desc, col("id"))
-      .limit(n)
-      .select(col("id").as("vec_id"), col("score"))
-
   /** Probed top-k of one query, as a lazy (vec_id, score) DataFrame: the
     * `cid IN (probes)` partition filter prunes the non-probed directories
     * before a byte is read (IvfServeSpec pins numFiles), the scan projects
     * only the tier's [[scanCols]] (the compressed tiers never read
-    * `v`/`vn`), and the tier's rounded score ranks with ascending-id ties.
+    * `v`/`vn`), and [[Search.topK]] ranks by the tier's rounded score with
+    * ascending-id ties.
     *
     * `pred` is the "metadata filter + ANN" query vector databases
     * special-case: metadata columns ride the index ([[write]]'s
@@ -252,13 +245,14 @@ object IvfIndex {
     val cells = probeCells(h, q, nProbe)
     val scan = pred.foldLeft(prunedScan(spark, h, cells))(_.filter(_))
       .select(("id" +: scanCols(h.tier)).map(col): _*)
-    val score = h.tier.score(h.tier.sideLit(q))
-    if (shortlist == 0) topK(scan, score, k)
+    def ranked(rows: DataFrame, tier: Quantizer, n: Int) =
+      Search.topK(rows, scanCols(tier).head, "id", Search.rounded(tier.score(tier.sideLit(q))), n)
+        .select(col("id").as("vec_id"), col("score"))
+    if (shortlist == 0) ranked(scan, h.tier, k)
     else {
-      val ids = topK(scan, score, shortlist).collect()
+      val ids = ranked(scan, h.tier, shortlist).collect()
         .map(r => java.lang.Long.valueOf(r.getLong(0)))
-      topK(prunedScan(spark, h, cells).filter(col("id").isin(ids: _*)),
-        Flat.score(Flat.sideLit(q)), k)
+      ranked(prunedScan(spark, h, cells).filter(col("id").isin(ids: _*)), Flat, k)
     }
   }
 

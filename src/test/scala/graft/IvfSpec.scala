@@ -73,7 +73,7 @@ class IvfSpec extends SparkSpec {
     // nProbe == nCentroids → probes every bucket → exact == brute force
     val q = df.filter(col("vec_id") === 0L)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_embedding"))
-    val bf = Search.knnBruteForce(df, q, "embedding", "vec_id",
+    val bf = ReferenceTwins.knnBruteForce(df, q, "embedding", "vec_id",
         "q_embedding", "q_id", 5)
       .orderBy("rk").collect().map(_.getLong(1))
     assert(got.toSeq == bf.toSeq)

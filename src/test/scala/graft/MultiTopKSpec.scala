@@ -46,7 +46,8 @@ class MultiTopKSpec extends SparkSpec {
       Seq(SparseFilter("lang", Seq("de")), DenseIntervalFilter("n_chars", profs("n_chars").min, 400.0)),
       Seq.empty) // no filter → whole table eligible
     val qText = randVec(64)
-    val batched = Eval.hardFilterTopKBatch(items, "doc_id", "embedding", qText, filterSets, k = 10)
+    val batched = Eval.hardFilterTopKBatchPerQuery(items, "doc_id", "embedding",
+      Seq.fill(filterSets.size)(qText), filterSets, k = 10)
     filterSets.zipWithIndex.foreach { case (fs, i) =>
       val single = Eval.hardFilterTopK(items, "doc_id", "embedding", qText, fs, k = 10)
       assert(batched(i) == single, s"point $i diverged from hardFilterTopK")
@@ -215,9 +216,43 @@ class MultiTopKSpec extends SparkSpec {
     val q = Array(1.0, 1.0)
     val filters = Seq(SparseFilter("grp", Seq("a")))
     val single = Eval.hardFilterTopK(items, "id", "vec", q, filters, k = 5)
-    val batched = Eval.hardFilterTopKBatch(items, "id", "vec", q,
+    val batched = Eval.hardFilterTopKBatchPerQuery(items, "id", "vec", Seq(q),
       Seq(filters), k = 5).head
     assert(single == Seq(1L, 2L), s"per-point oracle: $single")
     assert(batched == single, s"batched $batched vs per-point $single")
+  }
+
+  test("null vectors: the single and batched forms return the same rows, never a null vector") {
+    // 3 scoreable rows, 2 null-vector rows, k above the scoreable count:
+    // the desc sort's NULLS LAST must not back-fill the single form
+    import spark.implicits._
+    val vecs = Seq(
+      (1L, Seq(1.0, 0.0)), (2L, null.asInstanceOf[Seq[Double]]), (3L, Seq(0.5, 0.25)),
+      (4L, null.asInstanceOf[Seq[Double]]), (5L, Seq(-1.0, 2.0)))
+      .toDF("id", "vec")
+    val q = Array(1.0, 1.0)
+    val rows = Search.fusedTopK(vecs, "vec", "id", q, 4).collect().toSeq
+    assert(rows.map(_.getLong(0)) == Seq(1L, 5L, 3L), s"single form: $rows")
+    val single = rows.map(r => (r.getLong(0), r.getDouble(1)))
+    val batched = Search.multiTopK(vecs, "vec", "id", Seq(q), k = 4).head
+    val oracle = Eval.hardFilterTopK(vecs, "id", "vec", q, Nil, k = 4)
+    assert(batched == single, s"batched $batched vs single $single")
+    assert(oracle == single.map(_._1), s"oracle $oracle vs single $single")
+  }
+
+  test("k < 1 is a named error in both forms") {
+    import spark.implicits._
+    val vecs = Seq((1L, Seq(1.0, 0.0)), (2L, Seq(0.0, 1.0))).toDF("id", "vec")
+    val q = Array(1.0, 1.0)
+    for (k <- Seq(0, -1)) {
+      val forms: Seq[(String, () => Any)] = Seq(
+        "fusedTopK" -> (() => Search.fusedTopK(vecs, "vec", "id", q, k)),
+        "multiTopK" -> (() => Search.multiTopK(vecs, "vec", "id", Seq(q), k)),
+        "hardFilterTopK" -> (() => Eval.hardFilterTopK(vecs, "id", "vec", q, Nil, k)))
+      forms.foreach { case (name, call) =>
+        val e = intercept[IllegalArgumentException](call())
+        assert(e.getMessage.contains(s"k must be positive: $k"), s"$name: ${e.getMessage}")
+      }
+    }
   }
 }

@@ -5,6 +5,7 @@ import graft.eval.Eval
 import graft.profile.Profiler
 import graft.query._
 import graft.queries.Vectors
+import graft.search.Search
 import org.apache.spark.sql.functions._
 
 /** The reference's figure of merit (SURVEY.md §5): recall of the fused-
@@ -41,8 +42,9 @@ class RecallSpec extends SparkSpec {
           "lang" -> SparseFilter("lang", Seq("en"), weight = 2.0),
           "n_chars" -> DenseIntervalFilter("n_chars", 150.0, 350.0, weight = 2.0)),
         textVec = Vectors.QVEC)
-      val subject = Eval.fusedTopK(ProductEncoder.encode(items, layout),
-        "doc_id", "fused_vec", q, k = 60)
+      val subject = Search.fusedTopK(ProductEncoder.encode(items, layout),
+          "fused_vec", "doc_id", q, k = 60)
+        .select(col("doc_id").cast("long")).collect().map(_.getLong(0)).toSeq
       Eval.recall(oracle, subject)
     }
 

@@ -3,7 +3,7 @@ package graft
 import graft.encode.{FourierMath, ImageBlock}
 import graft.functions.Geo
 import graft.query._
-import graft.search.Search.{asDouble, dot}
+import graft.search.Search.{asDouble, dot, l2Norm}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -34,6 +34,31 @@ object ReferenceTwins {
     items.join(broadcast(hits), Seq(idCol))
       .select(col("query_idx") +: col(idCol) +: col("relevance") +: itemCols.toSeq: _*)
       .orderBy(col("query_idx"), col("relevance").desc, col(idCol))
+  }
+
+  /** The exact cosine k-NN the knn spine's Flat tier must equal, written
+    * independently of it: each query row joined (broadcast nested loop)
+    * against the full vector table, the query's own row excluded, per-query
+    * top-k by a (score desc, id) window. Output: (q_id, vec_id, score, rk). */
+  def knnBruteForce(vectors: DataFrame, queries: DataFrame,
+                    vecCol: String, idCol: String,
+                    qVecCol: String, qIdCol: String, k: Int): DataFrame = {
+    // L2 norms hoisted to the per-row sides (n + q rows) instead of per
+    // pair (n·q) — same sqrt(dot) arithmetic as cosine(), identical doubles
+    val v = graft.Tables.spread(vectors)
+      .withColumn("__vd", asDouble(col(vecCol)))
+      .withColumn("__vn", l2Norm(col("__vd")))
+    val q = queries.withColumn("__qd", asDouble(col(qVecCol)))
+      .withColumn("__qn", l2Norm(col("__qd")))
+    val score = dot(col("__qd"), col("__vd")) / (col("__qn") * col("__vn"))
+    val w = Window.partitionBy(col(qIdCol))
+      .orderBy(col("score").desc, col(idCol))
+    v.crossJoin(broadcast(q))
+      .filter(col(qIdCol) =!= col(idCol))
+      .withColumn("score", round(score, 5) + 0.0)
+      .withColumn("rk", row_number().over(w).cast("long"))
+      .filter(col("rk") <= k)
+      .select(col(qIdCol), col(idCol), col("score"), col("rk"))
   }
 
   /** Twin of `Search.ivfAssign`: array_min over literal centroid structs;

@@ -2,10 +2,11 @@ package graft
 
 import graft.encode._
 import graft.eval.Eval
-import graft.profile.Profiler
+import graft.profile.{ColumnProfile, Profiler}
 import graft.query._
 import graft.queries.Vectors
 import graft.search.{Quantizer, Search}
+import org.apache.spark.sql.DataFrame
 
 /** A11 differential sweep on the documents/embeddings tables: the
   * reference's seeded repetition harness, asserting it runs reproducibly
@@ -13,66 +14,60 @@ import graft.search.{Quantizer, Search}
   */
 class SweepSpec extends SparkSpec {
 
-  test("seeded sweep is reproducible and recall is sane") {
+  private def sweepItems() = {
     val d = sf("sf0.001")
-    val items = Embedders.precomputed(
-      Tables.documents(spark, d), Tables.embeddings(spark, d),
+    Embedders.precomputed(Tables.documents(spark, d), Tables.embeddings(spark, d),
       "doc_id", "vec_id", "embedding").persist()
+  }
+
+  /** The harmonic-`kh` subject engine: a persisted fused index answering
+    * the ε × point grid in one multiTopK scan, aux weights boosted to 2.0
+    * so the blocks compete with text similarity. */
+  private def engineFor(items: DataFrame, cands: Seq[String],
+                        profs: Map[String, ColumnProfile])(kh: Int): Eval.SweepEngine = {
+    val params = EncoderParams(numHarmonics = kh)
+    val layout = ProductEncoder.layoutFor(cands.map(profs), params,
+      textBlock = Some(TextBlock("embedding", 64)))
+    val indexed = ProductEncoder.encode(items, layout).persist()
+    Eval.SweepEngine(
+      search = (epsList, filterSets, texts, k) => {
+        // one scan per harmonic count: ε × points queries, row-major
+        val qs = for { eps <- epsList; (fs, qt) <- filterSets.zip(texts) }
+          yield QueryEncoder.encode(layout,
+            fs.map(f => f.column -> withWeight(f, 2.0)).toMap,
+            textVec = qt, params = QueryEncoder.Params(eps, 0.01))
+        val flat = Search.multiTopK(indexed, "fused_vec", "doc_id", qs, k * 3)
+          .map(_.map(_._1))
+        epsList.indices.map(e =>
+          filterSets.indices.map(j => flat(e * filterSets.size + j)))
+      },
+      close = () => { indexed.unpersist(); () })
+  }
+
+  test("seeded sweep is reproducible and recall is sane") {
+    val items = sweepItems()
     val cands = Seq("lang", "n_chars")
     val profs = Profiler.profile(items, cands)
-    val params = EncoderParams(numHarmonics = 16)
-    val layout = ProductEncoder.layoutFor(
-      cands.map(profs), params, textBlock = Some(TextBlock("embedding", 64)))
-    val indexed = ProductEncoder.encode(items, layout).persist()
-
-    def run(): Seq[Eval.SweepPoint] = Eval.sweep(
-      items, "doc_id", "embedding", Vectors.QVEC, cands, profs,
-      encodeAndSearch = (filterSets, k) => {
-        val qs = filterSets.map(fs => QueryEncoder.encode(layout,
-          fs.map(f => f.column -> withWeight(f, 2.0)).toMap,
-          textVec = Vectors.QVEC))
-        Search.multiTopK(indexed, "fused_vec", "doc_id", qs, k * 3).map(_.map(_._1))
-      },
-      k = 10, repetitions = 2)
+    def run(): Seq[Eval.SweepResult] = Eval.fullSweep(items, "doc_id", "embedding",
+      Vectors.QVEC, cands, profs, engineFor(items, cands, profs),
+      harmonicsSweep = Seq(16), epsilonSweep = Seq(0.01), k = 10, repetitions = 2)
 
     val a = run(); val b = run()
     assert(a == b, "sweep not reproducible")
     assert(a.size == 4) // m ∈ {1,2} × 2 reps
     val mean = a.map(_.recall).sum / a.size
     assert(mean >= 0.4, s"mean sweep recall too low: $mean (${a.map(_.recall)})")
-    items.unpersist(); indexed.unpersist()
+    items.unpersist()
   }
 
   test("full A11 sweep: harmonics × epsilon grid with K-monotone mean recall") {
-    val d = sf("sf0.001")
-    val items = Embedders.precomputed(
-      Tables.documents(spark, d), Tables.embeddings(spark, d),
-      "doc_id", "vec_id", "embedding").persist()
+    val items = sweepItems()
     val cands = Seq("lang", "n_chars")
     val profs = Profiler.profile(items, cands)
-    def engineFor(kh: Int): Eval.SweepEngine = {
-      val params = EncoderParams(numHarmonics = kh)
-      val layout = ProductEncoder.layoutFor(cands.map(profs), params,
-        textBlock = Some(TextBlock("embedding", 64)))
-      val indexed = ProductEncoder.encode(items, layout).persist()
-      Eval.SweepEngine(
-        search = (epsList, filterSets, k) => {
-          // one scan per harmonic count: ε × points queries, row-major
-          val qs = for { eps <- epsList; fs <- filterSets }
-            yield QueryEncoder.encode(layout,
-              fs.map(f => f.column -> withWeight(f, 2.0)).toMap,
-              textVec = Vectors.QVEC, params = QueryEncoder.Params(eps, 0.01))
-          val flat = Search.multiTopK(indexed, "fused_vec", "doc_id", qs, k * 3)
-            .map(_.map(_._1))
-          epsList.indices.map(e =>
-            filterSets.indices.map(j => flat(e * filterSets.size + j)))
-        },
-        close = () => { indexed.unpersist(); () })
-    }
     // the reference's full grid shape (config.yaml:7-8, scaled down):
     // num_harmonics × interval_epsilon × modality-count × repetitions
     val rs = Eval.fullSweep(items, "doc_id", "embedding", Vectors.QVEC,
-      cands, profs, engineFor, harmonicsSweep = Seq(4, 8, 16),
+      cands, profs, engineFor(items, cands, profs), harmonicsSweep = Seq(4, 8, 16),
       epsilonSweep = Seq(0.0, 0.01, 0.03), k = 10, repetitions = 2)
     assert(rs.size == 3 * 3 * 2 * 2, s"got ${rs.size} sweep points")
     // a9-shaped aggregation: one mean-recall row per grid cell
@@ -104,7 +99,7 @@ class SweepSpec extends SparkSpec {
     val q = emb.filter(org.apache.spark.sql.functions.col("vec_id") < 5)
       .select(org.apache.spark.sql.functions.col("vec_id").as("q_id"),
         org.apache.spark.sql.functions.col("embedding").as("q_emb"))
-    val exact = Search.knnBruteForce(emb, q, "embedding", "vec_id", "q_emb", "q_id", 10)
+    val exact = ReferenceTwins.knnBruteForce(emb, q, "embedding", "vec_id", "q_emb", "q_id", 10)
       .select("q_id", "vec_id").collect()
       .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSeq).toMap
     def lshRecall(bits: Int): Double = {
@@ -130,7 +125,7 @@ class SweepSpec extends SparkSpec {
     val q = emb.filter(org.apache.spark.sql.functions.col("vec_id") < 5)
       .select(org.apache.spark.sql.functions.col("vec_id").as("q_id"),
         org.apache.spark.sql.functions.col("embedding").as("q_emb"))
-    val exact = Search.knnBruteForce(emb, q, "embedding", "vec_id", "q_emb", "q_id", 10)
+    val exact = ReferenceTwins.knnBruteForce(emb, q, "embedding", "vec_id", "q_emb", "q_id", 10)
       .select("q_id", "vec_id").collect()
       .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSeq).toMap
     def ivfRecall(nProbe: Int): Double = {
