@@ -1,7 +1,7 @@
 package graft
 
 import graft.encode._
-import graft.profile.{ColumnProfile, ModalityKind, Profiler}
+import graft.profile.{ColumnProfile, Profiler}
 import graft.query._
 import graft.rerank.Rerank
 import graft.search.Search
@@ -85,6 +85,7 @@ final class FuseRankEngine private (
     * Spark job unless a GeoFilter needs the farthest item first. */
   def search(queryText: String, filters: Seq[Filter], k: Int = 10,
              method: SearchMethod = SearchMethod.Retrieval): DataFrame = {
+    Search.requireTopK(k, shortlist = 0)
     val textVec = embedder.embed(queryText)
     val fmap = filters.map(f => f.column -> f).toMap
     method match {
@@ -103,29 +104,12 @@ final class FuseRankEngine private (
             itemCols.map(c => transforms.get(c).fold(col(c))(t => t(col(c)).as(c))))
           .withColumnRenamed("score", "relevance")
         val minMax = profiles.map { case (c, p) => c -> (p.min, p.max) }
-        // Dense filter values arrive in ORIGINAL units; the answer columns
-        // and profile min/max are in TRANSFORMED scale — map the bounds
-        // through the fitted transform first, exactly as the reference
-        // transforms bounds before encode_query AND encode_result
-        // (src/app.py:274-290). Without this, abs(v−col)/between(lo,hi)
-        // and the min/max "Lowest"/"Highest" detection compare raw vs
-        // transformed values.
-        val scaledFilters = filters.map {
-          case f: DensePointFilter if transforms.contains(f.column) =>
-            f.copy(value = transforms(f.column).applyScalar(f.value))
-          case f: DenseIntervalFilter if transforms.contains(f.column) =>
-            val t = transforms(f.column)
-            // bounds transformed IN PLACE, no reorder — a decreasing
-            // transform (Reciprocal) inverts the interval, exactly as the
-            // reference does (src/app.py:273-276 transforms lower/upper
-            // without swapping; QueryEncoder matches)
-            f.copy(lo = t.applyScalar(f.lo), hi = t.applyScalar(f.hi))
-          case f => f
-        }
         val imageBlocks = layout.blocks.collect {
           case b: ImageBlock => b.name -> b
         }.toMap
-        Rerank.rerank(top, scaledFilters, minMax, geoCols, imageBlocks)
+        // the answer columns and profile min/max are in transformed units
+        Rerank.rerank(top, filters.map(Filter.transformed(_, transforms)), minMax,
+          geoCols, imageBlocks)
           .orderBy(col("relevance").desc, col(idCol))
     }
   }
@@ -143,6 +127,7 @@ final class FuseRankEngine private (
     * scores, same (relevance desc, id) order — with a `query_idx` column
     * (position in `queries`) prepended. Eager: the scan runs here. */
   def searchBatch(queries: Seq[(String, Seq[Filter])], k: Int = 10): DataFrame = {
+    Search.requireTopK(k, shortlist = 0)
     val far = QueryEncoder.sparkFarthest(items, geoCols)
     val qs = queries.map { case (text, filters) =>
       QueryEncoder.encode(layout, filters.map(f => f.column -> f).toMap,
@@ -167,8 +152,7 @@ final class FuseRankEngine private (
   /** Items with fitted transforms applied (reference transformed_df,
     * src/load.py:37-42) — the values re-ranking ranks; a Reranking
     * `search` applies the same `t(col(c))` to its k answer rows only. */
-  lazy val itemsTransformed: DataFrame =
-    transforms.foldLeft(items) { case (df, (c, t)) => df.withColumn(c, t(col(c))) }
+  lazy val itemsTransformed: DataFrame = Transforms.applyAll(items, transforms)
 
   /** Release the persisted index, and the item cache if [[FuseRankEngine.index]]
     * added it: items the caller persisted stay cached. Searches issued
@@ -226,28 +210,11 @@ object FuseRankEngine {
             case _ => None
           }
         }.toMap)
-    val transformed = transforms.foldLeft(items) { case (df, (c, t)) =>
-      df.withColumn(c, t(col(c)))
-    }
     // 2. ONE profile aggregation over all aux columns
-    val profiles = Profiler.profile(transformed, auxCols.filterNot(geoCols.contains))
-    // 3. layout: text block + per-modality aux blocks (schema order)
-    val textBlock = TextBlock("text_vec", embedder.dim)
-    val auxBlocks: Seq[Block] = auxCols.map { c =>
-      if (geoCols.contains(c)) {
-        val (lon, lat) = geoCols(c)
-        GeoBlock(c, lon, lat)
-      } else {
-        val p = profiles(c)
-        p.kind match {
-          case ModalityKind.Binary =>
-            val (v0, v1) = p.binaryValues
-            BinaryBlock(c, v0, v1)
-          case ModalityKind.Sparse => SparseBlock(c, p.distinctSorted)
-          case _ => DenseBlock(c, p.min, p.max, params)
-        }
-      }
-    }
+    val profiles = Profiler.profile(Transforms.applyAll(items, transforms),
+      auxCols.filterNot(geoCols.contains))
+    // 3. layout: text block + per-modality aux blocks (schema order) +
+    //    image blocks
     require(imageCols.intersect(auxCols).isEmpty,
       s"imageCols and auxCols overlap: ${imageCols.intersect(auxCols).mkString(",")}")
     val imageBlocks: Seq[Block] = imageCols.map { c =>
@@ -255,7 +222,9 @@ object FuseRankEngine {
         s"image column '$c' must be binary, got ${items.schema(c).dataType}")
       ImageBlock(c, imageGrid._1, imageGrid._2, imageCodec)
     }
-    val layout = VectorLayout(textBlock +: (auxBlocks ++ imageBlocks))
+    val auxLayout = ProductEncoder.layoutFor(auxCols, profiles, params,
+      Some(TextBlock("text_vec", embedder.dim)), geoCols)
+    val layout = VectorLayout(auxLayout.blocks ++ imageBlocks)
     // 4. narrow encode projection: weighted text fusion (partition-local
     //    compiled embedder) + modality blocks. Single-row-group parquet
     //    scans and row-numbered (global-window) items are ONE partition —
@@ -266,10 +235,8 @@ object FuseRankEngine {
     //    straight from it — so a transformed column's raw value rides the
     //    encode under an internal name.
     val raw = transforms.keys.toSeq.map(c => c -> s"__raw_$c").toMap
-    val encodeIn = transforms.foldLeft(Tables.spread(items)
-        .select(col("*") +: raw.toSeq.map { case (c, r) => col(c).as(r) }: _*)) {
-      case (df, (c, t)) => df.withColumn(c, t(col(c)))
-    }
+    val encodeIn = Transforms.applyAll(Tables.spread(items)
+      .select(col("*") +: raw.toSeq.map { case (c, r) => col(c).as(r) }: _*), transforms)
     val withText = Embedders.fuseInto(encodeIn, embedder, textCols, "text_vec")
     val indexed = ProductEncoder.encode(withText, layout)
       .select(items.columns.toSeq.map(c => raw.get(c).fold(col(c))(r => col(r).as(c))) ++

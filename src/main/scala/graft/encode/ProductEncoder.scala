@@ -124,21 +124,26 @@ object ProductEncoder {
              fusedCol: String = "fused_vec"): DataFrame =
     df.withColumn(fusedCol, concat(layout.blocks.map(_.encode): _*))
 
-  /** Layout builder from profiles (modality kinds per Profiler inference). */
-  def layoutFor(profiles: Seq[ColumnProfile], params: EncoderParams,
-                textBlock: Option[TextBlock] = None,
+  /** Layout builder: the optional text block, then one block per aux
+    * column in the given order — a geo block for a `geoCols` column, else
+    * the block of its profiled modality kind (Profiler inference). */
+  def layoutFor(auxCols: Seq[String], profiles: Map[String, ColumnProfile],
+                params: EncoderParams, textBlock: Option[TextBlock] = None,
                 geoCols: Map[String, (String, String)] = Map.empty): VectorLayout = {
     import graft.profile.ModalityKind._
-    val aux = profiles.map { p =>
-      p.kind match {
-        case Binary =>
-          val (v0, v1) = p.binaryValues
-          BinaryBlock(p.name, v0, v1)
-        case Sparse => SparseBlock(p.name, p.distinctSorted)
-        case Dense => DenseBlock(p.name, p.min, p.max, params)
-        case Geolocation =>
-          val (lon, lat) = geoCols(p.name)
-          GeoBlock(p.name, lon, lat)
+    val aux = auxCols.map { c =>
+      geoCols.get(c) match {
+        case Some((lon, lat)) => GeoBlock(c, lon, lat)
+        case None =>
+          val p = profiles(c)
+          p.kind match {
+            case Binary =>
+              val (v0, v1) = p.binaryValues
+              BinaryBlock(c, v0, v1)
+            case Sparse => SparseBlock(c, p.distinctSorted)
+            case Dense => DenseBlock(c, p.min, p.max, params)
+            case Geolocation => sys.error(s"geo column '$c' has no geoCols entry")
+          }
       }
     }
     VectorLayout(textBlock.toSeq ++ aux)

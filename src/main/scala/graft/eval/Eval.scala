@@ -229,6 +229,9 @@ object Eval {
         => IndexedSeq[IndexedSeq[Seq[Long]]],
       close: () => Unit = () => ())
 
+  /** Harmonic engines a [[fullSweep]] keeps in flight at once. */
+  private val MaxInFlightConfigs = 2
+
   /** Full A11 sweep (reference src/eval/evaluate.py:156-242): modality
     * count m = 1..N × `repetitions`, seed = int("<m><i>") ([[modalitiesFor]]),
     * one sampled row per seed, its m modalities' filters, then the oracle
@@ -248,7 +251,7 @@ object Eval {
     * Total jobs: 2 + |harmonicsSweep| scans (and as many encodes),
     * independent of the ε × modality-count × repetition grid size.
     *
-    * At most `maxInFlightConfigs` harmonic engines are in flight at once:
+    * At most [[MaxInFlightConfigs]] harmonic engines are in flight at once:
     * engines are built, evaluated and closed in bounded batches, so an
     * engine that DOES pin resources (a persisted index) never has more
     * than that many pinned at a time (a full reference-sized sweep — 10
@@ -265,7 +268,6 @@ object Eval {
                 engineFor: Int => SweepEngine,
                 harmonicsSweep: Seq[Int], epsilonSweep: Seq[Double],
                 k: Int = 10, repetitions: Int = 3,
-                maxInFlightConfigs: Int = 2,
                 sampleTextCol: Option[String] = None,
                 embedText: String => Array[Double] = null): Seq[SweepResult] = {
     import scala.concurrent.{Await, ExecutionContext, Future}
@@ -288,11 +290,10 @@ object Eval {
     }
     val oracles = hardFilterTopKBatchPerQuery(items, idCol, textVecCol,
       qTexts, filtersPer, k)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(maxInFlightConfigs, 1))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(MaxInFlightConfigs)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     try {
-      harmonicsSweep.grouped(math.max(maxInFlightConfigs, 1)).flatMap { batch =>
+      harmonicsSweep.grouped(MaxInFlightConfigs).flatMap { batch =>
         val futs = batch.map { kh =>
           Future {
             val eng = engineFor(kh)

@@ -69,14 +69,12 @@ object RecallCurve {
     // the oracle scores this column directly
     val withText = Embedders.fuseInto(items, emb,
       Map("Restaurant Name" -> 0.4, "Cuisines" -> 0.6), "text_vec").persist()
-    val transformed = transforms.foldLeft(withText) { case (df, (c, t)) =>
-      df.withColumn(c, t(col(c)))
-    }
+    val transformed = Transforms.applyAll(withText, transforms)
     val profsT = Profiler.profile(transformed, cands)
 
     def engineFor(kh: Int): Eval.SweepEngine = {
       val params = EncoderParams(numHarmonics = kh)
-      val layout = ProductEncoder.layoutFor(cands.map(profsT), params,
+      val layout = ProductEncoder.layoutFor(cands, profsT, params,
         textBlock = Some(TextBlock("text_vec", 64)))
       val indexed = ProductEncoder.encode(transformed, layout)
       Eval.SweepEngine(search = (epsList, filterSets, texts, k) => {

@@ -25,13 +25,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  /** Metadata schema carried next to each payload. */
-  val mediaMetaSchema: StructType = StructType(Seq(
-    StructField("format", StringType),
-    StructField("width", IntegerType),
-    StructField("height", IntegerType),
-    StructField("n_frames", IntegerType)))
-
   val decodedSchema: StructType = StructType(Seq(
     StructField("width", IntegerType),
     StructField("height", IntegerType),

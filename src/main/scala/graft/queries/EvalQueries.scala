@@ -123,7 +123,7 @@ object EvalQueries {
       // that is never scanned again
       def engineFor(kh: Int): Eval.SweepEngine = {
         val params = EncoderParams(numHarmonics = kh)
-        val layout = ProductEncoder.layoutFor(Cands.map(profs), params)
+        val layout = ProductEncoder.layoutFor(Cands, profs, params)
         val indexed = ProductEncoder.encode(items, layout)
         Eval.SweepEngine(
           // the layout has no text block: the per-point texts (all the

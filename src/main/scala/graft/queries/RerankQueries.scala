@@ -90,9 +90,11 @@ object RerankQueries {
 
   private val t5 = Q(
     "t5_ks_statistic",
-    (s, d) => Transforms.ksStatistic(
-        Tables.lineitem(s, d), log(2.0, col("l_quantity") + 1))
-      .select((round(col("ks"), 6) + 0.0).as("ks")),
+    (s, d) => {
+      val ks = Transforms.ksStatistics(
+        Tables.lineitem(s, d), Seq("ks" -> log(2.0, col("l_quantity") + 1)))("ks")
+      s.range(1).select((round(lit(ks), 6) + 0.0).as("ks"))
+    },
     Some(s"""WITH t AS (SELECT log2(l_quantity + 1) AS x FROM lineitem
                         WHERE l_quantity IS NOT NULL),
              st AS (SELECT avg(x) AS m, sqrt(avg(x*x) - avg(x)*avg(x)) AS sd,
@@ -154,20 +156,14 @@ object RerankQueries {
     (s, d) => {
       val li = Tables.lineitem(s, d)
       // ONE histogram action fits λ AND scores all four candidates
-      // (Transforms.fitAndKs — the bestTransform single-scan trade with
-      // an explicit candidate list); was a fit collect plus a separate
-      // KS job set
-      val names = Seq("reciprocal", "log2p1", "sqrt", "yeojohnson")
-      val (lam, ks) = Transforms.fitAndKs(li, "l_quantity", l => Seq(
-        "reciprocal" -> graft.transform.Reciprocal(),
-        "log2p1" -> graft.transform.Log2p1,
-        "sqrt" -> graft.transform.SqrtT,
-        "yeojohnson" -> YeoJohnson(l)))
-      val best = names.map(n => n -> ks(n)).minBy(_._2)
+      // (Transforms.fit; l_quantity has no negative value, so the
+      // candidate list is the full reference order)
+      val fit = Transforms.fit(li, "l_quantity")
+      val (best, ks) = fit.ks.minBy(_._2)
       import s.implicits._
-      Seq((best._1,
-        BigDecimal(lam).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
-        BigDecimal(best._2).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble))
+      Seq((best.name,
+        BigDecimal(fit.lambda).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
+        BigDecimal(ks).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble))
         .toDF("best_transform", "lambda", "ks")
     },
     Some(s"""WITH RECURSIVE

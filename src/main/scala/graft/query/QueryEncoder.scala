@@ -22,9 +22,9 @@ final case class BinaryFilter(column: String, value: String,
 /** Geolocation point (reference src/encode.py:150-161). */
 final case class GeoFilter(column: String, lon: Double, lat: Double,
                            negated: Boolean = false, weight: Double = 1.0) extends Filter
-/** Dense point/centroid; value in ORIGINAL units — the fitted transform is
-  * applied here, exactly like the reference transforms UI bounds
-  * (src/app.py:274-276). "Lowest"/"Highest" = pass the column min/max. */
+/** Dense point/centroid; value in ORIGINAL units, mapped through the
+  * column's fitted transform by [[Filter.transformed]].
+  * "Lowest"/"Highest" = pass the column min/max. */
 final case class DensePointFilter(column: String, value: Double,
                                   negated: Boolean = false, weight: Double = 1.0) extends Filter
 /** Dense interval [lo, hi] in original units (reference src/encode.py:175-183). */
@@ -38,6 +38,23 @@ final case class ImageFilter(column: String, payload: Array[Byte],
   * contribute 0 (reference value=None, src/encode.py:116-117). */
 final case class NoFilter(column: String, weight: Double = 1.0) extends Filter
 
+object Filter {
+  /** A dense filter's point or bounds mapped through its column's fitted
+    * transform: dense filter values arrive in ORIGINAL units, while a
+    * transformed column is encoded, profiled and re-ranked in TRANSFORMED
+    * units (reference src/app.py:273-290 transforms the bounds before
+    * encode_query and encode_result). Bounds map in place, unordered — a
+    * decreasing transform (Reciprocal) inverts the interval, as the
+    * reference's does. Every other filter is returned as is. */
+  def transformed(f: Filter, transforms: Map[String, FittedTransform]): Filter =
+    (f, transforms.get(f.column)) match {
+      case (p: DensePointFilter, Some(t)) => p.copy(value = t.applyScalar(p.value))
+      case (i: DenseIntervalFilter, Some(t)) =>
+        i.copy(lo = t.applyScalar(i.lo), hi = t.applyScalar(i.hi))
+      case _ => f
+    }
+}
+
 /** Driver-side query vector builder — the read-path twin of ProductEncoder
   * (reference encode_query, src/encode.py:107-189). All math is pure Scala;
   * the single data-dependent Spark job is the geolocation farthest-point
@@ -50,8 +67,9 @@ object QueryEncoder {
 
   /** Encode the aux blocks of a query against a layout. `textVec` fills the
     * text block (already L2-normalized). `transforms` maps dense columns to
-    * their fitted transform (applied to filter bounds). `farthest` resolves
-    * a geo column to the farthest point from the query point.
+    * their fitted transform ([[Filter.transformed]] maps the filter values
+    * through it). `farthest` resolves a geo column to the farthest point
+    * from the query point.
     */
   def encode(layout: VectorLayout,
              filters: Map[String, Filter],
@@ -74,16 +92,17 @@ object QueryEncoder {
             s"(image blocks: ${layout.blocks.collect { case b: ImageBlock => b.name }.mkString(", ")})")
       case _ => ()
     }
+    val scaled = filters.map { case (c, f) => c -> Filter.transformed(f, transforms) }
     val out = Array.newBuilder[Double]
     layout.blocks.foreach {
       case TextBlock(_, dim) =>
         require(textVec.length == dim, s"text vector dim ${textVec.length} != $dim")
         out ++= textVec
-      case b: SparseBlock => out ++= encodeSparse(b, filters.get(b.name))
-      case b: BinaryBlock => out ++= encodeBinary(b, filters.get(b.name))
-      case b: GeoBlock    => out ++= encodeGeo(b, filters.get(b.name), farthest)
-      case b: DenseBlock  => out ++= encodeDense(b, filters.get(b.name), transforms, params)
-      case b: ImageBlock  => out ++= encodeImage(b, filters.get(b.name))
+      case b: SparseBlock => out ++= encodeSparse(b, scaled.get(b.name))
+      case b: BinaryBlock => out ++= encodeBinary(b, scaled.get(b.name))
+      case b: GeoBlock    => out ++= encodeGeo(b, scaled.get(b.name), farthest)
+      case b: DenseBlock  => out ++= encodeDense(b, scaled.get(b.name), params)
+      case b: ImageBlock  => out ++= encodeImage(b, scaled.get(b.name))
     }
     out.result()
   }
@@ -122,14 +141,11 @@ object QueryEncoder {
 
   /** Q4/Q5 (reference src/encode.py:162-184): centroid fills dims [0,3),
     * interval fills [3, 2K+4); null-indicator dim +1 appended for BOTH
-    * (and for a present-but-valueless filter). */
-  def encodeDense(b: DenseBlock, f: Option[Filter],
-                  transforms: Map[String, FittedTransform],
-                  params: Params): Array[Double] = {
+    * (and for a present-but-valueless filter). Filter values are in the
+    * block's (transformed) units. */
+  def encodeDense(b: DenseBlock, f: Option[Filter], params: Params): Array[Double] = {
     val k = b.params.numHarmonics
-    def tf(x: Double): Double =
-      transforms.get(b.name).map(_.applyScalar(x)).getOrElse(x)
-    def scale(x: Double): Double = FourierMath.scaleTo(tf(x), b.min, b.max)
+    def scale(x: Double): Double = FourierMath.scaleTo(x, b.min, b.max)
     f match {
       case Some(DensePointFilter(_, v, neg, w)) =>
         val body = new Array[Double](2 * k + 4)

@@ -39,13 +39,6 @@ object Search {
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (l2Norm(a) * l2Norm(b))
 
-  /** L2-normalize an array column (reference `F.normalize(p=2)`,
-    * src/encode.py:304). Zero vectors stay zero. */
-  def l2Normalize(a: Column): Column = {
-    val n = l2Norm(a)
-    when(n === 0.0, a).otherwise(transform(a, x => x / n))
-  }
-
   def asDouble(a: Column): Column = a.cast("array<double>")
 
   /** The 5-dp score of the exact top-k contract, IEEE −0.0 collapsed to

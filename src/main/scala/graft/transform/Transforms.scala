@@ -80,13 +80,57 @@ object YeoJohnson {
     * aggregation jobs (a billion-distinct column cannot be collected). */
   val MaxFitHistogram = 200000
 
-  /** The histogram half of [[fit]]: golden-section MLE over a collected
-    * ascending `(value, weight)` histogram — pure driver math, shared by
-    * [[fit]] and by `Transforms.bestTransform`'s single-scan path so the
-    * two can never drift by an ulp. */
-  private[transform] def fitHistogram(xs: Array[(Double, Double)],
-                                      lo: Double = -2.0, hi: Double = 2.0,
-                                      tol: Double = 1e-4): Double = {
+  /** One column's raw fit: the MLE λ, whether any value is negative (the
+    * gate on the log and sqrt candidates), and the raw `(value, count)`
+    * histogram the two came from — `None` above [[MaxFitHistogram]]. */
+  private[transform] final case class RawFit(lambda: Double, hasNegative: Boolean,
+                                             hist: Option[Array[(Double, Long)]])
+
+  /** The one fit body behind [[fit]] and `Transforms.fit`. MLE λ by
+    * golden-section search over the Yeo-Johnson log-likelihood (scipy's
+    * approach, Brent over [-2, 2]):
+    *   llf(λ) = −n/2·log(var(ψ(x,λ))) + (λ−1)·Σ sign(x)·log(|x|+1)
+    *
+    * Fast path: collect the non-null `(value, count)` histogram in ONE job
+    * and run the whole search driver-side ([[fitHistogram]]) — ~25
+    * sequential llf evaluations over the histogram instead of ~25 cluster
+    * jobs. Above [[MaxFitHistogram]] distinct values (the
+    * unbounded-cardinality scale path) one aggregation job yields n,
+    * Σ sign·log and the minimum, then one aggregation job per λ; the
+    * search stays a bounded driver loop either way — never a collect of
+    * the raw data.
+    */
+  private[transform] def rawFit(df: DataFrame, c: Column, lo: Double = -2.0,
+                                hi: Double = 2.0, tol: Double = 1e-4): RawFit = {
+    val hist = df.filter(c.isNotNull)
+      .groupBy(c.as("x")).agg(count(lit(1)).as("cnt"))
+      .limit(MaxFitHistogram + 1)
+      .collect()
+    if (hist.length <= MaxFitHistogram) {
+      val raw = hist.map(r => (r.getDouble(0), r.getLong(1)))
+      return RawFit(fitHistogram(raw, lo, hi, tol), raw.exists(_._1 < 0), Some(raw))
+    }
+    val nonNull = df.filter(c.isNotNull)
+    val base = nonNull
+      .agg(count(lit(1)).as("n"), sum(signum(c) * log(abs(c) + 1)).as("slog"),
+        min(c).as("least"))
+      .head()
+    val n = base.getAs[Long]("n").toDouble
+    val slog = base.getAs[Double]("slog")
+    val llf = (l: Double) => {
+      val t = YeoJohnson.expr(c, l)
+      val r = nonNull.agg(avg(t).as("m"), avg(t * t).as("m2")).head()
+      val v = r.getAs[Double]("m2") - math.pow(r.getAs[Double]("m"), 2)
+      -n / 2 * math.log(math.max(v, 1e-300)) + (l - 1) * slog
+    }
+    RawFit(goldenSection(llf, lo, hi, tol), base.getAs[Double]("least") < 0, None)
+  }
+
+  /** Golden-section MLE over a raw `(value, count)` histogram — pure
+    * driver math, summed in ascending value order. */
+  private def fitHistogram(raw: Array[(Double, Long)], lo: Double, hi: Double,
+                           tol: Double): Double = {
+    val xs = raw.map { case (x, w) => (x, w.toDouble) }.sortBy(_._1)
     val n = xs.map(_._2).sum
     val slog = xs.map { case (x, w) => math.signum(x) * math.log(math.abs(x) + 1) * w }.sum
     val llf = (l: Double) => {
@@ -114,49 +158,10 @@ object YeoJohnson {
     (a + b) / 2
   }
 
-  /** MLE λ fit by golden-section search over the Yeo-Johnson log-likelihood
-    * (scipy's approach, Brent over [-2, 2]):
-    *   llf(λ) = −n/2·log(var(ψ(x,λ))) + (λ−1)·Σ sign(x)·log(|x|+1)
-    *
-    * Fast path: collect the (value, count) histogram in ONE job and run the
-    * whole search driver-side — ~25 sequential llf evaluations over the
-    * histogram instead of ~25 cluster jobs. Sorted ascending for
-    * deterministic summation. Falls back to one aggregation job per λ when
-    * the distinct-value count exceeds [[MaxFitHistogram]] (the
-    * unbounded-cardinality scale path; the search stays a bounded driver
-    * loop either way — never a collect of the raw data).
-    */
+  /** The MLE λ of a column ([[rawFit]]). */
   def fit(df: DataFrame, colName: String, lo: Double = -2.0, hi: Double = 2.0,
-          tol: Double = 1e-4): Double = {
-    val c = col(colName).cast("double")
-    val hist = df.filter(c.isNotNull)
-      .groupBy(c.as("x")).agg(count(lit(1)).as("cnt"))
-      .limit(MaxFitHistogram + 1)
-      .collect()
-
-    if (hist.length <= MaxFitHistogram)
-      return fitHistogram(
-        hist.map(r => (r.getDouble(0), r.getLong(1).toDouble)).sortBy(_._1),
-        lo, hi, tol)
-
-    val llf: Double => Double = {
-        val base = df.filter(c.isNotNull)
-          .agg(count(lit(1)).as("n"),
-            sum(signum(c) * log(abs(c) + 1)).as("slog"))
-          .head()
-        val n = base.getAs[Long]("n").toDouble
-        val slog = base.getAs[Double]("slog")
-        (l: Double) => {
-          val t = YeoJohnson.expr(c, l)
-          val r = df.filter(c.isNotNull)
-            .agg(avg(t).as("m"), avg(t * t).as("m2")).head()
-          val v = r.getAs[Double]("m2") - math.pow(r.getAs[Double]("m"), 2)
-          -n / 2 * math.log(math.max(v, 1e-300)) + (l - 1) * slog
-        }
-      }
-
-    goldenSection(llf, lo, hi, tol)
-  }
+          tol: Double = 1e-4): Double =
+    rawFit(df, col(colName).cast("double"), lo, hi, tol).lambda
 }
 
 object Transforms {
@@ -357,110 +362,54 @@ object Transforms {
     } finally grouped.unpersist()
   }
 
-  /** Single-candidate KS statistic as a 1-row DataFrame (column `ks`). */
-  def ksStatistic(df: DataFrame, valueCol: Column): DataFrame = {
-    val ks = ksStatistics(df, Seq("v" -> valueCol))("v")
-    df.sparkSession.range(1).select(lit(ks).as("ks"))
+  /** A column's fit: the Yeo-Johnson λ and every candidate's KS statistic,
+    * in the reference's candidate order (alphabetical by class name:
+    * reciprocal, log2p1 and sqrt when no value is negative, yeojohnson). */
+  final case class ColumnFit(lambda: Double, ks: Seq[(FittedTransform, Double)]) {
+    /** The candidate with the lowest KS statistic if it beats 1.0 (first of
+      * equal minima); None when every candidate is rejected. */
+    def best: Option[FittedTransform] = {
+      val (t, stat) = ks.minBy(_._2)
+      if (stat < 1.0) Some(t) else None
+    }
   }
 
-  /** Best-transform selection (reference get_best_transform,
-    * src/transform.py:86-102): fit every candidate, score by KS statistic,
-    * pick the minimum if it beats 1.0; candidates that reject the data
-    * (negative input) are skipped. Candidate order matches the reference's
-    * reflection order (alphabetical by class name). All candidate KS
-    * statistics are computed in ONE pass (ksStatistics).
-    */
-  def bestTransform(df: DataFrame, colName: String,
-                    fitYj: Boolean = true): Option[FittedTransform] = {
+  /** Fit every candidate of a column and score each by its KS statistic
+    * (reference get_best_transform, src/transform.py:86-102). One raw
+    * histogram collect ([[YeoJohnson.rawFit]]) feeds the negativity gate,
+    * λ and, below the cap, every candidate's KS: each candidate is a pure
+    * scalar function of x, so its transformed histogram derives in the
+    * driver (sort + merge equal values = the groupBy-on-transformed-value
+    * semantics) and [[ksHistogram]] runs the same arithmetic as the
+    * distributed path. Above the cap the candidates are scored in one
+    * distributed [[ksStatistics]] pass. */
+  def fit(df: DataFrame, colName: String): ColumnFit = {
     val c = col(colName).cast("double")
-
-    // SINGLE-SCAN fast path: one bounded histogram of the RAW column
-    // feeds all three consumers — the negativity probe (was its own
-    // limit-1 job), the YJ λ fit (was a second histogram job), and every
-    // candidate's KS statistic (was a tag-exploded scan + devs job):
-    // each candidate transform is a pure scalar function of x, so the
-    // TRANSFORMED histograms derive in the driver (sort + merge equal
-    // values = the groupBy-on-transformed-value semantics), and
-    // fitHistogram/ksHistogram are the identical arithmetic the
-    // per-path jobs ran. 4 driver actions become 1. A column with more
-    // than MaxFitHistogram distinct values (the unbounded scale shape)
-    // pays one wasted limit-collect and takes the original multi-job
-    // path below, unchanged.
-    val hist = df.filter(c.isNotNull)
-      .groupBy(c.as("x")).agg(count(lit(1)).as("cnt"))
-      .limit(YeoJohnson.MaxFitHistogram + 1)
-      .collect()
-    if (hist.length <= YeoJohnson.MaxFitHistogram) {
-      val raw = hist.map(r => (r.getDouble(0), r.getLong(1)))
-      val hasNegative = raw.exists(_._1 < 0)
-      val candidates: Seq[FittedTransform] =
-        Seq(Reciprocal()) ++
-          (if (hasNegative) Seq.empty else Seq(Log2p1, SqrtT)) ++
-          (if (fitYj) Seq(YeoJohnson(YeoJohnson.fitHistogram(
-            raw.map { case (x, w) => (x, w.toDouble) }.sortBy(_._1))))
-           else Seq.empty)
+    val f = YeoJohnson.rawFit(df, c)
+    val candidates: Seq[FittedTransform] =
+      Seq(Reciprocal()) ++ (if (f.hasNegative) Nil else Seq(Log2p1, SqrtT)) :+
+        YeoJohnson(f.lambda)
+    val ks = f.hist match {
       // NaN raw values transform to NaN (matching the Column path, where
       // sqrt/log of NaN is NaN) rather than tripping applyScalar's
       // non-negativity require — a NaN-poisoned KS is then never < 1.0.
-      def tval(t: FittedTransform, x: Double): Double =
-        if (x.isNaN) Double.NaN else t.applyScalar(x)
-      val stats = candidates.map { t =>
-        t.name -> (if (raw.isEmpty) 1.0
-                   else ksHistogram(raw.map { case (x, w) => (tval(t, x), w) }))
-      }.toMap
-      return pickBest(candidates, stats)
+      case Some(raw) => candidates.map(t =>
+        if (raw.isEmpty) 1.0
+        else ksHistogram(raw.map { case (x, w) =>
+          (if (x.isNaN) Double.NaN else t.applyScalar(x), w) }))
+      case None =>
+        val byName = ksStatistics(df, candidates.map(t => t.name -> t(c)))
+        candidates.map(t => byName(t.name))
     }
-
-    val hasNegative = df.filter(c < 0).limit(1).count() > 0
-    val candidates: Seq[FittedTransform] =
-      Seq(Reciprocal()) ++
-        (if (hasNegative) Seq.empty else Seq(Log2p1, SqrtT)) ++
-        (if (fitYj) Seq(YeoJohnson(YeoJohnson.fit(df, colName))) else Seq.empty)
-    pickBest(candidates, ksStatistics(df, candidates.map(t => t.name -> t(c))))
+    ColumnFit(f.lambda, candidates.zip(ks))
   }
 
-  /** One-action λ-fit + per-candidate KS for an EXPLICIT candidate list
-    * (t7's shape, where the caller owns the candidate set instead of the
-    * negativity-gated default): collects the bounded raw histogram once,
-    * fits λ driver-side (fitHistogram — identical arithmetic to the
-    * fit-job path), and scores every candidate from the driver-derived
-    * transformed histograms (ksHistogram). Above the cap: the original
-    * two-action shape (YeoJohnson.fit job(s), then the distributed
-    * ksStatistics), unchanged. */
-  def fitAndKs(df: DataFrame, colName: String,
-               candsOf: Double => Seq[(String, FittedTransform)])
-      : (Double, Map[String, Double]) = {
-    val c = col(colName).cast("double")
-    val hist = df.filter(c.isNotNull)
-      .groupBy(c.as("x")).agg(count(lit(1)).as("cnt"))
-      .limit(YeoJohnson.MaxFitHistogram + 1)
-      .collect()
-    if (hist.length <= YeoJohnson.MaxFitHistogram) {
-      val raw = hist.map(r => (r.getDouble(0), r.getLong(1)))
-      val lam = YeoJohnson.fitHistogram(
-        raw.map { case (x, w) => (x, w.toDouble) }.sortBy(_._1))
-      def tval(t: FittedTransform, x: Double): Double =
-        if (x.isNaN) Double.NaN else t.applyScalar(x)
-      val stats = candsOf(lam).map { case (n, t) =>
-        n -> (if (raw.isEmpty) 1.0
-              else ksHistogram(raw.map { case (x, w) => (tval(t, x), w) }))
-      }.toMap
-      (lam, stats)
-    } else {
-      val lam = YeoJohnson.fit(df, colName)
-      val cands = candsOf(lam)
-      (lam, ksStatistics(df, cands.map { case (n, t) => n -> t(c) }))
-    }
-  }
+  /** The best normalizing transform of a column ([[fit]]'s `best`). */
+  def bestTransform(df: DataFrame, colName: String): Option[FittedTransform] =
+    fit(df, colName).best
 
-  private def pickBest(candidates: Seq[FittedTransform],
-                       stats: Map[String, Double]): Option[FittedTransform] = {
-    var best: Option[FittedTransform] = None
-    var bestStat = 1.0
-    candidates.foreach { t =>
-      val stat = stats(t.name)
-      if (stat < bestStat) { bestStat = stat; best = Some(t) }
-    }
-    best
-  }
+  /** `df` with each mapped column replaced by its fitted transform of
+    * itself (reference transformed_df, src/load.py:37-42). */
+  def applyAll(df: DataFrame, transforms: Map[String, FittedTransform]): DataFrame =
+    transforms.foldLeft(df) { case (d, (c, t)) => d.withColumn(c, t(col(c))) }
 }

@@ -126,40 +126,55 @@ class EnginePartitionSpec extends SparkSpec {
   }
   private def rows(df: DataFrame): Seq[Seq[Any]] = df.collect().toSeq.map(r => r.toSeq.map(bits))
 
+  /** Retrieval equals the items gather and Reranking equals the window
+    * twin on `itemsTransformed`, bit for bit, for every query. */
+  private def assertAnswerRows(eng: FuseRankEngine): Unit = {
+    val itemCols = eng.items.columns.filterNot(_ == "row_id").map(col).toSeq
+    def gather(table: DataFrame, top: DataFrame) =
+      table.join(broadcast(top.withColumnRenamed("score", "relevance")), Seq("row_id"))
+        .select(col("row_id") +: col("relevance") +: itemCols: _*)
+    val far = QueryEncoder.sparkFarthest(eng.items, eng.config.geoCols)
+    val t = eng.transforms("price")
+    val minMax = eng.profiles.map { case (c, p) => c -> (p.min, p.max) }
+    val imageBlocks = eng.layout.blocks.collect { case b: ImageBlock => b.name -> b }.toMap
+    val k = 12
+    queries.foreach { case (text, filters) =>
+      val q = QueryEncoder.encode(eng.layout, filters.map(f => f.column -> f).toMap,
+        textVec = config.embedder.embed(text), transforms = eng.transforms, farthest = far)
+      val retrieval = rows(eng.search(text, filters, k))
+      assert(retrieval == rows(gather(eng.items,
+          Search.fusedTopK(eng.indexed, "fused_vec", "row_id", q, k))
+        .orderBy(col("relevance").desc, col("row_id"))), s"'$text' retrieval rows")
+
+      val scaled = filters.map {
+        case f: DenseIntervalFilter if f.column == "price" =>
+          f.copy(lo = t.applyScalar(f.lo), hi = t.applyScalar(f.hi))
+        case f => f
+      }
+      val top = Search.fusedTopK(eng.indexed, "text_vec", "row_id",
+        config.embedder.embed(text), k)
+      val twin = ReferenceTwins.RerankWindows.rerank(gather(eng.itemsTransformed, top),
+          scaled, minMax, eng.config.geoCols, imageBlocks)
+        .orderBy(col("relevance").desc, col("row_id"))
+      assert(rows(eng.search(text, filters, k, SearchMethod.Reranking)) == rows(twin),
+        s"'$text' reranking rows")
+    }
+  }
+
   test("answer rows: Retrieval = the items gather, Reranking = the window twin on transformed rows") {
     val eng = FuseRankEngine.index(items, config)
     try {
       assert(eng.transforms.keySet == Set("price"))
-      val itemCols = eng.items.columns.filterNot(_ == "row_id").map(col).toSeq
-      def gather(table: DataFrame, top: DataFrame) =
-        table.join(broadcast(top.withColumnRenamed("score", "relevance")), Seq("row_id"))
-          .select(col("row_id") +: col("relevance") +: itemCols: _*)
-      val far = QueryEncoder.sparkFarthest(eng.items, eng.config.geoCols)
-      val t = eng.transforms("price")
-      val minMax = eng.profiles.map { case (c, p) => c -> (p.min, p.max) }
-      val imageBlocks = eng.layout.blocks.collect { case b: ImageBlock => b.name -> b }.toMap
-      val k = 12
-      queries.foreach { case (text, filters) =>
-        val q = QueryEncoder.encode(eng.layout, filters.map(f => f.column -> f).toMap,
-          textVec = config.embedder.embed(text), transforms = eng.transforms, farthest = far)
-        val retrieval = rows(eng.search(text, filters, k))
-        assert(retrieval == rows(gather(eng.items,
-            Search.fusedTopK(eng.indexed, "fused_vec", "row_id", q, k))
-          .orderBy(col("relevance").desc, col("row_id"))), s"'$text' retrieval rows")
+      assertAnswerRows(eng)
+    } finally eng.close()
+  }
 
-        val scaled = filters.map {
-          case f: DenseIntervalFilter if f.column == "price" =>
-            f.copy(lo = t.applyScalar(f.lo), hi = t.applyScalar(f.hi))
-          case f => f
-        }
-        val top = Search.fusedTopK(eng.indexed, "text_vec", "row_id",
-          config.embedder.embed(text), k)
-        val twin = ReferenceTwins.RerankWindows.rerank(gather(eng.itemsTransformed, top),
-            scaled, minMax, eng.config.geoCols, imageBlocks)
-          .orderBy(col("relevance").desc, col("row_id"))
-        assert(rows(eng.search(text, filters, k, SearchMethod.Reranking)) == rows(twin),
-          s"'$text' reranking rows")
-      }
+  test("answer rows with a fitted transform: the same two equalities") {
+    val eng = FuseRankEngine.index(items,
+      config.copy(presetTransforms = Map.empty, fitTransforms = true))
+    try {
+      assert(eng.transforms.contains("price"), eng.transforms)
+      assertAnswerRows(eng)
     } finally eng.close()
   }
 
@@ -224,14 +239,19 @@ class EnginePartitionSpec extends SparkSpec {
     val eng = FuseRankEngine.index(items, config)
     try {
       val n = eng.indexed.count()
+      // queries(1) has a GeoFilter: the k check runs before its
+      // farthest-point job, so a failing call submits no job
       val (text, filters) = queries(1)
-      for (bad <- Seq(0, -3)) {
-        for (method <- Seq(SearchMethod.Retrieval, SearchMethod.Reranking)) {
-          val e = intercept[IllegalArgumentException](eng.search(text, filters, bad, method))
-          assert(e.getMessage.contains("k must be positive"), e.getMessage)
-        }
-        val e = intercept[IllegalArgumentException](eng.searchBatch(queries, bad))
+      def failsWithoutJobs(call: => Any): Unit = {
+        val (e, trace) = org.apache.spark.sql.graft.QueryTrace.during(spark, "bad k")(
+          intercept[IllegalArgumentException](call))
         assert(e.getMessage.contains("k must be positive"), e.getMessage)
+        assert(trace.jobs.isEmpty, trace.jobs)
+      }
+      for (bad <- Seq(0, -3)) {
+        for (method <- Seq(SearchMethod.Retrieval, SearchMethod.Reranking))
+          failsWithoutJobs(eng.search(text, filters, bad, method))
+        failsWithoutJobs(eng.searchBatch(queries, bad))
       }
       for (method <- Seq(SearchMethod.Retrieval, SearchMethod.Reranking)) {
         val got = eng.search(text, filters, n.toInt + 50, method)

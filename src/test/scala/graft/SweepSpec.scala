@@ -26,7 +26,7 @@ class SweepSpec extends SparkSpec {
   private def engineFor(items: DataFrame, cands: Seq[String],
                         profs: Map[String, ColumnProfile])(kh: Int): Eval.SweepEngine = {
     val params = EncoderParams(numHarmonics = kh)
-    val layout = ProductEncoder.layoutFor(cands.map(profs), params,
+    val layout = ProductEncoder.layoutFor(cands, profs, params,
       textBlock = Some(TextBlock("embedding", 64)))
     val indexed = ProductEncoder.encode(items, layout).persist()
     Eval.SweepEngine(

@@ -34,7 +34,7 @@ class TransformSpec extends SparkSpec {
 
   test("KS statistic matches golden for each transform") {
     def ks(c: org.apache.spark.sql.Column): Double =
-      Transforms.ksStatistic(df, c).head().getDouble(0)
+      Transforms.ksStatistics(df, Seq("v" -> c))("v")
     assert(math.abs(ks(col("x")) - 0.22846809882440905) < 1e-6)
     assert(math.abs(ks(Log2p1(col("x"))) - 0.165939627803399) < 1e-6)
     assert(math.abs(ks(SqrtT(col("x"))) - 0.20184076149318964) < 1e-6)
@@ -69,5 +69,20 @@ class TransformSpec extends SparkSpec {
     assert(ksAll == Map("dead" -> 1.0), s"$ksAll")
     // bestTransform on an all-null column: every candidate rejected -> None
     assert(Transforms.bestTransform(mixed, "allnull").isEmpty)
+  }
+
+  test("above the histogram cap: the per-λ fit and the bucketed KS, in fewer jobs") {
+    // MaxFitHistogram + 1 distinct non-negative values: the fit takes the
+    // per-λ aggregation jobs and the KS its bucketed path. The expected
+    // values are those of the three-collect fit this one replaced (best
+    // SqrtT, 72 jobs); aggregates fix no merge order, hence the 1e-9.
+    val wide = spark.range(YeoJohnson.MaxFitHistogram + 1)
+      .select((col("id") * col("id") / 1e6).as("x"))
+    val (fit, trace) = org.apache.spark.sql.graft.QueryTrace.during(spark, "fit")(
+      Transforms.fit(wide, "x"))
+    assert(fit.best.contains(SqrtT), fit)
+    assert(math.abs(fit.lambda - 0.35584572911192736) < 1e-9, fit.lambda)
+    assert(math.abs(fit.ks.toMap.apply(SqrtT) - 0.057209280180061106) < 1e-9, fit.ks)
+    assert(trace.jobs.size < 72, trace.jobs.size)
   }
 }
