@@ -1,6 +1,6 @@
 package graft.encode
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Text-embedding boundary (reference TextEmbedder, src/embed.py:25-41).
@@ -15,11 +15,9 @@ import org.apache.spark.sql.functions._
   */
 trait Embedder extends Serializable {
   def dim: Int
-  /** Embed one string (driver side, for queries). L2-normalized. */
+  /** Embed one string: queries on the driver, rows on the executors
+    * ([[Embedders.fuseInto]]). L2-normalized. */
   def embed(text: String): Array[Double]
-  /** Column expression embedding a string column per row (executor side).
-    * Must agree exactly with `embed`. */
-  def embedColumn(c: Column): Column
 }
 
 /** Deterministic hashed char-trigram embedder. Per-row computation only —
@@ -28,16 +26,13 @@ trait Embedder extends Serializable {
   * hash; signed hashing (sign from the hash's next bit) keeps E[dot] ≈ 0
   * for unrelated texts; final L2 normalization.
   *
-  * Both paths normalize input to ASCII FIRST (strip non-ASCII code units),
-  * THEN lowercase: on pure-ASCII text, Spark's `lower()` (UTF8String ASCII
-  * fast path), `ascii()` and driver `toLowerCase(Locale.ROOT)`/`charAt`
-  * agree exactly — so `embed` and `embedColumn` produce identical vectors
-  * for ANY input, non-ASCII included (it contributes nothing on either
-  * side). Without the strip, `ascii()` (first UTF-8 byte) and `charAt`
-  * (UTF-16 unit) diverge on non-ASCII text.
+  * Input is normalized to ASCII FIRST (strip non-ASCII code units), THEN
+  * lowercased, so non-ASCII text contributes nothing; the native
+  * [[org.apache.spark.sql.graft.HashEmbed]] executor form follows the
+  * same rule bit for bit.
   *
   * Weighted multi-column fusion (reference Σ wᵢ·embᵢ then normalize,
-  * src/encode.py:286-304) = embedColumns with a weight map.
+  * src/encode.py:286-304) is [[Embedders.fuseInto]] with a weight map.
   */
 final case class HashingEmbedder(dim: Int = 64) extends Embedder {
 
@@ -67,34 +62,6 @@ final case class HashingEmbedder(dim: Int = 64) extends Embedder {
     while (i < v.length) { n += v(i) * v(i); i += 1 }
     if (n == 0) v else { val s = 1.0 / math.sqrt(n); v.map(_ * s) }
   }
-
-  /** Same trigram hashing as SQL expressions: per character position, the
-    * 31-based hash of the 3-char window via ascii codes. Stays inside
-    * whole-stage codegen (no UDF).
-    */
-  def embedColumn(c: Column): Column = {
-    val t = lower(regexp_replace(c, "[^\\x00-\\x7F]", ""))
-    // positions 1..len-2; per position compute bucket + sign and build the
-    // dim-vector by aggregating one-hot contributions.
-    // sequence(1, n) counts DOWN when n < 1 — guard short strings explicitly
-    val positions = when(length(t) >= 3, sequence(lit(1), length(t) - 2))
-      .otherwise(array().cast("array<int>"))
-    val tri = transform(
-      positions,
-      i => {
-        val h = ((lit(17) * 31 + ascii(substring(t, i.cast("int"), lit(1)))) * 31 +
-          ascii(substring(t, (i + 1).cast("int"), lit(1)))) * 31 +
-          ascii(substring(t, (i + 2).cast("int"), lit(1)))
-        struct(
-          pmod(h, lit(dim)).as("b"),
-          (lit(1.0) - lit(2.0) * pmod((h / dim).cast("int"), lit(2))).as("s"))
-      })
-    val raw = transform(sequence(lit(0), lit(dim - 1)), d =>
-      aggregate(filter(tri, x => x.getField("b") === d), lit(0.0),
-        (acc, x) => acc + x.getField("s")))
-    val nrm = sqrt(aggregate(raw, lit(0.0), (a, x) => a + x * x))
-    when(nrm === 0.0, raw).otherwise(transform(raw, x => x / nrm))
-  }
 }
 
 object Embedders {
@@ -108,23 +75,11 @@ object Embedders {
     items.join(emb.select(col(embId).as(itemId), col(embCol)), Seq(itemId), "left")
 
   /** E2 weighted multi-column embedding fusion + L2 norm (reference
-    * src/encode.py:286-304): Σ wᵢ·emb(colᵢ), then normalize.
-    * Column-expression form — O(text·dim) interpreted per row; use only on
-    * small data / for cross-checking [[fuseInto]].
-    */
-  def fuseColumns(e: Embedder, weights: Map[String, Double]): Column = {
-    val parts = weights.toSeq.map { case (c, w) =>
-      transform(e.embedColumn(col(c)), x => x * w)
-    }
-    val summed = parts.reduce((a, b) => zip_with(a, b, (x, y) => x + y))
-    val nrm = sqrt(aggregate(summed, lit(0.0), (a, x) => a + x * x))
-    when(nrm === 0.0, summed).otherwise(transform(summed, x => x / nrm))
-  }
-
-  /** E2 at scale: the same weighted fusion as a partition-local
-    * mapPartitions over the compiled embedder (reference batches rows
-    * through the model the same way, src/encode.py:289-305). O(text)
-    * per row, no interpreted lambdas; null text treated as "".
+    * src/encode.py:286-304): Σ wᵢ·emb(colᵢ), then normalize, as a
+    * partition-local mapPartitions over the compiled embedder (reference
+    * batches rows through the model the same way,
+    * src/encode.py:289-305). O(text) per row, no interpreted lambdas;
+    * null text treated as "". The one executor-side embedding path.
     *
     * FAST PATH: a [[HashingEmbedder]] over string columns embeds through
     * the native [[org.apache.spark.sql.graft.HashEmbed]] expression —

@@ -12,29 +12,29 @@ object FourierMath {
     * Vectorized form: applied to every harmonic k=1..K with the formula —
     * including k=1. Used by product-side encoding and dot_in/dot_out.
     */
-  def sigmaVec(k: Int, bigK: Int, freq: Double = math.Pi): Double =
-    math.sin(freq * k / bigK) / (freq * k / bigK)
+  def sigmaVec(k: Int, bigK: Int): Double =
+    math.sin(math.Pi * k / bigK) / (math.Pi * k / bigK)
 
   /** Scalar-call sigma with the reference's k==1 special case (`_sigma`
     * called with a single harmonic returns 1.0 when k==1 — hit by
     * `_integrate` and the half-circle encodings). k>=2 falls back to the
     * formula. Replicated exactly, including the asymmetry vs [[sigmaVec]].
     */
-  def sigmaScalar(k: Int, bigK: Int, freq: Double = math.Pi): Double =
-    if (k == 1) 1.0 else sigmaVec(k, bigK, freq)
+  def sigmaScalar(k: Int, bigK: Int): Double =
+    if (k == 1) 1.0 else sigmaVec(k, bigK)
 
   /** Full-circle Fourier series of a scalar: interleaved
-    * [sin(1·f·x)σ₁, cos(1·f·x)σ₁, ..., sin(K·f·x)σ_K, cos(K·f·x)σ_K]
+    * [sin(1·π·x)σ₁, cos(1·π·x)σ₁, ..., sin(K·π·x)σ_K, cos(K·π·x)σ_K]
     * (reference `_scalar_to_fourier_series`, src/encode.py:402-427).
     * NaN input → zero vector (NaN handling at 422).
     */
-  def fourier(x: Double, bigK: Int, numHarmonics: Int, freq: Double = math.Pi): Array[Double] = {
+  def fourier(x: Double, bigK: Int, numHarmonics: Int): Array[Double] = {
     val out = new Array[Double](2 * numHarmonics)
     var k = 1
     while (k <= numHarmonics) {
-      val s = sigmaVec(k, bigK, freq)
-      val sv = math.sin(k * freq * x) * s
-      val cv = math.cos(k * freq * x) * s
+      val s = sigmaVec(k, bigK)
+      val sv = math.sin(k * math.Pi * x) * s
+      val cv = math.cos(k * math.Pi * x) * s
       out(2 * (k - 1)) = if (sv.isNaN) 0.0 else sv
       out(2 * k - 1) = if (cv.isNaN) 0.0 else cv
       k += 1

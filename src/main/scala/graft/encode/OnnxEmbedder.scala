@@ -1,21 +1,15 @@
 package graft.encode
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.udf
-
 /** Model-backed [[Embedder]]s (reference TextEmbedder, src/embed.py:25-41:
   * tokenizer → transformer forward → mean-pool → L2). The shared skeleton
   * here is everything EXCEPT the model call: a deterministic tokenizer,
   * attention-mask-free mean pooling over token hidden states, and L2
   * normalization — so a concrete subclass only supplies `forward`.
   *
-  * `embedColumn` is a Scala UDF calling `embed`: model inference is the
-  * one boundary where a UDF is the RIGHT tool — the kernel is an opaque
-  * native/JNI call, not expressible math, so there is nothing for Catalyst
-  * codegen to see inside anyway. The UDF calls the same `embed` as the
-  * driver path, so the trait's agree-exactly contract holds by
-  * construction. Executor-side model state must be per-JVM, not
-  * serialized: implementations hold sessions in `@transient lazy val`s.
+  * Rows are embedded on the executors by [[Embedders.fuseInto]], which
+  * calls the same `embed` as the driver path. Executor-side model state
+  * must be per-JVM, not serialized: implementations hold sessions in
+  * `@transient lazy val`s.
   */
 abstract class ModelEmbedder extends Embedder {
 
@@ -58,11 +52,6 @@ abstract class ModelEmbedder extends Embedder {
       while (j < dim) { out(j) *= s; j += 1 } }
     out
   }
-
-  final def embedColumn(c: Column): Column = {
-    val self = this // stable reference: the closure serializes the embedder
-    udf((s: String) => self.embed(if (s == null) "" else s)).apply(c)
-  }
 }
 
 /** Production ONNX example: runs a sentence-encoder exported to ONNX via
@@ -99,7 +88,7 @@ final case class OnnxEmbedder(
     override val maxLen: Int = 128) extends ModelEmbedder {
 
   /** Session AND the reflective handles, resolved once per executor JVM:
-    * forward() runs once per row in the embedColumn UDF hot path, so the
+    * forward() runs once per row in the fuseInto hot path, so the
     * Class.forName/getMethod lookups must not repeat per call. */
   @transient private lazy val rt: OnnxEmbedder.Rt =
     try {
@@ -167,7 +156,7 @@ object OnnxEmbedder {
   * (xorshift64*, platform-stable), playing the role of a checked-in
   * weight artifact; the forward pass is the same shape OnnxEmbedder
   * consumes, so every test exercising TinyNnEmbedder exercises the exact
-  * pooling/normalization/UDF path production inference uses.
+  * pooling/normalization/fuseInto path production inference uses.
   */
 final case class TinyNnEmbedder(dim: Int = 32, seed: Long = 42L,
     override val vocabSize: Int = 4096) extends ModelEmbedder {

@@ -120,9 +120,8 @@ object ProductEncoder {
     * index holds each block once. Narrow projection — no shuffle; at scale
     * this pipelines straight into the parquet write.
     */
-  def encode(df: DataFrame, layout: VectorLayout,
-             fusedCol: String = "fused_vec"): DataFrame =
-    df.withColumn(fusedCol, concat(layout.blocks.map(_.encode): _*))
+  def encode(df: DataFrame, layout: VectorLayout): DataFrame =
+    df.withColumn("fused_vec", concat(layout.blocks.map(_.encode): _*))
 
   /** Layout builder: the optional text block, then one block per aux
     * column in the given order — a geo block for a `geoCols` column, else

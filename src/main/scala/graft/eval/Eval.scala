@@ -82,8 +82,9 @@ object Eval {
       val ps = filterPreds(fs)
       if (ps.isEmpty) lit(true) else ps.reduce(_ && _)
     }
-    Search.multiTopK(items, textVecCol, idCol, qTexts, k,
-      eligible = preds, roundScores = false).map(_.map(_._1))
+    Search.multiTopK(items, textVecCol, idCol, qTexts, k, eligible = preds,
+      score = q => Search.dot(Search.asDouble(col(textVecCol)), typedLit(q)))
+      .map(_.map(_._1))
   }
 
   /** Every seeded row sample in ONE map-side scan: the per-seed sample

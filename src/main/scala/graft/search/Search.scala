@@ -87,10 +87,11 @@ object Search {
     * the scan does. Query i's result is its top k rows among those whose
     * `eligible(i)` holds.
     *
-    * Scores are computed in-plan by the native codegen dot — [[rounded]]
-    * when `roundScores`, raw otherwise, or `scoreExpr`'s — so a batch
-    * returns the rows and order of P [[topK]] calls with the same score
-    * (a raw −0.0 reports as 0.0; rounded scores are bit-identical).
+    * `score(q)` is query q's score column, taken as given like
+    * [[topK]]'s — by default [[rounded]] native codegen dot over `vecCol`
+    * — so a batch returns the rows and order of P [[topK]] calls with the
+    * same score (a raw −0.0 reports as 0.0; rounded scores are
+    * bit-identical). A row whose `vecCol` is null is never returned.
     * Identical query vectors are deduplicated: their dot is computed once
     * per row (the sweep oracle issues P copies of the same text query
     * under P different filters).
@@ -103,9 +104,8 @@ object Search {
   def multiTopK(vectors: DataFrame, vecCol: String, idCol: String,
                 queries: Seq[Array[Double]], k: Int,
                 eligible: Seq[Column] = Nil,
-                roundScores: Boolean = true,
-                scoreExpr: (Column, Array[Double]) => Column = null): IndexedSeq[Seq[(Long, Double)]] =
-    multiTopKRows(vectors, vecCol, idCol, queries, k, Nil, eligible, roundScores, scoreExpr)._2
+                score: Array[Double] => Column = null): IndexedSeq[Seq[(Long, Double)]] =
+    multiTopKRows(vectors, vecCol, idCol, queries, k, Nil, eligible, score)._2
       .map(_.map(h => (h.id, h.score)))
 
   /** One kept row of [[multiTopKRows]]: its id, score and the values of
@@ -121,8 +121,7 @@ object Search {
   def multiTopKRows(vectors: DataFrame, vecCol: String, idCol: String,
                     queries: Seq[Array[Double]], k: Int, out: Seq[Column],
                     eligible: Seq[Column] = Nil,
-                    roundScores: Boolean = true,
-                    scoreExpr: (Column, Array[Double]) => Column = null)
+                    score: Array[Double] => Column = null)
       : (StructType, IndexedSeq[Seq[Hit]]) = {
     requireTopK(k, shortlist = 0)
     require(eligible.isEmpty || eligible.size == queries.size,
@@ -140,35 +139,20 @@ object Search {
     val distinctQ = scala.collection.mutable.LinkedHashMap.empty[Seq[Double], Int]
     val qIdx: Array[Int] = queries.map(q =>
       distinctQ.getOrElseUpdate(q.toSeq, distinctQ.size)).toArray
-    // the compressed serving tiers score PACKED code columns (binary) via
-    // a custom scoreExpr — pass the raw column through for those; the
-    // array<double> cast stays the default for real vector columns
-    val vd = vectors.schema(vecCol).dataType match {
-      case BinaryType =>
-        require(scoreExpr != null,
-          s"binary column '$vecCol' needs an explicit scoreExpr")
-        col(vecCol)
-      case _ => asDouble(col(vecCol))
-    }
-    // scoreExpr generalizes the per-(row, query) score beyond the raw inner
-    // product — e.g. the IVF serving path's cosine with its precomputed
-    // per-row norm column — while keeping the same rounding / −0.0 collapse
-    // so batched results stay bit-identical to the single form
-    val scoreOf: (Column, Array[Double]) => Column =
-      if (scoreExpr != null) scoreExpr else (v, q) => dot(v, typedLit(q))
-    val scoreCols = distinctQ.keysIterator.map { q =>
-      val s = scoreOf(vd, q.toArray)
-      coalesce(if (roundScores) rounded(s) else s, lit(0.0))
-    }.toIndexedSeq
+    val scoreOf: Array[Double] => Column =
+      if (score != null) score else q => rounded(dot(asDouble(col(vecCol)), typedLit(q)))
+    val scoreCols = distinctQ.keysIterator.map(q => coalesce(scoreOf(q.toArray), lit(0.0)))
+      .toIndexedSeq
     // a null vector nulls every score — fold that into the mask so every
     // score element is non-null. With no eligibility predicates every
     // element would be the identical null-check: evaluate it ONCE per
     // row, not nq times
     val sharedMask = eligible.isEmpty
+    val present = col(vecCol).isNotNull
     val maskElems =
-      if (sharedMask) IndexedSeq(vd.isNotNull)
+      if (sharedMask) IndexedSeq(present)
       else (0 until nq).map { i =>
-        coalesce(eligible(i).cast("boolean"), lit(false)) && vd.isNotNull
+        coalesce(eligible(i).cast("boolean"), lit(false)) && present
       }
     val rows = vectors.select(Seq(col(idCol).cast("long"), array(scoreCols: _*),
       array(maskElems: _*)) ++ (if (out.isEmpty) Nil else Seq(struct(out: _*))): _*)
@@ -352,70 +336,13 @@ object Search {
     allPairs.unionByName(starPairs)
   }
 
-  /** IVF coarse quantizer: Lloyd's k-means over the vector column.
-    * Deterministic and cross-engine-reproducible by construction —
-    * init = the first `nCentroids` vectors by id; per-dimension means use
-    * exact DECIMAL(28,6) sums (order-independent, so executor partitioning
-    * cannot change the centroids); assignment ties break on centroid id;
-    * empty clusters keep their previous centroid. Each iteration is one
-    * narrow assignment projection + one (cid, dim) aggregation; only
-    * nCentroids×dim rows ever reach the driver.
-    */
-  /** `exactMeans = true` accumulates per-dimension sums in exact
-    * DECIMAL(28,6) arithmetic (org.apache.spark.sql.graft.VectorSum's
-    * scaled-long twin of the decimal sum) — order-independent, so the fit
-    * is bit-reproducible across engines and partitionings (the mode the
-    * sim3 oracle twin replicates). The default `false` is the production
-    * mode: native double sums — the centroid drift from summation order
-    * is fp-noise that does not move ANN quality.
-    *
-    * Each Lloyd iteration is one narrow assignment projection + ONE
-    * whole-vector aggregation (VectorSum): the shuffle carries
-    * #partitions·#centroids array rows, never the n·dim exploded
-    * (cid, pos, val) rows of the naive shape — the exploded decimal
-    * aggregation was 88% of the sim3 sf10 spot-bench (≈38 s of 44 s;
-    * 3.5 s with VectorSum, identical centroids). */
+  /** IVF coarse quantizer: the [[pqCodebooks]] k-means with one
+    * subspace (m = 1, ksub = `nCentroids`), its dim taken from the init
+    * rows. Fewer non-null rows than `nCentroids` fit that many cells. */
   def ivfCentroids(vectors: DataFrame, vecCol: String, idCol: String,
                    nCentroids: Int, iters: Int,
-                   exactMeans: Boolean = false): Array[Array[Double]] = {
-    import org.apache.spark.sql.graft.VectorSum
-    // null vectors contribute nothing to the fit (the former posexplode
-    // formulation dropped them by construction; IvfAssign's null cid group
-    // would otherwise surface as a null sum and NPE the driver loop)
-    // persisted across the Lloyd iterations: each round is one
-    // assign+aggregate job over the SAME rows, and without the persist
-    // every round re-ran the scan (and any upstream repartition) — the
-    // fit is eager, so the blocks are released in the finally before the
-    // caller's encode/score passes run
-    // already-cached input (the vectorRows base, persisted across the
-    // fit/encode/score actions): a second cache layer here
-    // would double the memory for zero saved work — compute through it
-    val inputCached =
-      vectors.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val base0 = vectors.filter(col(vecCol).isNotNull)
-      .select(col(idCol).cast("long").as("id"), asDouble(col(vecCol)).as("v"))
-    val base = if (inputCached) base0 else base0.persist()
-    try {
-      var cents: Array[Array[Double]] = base.orderBy("id").limit(nCentroids)
-        .collect().map(_.getSeq[Double](1).toArray)
-      for (_ <- 1 to iters) {
-        val rows = base.withColumn("cid", ivfAssign(col("v"), cents))
-          .groupBy("cid")
-          .agg(VectorSum.sums(col("v"), exactMeans).as("s"),
-            count(lit(1)).as("n"))
-          .collect()
-        val next = cents.map(_.clone())
-        rows.foreach { r =>
-          val s = r.getSeq[Double](r.fieldIndex("s"))
-          val n = r.getLong(r.fieldIndex("n")).toDouble
-          // same IEEE division as the former sum.cast(double) / count plan
-          next(r.getAs[Int]("cid")) = s.map(_ / n).toArray
-        }
-        cents = next
-      }
-      cents
-    } finally { if (!inputCached) { base.unpersist(blocking = false) }; () }
-  }
+                   exactMeans: Boolean = false): Array[Array[Double]] =
+    lloyd(vectors, vecCol, idCol, None, 1, nCentroids, iters, exactMeans).head
 
   /** Nearest-centroid id by squared L2 distance (|v|² − 2v·c + |c|²),
     * centroid-id tiebreak. Native expression with the centroid matrix as a
@@ -459,7 +386,7 @@ object Search {
     * Value-identical where it is claimed: the oracle-hashed fits use
     * exact DECIMAL means, which are partitioning-independent; the default
     * native-double means can move by summation-order fp-noise (see
-    * [[ivfCentroids]]). The write keeps its input's partitioning, since
+    * [[pqCodebooks]]). The write keeps its input's partitioning, since
     * the parquet writer emits one file per (task, cell). */
   private[graft] def vectorRows(vectors: DataFrame, vecCol: String, idCol: String,
                                 extra: Seq[String] = Nil): DataFrame =
@@ -512,11 +439,13 @@ object Search {
     val spark = vectors.sparkSession
     import spark.implicits._
     val base = vectorRows(graft.Tables.spread(vectors), vecCol, idCol)
+    // fitted first, so a table without a non-null vector is the fit's
+    // named error rather than an absent query id
+    val cents = coarse.map(c => ivfCentroids(base, "v", "id", c.nCentroids, c.iters, c.exactMeans))
     val qs = base.filter(col("id").isin(queryIds: _*))
       .as[(Long, Array[Double])].collect().toSeq
     val absent = queryIds.distinct.filterNot(qs.map(_._1).toSet)
     require(absent.isEmpty, s"queryIds absent from the table: ${absent.mkString(", ")}")
-    val cents = coarse.map(c => ivfCentroids(base, "v", "id", c.nCentroids, c.iters, c.exactMeans))
     val residual = coarse.exists(_.residual)
     val assigned = cents.fold(base)(cs => base.withColumn("cid", ivfAssign(col("v"), cs)))
     // native CentroidDelta kernel: one compiled loop per row, swept by
@@ -554,28 +483,42 @@ object Search {
   }
 
   /** Product-quantization codebooks: the vector space split into `m`
-    * contiguous subspaces of dim/m dimensions, one [[ivfCentroids]] k-means
-    * (same deterministic discipline: first-rows init, centroid-id
-    * tiebreaks, empty clusters keep their centroid, optional exact DECIMAL
-    * means) fit per subspace. PQ is THE 100-TB ANN memory lever: an
-    * encoded vector is `m` small codes (m bytes at ksub ≤ 256) instead of
-    * dim·8 bytes — a 64-dim double vector compresses 128× at m=4 — which
-    * is what lets a billion-vector index live in executor memory while
-    * the exact vectors stay on disk for reranking. */
+    * contiguous subspaces of dim/m dimensions, a `ksub`-cell k-means fit
+    * per subspace. PQ is THE 100-TB ANN memory lever: an encoded vector is
+    * `m` small codes (m bytes at ksub ≤ 256) instead of dim·8 bytes — a
+    * 64-dim double vector compresses 128× at m=4 — which is what lets a
+    * billion-vector index live in executor memory while the exact vectors
+    * stay on disk for reranking.
+    *
+    * The fit is Lloyd's k-means, deterministic by construction: init =
+    * the first `ksub` non-null vectors by id; assignment ties break on
+    * the lowest cell id; empty cells keep their previous centroid. Each
+    * round is ONE [[org.apache.spark.sql.graft.PqFit]] aggregate job over
+    * all m subspaces; only m·ksub·dsub sums reach the driver.
+    * `exactMeans = true` sums in exact DECIMAL(28,6) arithmetic —
+    * order-independent, so the fit is bit-reproducible across engines and
+    * partitionings (the mode the sim3–sim5, sim8 and d9 oracle twins
+    * replicate). The default `false` sums native doubles: the centroid
+    * drift from summation order is fp-noise that does not move ANN
+    * quality. No non-null vector is a named error. */
   def pqCodebooks(vectors: DataFrame, vecCol: String, idCol: String,
                   dim: Int, m: Int, ksub: Int, iters: Int,
                   exactMeans: Boolean = false): Array[Array[Array[Double]]] = {
     require(m > 0 && dim % m == 0, s"dim $dim not divisible into $m subspaces")
-    val dsub = dim / m
+    lloyd(vectors, vecCol, idCol, Some(dim), m, ksub, iters, exactMeans)
+  }
+
+  /** The one Lloyd k-means body behind [[pqCodebooks]] and
+    * [[ivfCentroids]]; `dim` None takes it from the init rows. */
+  private def lloyd(vectors: DataFrame, vecCol: String, idCol: String,
+                    dim: Option[Int], m: Int, ksub: Int, iters: Int,
+                    exactMeans: Boolean): Array[Array[Array[Double]]] = {
     import org.apache.spark.sql.graft.PqFit
-    // FUSED fit: one PqFit aggregate pass per Lloyd round covers ALL m
-    // subspaces (the per-subspace form scheduled m·iters assign+aggregate
-    // jobs over the same rows — pure job-floor at local[32], m× the scans
-    // anywhere). Assignment/mean arithmetic is bit-identical to the
-    // per-subspace ivfCentroids path (PqFitSpec asserts codebook equality
-    // cell for cell; the sim4/sim5/sim8 oracle hashes are the
-    // cross-engine witness). Persisted across rounds; fits are eager,
-    // blocks released before the caller encodes.
+    // persisted across the rounds, each a pass over the SAME rows (sim8
+    // hands in an uncached CentroidDelta frame); the fit is eager, so the
+    // blocks are released before the caller encodes. An already-cached
+    // input (vectorRows) is computed through: a second cache layer would
+    // double the memory for zero saved work
     val inputCached =
       vectors.storageLevel != org.apache.spark.storage.StorageLevel.NONE
     val base0 = vectors.filter(col(vecCol).isNotNull)
@@ -584,10 +527,10 @@ object Search {
     try {
       val head = base.orderBy("id").limit(ksub).collect()
         .map(_.getSeq[Double](1).toArray)
-      // fewer rows than ksub initializes that many cells — the
-      // per-subspace path's limit(ksub) behavior, kept identical
+      // fewer rows than ksub initializes that many cells
       val kEff = head.length
       require(kEff > 0, "pqCodebooks: no non-null vectors to fit")
+      val dsub = dim.getOrElse(head(0).length) / m
       var books: Array[Array[Array[Double]]] = Array.tabulate(m)(j =>
         head.map(v => java.util.Arrays.copyOfRange(v, j * dsub, (j + 1) * dsub)))
       for (_ <- 1 to iters) {
@@ -602,7 +545,7 @@ object Search {
           while (c < kEff) {
             val cnt = n(j * kEff + c)
             if (cnt > 0) {
-              // same IEEE division as the per-subspace driver loop
+              // the IEEE division of the oracle's sum / count
               val nd = cnt.toDouble
               val cell = new Array[Double](dsub)
               var i = 0

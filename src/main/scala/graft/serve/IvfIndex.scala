@@ -287,7 +287,7 @@ object IvfIndex {
     val union = cellsPer.flatten.distinct.sorted
     def scored(scan: DataFrame, tier: Quantizer, n: Int, eligible: Seq[Column]) =
       Search.multiTopK(scan, scanCols(tier).head, "id", queries, n,
-        eligible = eligible, scoreExpr = (_, q) => tier.score(tier.sideLit(q)))
+        eligible = eligible, score = q => Search.rounded(tier.score(tier.sideLit(q))))
     val first = scored(prunedScan(spark, h, union), h.tier,
       if (shortlist == 0) k else shortlist,
       if (preds.isEmpty) inCells else inCells.zip(preds).map { case (c, p) => c && p })

@@ -18,12 +18,9 @@ import org.apache.spark.sql.types._
   * the argmin is a tight primitive loop — centroid count no longer affects
   * code size.
   *
-  * Arithmetic is kept bit-identical to the literal form (and to the DuckDB
-  * oracle twin): d = |v|² − 2·(v·c) + |c|², each dot accumulated
-  * left-to-right, |c|² precomputed left-to-right per centroid, strict `<`
-  * argmin so equal distances keep the smallest centroid id (the
-  * struct-min tiebreak). Null array → null; null elements contribute 0
-  * (DotProduct's convention).
+  * Arithmetic ([[IvfAssign.nearest]], shared with [[PqFit]]'s per-subspace
+  * assignment) is kept bit-identical to the literal form (and to the
+  * DuckDB oracle twin). Null array → null.
   */
 case class IvfAssign(child: Expression, cents: Array[Array[Double]])
   extends GraftKernel1[ArrayData] {
@@ -34,20 +31,35 @@ case class IvfAssign(child: Expression, cents: Array[Array[Double]])
   override def dataType: DataType = IntegerType
   override def prettyName: String = "graft_ivf_assign"
 
-  // |c|² per centroid, left-to-right — matches the literal form's driver loop
-  @transient private lazy val centNorms: Array[Double] = cents.map { c =>
+  @transient private lazy val centNorms: Array[Double] = IvfAssign.norms(cents)
+
+  def compute(v: ArrayData): Int = IvfAssign.nearest(v, 0, v.numElements(), cents, centNorms)
+}
+
+object IvfAssign {
+  /** Column-level nearest-centroid id; input must be array<double>. */
+  def assign(vec: Column, cents: Array[Array[Double]]): Column =
+    column(IvfAssign(expr(vec), cents))
+
+  /** |c|² per centroid, accumulated left to right — the `norms` argument
+    * of [[nearest]]. */
+  def norms(cents: Array[Array[Double]]): Array[Double] = cents.map { c =>
     var s = 0.0; var j = 0
     while (j < c.length) { s += c(j) * c(j); j += 1 }
     s
   }
 
-  def compute(v: ArrayData): Int = {
-    val dim = v.numElements()
-    // |v|² with DotProduct's null-element convention (nulls contribute 0)
+  /** The one centroid argmin: the id of the centroid nearest the slice
+    * `v[off, off + len)` by d = |v|² − 2·(v·c) + |c|², each dot
+    * accumulated left to right, `norms` = [[norms]]`(cents)`. Strict `<`,
+    * so equal distances keep the smallest centroid id (the struct-min
+    * tiebreak); null elements contribute 0 (DotProduct's convention). */
+  def nearest(v: ArrayData, off: Int, len: Int, cents: Array[Array[Double]],
+              norms: Array[Double]): Int = {
     var vv = 0.0
     var i = 0
-    while (i < dim) {
-      if (!v.isNullAt(i)) { val x = v.getDouble(i); vv += x * x }
+    while (i < len) {
+      if (!v.isNullAt(off + i)) { val x = v.getDouble(off + i); vv += x * x }
       i += 1
     }
     var best = 0
@@ -55,23 +67,17 @@ case class IvfAssign(child: Expression, cents: Array[Array[Double]])
     var cid = 0
     while (cid < cents.length) {
       val c = cents(cid)
-      val n = math.min(dim, c.length)
+      val n = math.min(len, c.length)
       var dotVC = 0.0
       var j = 0
       while (j < n) {
-        if (!v.isNullAt(j)) dotVC += v.getDouble(j) * c(j)
+        if (!v.isNullAt(off + j)) dotVC += v.getDouble(off + j) * c(j)
         j += 1
       }
-      val d = vv - 2.0 * dotVC + centNorms(cid)
+      val d = vv - 2.0 * dotVC + norms(cid)
       if (d < bestD) { bestD = d; best = cid }
       cid += 1
     }
     best
   }
-}
-
-object IvfAssign {
-  /** Column-level nearest-centroid id; input must be array<double>. */
-  def assign(vec: Column, cents: Array[Array[Double]]): Column =
-    column(IvfAssign(expr(vec), cents))
 }

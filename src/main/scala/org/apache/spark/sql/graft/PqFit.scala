@@ -10,39 +10,30 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.GraftKernel.{column, expr}
 import org.apache.spark.sql.types._
 
-/** ONE Lloyd iteration for ALL m product-quantization subspaces in a
-  * single aggregate pass over the full vectors.
+/** ONE Lloyd round of the k-means fit (graft.search.Search.pqCodebooks,
+  * and `ivfCentroids` as its m = 1 case) for ALL m product-quantization
+  * subspaces in a single aggregate pass over the full vectors.
   *
-  * The per-subspace formulation ran m separate k-means fits, each
-  * `iters` assign+aggregate jobs over the same rows — m·iters scheduled
-  * jobs and shuffles for state that is tiny (m·ksub·dsub cells). This
-  * aggregate carries the CURRENT codebooks as a reference object and, per
-  * row, assigns every subspace slice to its nearest sub-centroid and
+  * The aggregate carries the CURRENT codebooks as a reference object and,
+  * per row, assigns every subspace slice to its nearest sub-centroid and
   * accumulates that slice's sums into the (subspace, cell) bucket — so a
-  * whole iteration over all subspaces is ONE map-reduce round, the same
+  * whole round over all subspaces is ONE map-reduce job, the
   * single-pass-per-iteration shape FAISS's PQ trainer uses.
   *
-  * ARITHMETIC PARITY with the per-subspace path (and therefore with the
-  * DuckDB oracle twins that unroll it) is exact, cell for cell:
-  * - assignment replicates [[IvfAssign]] on the slice: d = |v|² − 2·(v·c)
-  *   + |c|² with left-to-right dots, |c|² precomputed left-to-right,
-  *   strict `<` argmin (ties keep the lowest cell id), null elements
-  *   contributing 0;
-  * - exact mode replicates [[VectorSum]]'s DECIMAL(28,6) sums: each
-  *   element quantized via BigDecimal.valueOf → setScale(6, HALF_UP)
-  *   unscaled long, Math.addExact accumulation (order-independent, loud
-  *   on overflow), eval converting each cell through
-  *   BigDecimal(unscaled, 6).doubleValue — the same decimal→double cast;
+  * The arithmetic, which the DuckDB oracle twins unroll:
+  * - assignment is [[IvfAssign.nearest]] on the slice;
+  * - exact mode sums [[VectorSum]]'s DECIMAL(28,6)-quantized longs with
+  *   Math.addExact (order-independent, loud on overflow) and converts
+  *   each cell back through the same decimal→double cast;
   * - non-exact mode sums native doubles (the same partition-order
   *   tolerance as VectorSum's fast mode).
-  * Equality of the resulting codebooks against the per-subspace fit is
-  * spec-asserted bit for bit (PqFitSpec), and the sim4/sim5/sim8 oracle
-  * hashes are the cross-engine witness.
+  * PqFitSpec pins the fit bit for bit against an independent
+  * per-cell groupBy + VectorSum twin in the test sources.
   *
   * Returns struct(s: array<double> of m·ksub·dsub cell sums, n:
   * array<long> of m·ksub cell counts); empty cells report n=0 and the
-  * caller keeps the previous centroid (the per-subspace driver loop's
-  * behavior). State is m·ksub·(dsub+1) words — corpus-size-independent.
+  * caller keeps the previous centroid. State is m·ksub·(dsub+1) words —
+  * corpus-size-independent.
   */
 case class PqFit(
     child: Expression,
@@ -71,13 +62,7 @@ case class PqFit(
   override def nullable: Boolean = false
   override def prettyName: String = "graft_pq_fit"
 
-  // |c|² per (subspace, cell), left-to-right — IvfAssign's centNorms
-  @transient private lazy val cellNorms: Array[Array[Double]] =
-    books.map(_.map { c =>
-      var s = 0.0; var j = 0
-      while (j < c.length) { s += c(j) * c(j); j += 1 }
-      s
-    })
+  @transient private lazy val cellNorms: Array[Array[Double]] = books.map(IvfAssign.norms)
 
   override def createAggregationBuffer(): Buf =
     new Buf(
@@ -94,41 +79,19 @@ case class PqFit(
     var j = 0
     while (j < m) {
       val off = j * dsub
-      // |slice|² with the null-elements-contribute-0 convention
-      var vv = 0.0
-      var i = 0
-      while (i < dsub) {
-        if (!a.isNullAt(off + i)) { val x = a.getDouble(off + i); vv += x * x }
-        i += 1
-      }
-      // argmin over this subspace's cells — strict <, lowest cid on ties
-      var best = 0
-      var bestD = Double.PositiveInfinity
-      var cid = 0
-      while (cid < ksub) {
-        val c = books(j)(cid)
-        var dotVC = 0.0
-        var i2 = 0
-        while (i2 < dsub) {
-          if (!a.isNullAt(off + i2)) dotVC += a.getDouble(off + i2) * c(i2)
-          i2 += 1
-        }
-        val d = vv - 2.0 * dotVC + cellNorms(j)(cid)
-        if (d < bestD) { bestD = d; best = cid }
-        cid += 1
-      }
+      val best = IvfAssign.nearest(a, off, dsub, books(j), cellNorms(j))
       val cell = j * ksub + best
       buf.counts(cell) += 1
       val sOff = cell * dsub
-      var i3 = 0
-      while (i3 < dsub) {
-        if (!a.isNullAt(off + i3)) {
+      var i = 0
+      while (i < dsub) {
+        if (!a.isNullAt(off + i)) {
           if (exact)
-            buf.longs(sOff + i3) =
-              Math.addExact(buf.longs(sOff + i3), quantize(a.getDouble(off + i3)))
-          else buf.doubles(sOff + i3) += a.getDouble(off + i3)
+            buf.longs(sOff + i) =
+              Math.addExact(buf.longs(sOff + i), VectorSum.quantize(a.getDouble(off + i)))
+          else buf.doubles(sOff + i) += a.getDouble(off + i)
         }
-        i3 += 1
+        i += 1
       }
       j += 1
     }
@@ -153,7 +116,7 @@ case class PqFit(
     val s = new Array[Double](m * ksub * dsub)
     var i = 0
     while (i < s.length) {
-      s(i) = if (exact) unquantize(buf.longs(i)) else buf.doubles(i)
+      s(i) = if (exact) VectorSum.unquantize(buf.longs(i)) else buf.doubles(i)
       i += 1
     }
     InternalRow(new GenericArrayData(s), new GenericArrayData(buf.counts.clone()))
@@ -194,17 +157,6 @@ object PqFit {
     * at construction by the mode) + cell counts. */
   final class Buf(var longs: Array[Long], var doubles: Array[Double],
                   var counts: Array[Long])
-
-  private val Scale = 6
-
-  // VectorSum's quantize/unquantize, verbatim — one decimal convention
-  private def quantize(v: Double): Long =
-    java.math.BigDecimal.valueOf(v)
-      .setScale(Scale, java.math.RoundingMode.HALF_UP)
-      .unscaledValue().longValueExact()
-
-  private def unquantize(l: Long): Double =
-    java.math.BigDecimal.valueOf(l, Scale).doubleValue()
 
   /** struct(s, n) aggregate of one all-subspaces Lloyd round. */
   def fit(vec: Column, books: Array[Array[Array[Double]]],

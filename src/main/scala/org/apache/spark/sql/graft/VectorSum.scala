@@ -11,17 +11,10 @@ import org.apache.spark.sql.graft.GraftKernel.{column, expr}
 import org.apache.spark.sql.types._
 
 /** Native element-wise SUM over an ArrayType(Double) column — one
-  * aggregation row per group instead of one per (group, dimension).
-  *
-  * The IVF k-means fit (graft.search.Search.ivfCentroids) previously
-  * computed per-dimension means by `posexplode`-ing every vector and
-  * aggregating (cid, pos) pairs: n·dim narrow rows through the shuffle per
-  * Lloyd iteration (12.8M at 200K×64), and in exact mode each value cast
-  * to DECIMAL(28,6) first — the decimal-boxed explode aggregation was 88%
-  * of the sim3 spot-bench at sf10 (≈38 s of 44 s). This aggregate keeps
-  * the whole vector together: per-partition state is ONE array per group,
-  * the shuffle carries #groups·#partitions rows, and the explode
-  * disappears.
+  * aggregation row per group instead of one per (group, dimension): the
+  * per-partition state is ONE array per group and the shuffle carries
+  * #groups·#partitions rows. The binary-quantization thresholds
+  * (graft.search.Search.bqThresholds) sum through it.
   *
   * `exact = true` reproduces the DECIMAL(28,6) sum BIT-IDENTICALLY while
   * summing primitive longs: each element is quantized exactly as Spark's
@@ -35,8 +28,7 @@ import org.apache.spark.sql.types._
   * DuckDB oracle twin's decimal arithmetic, regardless of partitioning.
   *
   * `exact = false` sums native doubles (per-partition sequential order +
-  * merge): the production mode, where summation-order fp-noise is
-  * explicitly tolerated (see ivfCentroids).
+  * merge), where summation-order fp-noise is tolerated.
   *
   * Null semantics: null arrays are skipped (like sum over the exploded
   * rows); null ELEMENTS contribute 0 (vectors never carry null elements).
@@ -165,14 +157,15 @@ object VectorSum {
   /** Spark's double→DECIMAL(28,6) cast as an unscaled long:
     * BigDecimal.valueOf (shortest decimal representation) quantized
     * HALF_UP at scale 6. longValueExact is loud on overflow (|v| beyond
-    * ~9.2e12), where the decimal path would have kept going. */
-  private def quantize(v: Double): Long =
+    * ~9.2e12), where the decimal path would have kept going. The one
+    * exact-sum quantization, shared with [[PqFit]]. */
+  private[graft] def quantize(v: Double): Long =
     java.math.BigDecimal.valueOf(v)
       .setScale(Scale, java.math.RoundingMode.HALF_UP)
       .unscaledValue().longValueExact()
 
   /** DECIMAL(28,6)→DOUBLE cast of an exact unscaled-long sum. */
-  private def unquantize(l: Long): Double =
+  private[graft] def unquantize(l: Long): Double =
     java.math.BigDecimal.valueOf(l, Scale).doubleValue()
 
   /** Element-wise sum of an array<double> column as an aggregate Column.

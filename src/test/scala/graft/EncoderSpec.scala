@@ -185,7 +185,7 @@ class EncoderSpec extends SparkSpec {
       (3L, "", "")).toDF("id", "t1", "t2")
     val w = Map("t1" -> 0.4, "t2" -> 0.6)
     val viaCol = df.select(org.apache.spark.sql.functions.col("id"),
-        Embedders.fuseColumns(e, w).as("v"))
+        ReferenceTwins.fuseColumns(e, w).as("v"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
     val viaMp = Embedders.fuseInto(df, e, w, "v")
       .select("id", "v")
@@ -206,7 +206,7 @@ class EncoderSpec extends SparkSpec {
     val texts = Seq("the quick brown fox", "pack my box", "",
       "Café São Paulo İstanbul kebap", "日本語テキスト mixed ascii tail")
     val fromCol = texts.toDF("t")
-      .select(e.embedColumn(org.apache.spark.sql.functions.col("t")))
+      .select(ReferenceTwins.hashingEmbedHof(e, org.apache.spark.sql.functions.col("t")))
       .collect().map(_.getSeq[Double](0).toArray)
     texts.zip(fromCol).foreach { case (t, v) =>
       val d = e.embed(t)

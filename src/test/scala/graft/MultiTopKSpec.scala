@@ -87,8 +87,9 @@ class MultiTopKSpec extends SparkSpec {
     ).toDF("id", "vec")
     val q = Array(Double.MaxValue, 1.0) // MaxValue*MaxValue overflows to ∞
     for (round <- Seq(true, false)) {
+      val dot = (qv: Array[Double]) => Search.dot(Search.asDouble(col("vec")), typedLit(qv))
       val batched = Search.multiTopK(vecs, "vec", "id", Seq(q), k = 3,
-        roundScores = round)
+        score = if (round) (qv: Array[Double]) => Search.rounded(dot(qv)) else dot)
       val single =
         if (round) Search.fusedTopK(vecs, "vec", "id", q, 3)
           .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq

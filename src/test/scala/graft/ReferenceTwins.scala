@@ -1,6 +1,6 @@
 package graft
 
-import graft.encode.{FourierMath, ImageBlock}
+import graft.encode.{FourierMath, HashingEmbedder, ImageBlock}
 import graft.functions.Geo
 import graft.query._
 import graft.search.Search.{asDouble, dot, l2Norm}
@@ -87,6 +87,79 @@ object ReferenceTwins {
       }.reduce(_ + _)
     }.toSeq
     array(words: _*)
+  }
+
+  /** Twin of `Search.ivfCentroids` (the one k-means fit at m = 1): the
+    * Lloyd loop as one assignment projection + a per-cell groupBy with a
+    * [[org.apache.spark.sql.graft.VectorSum]] sum each round, the empty
+    * cells keeping their centroid. */
+  def ivfCentroidsGroupBy(vectors: DataFrame, vecCol: String, idCol: String,
+                          nCentroids: Int, iters: Int,
+                          exactMeans: Boolean = false): Array[Array[Double]] = {
+    import org.apache.spark.sql.graft.VectorSum
+    val inputCached =
+      vectors.storageLevel != org.apache.spark.storage.StorageLevel.NONE
+    val base0 = vectors.filter(col(vecCol).isNotNull)
+      .select(col(idCol).cast("long").as("id"), asDouble(col(vecCol)).as("v"))
+    val base = if (inputCached) base0 else base0.persist()
+    try {
+      var cents: Array[Array[Double]] = base.orderBy("id").limit(nCentroids)
+        .collect().map(_.getSeq[Double](1).toArray)
+      for (_ <- 1 to iters) {
+        val rows = base.withColumn("cid", graft.search.Search.ivfAssign(col("v"), cents))
+          .groupBy("cid")
+          .agg(VectorSum.sums(col("v"), exactMeans).as("s"),
+            count(lit(1)).as("n"))
+          .collect()
+        val next = cents.map(_.clone())
+        rows.foreach { r =>
+          val s = r.getSeq[Double](r.fieldIndex("s"))
+          val n = r.getLong(r.fieldIndex("n")).toDouble
+          next(r.getAs[Int]("cid")) = s.map(_ / n).toArray
+        }
+        cents = next
+      }
+      cents
+    } finally { if (!inputCached) { base.unpersist(blocking = false) }; () }
+  }
+
+  /** Twin of `HashingEmbedder.embed` as built-in higher-order functions
+    * over a string column: per character position, the 31-based hash of
+    * the 3-char window via ascii codes, non-ASCII stripped first. */
+  def hashingEmbedHof(e: HashingEmbedder, c: Column): Column = {
+    val dim = e.dim
+    val t = lower(regexp_replace(c, "[^\\x00-\\x7F]", ""))
+    // positions 1..len-2; sequence(1, n) counts DOWN when n < 1 — guard
+    // short strings explicitly
+    val positions = when(length(t) >= 3, sequence(lit(1), length(t) - 2))
+      .otherwise(array().cast("array<int>"))
+    val tri = transform(
+      positions,
+      i => {
+        val h = ((lit(17) * 31 + ascii(substring(t, i.cast("int"), lit(1)))) * 31 +
+          ascii(substring(t, (i + 1).cast("int"), lit(1)))) * 31 +
+          ascii(substring(t, (i + 2).cast("int"), lit(1)))
+        struct(
+          pmod(h, lit(dim)).as("b"),
+          (lit(1.0) - lit(2.0) * pmod((h / dim).cast("int"), lit(2))).as("s"))
+      })
+    val raw = transform(sequence(lit(0), lit(dim - 1)), d =>
+      aggregate(filter(tri, x => x.getField("b") === d), lit(0.0),
+        (acc, x) => acc + x.getField("s")))
+    val nrm = sqrt(aggregate(raw, lit(0.0), (a, x) => a + x * x))
+    when(nrm === 0.0, raw).otherwise(transform(raw, x => x / nrm))
+  }
+
+  /** Twin of `Embedders.fuseInto` for a [[HashingEmbedder]]: Σ wᵢ·emb(colᵢ)
+    * over [[hashingEmbedHof]], then L2-normalized, as one column
+    * expression. */
+  def fuseColumns(e: HashingEmbedder, weights: Map[String, Double]): Column = {
+    val parts = weights.toSeq.map { case (c, w) =>
+      transform(hashingEmbedHof(e, col(c)), x => x * w)
+    }
+    val summed = parts.reduce((a, b) => zip_with(a, b, (x, y) => x + y))
+    val nrm = sqrt(aggregate(summed, lit(0.0), (a, x) => a + x * x))
+    when(nrm === 0.0, summed).otherwise(transform(summed, x => x / nrm))
   }
 
   /** Twin of `graft.rerank.Rerank`: the re-rank as the window chain it
