@@ -9,12 +9,10 @@ import org.apache.spark.sql.functions._
   * screened (re-pairing base↔base on every ingest would redo O(corpus)
   * work per batch; this operator's work is O(delta + touched buckets)).
   *
-  * Scheme (the x26/d3 pipeline's measures, re-used so the decision
-  * boundary is the same one the batch dedup family hash-checks):
-  * word-bigram SHINGLE sets → MinHash banding (2 bands × 4 hashes, the
-  * native MinHashBands kernel) on BOTH sides → candidates = delta docs
-  * joining base docs on a shared band bucket → word-bigram shingle
-  * Jaccard ≥ τ verification → per delta doc, the min-id matching base doc.
+  * Scheme: the [[NearDup]] spine x26 and d3 hash-check, on BOTH sides —
+  * word-bigram shingles, MinHash band buckets, candidates = delta docs
+  * joining base docs on a shared bucket, shingle Jaccard ≥ τ — then per
+  * delta doc the min-id matching base doc.
   *
   * Scale shape, stated:
   * - the base side's banding is a relation a deployment PERSISTS between
@@ -22,23 +20,15 @@ import org.apache.spark.sql.functions._
   *   is the save/load path); only the delta's banding is computed per
   *   ingest, and the candidate join is an equi-join on bucket — never a
   *   cross product;
-  * - base-side skew is capped like d3, and the partner relation is
-  *   DEDUPED BEFORE the candidate join: a bucket within `bucketCap`
-  *   contributes its members (≤ cap rows), an over-cap bucket contributes
-  *   EXACTLY ONE (bucket, rep) row — its min-id REPRESENTATIVE — so the
-  *   join input is bounded by cap·|buckets| + |capped buckets| rows and a
-  *   near-constant corpus cannot multiply |base∩bucket| × |delta∩bucket|
-  *   (the d3 star fallback's O(m) property, `Search.cappedBandPairs`,
-  *   restored in the cross-relation form; the rep still gives every delta
-  *   doc in that bucket a verified decision against the cluster's keeper);
+  * - base-side skew is capped by [[NearDup.partners]] BEFORE the
+  *   candidate join (an over-cap bucket contributes only its min-id
+  *   representative, which still gives every delta doc in it a verified
+  *   decision against the cluster's keeper);
   * - the delta side needs no cap: each delta doc probes exactly its own
-  *   ≤ 2 band buckets;
-  * - verification moves the corpus-sized shingle relation across the wire
-  *   ONCE (the x26 shape: candidate pairs explode into member rows, join
-  *   the unioned shingle relation on doc_id, regroup) — never a shingle
-  *   shuffle per pair side. Member rows carry their SIDE into the join
-  *   key, so a base doc and a delta doc sharing an id compare the right
-  *   shingle sets — ids need NOT be disjoint across base and delta.
+  *   band buckets;
+  * - verification is [[NearDup.verify]]'s side-tagged form: the shingle
+  *   relation crosses the wire once, and ids need NOT be disjoint across
+  *   base and delta.
   *
   * Output: one row per DELTA doc — (doc_id, novel, dup_of), where dup_of
   * is the smallest base doc_id whose shingle Jaccard ≥ τ, or −1 when
@@ -47,34 +37,14 @@ import org.apache.spark.sql.functions._
   */
 object IncrementalDedup {
 
-  private def tokensOf(text: Column): Column =
-    org.apache.spark.sql.graft.WsTokens.wsTokens(text)
-
-  /** Word-bigram shingles over a bound token array — the native
-    * [[org.apache.spark.sql.graft.WordNgrams]] kernel (same null/short →
-    * empty-array contract, differentially pinned by WordNgramsSpec). The
-    * round-16 HOF form (`transform(sequence, concat_ws(element_at))`)
-    * re-evaluated its lambda interpretively per element: measured at
-    * sf0.1 (noop sink, round 17) the full-corpus shingle pass was
-    * 0.65–0.88 s HOF vs 0.18 s native (~4×) — paid on BOTH corpus sides
-    * of every cold screen and on the delta side of every warm batch. */
-  private def bigrams(toks: Column): Column =
-    org.apache.spark.sql.graft.WordNgrams.wordNgrams(toks, 2)
-
   /** The `(doc_id, sh)` word-bigram shingle relation of a corpus side —
     * the verification-time artifact a deployment persists for the base
     * ([[graft.incremental.IncrementalState]]). */
-  private[graft] def shingled(df: DataFrame, idCol: String, textCol: String): DataFrame = df
-    .withColumn("__toks", tokensOf(col(textCol)))
-    .select(col(idCol).cast("long").as("doc_id"),
-      array_distinct(bigrams(col("__toks"))).as("sh"))
+  private[graft] def shingled(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    NearDup.shingles(df, idCol, textCol, 2)
 
-  /** The `(doc_id, bucket)` MinHash band-bucket relation over a shingle
-    * relation (2 bands × 4 hashes — the x26/d3 scheme). */
-  private[graft] def bucketsOf(sh: DataFrame): DataFrame = sh.filter(size(col("sh")) > 0)
-    .select(col("doc_id"),
-      explode(org.apache.spark.sql.graft.MinHashBands.bands(
-        col("sh"), 8, 4)).as("bucket"))
+  /** The `(doc_id, bucket)` band-bucket relation of a shingle relation. */
+  private[graft] def bucketsOf(sh: DataFrame): DataFrame = NearDup.buckets(sh)
 
   def screen(base: DataFrame, delta: DataFrame,
              idCol: String, textCol: String,
@@ -89,22 +59,17 @@ object IncrementalDedup {
   /** [[screen]] against PRE-BUILT base artifacts — the warm ingest path:
     * `baseSh` and `baseBuckets` come from a persisted
     * [[graft.incremental.IncrementalState]] (parquet scans), so a batch's
-    * screening re-derives NOTHING base-sided. Decision semantics are
-    * bit-identical to [[screen]] (spec-pinned): only the provenance of
-    * the base relations differs. */
+    * screening re-derives NOTHING base-sided. It is [[screenPartitioned]]
+    * over the canonical fold of `baseBuckets`, unpruned: only the
+    * provenance of the base relations differs from [[screen]]. */
   def screenPrepared(baseSh: DataFrame, baseBuckets: DataFrame,
                      delta: DataFrame,
                      idCol: String, textCol: String,
                      tau: Double,
-                     bucketCap: Int = graft.search.Search.LshBucketCap): DataFrame = {
-    val dsh = shingled(delta, idCol, textCol).persist()
-    val partners = partnerRelation(baseBuckets, bucketCap)
-    val cand = bucketsOf(dsh).select(col("bucket"), col("doc_id").as("delta_id"))
-      .join(partners, "bucket")
-      .select(col("delta_id"), col("base_id"))
-      .distinct()
-    decide(baseSh, dsh, cand, delta, idCol, tau)
-  }
+                     bucketCap: Int = graft.search.Search.LshBucketCap): DataFrame =
+    screenPartitioned(baseSh,
+      NearDup.partners(NearDup.members(baseBuckets), bucketCap),
+      pMod = 1, canonical = true, delta, idCol, textCol, tau, prune = false, bucketCap)
 
   /** The state's mod-space partition keys — the ONE definition both the
     * write side ([[graft.incremental.IncrementalState]] lays `buckets/`,
@@ -120,18 +85,18 @@ object IncrementalDedup {
   private[graft] def phOf(bh: Column, pMod: Int): Column =
     pmod(hash(bh), lit(pMod)).cast("int")
 
-  /** [[screenPrepared]] against the state's PARTITIONED artifacts — the
-    * 100-TB warm path. Two O(corpus)-per-ingest terms of the plain warm
+  /** The one screen body, against the state's PARTITIONED artifacts — the
+    * 100-TB warm path. Two O(corpus)-per-ingest terms of a plain warm
     * screen disappear here:
     *
     *  1. no per-batch base aggregation: `partnersP` is the PERSISTED
     *     capped partner relation (maintained by the state — see
-    *     [[partnerRelationCnt]]'s foldable invariant), so the
-    *     whole-relation `groupBy(bucket)` that [[partnerRelation]] runs
-    *     per batch is already on disk. When the state is CANONICAL (no
-    *     appends since the last save/compact) the rows are used AS-IS —
-    *     zero aggregation; after appends ([[canonical]] = false) the cap
-    *     is re-folded EXACTLY, but only over the batch's touched buckets;
+    *     [[NearDup.partners]]' foldable invariant), so the
+    *     whole-relation `groupBy(bucket)` of the cap is already on disk.
+    *     When the state is CANONICAL (no appends since the last
+    *     save/compact) the rows are used AS-IS — zero aggregation; after
+    *     appends ([[canonical]] = false) the cap is re-folded EXACTLY, but
+    *     only over the batch's touched buckets;
     *  2. pruned reads (`prune = true`): the batch's band buckets map to
     *     a bounded `pb` set and its verified candidates to a bounded `pd`
     *     set — pushed down as partition filters, so a small batch READS
@@ -143,13 +108,14 @@ object IncrementalDedup {
     *     percentage OF the corpus touches every partition, pays the
     *     actions, and prunes nothing (x31Warm passes `prune = false`);
     *     a production trickle batch prunes almost everything
-    *     (warmScreenAccepted passes `prune = true`).
+    *     (warmScreenAccepted passes `prune = true`). `pMod` is read only
+    *     when pruning.
     *
-    * Decision semantics are bit-identical to [[screenPrepared]] over the
-    * same corpus (spec-pinned, including states whose appends pushed a
+    * Decisions are the same for any partner rows that fold to the same
+    * relation (spec-pinned, including states whose appends pushed a
     * bucket over the cap). */
-  def screenPartitioned(baseShP: DataFrame,   // (doc_id, sh, pd)
-                        partnersP: DataFrame, // (bucket, base_id, cnt, pb)
+  def screenPartitioned(baseShP: DataFrame,   // (doc_id, sh[, pd])
+                        partnersP: DataFrame, // (bucket, base_id, cnt[, pb])
                         pMod: Int, canonical: Boolean,
                         delta: DataFrame,
                         idCol: String, textCol: String,
@@ -189,108 +155,33 @@ object IncrementalDedup {
         else partnersP.filter(col("pb").isin(pbVals: _*))
       }
     val partners =
-      if (canonical) pPruned.select(col("bucket"), col("base_id"))
+      if (canonical) pPruned
       else {
         // appended rows since the last save: re-fold the cap, but only
         // over the batch's touched buckets (broadcast semijoin keeps
         // whole buckets, so the fold stays exact)
         val touched = pPruned
           .join(broadcast(dbk.select("bucket").distinct()), Seq("bucket"), "left_semi")
-        foldPartners(touched, bucketCap)
+        NearDup.partners(touched, bucketCap)
       }
-    val cand = dbk.join(partners, "bucket")
+    val cand = dbk.join(partners.select(col("bucket"), col("base_id")), "bucket")
       .select(col("delta_id"), col("base_id"))
       .distinct()
     if (prune) cand.persist() else cand
   }
 
-  /** Shared verification + decision tail: pair rows explode into their
-    * two member (id, side) keys, the side-tagged UNIONED shingle
-    * relation joins once on (doc_id, side), the regroup moves only
-    * matched pairs' arrays — one shuffle of the (possibly pruned) base
-    * shingle relation, never a shingle shuffle per pair side; the side
-    * in the join key keeps overlapping base/delta ids apart. */
+  /** Verification + decision tail: [[NearDup.verify]]'s side-tagged form
+    * (delta side `a`, base side `b` — overlapping ids stay apart), then
+    * per delta doc the min-id verified base doc. */
   private def decide(bsh: DataFrame, dsh: DataFrame, cand: DataFrame,
                      delta: DataFrame, idCol: String, tau: Double): DataFrame = {
-    val allSh = bsh.withColumn("__side", lit(0))
-      .unionByName(dsh.withColumn("__side", lit(1)))
-    val verified = cand
-      .select(col("delta_id"), col("base_id"),
-        explode(array(
-          struct(col("delta_id").as("doc_id"), lit(1).as("__side")),
-          struct(col("base_id").as("doc_id"), lit(0).as("__side")))).as("m"))
-      .select(col("delta_id"), col("base_id"),
-        col("m.doc_id").as("doc_id"), col("m.__side").as("__side"))
-      .join(allSh, Seq("doc_id", "__side"))
-      .groupBy(col("delta_id"), col("base_id"))
-      .agg(
-        first(when(col("__side") === 1, col("sh")),
-          ignoreNulls = true).as("d_sh"),
-        first(when(col("__side") === 0, col("sh")),
-          ignoreNulls = true).as("b_sh"))
-      .filter(size(array_intersect(col("d_sh"), col("b_sh"))).cast("double") /
-        size(array_union(col("d_sh"), col("b_sh"))) >= tau)
-    val matched = verified.groupBy(col("delta_id"))
-      .agg(min(col("base_id")).as("__dup"))
+    val verified = NearDup.verify(
+      cand.select(col("delta_id").as("a_id"), col("base_id").as("b_id")), dsh, bsh, tau)
+    val matched = verified.groupBy(col("a_id"))
+      .agg(min(col("b_id")).as("__dup"))
     delta.select(col(idCol).cast("long").as("doc_id"))
-      .join(matched, col("doc_id") === col("delta_id"), "left")
+      .join(matched, col("doc_id") === col("a_id"), "left")
       .select(col("doc_id"), col("__dup").isNull.as("novel"),
         coalesce(col("__dup"), lit(-1L)).as("dup_of"))
-  }
-
-  /** Base-side skew cap as a DEDUPED partner relation over a
-    * `(bucket, doc_id)` bucket table: buckets within `bucketCap` keep
-    * their member rows; an over-cap bucket collapses to ONE
-    * `(bucket, rep)` row — before, not after, the candidate join. The
-    * output is therefore ≤ cap rows per uncapped bucket + exactly 1 per
-    * capped bucket (spec-pinned row bound), independent of how hot the
-    * bucket is. */
-  private[graft] def partnerRelation(bb: DataFrame, bucketCap: Int): DataFrame = {
-    val stats = bb.groupBy(col("bucket"))
-      .agg(count(lit(1)).as("bn"), min(col("doc_id")).as("rep"))
-    bb.join(stats.filter(col("bn") <= bucketCap).select(col("bucket")), "bucket")
-      .select(col("bucket"), col("doc_id").as("base_id"))
-      .unionByName(stats.filter(col("bn") > bucketCap)
-        .select(col("bucket"), col("rep").as("base_id")))
-  }
-
-  /** [[partnerRelation]] in its PERSISTABLE, append-foldable form —
-    * `(bucket, base_id, cnt)` where `cnt` is the number of underlying
-    * member rows the partner row stands for: an under-cap bucket keeps
-    * its member rows (`cnt = 1` each), an over-cap bucket collapses to
-    * its min-id representative carrying the whole count (`cnt = bn`).
-    *
-    * The foldable INVARIANT that makes the state's append-only
-    * maintenance exact ([[foldPartners]] is the proof's other half):
-    * for any set of partner rows of one bucket — a saved fold plus any
-    * number of appended `cnt = 1` batch rows —
-    * `sum(cnt)` is the bucket's TRUE total member count (a rep row
-    * carries its collapsed members; appends add one each), and
-    * `min(base_id)` is the TRUE min id (the rep IS the saved min).
-    * So re-folding appended rows reproduces [[partnerRelation]] over
-    * the grown corpus exactly: if `sum(cnt) ≤ cap` no rep row can be
-    * present (a rep alone carries `cnt > cap`), hence the rows ARE the
-    * complete member set; if `sum(cnt) > cap` the bucket degrades to
-    * `min(base_id)` — the exact representative. */
-  private[graft] def partnerRelationCnt(bb: DataFrame, bucketCap: Int): DataFrame = {
-    val stats = bb.groupBy(col("bucket"))
-      .agg(count(lit(1)).as("bn"), min(col("doc_id")).as("rep"))
-    bb.join(stats.filter(col("bn") <= bucketCap).select(col("bucket")), "bucket")
-      .select(col("bucket"), col("doc_id").as("base_id"), lit(1L).as("cnt"))
-      .unionByName(stats.filter(col("bn") > bucketCap)
-        .select(col("bucket"), col("rep").as("base_id"), col("bn").as("cnt")))
-  }
-
-  /** Re-fold the cap over `(bucket, base_id, cnt)` partner rows — exact
-    * over any saved-fold-plus-appends row set (see
-    * [[partnerRelationCnt]]'s invariant). Identity on a canonical
-    * (just-saved) relation. */
-  private[graft] def foldPartners(rows: DataFrame, bucketCap: Int): DataFrame = {
-    val stats = rows.groupBy(col("bucket"))
-      .agg(sum(col("cnt")).as("bn"), min(col("base_id")).as("rep"))
-    rows.join(stats.filter(col("bn") <= bucketCap).select(col("bucket")), "bucket")
-      .select(col("bucket"), col("base_id"))
-      .unionByName(stats.filter(col("bn") > bucketCap)
-        .select(col("bucket"), col("rep").as("base_id")))
   }
 }

@@ -24,7 +24,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *     base-sided raw inputs of the d10 screen (buckets is also what
   *     compact re-derives the partner relation from);
   *   - the CAPPED PARTNER relation (`partners/`: bucket, base_id, cnt —
-  *     `IncrementalDedup.partnerRelationCnt`'s foldable form): the
+  *     `NearDup.partners`' foldable form): the
   *     pre-aggregated, skew-capped join input of the warm screen, so a
   *     batch's screening runs NO per-batch aggregation over the
   *     corpus-sized bucket relation (the groupBy is paid once at
@@ -53,7 +53,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * CANONICAL vs DIRTY: [[advance]] appends batch rows (including
   * `cnt = 1` partner partials) and drops a `_dirty` marker; readers of
   * a dirty state re-fold the partner cap over the batch's touched
-  * buckets (exact — `partnerRelationCnt`'s invariant), while a
+  * buckets (exact — `NearDup.partners`' invariant), while a
   * canonical state (fresh [[save]]/[[compact]]/[[remove]], which never
   * stage the marker) serves partner rows AS-IS with zero aggregation.
   * The marker is dropped BEFORE the first append, so no appended row is
@@ -257,7 +257,8 @@ object IncrementalState {
                          pMod: Int = DefaultPMod,
                          bucketCap: Int = graft.search.Search.LshBucketCap): Unit = {
     import org.apache.spark.sql.functions.col
-    import graft.dedup.IncrementalDedup.{partnerRelationCnt, pbOf, pdOf, phOf}
+    import graft.dedup.IncrementalDedup.{pbOf, pdOf, phOf}
+    import graft.dedup.NearDup.{members, partners}
     val live = new Path(path)
     val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
     sweep(fs, live) // writer-side crash recovery: restore .old-, drop stale stages
@@ -279,8 +280,7 @@ object IncrementalState {
       .withColumn("pb", pbOf(col("bucket"), pMod))
       .repartition(col("pb")).write.partitionBy("pb")
       .parquet(new Path(tmp, "buckets").toString)
-    partnerRelationCnt(readBuckets(spark, new Path(tmp, "buckets"))
-        .select("doc_id", "bucket"), bucketCap)
+    partners(members(readBuckets(spark, new Path(tmp, "buckets"))), bucketCap)
       .withColumn("pb", pbOf(col("bucket"), pMod))
       .repartition(col("pb")).write.partitionBy("pb")
       .parquet(new Path(tmp, "partners").toString)
@@ -452,7 +452,7 @@ object IncrementalState {
     * reclaims the bytes and the replay duplicates. */
   def advance(spark: SparkSession, path: String,
               accepted: DataFrame, idCol: String, textCol: String): Unit = {
-    import org.apache.spark.sql.functions.{col, lit, md5}
+    import org.apache.spark.sql.functions.{col, md5}
     val live = new Path(path)
     val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
     withWriterLock(fs, live) {
@@ -495,9 +495,8 @@ object IncrementalState {
             .parquet(new Path(live, "buckets").toString)
           // the batch's partner PARTIALS: one cnt=1 row per member — the
           // foldable form readers re-cap over touched buckets until the
-          // next compact canonicalizes (partnerRelationCnt's invariant)
-          bkP.select(col("bucket"), col("doc_id").as("base_id"),
-              lit(1L).as("cnt"), col("pb"))
+          // next compact canonicalizes (NearDup.partners' invariant)
+          graft.dedup.NearDup.members(newBk).withColumn("pb", pbOf(col("bucket"), pMod))
             .repartition(col("pb")).write.mode("append").partitionBy("pb")
             .parquet(new Path(live, "partners").toString)
         } finally { newBk.unpersist(); () }

@@ -42,21 +42,16 @@ import org.apache.spark.sql.functions._
   *   you would swap the exact k-th statistic for a t-digest quantile
   *   with a documented tolerance; the exact form is what an oracle can
   *   hash.
-  * - FUZZY DEDUP bands over SHINGLES and verifies before clustering:
-  *   d8's token-set star-edge components are the right semantics for
-  *   true near-dup corpora, but this corpus's tiny shared vocabulary
-  *   makes random docs' token SETS ~0.6 Jaccard — token banding
-  *   collapsed 94% of sf0.01 into one LSH component and still produced
-  *   10⁵–10⁶ candidate pairs per scale under 16-hash bands. Word-bigram
-  *   SHINGLES separate perfectly (noise ~0.035, injected near-dups
-  *   ≥0.98), so the MinHash signatures are computed over the shingle
-  *   sets (max bucket 2 at sf0.1 / 20 at sf1, measured), candidates go
-  *   through the d3 skew cap (Search.cappedBandPairs, mirrored in the
-  *   twin) and the d7 spill-friendly packed-pair dedup, and edges keep
-  *   only shingle Jaccard ≥ 0.8 — the SlimPajama/RefinedWeb
-  *   candidate→verify→cluster shape. Components over verified edges
-  *   stay near-singleton (≈10-replica clusters on the scaled data),
-  *   which also keeps the twin's recursive label closure linear.
+  * - FUZZY DEDUP is the [[graft.dedup.NearDup]] spine over word-bigram
+  *   SHINGLES, verified before clustering: d8's token-set star-edge
+  *   components are the right semantics for true near-dup corpora, but
+  *   this corpus's tiny shared vocabulary makes random docs' token SETS
+  *   ~0.6 Jaccard — token banding collapsed 94% of sf0.01 into one LSH
+  *   component. Shingles separate perfectly (noise ~0.035, injected
+  *   near-dups ≥0.98), and edges keep only shingle Jaccard ≥ 0.8 — the
+  *   SlimPajama/RefinedWeb candidate→verify→cluster shape. Components
+  *   over verified edges stay near-singleton, which also keeps the twin's
+  *   recursive label closure linear.
   * - PERSIST BOUNDARIES sit at the fan-out joints — the gate cohort
   *   (scanned by the LM fit and the row-local scoring pass; the
   *   threshold's cohort COUNT rides the fit aggregate itself, so the
@@ -162,102 +157,34 @@ object Pipeline {
       .filter(col("lm_score").isNotNull)
       .persist()
     val k = (nScorable / LmDropFrac).toInt
-    val gate2 =
-      if (k == 0) scored
-      else {
-        // the k-th smallest (lm_score, doc_id) tuple: TakeOrdered top-k,
-        // then one row back — never a global window
-        val thr = scored.select(col("lm_score"), col("doc_id"))
-          .orderBy(col("lm_score"), col("doc_id")).limit(k)
-          .orderBy(col("lm_score").desc, col("doc_id").desc).head()
-        val (ts, ti) = (thr.getDouble(0), thr.getLong(1))
-        scored.filter(col("lm_score") > ts ||
-          (col("lm_score") === ts && col("doc_id") > ti))
-      }
+    val gate2 = cutByFrozenBar(scored, rankBar(scored, k))
 
     // ---- exact dedup: d1's min-id keeper per content hash ----
-    // exact/shingles/buckets/capped are rebound as PlanLeaf leaves after
-    // their persist: the leaf's RDD IS the cached plan's RDD (same rows,
-    // same cache scan), but downstream actions analyze a one-node leaf
-    // instead of re-walking the whole ingest/langid/LM subtree — ~8
-    // actions × a deep accumulated plan cost ~1.3 s of pure driver time
-    // at sf0.1. Leaves carry no Catalyst stats, so no downstream join
-    // can auto-broadcast a LEAF side — all four are corpus-sized
-    // relations that must never broadcast (small sides — nonReps, cand,
-    // probe — sit opposite them, and AQE still converts the stats-side
-    // joins from runtime shuffle sizes).
-    val exact = gate2
-      .withColumn("__h", md5(col("text")))
-      .withColumn("__keep", min(col("doc_id")).over(Window.partitionBy(col("__h"))))
-      .filter(col("doc_id") === col("__keep"))
-      .drop("__h", "__keep")
-      .persist()
+    val exact = keepMinId(gate2).drop("__h").persist()
 
-    // ---- fuzzy dedup: SHINGLE-minhash LSH candidates → Jaccard verify → CC ----
-    // MinHash runs over the word-bigram SHINGLE sets, not token sets: this
-    // corpus's tiny vocabulary makes long documents' token SETS nearly
-    // identical (token-set banding put 94% of sf0.01 in one bucket, and
-    // still produced 10⁵–10⁶ candidate pairs per scale under 16-hash
-    // bands), while the shingle space separates cleanly — random-doc
-    // shingle Jaccard ≈ 0.035, so a 4-hash band collides noise pairs at
-    // ~0.035⁴ and buckets stay single-digit (max bn 2 at sf0.1, 20 at
-    // sf1, measured). The shingle arrays are computed ONCE and shared by
-    // the signatures and the verification join.
-    val shingles = exact.select(col("doc_id"),
-      array_distinct(TextDedup.wordNgrams(
-        TextDedup.tokens(col("text")), 2)).as("sh"))
-      .persist()
-    // empty shingle arrays (sub-2-token docs — impossible past the
-    // MinTokens gate, guarded anyway) would band into a shared NULL
-    // bucket; the twin simply has no rows for them. Banding is the
-    // native MinHashBands kernel — one digest pass over the shingle set
-    // (value parity with the 8×transform+array_min HOF form is
-    // MinHashBandsSpec-asserted, so the oracle hash is indifferent)
-    val buckets = shingles.filter(size(col("sh")) > 0)
-      .select(col("doc_id"),
-        explode(org.apache.spark.sql.graft.MinHashBands.bands(
-          col("sh"), 8, 4)).as("bucket"))
-      .persist()
+    // ---- fuzzy dedup: the NearDup spine over word-bigram SHINGLES ----
+    // shingles, not token sets: this corpus's tiny vocabulary makes long
+    // documents' token SETS nearly identical (token-set banding put 94%
+    // of sf0.01 in one bucket), while random-doc shingle Jaccard ≈ 0.035,
+    // so buckets stay single-digit (max bn 2 at sf0.1, 20 at sf1,
+    // measured). The shingle arrays are computed ONCE and shared by the
+    // banding and the verification join.
+    val shingles = graft.dedup.NearDup.shingles(exact, "doc_id", "text", 2).persist()
+    val buckets = graft.dedup.NearDup.buckets(shingles).persist()
     // MATERIALIZE the banding chain with one linear job BEFORE any plan
     // fans out over it. The candidate/verify plan below references the
-    // buckets cache twice (cappedBandPairs' stats aggregate + its pair
-    // join) and the shingles cache twice more (banding + the verify
-    // join); Spark submits those leaf stages CONCURRENTLY, and a cold
+    // buckets cache twice (the cap's stats aggregate + its pair join)
+    // and the shingles cache twice more (banding + the verify join);
+    // Spark submits those leaf stages CONCURRENTLY, and a cold
     // InMemoryRelation gives no cross-stage dedup — round-12 profile
     // showed THREE simultaneous ~1.7 s jobs each recomputing the same
-    // exact-dedup→shingle→banding chain at sf0.1 (the single largest
-    // slice of x26's 3.8× gap). One count() walks exact→shingles→buckets
-    // in topological order, populating all three caches exactly once;
-    // every downstream scan then hits warm blocks. The extra action
-    // costs one job submission (~0.1 s) and buys back two chain
-    // recomputes (~3.4 s at sf0.1; the ratio grows with scale since the
-    // chain is corpus-CPU-bound).
+    // exact-dedup→shingle→banding chain at sf0.1. One count() walks
+    // exact→shingles→buckets in topological order, populating all three
+    // caches exactly once; the extra action costs one job submission
+    // (~0.1 s) and buys back two chain recomputes (~3.4 s at sf0.1).
     buckets.count()
-    // packed-pair dedup via the spill-friendly sort shape (the d7 fix)
-    val cand = graft.search.Search.distinctLongs(
-        graft.search.Search.cappedBandPairs(buckets, "doc_id", "bucket")
-          .select(graft.search.Search.packPair(col("a_id"), col("b_id")).as("pair")),
-        "pair")
-      .select(graft.search.Search.unpackPair(col("pair")): _*)
-    // verify with ONE shuffle of the shingle relation: the naive
-    // cand ⋈ shingles(a) ⋈ shingles(b) form sort-merge-shuffled the full
-    // array column TWICE (round-12 profile: the two heaviest stages of
-    // the whole chain); exploding each pair into its two member rows
-    // joins shingles once on doc_id, and the re-group moves only the
-    // matched pairs' arrays — |cand| is band-capped, the corpus-sized
-    // relation crosses the wire once
-    val sides = cand.select(col("a_id"), col("b_id"),
-      explode(array(col("a_id"), col("b_id"))).as("doc_id"))
-    val verified = sides.join(shingles, "doc_id")
-      .groupBy(col("a_id"), col("b_id"))
-      .agg(
-        first(when(col("doc_id") === col("a_id"), col("sh")),
-          ignoreNulls = true).as("a_sh"),
-        first(when(col("doc_id") === col("b_id"), col("sh")),
-          ignoreNulls = true).as("b_sh"))
-      .filter(size(array_intersect(col("a_sh"), col("b_sh"))).cast("double") /
-        size(array_union(col("a_sh"), col("b_sh"))) >= JaccardTau)
-      .select(col("a_id"), col("b_id"))
+    val verified = graft.dedup.NearDup.verify(
+        graft.dedup.NearDup.candidatePairs(buckets, "doc_id"), shingles, JaccardTau)
       .persist()
     // size-gated CC: the verified near-dup graph of a clean corpus is
     // tiny (51 edges at sf0.1, ~100k at sf1) and the distributed loop's
@@ -541,6 +468,26 @@ object Pipeline {
         (col("lm_score") === ts && col("doc_id") > ti))
     }
 
+  /** The rank-cut bar of a scored cohort: its k-th smallest
+    * (lm_score, doc_id) tuple, found with a TakeOrdered top-k and one row
+    * back — never a global window; None when k = 0 (no cut). */
+  private def rankBar(scored: DataFrame, k: Int): Option[(Double, Long)] =
+    if (k == 0) None
+    else {
+      val thr = scored.select(col("lm_score"), col("doc_id"))
+        .orderBy(col("lm_score"), col("doc_id")).limit(k)
+        .orderBy(col("lm_score").desc, col("doc_id").desc).head()
+      Some((thr.getDouble(0), thr.getLong(1)))
+    }
+
+  /** d1's exact-dedup keeper: the min doc_id per md5(text), with the
+    * hash kept as `__h` for a caller's anti-join. */
+  private def keepMinId(df: DataFrame): DataFrame = df
+    .withColumn("__h", md5(col("text")))
+    .withColumn("__keep", min(col("doc_id")).over(Window.partitionBy(col("__h"))))
+    .filter(col("doc_id") === col("__keep"))
+    .drop("__keep")
+
   /** The frozen base-state bundle x31 derives (cold) or
     * [[graft.incremental.IncrementalState]] persists (warm): model
     * arrays driver-side, relations as DataFrames. */
@@ -563,20 +510,8 @@ object Pipeline {
     val baseScored = baseGate
       .withColumn("lm_score", TextDedup.charLmScoreCol(col("text"), lmN3, lmN2))
       .filter(col("lm_score").isNotNull)
-    val k = (nScorableBase / LmDropFrac).toInt
-    val thrOpt =
-      if (k == 0) None
-      else {
-        val thr = baseScored.select(col("lm_score"), col("doc_id"))
-          .orderBy(col("lm_score"), col("doc_id")).limit(k)
-          .orderBy(col("lm_score").desc, col("doc_id").desc).head()
-        Some((thr.getDouble(0), thr.getLong(1)))
-      }
-    val baseKept = cutByFrozenBar(baseScored, thrOpt)
-      .withColumn("__h", md5(col("text")))
-    val baseExact = baseKept
-      .withColumn("__keep", min(col("doc_id")).over(Window.partitionBy(col("__h"))))
-      .filter(col("doc_id") === col("__keep"))
+    val thrOpt = rankBar(baseScored, (nScorableBase / LmDropFrac).toInt)
+    val baseExact = keepMinId(cutByFrozenBar(baseScored, thrOpt))
       .select(col("doc_id"), col("text"))
       .persist()
     // the distinct content-hash set IS baseExact's hashes: the min-id
@@ -668,12 +603,9 @@ object Pipeline {
       .withColumn("lm_score", TextDedup.charLmScoreCol(col("text"), n3, n2))
       .filter(col("lm_score").isNotNull)
     val deltaCut = cutByFrozenBar(deltaScored, threshold)
-    val dExact = deltaCut
-      .withColumn("__h", md5(col("text")))
-      .withColumn("__keep", min(col("doc_id")).over(Window.partitionBy(col("__h"))))
-      .filter(col("doc_id") === col("__keep"))
+    val dExact = keepMinId(deltaCut)
       .join(baseHashes, col("__h") === col("bh"), "left_anti")
-      .drop("__h", "__keep")
+      .drop("__h")
       .persist()
     // d10 screen vs the base keepers; only novel delta docs continue.
     // COLD path: MATERIALIZE the decision frame with one linear job

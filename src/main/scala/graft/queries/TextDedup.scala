@@ -61,25 +61,12 @@ object TextDedup {
                    FROM documents)
              GROUP BY doc_id ORDER BY doc_id"""))
 
-  /** Shared MinHash-signature plan for banding (2 bands × 4 hashes);
-    * signatures row-local, see above. Over an arbitrary (doc_id, text)
-    * relation so pipeline compositions (x26) can band a FILTERED cohort. */
-  /** Single-scan band-salted bucket relation — the candidate-generation
-    * input shared by d3 (pair scoring) and d8 (clustering); the salt
-    * prevents cross-band md5 equality from pairing docs. One definition so
-    * the two queries (and their oracle twins) can never diverge on the
-    * banding scheme. Banding runs through the native MinHashBands kernel
-    * (one digest pass per token set; value parity with the HOF form is
-    * MinHashBandsSpec-asserted — the bucket strings, and therefore every
-    * dedup oracle hash, are unchanged). */
-  private[queries] def bandBucketsOf(docs: DataFrame): DataFrame =
-    withDistinctToks(docs)
-      .select(col("doc_id"),
-        explode(org.apache.spark.sql.graft.MinHashBands.bands(
-          col("__dtoks"), 8, 4)).as("bucket"))
-
+  /** The token-set band buckets of the whole corpus — the candidate
+    * input of d3 (pairs) and d8 (clustering), both [[graft.dedup.NearDup]]
+    * at token grain. */
   private def bandBuckets(s: SparkSession, d: String): DataFrame =
-    bandBucketsOf(Tables.spread(Tables.documents(s, d)))
+    graft.dedup.NearDup.buckets(
+      graft.dedup.NearDup.shingles(Tables.spread(Tables.documents(s, d)), "doc_id", "text", 1))
 
   /** Star edges of the MinHash-LSH candidate graph: one (bucket-min-doc →
     * member) edge per band-bucket membership — provably the same connected
@@ -92,16 +79,9 @@ object TextDedup {
     * (scanned for reps + the join); lifecycle = caller's clearCache, as
     * with d3/d7. */
   def starEdges(s: SparkSession, d: String,
-                docCap: Long = Long.MaxValue): DataFrame = {
-    val buckets = bandBuckets(s, d)
-      .filter(col("doc_id") < docCap)
-      .persist()
-    val reps = buckets.groupBy(col("bucket")).agg(min(col("doc_id")).as("rep"))
-    buckets.join(reps, "bucket")
-      .filter(col("doc_id") =!= col("rep"))
-      .select(col("rep").as("a_id"), col("doc_id").as("b_id"))
-      .distinct()
-  }
+                docCap: Long = Long.MaxValue): DataFrame =
+    graft.dedup.NearDup.starPairs(
+      bandBuckets(s, d).filter(col("doc_id") < docCap).persist())
 
   /** Row-local word n-gram shingles over a BOUND token-array attribute
     * (never the split expression itself — a textually repeated split
@@ -119,32 +99,23 @@ object TextDedup {
   private[graft] def wordNgrams(toks: Column, n: Int): Column =
     org.apache.spark.sql.graft.WordNgrams.wordNgrams(toks, n)
 
-  // D3 LSH candidate pairs: docs sharing any band bucket. The scale path:
-  // candidate generation is a join on band hash, never an O(n²) compare.
-  // SINGLE-SCAN banding: both bands explode from one signature scan into
-  // one (doc_id, bucket) relation — 2n narrow rows, ONE skew-capped join
-  // instead of one per band (halves signature-table scans; at 100 TB this
-  // is the materialized bucket table on disk). Buckets are salted with
-  // their band index so a cross-band md5 equality can never pair docs —
-  // keeps the pair set identical to the per-band joins.
+  // D3 LSH candidate pairs: docs sharing any token-set band bucket — a
+  // join on band hash, never an O(n²) compare. Skew cap and packed
+  // sort-dedup are NearDup.candidatePairs', mirrored in the oracle SQL.
   private val d3 = Q(
     "d3_minhash_lsh_pairs",
     (s, d) => {
-      // persisted: cappedBandPairs scans its input twice (bucket stats +
+      // persisted: the cap scans its input twice (bucket stats +
       // self-join); lifecycle = the harness clearCache, as with d7
       val buckets = bandBuckets(s, d).persist()
-      // each candidate pair rides the distinct pipeline as ONE packed long
-      // via the shared 64-bit-safe packer (Search.packPair: a<<32|b, sound
-      // to 2³² ids with a loud overflow assert) — halves shuffle width.
-      // skew guard: oversized buckets (near-constant corpora) fall back to
-      // star pairs via Search.cappedBandPairs — mirrored in the oracle SQL.
       // persist before the global sort: range-partitioning samples its
-      // child, which would otherwise re-execute the join+distinct pipeline
-      val pairs = graft.search.Search.cappedBandPairs(buckets, "doc_id", "bucket")
-        .select(graft.search.Search.packPair(col("a_id"), col("b_id")).as("pair"))
-        .distinct()
-        .persist()
-      pairs.select(graft.search.Search.unpackPair(col("pair")): _*)
+      // child, which would otherwise re-execute the pair pipeline
+      val pairs = graft.dedup.NearDup.candidatePairs(buckets, "doc_id").persist()
+      // the sort dedup's typed longs are NOT NULL; d3 publishes nullable
+      // ids (its schema before that dedup), a tag with no runtime effect
+      import org.apache.spark.sql.graft.GraftKernel.{column, expr}
+      pairs.select(Seq("a_id", "b_id").map(c => column(
+          org.apache.spark.sql.catalyst.expressions.KnownNullable(expr(col(c)))).as(c)): _*)
         .orderBy("a_id", "b_id")
     },
     Some("""WITH tok AS (SELECT DISTINCT doc_id,
@@ -174,20 +145,15 @@ object TextDedup {
   private val d4 = Q(
     "d4_ngram_jaccard",
     (s, d) => {
-      val sh = Tables.documents(s, d)
-        .filter(col("doc_id") < 40)
-        .withColumn("toks", tokens(col("text")))
-        .withColumn("shingles", array_distinct(wordNgrams(col("toks"), 2)))
-        .select(col("doc_id"), col("shingles"))
-      val a = sh.select(col("doc_id").as("a_id"), col("shingles").as("a_sh"))
-      val b = sh.select(col("doc_id").as("b_id"), col("shingles").as("b_sh"))
+      val sh = graft.dedup.NearDup.shingles(
+        Tables.documents(s, d).filter(col("doc_id") < 40), "doc_id", "text", 2)
+      val a = sh.select(col("doc_id").as("a_id"), col("sh").as("a_sh"))
+      val b = sh.select(col("doc_id").as("b_id"), col("sh").as("b_sh"))
       a.crossJoin(b).filter(col("a_id") < col("b_id"))
         .select(col("a_id"), col("b_id"),
-          // two sub-2-token docs both have EMPTY shingle sets → union
-          // size 0 → ANSI divide-by-zero; null matches the twin's x/0
-          round(when(size(array_union(col("a_sh"), col("b_sh"))) > 0,
-            size(array_intersect(col("a_sh"), col("b_sh"))).cast("double") /
-              size(array_union(col("a_sh"), col("b_sh")))), 6).as("jaccard"))
+          // two sub-2-token docs both have EMPTY shingle sets: null
+          // matches the twin's x/0
+          round(graft.dedup.NearDup.jaccard(col("a_sh"), col("b_sh")), 6).as("jaccard"))
         .orderBy("a_id", "b_id")
     },
     Some("""WITH sh AS (
@@ -805,27 +771,10 @@ object TextDedup {
     *  - The bucket relation is persisted (stats scan + member join);
     *    lifecycle = caller's clearCache, the d3/d7 accounting.
     */
-  /** Per-span LSH bucket membership (doc_id, span_idx, bucket) — the
-    * shared first half of [[spanNearDup]] and [[spanExcise]]. Persisted:
-    * both consumers scan it twice (bucket stats + member join);
-    * lifecycle = caller's clearCache, the d3/d7 accounting. */
-  private def spanBuckets(docs: DataFrame, span: Int): DataFrame = {
-    val sigs = docs
-      .select(col("doc_id"),
-        explode(org.apache.spark.sql.graft.SpanMinHash
-          .spanMinHash(col("text"), span)).as("sg"))
-      .select(col("doc_id") +: col("sg.span_idx").as("span_idx") +:
-        sigCols(8).map(j => col(s"sg.h$j").as(s"h$j")): _*)
-    sigs
-      .select(col("doc_id"), col("span_idx"), explode(array(
-        concat(lit("0:"), md5(concat(col("h0"), col("h1"), col("h2"), col("h3")))),
-        concat(lit("1:"), md5(concat(col("h4"), col("h5"), col("h6"), col("h7"))))))
-        .as("bucket"))
-      .persist()
-  }
-
   def spanNearDup(docs: DataFrame, span: Int): DataFrame = {
-    val buckets = spanBuckets(docs, span)
+    // persisted: scanned twice (bucket stats + member join); lifecycle =
+    // caller's clearCache, the d3/d7 accounting
+    val buckets = graft.dedup.NearDup.spanBuckets(docs, span).persist()
     val stats = buckets.groupBy(col("bucket"))
       .agg(min(col("doc_id")).as("__mn"), max(col("doc_id")).as("__mx"))
     buckets.join(stats, "bucket")
@@ -882,7 +831,7 @@ object TextDedup {
     * Output per document: span counts and the md5 of the excised text —
     * the rewrite itself is under the oracle hash, not just the flags.
     *
-    * Plan shape: span flags reuse [[spanBuckets]] (row-local native
+    * Plan shape: span flags reuse `NearDup.spanBuckets` (row-local native
     * signatures, per-bucket min — pairs never materialize); the flags
     * aggregate to ONE array row per document and equi-join back to the
     * corpus on doc_id; reconstruction is then row-local array surgery
@@ -892,7 +841,7 @@ object TextDedup {
     * bucket-stats aggregate, one doc_id equi-join, everything else
     * narrow. */
   def spanExcise(docs: DataFrame, span: Int): DataFrame = {
-    val buckets = spanBuckets(docs, span)
+    val buckets = graft.dedup.NearDup.spanBuckets(docs, span).persist()
     val firstSeen = buckets.groupBy(col("bucket"))
       .agg(min(col("doc_id")).as("__mn"))
     val drops = buckets.join(firstSeen, "bucket")

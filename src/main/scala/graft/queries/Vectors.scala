@@ -182,19 +182,11 @@ object Vectors {
       val b = Search.lshBuckets(e, "embedding", Sim2Dim, Sim2Bits, Sim2Tables)
         .select(col("vec_id"), col("bucket"))
         .persist()
-      // candidate pairs ride the dedup as ONE packed long via the shared
-      // 64-bit-safe packer (Search.packPair: a<<32|b, sound to 2³² ids with
-      // a loud overflow assert — d3 uses the same helper, so the dedup
-      // family stays in lockstep). cappedBandPairs = the band-skew guard
-      // (oracle mirrors the cap). The dedup is the SPILL-FRIENDLY
-      // sort-based distinctLongs, not a hash distinct: the partial-agg
-      // allocation spike lost this query once on the 4g memory-pressure
-      // boundary (r10), while the external sort spills incrementally.
-      val cand = Search.distinctLongs(
-          Search.cappedBandPairs(b, "vec_id", "bucket")
-            .select(Search.packPair(col("a_id"), col("b_id")).as("pair")),
-          "pair")
-        .select(Search.unpackPair(col("pair")): _*)
+      // the shared skew-capped, packed, sort-deduped candidate pairs (the
+      // oracle mirrors the cap); the sort form spills incrementally where
+      // a hash distinct's partial-agg spike lost this query once on the
+      // 4g memory-pressure boundary (r10)
+      val cand = graft.dedup.NearDup.candidatePairs(b, "vec_id")
       // L2 norms hoisted to the per-VECTOR side (n rows) instead of per
       // PAIR (d5's trick) — cosine per candidate is then ONE dot product,
       // not three; identical doubles (same sqrt(dot) arithmetic)

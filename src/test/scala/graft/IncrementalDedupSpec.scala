@@ -82,7 +82,7 @@ class IncrementalDedupSpec extends SparkSpec {
     // O(|base∩bucket| · |delta∩bucket|) on a near-constant corpus.
     val bb = ((1L to 1000L).map(i => ("hot", i)) ++
       Seq(("cold", 50L), ("cold", 51L), ("cold", 52L))).toDF("bucket", "doc_id")
-    val partners = IncrementalDedup.partnerRelation(bb, bucketCap = 10)
+    val partners = graft.dedup.NearDup.partners(graft.dedup.NearDup.members(bb), cap = 10)
       .collect().map(r => (r.getString(0), r.getLong(1)))
     val hot = partners.filter(_._1 == "hot")
     assert(hot.toSeq == Seq(("hot", 1L)),

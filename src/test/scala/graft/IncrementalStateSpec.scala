@@ -405,7 +405,7 @@ class IncrementalStateSpec extends SparkSpec {
     val dir = freshDir("incr-partscreen")
     // a hot bucket NEAR the cap: 8 base copies of baseA (cap 10), so the
     // appended batch pushes it OVER — the dirty-state fold must collapse
-    // it to the min-id representative exactly like partnerRelation would
+    // it to the min-id representative exactly like NearDup.partners would
     val base = ((20L to 27L).map(i => (i, baseA)) :+ ((12L, baseB))).toDF("doc_id", "text")
     val bsh = IncrementalDedup.shingled(base, "doc_id", "text")
     IncrementalState.save(spark, dir, new Array[Long](27 * 27 * 27), 0L, None,
